@@ -77,6 +77,13 @@ def test_queries_set_hash_is_order_independent():
     assert len(a) == 12
 
 
+def _sparse(path, size: int) -> None:
+    """A file of ``size`` bytes by ``os.path.getsize`` that occupies
+    (almost) no disk: the size derivations read only the length."""
+    with open(path, "wb") as f:
+        f.truncate(size)
+
+
 def test_stream_state_partitions_derivation(tmp_path):
     """The state-partition count derives from input bytes (ceil/target),
     floored for residual parallelism and capped at 2x defaultParallelism —
@@ -92,19 +99,19 @@ def test_stream_state_partitions_derivation(tmp_path):
 
     spark = _Spark()
     small = tmp_path / "small.parquet"
-    small.write_bytes(b"x" * 1024)
+    _sparse(small, 1024)
     # tiny input -> the floor, not the session's static shuffle partitions
     assert stream_state_partitions(spark, str(small)) == 4
     # scales with bytes: 80 MB at 16 MB/partition -> 5
     big = tmp_path / "big"
     big.mkdir()
-    (big / "part-0").write_bytes(b"x" * (40 << 20))
-    (big / "part-1").write_bytes(b"x" * (40 << 20))
+    _sparse(big / "part-0", 40 << 20)
+    _sparse(big / "part-1", 40 << 20)
     # dotted/underscore metadata files are not data
-    (big / "_SUCCESS").write_bytes(b"x" * (1 << 30))
+    _sparse(big / "_SUCCESS", 1 << 30)
     assert stream_state_partitions(spark, str(big)) == 5
     # capped at 2x defaultParallelism however large the input
-    (big / "part-2").write_bytes(b"\0" * (1 << 20))
+    _sparse(big / "part-2", 1 << 20)
     assert (
         stream_state_partitions(spark, str(big), target_bytes=1024) == 16
     )
@@ -121,17 +128,17 @@ def test_batch_shuffle_partitions_derivation(tmp_path, monkeypatch):
 
     d = tmp_path / "sf"
     d.mkdir()
-    (d / "t.parquet").write_bytes(b"x" * 1024)
+    _sparse(d / "t.parquet", 1024)
     # tiny input -> core-count floor
     assert batch_shuffle_partitions(str(d), cores=32) == 32
     # 40 cores' worth of 128MB targets on 16 cores -> capped at 32
-    (d / "big").write_bytes(b"x" * (40 * 128 << 20))
+    _sparse(d / "big", 40 * 128 << 20)
     assert batch_shuffle_partitions(str(d), cores=16) == 32
     # between floor and cap: width follows bytes (40 full targets + the
     # 1 KB file above tip the ceil to 41)
     assert batch_shuffle_partitions(str(d), cores=30) == 41
     # metadata files excluded
-    (d / "_SUCCESS").write_bytes(b"x" * (1 << 30))
+    _sparse(d / "_SUCCESS", 1 << 30)
     assert batch_shuffle_partitions(str(d), cores=30) == 41
     # no data dir -> cores (env fallback exercised via monkeypatch)
     monkeypatch.delenv("SPARK_GRAFT_SF_DIR", raising=False)

@@ -1,61 +1,4 @@
-"""VStreamEngine facade: every mode reachable from one conf object."""
-
-import numpy as np
-
-from vstream_spark.config import EngineConf, PartitionerConf, VectorIndexConf
-from vstream_spark.engine import VStreamEngine
-
-
-def _conf(dim=8):
-    return EngineConf(
-        index=VectorIndexConf(dim=dim, k=5, ef_search=64),
-        partitioner=PartitionerConf(kind="simple", num_partitions=4),
-    )
-
-
-def _data(spark, n=120, dim=8):
-    rng = np.random.RandomState(2)
-    rows = [(int(i), rng.rand(dim).astype(float).tolist()) for i in range(n)]
-    vectors = spark.createDataFrame(rows, "id long, emb array<float>")
-    queries = vectors.filter("id % 20 = 0").selectExpr("id as qid", "emb")
-    return vectors, queries
-
-
-def test_engine_batch_paths_agree(spark):
-    eng = VStreamEngine(spark, _conf())
-    vectors, queries = _data(spark)
-    exact = eng.search_exact(vectors, queries)
-    ann = eng.search(vectors, queries)
-    e = {(r.qid, r.neighbor_id) for r in exact.collect()}
-    a = {(r.qid, r.neighbor_id) for r in ann.collect()}
-    assert len(a & e) / len(e) >= 0.9
-    assert exact.columns == ["qid", "neighbor_id", "distance", "rank"]
-
-
-def test_engine_dedupe(spark):
-    eng = VStreamEngine(spark, _conf())
-    vectors, _ = _data(spark, n=30)
-    # duplicate vector 0 as id 1000
-    dup = vectors.filter("id = 0").selectExpr("1000 as id", "emb")
-    out = eng.dedupe(vectors.unionByName(dup), threshold=0.999)
-    rows = {r.vec_id: (r.is_duplicate, r.dup_of) for r in out.collect()}
-    assert rows[1000] == (True, 0)
-    assert rows[0][0] is False
-
-
-def test_engine_store_roundtrip(spark, tmp_path):
-    eng = VStreamEngine(spark, _conf())
-    vectors, queries = _data(spark)
-    store = eng.open_store(str(tmp_path / "segs"))
-    store.upsert_batch(
-        vectors.selectExpr(
-            "id", "emb", "id * 10 as event_time", "cast(pow(10, 12) as long) as ttl", "'I' as op"
-        )
-    )
-    res = eng.searcher(store).search(queries, k=5, ef_search=128)
-    assert set(res["qid"]) == {r.qid for r in queries.collect()}
-    top1 = res[res["rank"] == 1]
-    assert (top1["qid"] == top1["neighbor_id"]).all()  # self is nearest
+"""__spark_entry__ query ordering: gates first, least-recorded rotation."""
 
 
 def test_sample_rotation_orders_gates_first_and_rotates(tmp_path, monkeypatch):

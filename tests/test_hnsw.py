@@ -262,290 +262,6 @@ def test_bulk_approx_graph_recall_floor_uniform():
     assert recall >= 0.85, recall
 
 
-def _install_fake_hnswlib(monkeypatch):
-    """A minimal hnswlib-API-shaped module (Index with init_index /
-    add_items / knn_query / mark_deleted / get_items) backed by brute-force
-    numpy. Lets the backend seam be EXERCISED in environments where the
-    real library is absent (r9 VERDICT stretch #8: the swap-in claim was
-    asserted, not pinned)."""
-    import sys
-    import types
-
-    import numpy as np
-
-    class _FakeIndex:
-        def __init__(self, space, dim):
-            assert space in ("l2", "ip", "cosine")
-            self.space, self.dim = space, dim
-            self._v, self._l = {}, []
-            self._deleted = set()
-
-        def init_index(self, max_elements, M, ef_construction, random_seed):
-            self.M, self.ef_construction = M, ef_construction
-
-        def set_num_threads(self, n):
-            pass
-
-        def set_ef(self, ef):
-            pass
-
-        def get_max_elements(self):
-            return 1 << 30
-
-        def resize_index(self, n):
-            pass
-
-        def add_items(self, vecs, labels):
-            # real hnswlib: existing label = in-place update, but the
-            # internal deleted flag is NOT cleared (unmark_deleted is the
-            # only way back) — mirror it so the adapter's re-add path is
-            # pinned against the real semantics
-            for v, lb in zip(np.asarray(vecs), np.asarray(labels)):
-                self._v[int(lb)] = np.asarray(v, dtype=np.float64)
-
-        def get_items(self, ids):
-            # real hnswlib raises for unknown AND marked-deleted labels
-            for i in ids:
-                if int(i) not in self._v or int(i) in self._deleted:
-                    raise RuntimeError("Label not found")
-            return np.stack([self._v[int(i)] for i in ids])
-
-        def mark_deleted(self, lb):
-            # real hnswlib raises on unknown labels and on double deletes
-            if int(lb) not in self._v:
-                raise RuntimeError("Label not found")
-            if int(lb) in self._deleted:
-                raise RuntimeError(
-                    "The requested to delete element is already deleted"
-                )
-            self._deleted.add(int(lb))
-
-        def unmark_deleted(self, lb):
-            if int(lb) not in self._deleted:
-                raise RuntimeError(
-                    "The requested to undelete element is not deleted"
-                )
-            self._deleted.discard(int(lb))
-
-        def knn_query(self, q, k, filter=None):
-            # real hnswlib raises when k exceeds the retrievable element
-            # count — mirror it so the adapter's live-count clamp is pinned
-            if k > len(self._v) - len(self._deleted):
-                raise RuntimeError(
-                    "Cannot return the results in a contiguous 2D array. "
-                    "Probably ef or M is too small"
-                )
-            q = np.asarray(q, dtype=np.float64)[0]
-            cand = []
-            for lb, v in self._v.items():
-                if lb in self._deleted or (filter and not filter(lb)):
-                    continue
-                if self.space == "l2":
-                    d = float(((v - q) ** 2).sum())
-                else:
-                    d = 1.0 - float(v @ q)
-                cand.append((d, lb))
-            cand.sort()
-            cand = cand[:k]
-            return (
-                np.asarray([[lb for _, lb in cand]], dtype=np.int64),
-                np.asarray([[d for d, _ in cand]], dtype=np.float64),
-            )
-
-    mod = types.ModuleType("hnswlib")
-    mod.Index = _FakeIndex
-    monkeypatch.setitem(sys.modules, "hnswlib", mod)
-
-
-def test_native_backend_seam_no_operator_change(monkeypatch):
-    """With VSTREAM_SPARK_HNSW_BACKEND=hnswlib, build_index — the ONE seam
-    every operator calls — returns the native adapter, and search honors
-    the full engine contract (tie-break, min_ts freshness, tombstones,
-    dumps/loads through the shared artifact loader) with zero changes at
-    any call site."""
-    import numpy as np
-
-    from vstream_spark.index.hnsw import HnswIndex, build_index
-    from vstream_spark.index.native import NativeHnswIndex
-
-    _install_fake_hnswlib(monkeypatch)
-    monkeypatch.setenv("VSTREAM_SPARK_HNSW_BACKEND", "hnswlib")
-
-    rng = np.random.RandomState(7)
-    vecs = rng.rand(300, 16).astype(np.float32)
-    labels = np.arange(300)
-    ts = np.arange(300)
-    idx = build_index(vecs, labels, ts, metric="l2")
-    assert isinstance(idx, NativeHnswIndex)
-
-    # exact contract vs brute force (fake backend is brute force, so the
-    # adapter's filtering/tie-break is what's under test)
-    q = rng.rand(16)
-    d = ((vecs.astype(np.float64) - q) ** 2).sum(axis=1)
-    truth = np.lexsort((labels, d))[:5]
-    got, gd = idx.search(q, 5)
-    assert got.tolist() == truth.tolist()
-    assert all(gd[i] <= gd[i + 1] for i in range(len(gd) - 1))
-
-    # freshness filter + tombstone via the same adapter surface
-    got_fresh, _ = idx.search(q, 5, min_ts=250)
-    assert all(lb >= 250 for lb in got_fresh.tolist())
-    idx.mark_deleted(int(truth[0]))
-    got_del, _ = idx.search(q, 5)
-    assert int(truth[0]) not in got_del.tolist()
-
-    # artifact roundtrip through the SHARED loader entry point
-    # (HnswIndex.loads dispatches on the payload's backend tag)
-    blob = idx.dumps()
-    back = HnswIndex.loads(blob)
-    assert isinstance(back, NativeHnswIndex)
-    got2, _ = back.search(q, 5)
-    assert got2.tolist() == got_del.tolist()
-
-
-def test_native_backend_segment_call_site_contract(monkeypatch):
-    """The segment build+search path pokes the index beyond search():
-    tombstone shadowing does ``idx._by_label.get / idx.ts[i] /
-    idx.mark_delete`` (storage/segments.py, storage/search.py) and the
-    neighbor-ts emit does ``idx.ts[idx._by_label[lb]]``
-    (storage/search.py). r10 ADVICE: the adapter lacked all three, so the
-    native backend crashed at exactly those sites. Pin the full contract —
-    including the live-count clamp against hnswlib's k-too-large
-    RuntimeError and re-added-label slot reuse."""
-    import numpy as np
-
-    from vstream_spark.index.hnsw import HnswIndex, build_index
-    from vstream_spark.index.native import NativeHnswIndex
-
-    _install_fake_hnswlib(monkeypatch)
-    monkeypatch.setenv("VSTREAM_SPARK_HNSW_BACKEND", "hnswlib")
-
-    rng = np.random.RandomState(11)
-    vecs = rng.rand(50, 8).astype(np.float32)
-    labels = np.arange(50)
-    ts = np.arange(100, 150)
-    idx = build_index(vecs, labels, ts, metric="l2")
-    assert isinstance(idx, NativeHnswIndex)
-
-    # 1) the EXACT tombstone-shadow sequence the flush/search sites run
-    #    (delete marker strictly newer than the insert kills it)
-    for del_id, del_time in [(3, 104), (7, 108), (9, 50)]:
-        i = idx._by_label.get(int(del_id))
-        if i is not None and int(del_time) > int(idx.ts[i]):
-            idx.mark_delete(int(del_id))
-    q = rng.rand(8)
-    got, _ = idx.search(q, 50)
-    got = set(got.tolist())
-    assert 3 not in got and 7 not in got
-    assert 9 in got  # marker at ts=50 is OLDER than insert ts=109: survives
-
-    # 2) the neighbor-ts lookup the search site emits per result label,
-    #    plus the neutral accessor
-    for lb in got:
-        assert int(idx.ts[idx._by_label[int(lb)]]) == 100 + lb
-        assert idx.get_ts(lb) == 100 + lb
-
-    # 3) live-count clamp: tombstone down to 5 live, ask for 10 — real
-    #    hnswlib (and the fake) raises if k > retrievable; the clamp must
-    #    prevent that and the double-count bug must not inflate live
-    for lb in range(45):
-        idx.mark_delete(lb)
-    idx.add_point(vecs[45], 45, 145)  # re-add existing: reuses slot
-    assert idx.n == 50 and idx.live == 5
-    got5, _ = idx.search(q, 10)
-    assert sorted(got5.tolist()) == [45, 46, 47, 48, 49]
-
-    # 4) the contract survives the artifact roundtrip (single unpickle
-    #    path through the shared loader)
-    back = HnswIndex.loads(idx.dumps())
-    assert isinstance(back, NativeHnswIndex)
-    assert back.live == 5 and back.n == 50
-    assert back.get_ts(46) == 146
-    assert back.ts[back._by_label[47]] == 147
-    got_b, _ = back.search(q, 10)
-    assert sorted(got_b.tolist()) == [45, 46, 47, 48, 49]
-
-
-def test_numpy_backend_remains_default(monkeypatch):
-    """The native backend is opt-in only: without the env var (even if
-    hnswlib IS importable) build_index returns the deterministic numpy
-    index the hash-matched queries are pinned against."""
-    import numpy as np
-
-    from vstream_spark.index.hnsw import HnswIndex, build_index
-
-    _install_fake_hnswlib(monkeypatch)
-    monkeypatch.delenv("VSTREAM_SPARK_HNSW_BACKEND", raising=False)
-    vecs = np.random.RandomState(3).rand(50, 8).astype(np.float32)
-    idx = build_index(vecs, np.arange(50))
-    assert isinstance(idx, HnswIndex)
-
-
-def test_native_duplicate_label_within_one_batch(monkeypatch):
-    """A micro-batch can carry the same id twice (StreamingVectorIngest
-    flushes raw append batches with no per-id dedup): the first occurrence
-    of a NEW label registers a slot past the current sidecar end, so the
-    second occurrence's in-place ts update used to IndexError. Last
-    occurrence must win, matching hnswlib add_items' in-place update and
-    the numpy index's upsert semantics."""
-    import numpy as np
-
-    from vstream_spark.index.native import build_native_index
-
-    _install_fake_hnswlib(monkeypatch)
-    rng = np.random.RandomState(5)
-    vecs = rng.rand(4, 8).astype(np.float32)
-    # label 5 appears twice in ONE batch (fresh index — no prior slot)
-    idx = build_native_index(
-        vecs, labels=[5, 5, 6, 7], ts=[100, 200, 300, 400], metric="l2"
-    )
-    assert idx.n == 3 and idx.live == 3
-    assert idx.get_ts(5) == 200  # last occurrence won
-    got, _ = idx.search(vecs[1], 3)
-    assert 5 in got.tolist()
-    # the winning VECTOR is the last one too (in-place update)
-    lbs, ds = idx.search(vecs[1], 1)
-    assert lbs.tolist() == [5] and ds[0] < 1e-12
-
-
-def test_native_dumps_with_tombstones_under_strict_get_items(monkeypatch):
-    """Real hnswlib's get_items raises 'Label not found' for marked-deleted
-    elements, so dumps() must not ask for them: tombstones persist as
-    (label, ts) bookkeeping only, and the restored index keeps the full
-    tombstone contract (shadow checks, get_ts, re-add) without graph
-    entries for them."""
-    import numpy as np
-
-    from vstream_spark.index.hnsw import HnswIndex
-    from vstream_spark.index.native import NativeHnswIndex, build_native_index
-
-    _install_fake_hnswlib(monkeypatch)
-    rng = np.random.RandomState(6)
-    vecs = rng.rand(10, 8).astype(np.float32)
-    idx = build_native_index(vecs, np.arange(10), ts=np.arange(100, 110))
-    for lb in (2, 4):
-        assert idx.mark_delete(lb)
-    blob = idx.dumps()  # would raise under real hnswlib before the fix
-    back = HnswIndex.loads(blob)
-    assert isinstance(back, NativeHnswIndex)
-    assert back.n == 10 and back.live == 8
-    # tombstone bookkeeping survives without vectors
-    assert back.get_ts(2) == 102 and back.get_ts(4) == 104
-    assert back.mark_delete(2)  # idempotent re-delete must not crash
-    got, _ = back.search(vecs[0], 10)
-    assert 2 not in got.tolist() and 4 not in got.tolist()
-    # a restored (graphless) tombstone can be RE-ADDED and becomes
-    # searchable again — and a second roundtrip stays consistent
-    back.add_point(vecs[2], 2, 500)
-    assert back.live == 9 and back.get_ts(2) == 500
-    lbs, ds = back.search(vecs[2], 1)
-    assert lbs.tolist() == [2] and ds[0] < 1e-12
-    back2 = HnswIndex.loads(back.dumps())
-    assert back2.live == 9 and back2.get_ts(2) == 500
-    got2, _ = back2.search(vecs[2], 9)
-    assert 2 in got2.tolist() and 4 not in got2.tolist()
-
-
 def test_allow_filter_in_traversal_matches_exact():
     """In-index attribute filtering (the FilterSeqTs-functor analog,
     hnswlib.h:135-146): with an allowlist threaded into the level-0 walk

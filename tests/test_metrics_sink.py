@@ -1,9 +1,8 @@
-"""M3 recall@k + S5 result text encoder golden parity."""
+"""M3 ranking metrics: recall@k, MRR and nDCG."""
 
 import numpy as np
 
 from vstream_spark.functions.metrics import mean_recall, recall_at_k
-from vstream_spark.sources.sink import encode_results, write_results
 
 
 def _results(spark, rows):
@@ -43,36 +42,6 @@ def test_recall_of_hnsw_vs_exact_on_random(spark):
         index_conf=VectorIndexConf(dim=12, ef_search=64),
     )
     assert mean_recall(ann, gt, 5) >= 0.9
-
-
-def test_encoder_golden_format(spark):
-    res = _results(
-        spark,
-        [(7, 3, 0.25, 1), (7, 1, 0.5, 2), (9, 2, 0.0, 1)],
-    )
-    lines = {r.qid: r.line for r in encode_results(res).collect()}
-    # reference format: "<qid> <duration> <id>,<dist> <id>,<dist>"
-    assert lines[7] == "7 0 3,0.25 1,0.5"
-    assert lines[9] == "9 0 2,0.0"
-
-
-def test_encoder_orders_by_rank_and_writes(spark, tmp_path):
-    res = _results(
-        spark,
-        [(1, 5, 0.9, 3), (1, 2, 0.1, 1), (1, 4, 0.5, 2)],
-    )
-    out = str(tmp_path / "results")
-    write_results(res, out)
-    text = spark.read.text(out).collect()
-    assert [r.value for r in text] == ["1 0 2,0.1 4,0.5 5,0.9"]
-
-
-def test_encoder_duration_column(spark):
-    res = spark.createDataFrame(
-        [(1, 5, 0.5, 1, 42)],
-        "qid long, neighbor_id long, distance double, rank int, duration long",
-    )
-    assert encode_results(res, "duration").collect()[0].line == "1 42 5,0.5"
 
 
 def test_mrr_and_ndcg(spark):

@@ -50,6 +50,26 @@ def test_search_matches_exact_across_segments(spark, store):
         assert list(grp["distance"]) == sorted(grp["distance"])
 
 
+def test_search_and_search_df_agree(spark, store):
+    """The pandas and DataFrame surfaces share one search path: on the same
+    multi-segment store, fresh searchers return the same rows and leave the
+    same C7 temperature and C8 termination state behind."""
+    conf = VectorIndexConf(dim=8, ef_search=64)
+    q = _queries(spark, store, n=6).cache()
+    a, b = SegmentSearcher(store, conf), SegmentSearcher(store, conf)
+    got = a.search(q, k=5, metric="l2")
+    df = b.search_df(q, k=5, metric="l2").toPandas()
+    cols = ["qid", "neighbor_id", "distance"]
+    assert len(got) == 6 * 5
+    assert (
+        got[cols].sort_values(cols).values.tolist()
+        == df[cols].sort_values(cols).values.tolist()
+    )
+    assert a.last_searched_ids == b.last_searched_ids
+    assert a.temperature == b.temperature and a.temperature
+    assert a.termination_threshold == b.termination_threshold > 0.0
+
+
 def test_ttl_pruning_filters_results(spark, store):
     conf = VectorIndexConf(dim=8)
     searcher = SegmentSearcher(store, conf)

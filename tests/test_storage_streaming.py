@@ -709,3 +709,43 @@ def test_streaming_query_filtered_three_plans(spark, tmp_path):
     g = sorted(zip(out["qid"], out["neighbor_id"], out["rank"]))
     w = sorted(zip(exact["qid"], exact["neighbor_id"], exact["rank"]))
     assert g == w
+
+
+def test_streaming_ingest_then_segment_search_e2e(spark, tmp_path):
+    """inserts stream -> segments -> query batch -> HNSW segment search:
+    the full VStreamSearchJob shape (SURVEY §3.1) on Spark."""
+    from vstream_spark.config import VectorIndexConf
+    from vstream_spark.storage.search import SegmentSearcher
+
+    rng = np.random.RandomState(1)
+    schema = "id bigint, emb array<float>, event_time bigint, ttl bigint, op string"
+    rows = [
+        (i, rng.rand(8).astype(np.float32).tolist(), i * 10, 10**12, "I")
+        for i in range(120)
+    ]
+    src_dir = tmp_path / "src"
+    src_dir.mkdir()
+    spark.createDataFrame(rows[:60], schema).write.parquet(str(src_dir / "a"))
+    spark.createDataFrame(rows[60:], schema).write.parquet(str(src_dir / "b"))
+
+    store = SegmentStore(spark, str(tmp_path / "segments"))
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src_dir / "*"))
+    )
+    q = StreamingVectorIngest(store).start(stream, str(tmp_path / "ckpt"))
+    q.awaitTermination()
+    assert len(store.segments()) >= 2  # one segment per micro-batch
+
+    queries = spark.createDataFrame(
+        [(1, rows[7][1]), (2, rows[80][1])], "qid long, emb array<float>"
+    )
+    searcher = SegmentSearcher(
+        store, VectorIndexConf(dim=8, ef_search=256, termination_lower_bound=1.0)
+    )
+    res = searcher.search(queries, k=3, metric="l2")
+    by_q = {qid: grp for qid, grp in res.groupby("qid")}
+    assert set(by_q) == {1, 2}
+    assert by_q[1].iloc[0]["neighbor_id"] == 7  # self is nearest
+    assert by_q[2].iloc[0]["neighbor_id"] == 80

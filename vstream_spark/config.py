@@ -10,7 +10,7 @@ and metric are explicit config, never inferred (reference ``Parameters.java:40``
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 SUPPORTED_METRICS = ("l2", "ip", "cosine")
 
@@ -161,12 +161,3 @@ class PartitionerConf:
     sax_word_len: int = 8  # PAA segments per word
     sax_alphabet: int = 4  # symbols per segment (Gaussian breakpoints)
     hot_tracker_size: int = 8  # top-λ hot words spread across groups
-
-
-@dataclass(frozen=True)
-class EngineConf:
-    """Top-level engine config: index + partitioner + freshness defaults."""
-
-    index: VectorIndexConf = field(default_factory=VectorIndexConf)
-    partitioner: PartitionerConf = field(default_factory=PartitionerConf)
-    max_ttl_ms: int = 2_400_000  # params.yaml:35 freshness window

@@ -191,8 +191,7 @@ class HnswIndex:
         return True
 
     def get_ts(self, label: int, default=_TS_MISSING):
-        """Event-time of a label (neutral accessor shared with the native
-        adapter, so segment call sites need no backend-specific poking).
+        """Event-time of a label.
         Returns ``default`` for unknown labels when given, else KeyError."""
         slot = self._by_label.get(int(label))
         if slot is None:
@@ -509,13 +508,6 @@ class HnswIndex:
     @classmethod
     def loads(cls, data: bytes) -> "HnswIndex":
         d = pickle.loads(data)
-        if d.get("backend") == "hnswlib":
-            # a sidecar dumped by the native adapter: route through the
-            # seam so segment artifacts stay loadable across backends
-            # (pass the already-unpickled payload — no second unpickle)
-            from vstream_spark.index.native import NativeHnswIndex
-
-            return NativeHnswIndex.from_state(d)  # type: ignore[return-value]
         idx = cls(
             d["dim"], d["metric"], d["M"], d["ef_construction"], d["seed"],
             capacity=max(1, len(d["labels"])),
@@ -545,26 +537,14 @@ def build_index(
     ef_construction: int = 128,
     seed: int = 42,
     bulk: bool | None = None,
-) -> "HnswIndex":  # or native.NativeHnswIndex — same operator-facing interface
+) -> "HnswIndex":
     """Build an index over a shard, sorted by label for retry determinism.
 
     ``bulk=None`` auto-selects: shards >= 2048 vectors use the blockwise
     exact-kNN bulk constructor (``build_index_bulk``, ~6x faster, BLAS-bound);
     smaller shards use incremental insertion. Both are deterministic for a
     given input set.
-
-    This function is THE backend seam (SCALE.md posture #4): when
-    ``VSTREAM_SPARK_HNSW_BACKEND=hnswlib`` is set, the shard index is built
-    by the native adapter instead — same search/dumps interface, zero
-    operator-code change (pinned by tests/test_hnsw.py's fake-backend
-    seam test). Default stays the numpy graph (deterministic, hash-matched).
     """
-    from vstream_spark.index import native
-
-    if native.native_selected():
-        return native.build_native_index(
-            vecs, labels, ts, metric, M, ef_construction, seed
-        )
     if bulk is None:
         bulk = len(labels) >= _BULK_THRESHOLD
     if bulk:

@@ -53,6 +53,7 @@ from vstream_spark.operators.knn import knn_exact, topk
 __all__ = [
     "compute_k_over",
     "knn_filtered_adaptive",
+    "recheck_and_escalate",
     "validate_force_strategy",
 ]
 
@@ -163,45 +164,62 @@ def knn_filtered_adaptive(
         metric=metric,
         index_conf=iconf,
     )
-    # hits are |Q| x k' rows — the SMALL side; join them against the match
-    # ids (inner), never the reverse. AQE broadcasts the hit side when it
-    # fits; at worst this is a shuffle of O(result) rows, not O(N).
-    keep = pred_vectors.select(F.col("id").alias("neighbor_id"))
-    # materialize ONCE: the deficiency probe below is an action over this
-    # frame, and without truncation the returned `out` would re-run the
-    # whole ANN lineage (per-partition index build + search) a second time
-    # on the caller's first action. |Q| x k' rows — small by construction.
-    # localCheckpoint blocks live on executors (not fault-tolerant): an
-    # executor loss invalidates them and fails the caller's later actions —
-    # acceptable for this interactive search path (re-issue the query); a
-    # long-lived pipeline would persist() to replicated storage instead.
-    # lazy: the deficiency count below is the single materializing action
-    matched = ann.drop("rank").join(keep, "neighbor_id").localCheckpoint(eager=False)
+    out = recheck_and_escalate(ann, queries, pred_vectors, k, metric)
+    return out, strategy, selectivity
 
-    # Per-query exact top-up: if a query keeps >= k matches inside its
-    # (exact) global top-k', its filtered top-k is provably exact — any
-    # nearer match would itself sit in the top-k'. Queries below k matches
-    # (predicate locally sparse around the query point) escalate to the
-    # pre-filter branch. The deficient-qid set stays a DataFrame end to end
-    # (broadcast anti/semi joins, never a collect()+isin literal — an
-    # adversarial predicate could make that In-expression |Q| entries long
-    # and bloat the plan, ADVICE r11); the only driver value is its COUNT.
-    # Derived from the checkpointed `matched`, so computing it is O(|Q|xk').
+
+def recheck_and_escalate(
+    hits: DataFrame,
+    queries: DataFrame,
+    pred_vectors: DataFrame,
+    k: int,
+    metric: str,
+) -> DataFrame:
+    """The filtered re-check tail shared by ``knn_filtered_adaptive``'s
+    post_filter branch and ``SegmentSearcher.search_filtered``'s index
+    branches (one implementation, so the two cannot drift): keep the
+    ``hits`` whose id matches the predicate, cut each query to its k best,
+    and escalate queries left under k matches to an exact scan of
+    ``pred_vectors`` (id, emb). Returns (qid, neighbor_id, distance, rank).
+
+    A query keeping >= k matches inside its (exact) global top-k' is
+    provably exact — any nearer match would itself sit in the top-k'.
+    Queries below k matches (predicate locally sparse around the query
+    point, or every hit tombstoned/filtered away) escalate to the exact
+    branch; deficiency is counted against the FULL query frame so such a
+    query escalates instead of vanishing. Cutting to k before counting
+    changes nothing: min(m, k) < k exactly when m < k.
+
+    Scale: hits are |Q| x k' rows — the SMALL side; they join the match
+    ids (inner), never the reverse, so AQE broadcasts the hit side and the
+    big side never shuffles. The deficient-qid set stays a DataFrame end
+    to end (broadcast anti/semi joins, never a collect()+isin literal — an
+    adversarial predicate could make that In-expression |Q| entries long,
+    ADVICE r11); the only driver value is its COUNT.
+    """
+    keep = pred_vectors.select(F.col("id").alias("neighbor_id"))
+    # materialize ONCE: the deficiency count below is the single action
+    # over this frame, and without truncation the returned frame would
+    # re-run the whole search lineage on the caller's first action.
+    # localCheckpoint blocks live on executors (not fault-tolerant): an
+    # executor loss fails the caller's later actions — acceptable for an
+    # interactive search (re-issue the query).
+    got = topk(
+        hits.select("qid", "neighbor_id", "distance").join(keep, "neighbor_id"),
+        k,
+        dedup=False,
+    ).localCheckpoint(eager=False)
     qcnt = (
         queries.select("qid")
-        .join(matched.groupBy("qid").agg(F.count(F.lit(1)).alias("m")), "qid", "left")
+        .join(got.groupBy("qid").agg(F.count(F.lit(1)).alias("m")), "qid", "left")
         .select("qid", F.coalesce(F.col("m"), F.lit(0)).alias("m"))
     )
     deficient = qcnt.filter(F.col("m") < k).select("qid").localCheckpoint(
         eager=False
     )
     n_deficient = deficient.count()
-    out = topk(
-        matched.join(F.broadcast(deficient), "qid", "left_anti")
-        if n_deficient
-        else matched,
-        k,
-        dedup=False,
+    out = (
+        got.join(F.broadcast(deficient), "qid", "left_anti") if n_deficient else got
     ).select("qid", "neighbor_id", "distance", "rank")
     if n_deficient:
         escalated = knn_exact(
@@ -211,4 +229,4 @@ def knn_filtered_adaptive(
             metric=metric,
         ).select("qid", "neighbor_id", "distance", "rank")
         out = out.unionByName(escalated)
-    return out, strategy, selectivity
+    return out

@@ -63,6 +63,44 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
+def _values_oracle(rows, cols: str) -> str:
+    """DuckDB oracle selecting the literal ``rows`` as table ``t(cols)``;
+    cells are str, bool or int."""
+
+    def lit(v) -> str:
+        if isinstance(v, bool):
+            return "true" if v else "false"
+        return f"'{v}'" if isinstance(v, str) else str(v)
+
+    values = ", ".join("(" + ", ".join(lit(v) for v in r) + ")" for r in rows)
+    return f"SELECT * FROM (VALUES {values}) t({cols})"
+
+
+def _exact_recalls(
+    vectors: DataFrame, queries: DataFrame, tag: str, **results: DataFrame
+) -> dict:
+    """Recall@10 of each result frame against the exact l2 top-10 of
+    ``queries`` over ``vectors`` (cached while the recalls run), printed to
+    stderr as ``# <tag> <name>=<recall> ...``."""
+    import sys
+
+    from vstream_spark.functions.metrics import mean_recall
+
+    exact = knn_exact(
+        vectors.select("id", "emb"), queries, k=10, metric="l2"
+    ).cache()
+    try:
+        exact.count()
+        rec = {name: mean_recall(df, exact, k=10) for name, df in results.items()}
+    finally:
+        exact.unpersist()
+    print(
+        f"# {tag} " + " ".join(f"{n}={r:.4f}" for n, r in rec.items()),
+        file=sys.stderr,
+    )
+    return rec
+
+
 def _emb_pair(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Vectors = all embeddings; queries = every 25th embedding (no TTL)."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1466,8 +1504,7 @@ def _recall_gate_rows(spark, specs, run_variant) -> DataFrame:
 
 
 def _recall_gate_oracle(specs) -> str:
-    values = ", ".join(f"('{v}', true)" for v, _, _ in specs)
-    return f"SELECT * FROM (VALUES {values}) t(variant, recall_ok)"
+    return _values_oracle([(v, True) for v, _, _ in specs], "variant, recall_ok")
 
 
 @register("knn_partitioner_recall", _recall_gate_oracle(_PARTITIONER_RECALL_SPECS))
@@ -1515,11 +1552,10 @@ _BALANCE_GATE_SPECS: list[tuple[str, dict, float]] = [
     ("odyssey", dict(kind="odyssey", num_partitions=8), 2.5),
 ]
 
-_BALANCE_GATE_ORACLE = (
-    "SELECT * FROM (VALUES "
-    + ", ".join(f"('{v}', true)" for v, _, _ in _BALANCE_GATE_SPECS)
-    + ", ('equidepth_relieves_lsh_skew', true)"
-    + ") t(variant, balance_ok)"
+_BALANCE_GATE_ORACLE = _values_oracle(
+    [(v, True) for v, _, _ in _BALANCE_GATE_SPECS]
+    + [("equidepth_relieves_lsh_skew", True)],
+    "variant, balance_ok",
 )
 
 
@@ -5215,10 +5251,8 @@ _FILTERED_ROUTE_CASES: list[tuple[str, str]] = [
     ("weak", "post_filter"),  # label % 2 = 0 -> ~0.50 > threshold
 ]
 
-_FILTERED_ROUTE_ORACLE = (
-    "SELECT * FROM (VALUES "
-    + ", ".join(f"('{c}', '{s}', true)" for c, s in _FILTERED_ROUTE_CASES)
-    + ") t(pred_case, strategy, route_ok)"
+_FILTERED_ROUTE_ORACLE = _values_oracle(
+    [(c, s, True) for c, s in _FILTERED_ROUTE_CASES], "pred_case, strategy, route_ok"
 )
 
 
@@ -5227,10 +5261,7 @@ def q_knn_filtered_route_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Selectivity-adaptive filtered kNN: router picks the expected plan and
     both plans agree on the answer (exact equality for pre_filter; recall
     >= 0.9 for the oversampled post_filter) — see operators/filtered.py."""
-    import sys
-
     from vstream_spark.config import VectorIndexConf
-    from vstream_spark.functions.metrics import mean_recall
     from vstream_spark.operators.filtered import knn_filtered_adaptive
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -5253,37 +5284,30 @@ def q_knn_filtered_route_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         routed, strategy, sel = knn_filtered_adaptive(
             vectors, queries, pred, k=10, metric="l2", index_conf=iconf
         )
-        exact = knn_exact(
-            vectors.filter(pred).select("id", "emb"), queries, k=10, metric="l2"
-        ).cache()
-        try:
-            exact.count()
-            # both branches must answer the same predicate: when routing
-            # lands on pre_filter (identical to the exact scan by
-            # construction — its exactness is pinned by tests/test_filtered)
-            # force the OTHER branch so the oversampled post-filter plan is
-            # exercised on this predicate too; when routing lands on
-            # post_filter the routed result IS that branch already.
-            if strategy == "pre_filter":
-                post, _, _ = knn_filtered_adaptive(
-                    vectors, queries, pred, k=10, metric="l2",
-                    index_conf=iconf, force_strategy="post_filter",
-                )
-            else:
-                post = routed
-            routed_r = mean_recall(routed, exact, k=10)
-            post_r = mean_recall(post, exact, k=10)
-            print(
-                f"# filtered_route {case}: sel={sel:.3f} strategy={strategy} "
-                f"routed_recall={routed_r:.4f} post_recall={post_r:.4f}",
-                file=sys.stderr,
+        # both branches must answer the same predicate: when routing
+        # lands on pre_filter (identical to the exact scan by
+        # construction — its exactness is pinned by tests/test_filtered)
+        # force the OTHER branch so the oversampled post-filter plan is
+        # exercised on this predicate too; when routing lands on
+        # post_filter the routed result IS that branch already.
+        if strategy == "pre_filter":
+            post, _, _ = knn_filtered_adaptive(
+                vectors, queries, pred, k=10, metric="l2",
+                index_conf=iconf, force_strategy="post_filter",
             )
-            # routed answer must be the exact top-k when the exact branch
-            # was chosen; the approximate branch clears the 0.9 floor
-            routed_ok = routed_r >= (1.0 if strategy == "pre_filter" else 0.9)
-            ok = strategy == expect and routed_ok and post_r >= 0.9
-        finally:
-            exact.unpersist()
+        else:
+            post = routed
+        rec = _exact_recalls(
+            vectors.filter(pred),
+            queries,
+            f"filtered_route {case}: sel={sel:.3f} strategy={strategy}",
+            routed_recall=routed,
+            post_recall=post,
+        )
+        # routed answer must be the exact top-k when the exact branch
+        # was chosen; the approximate branch clears the 0.9 floor
+        routed_ok = rec["routed_recall"] >= (1.0 if strategy == "pre_filter" else 0.9)
+        ok = strategy == expect and routed_ok and rec["post_recall"] >= 0.9
         rows.append((case, strategy, bool(ok)))
     return spark.createDataFrame(
         rows, "pred_case string, strategy string, route_ok boolean"
@@ -5317,10 +5341,8 @@ _FILTERED_STORE_CASES: list[tuple[str, str]] = [
     ("weak", "post_filter"),  # label % 2 = 0 -> ~0.50 > threshold
 ]
 
-_FILTERED_STORE_ORACLE = (
-    "SELECT * FROM (VALUES "
-    + ", ".join(f"('{c}', '{s}', true)" for c, s in _FILTERED_STORE_CASES)
-    + ") t(pred_case, strategy, route_ok)"
+_FILTERED_STORE_ORACLE = _values_oracle(
+    [(c, s, True) for c, s in _FILTERED_STORE_CASES], "pred_case, strategy, route_ok"
 )
 
 
@@ -5331,10 +5353,7 @@ def q_knn_filtered_store_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the visible snapshot, and the post_filter branch (oversampled sidecar-
     index search + re-check + escalation) clears a 0.9 recall floor — both
     branches forced for both predicates (storage/search.py)."""
-    import sys
-
     from vstream_spark.config import VectorIndexConf
-    from vstream_spark.functions.metrics import mean_recall
     from vstream_spark.storage.search import SegmentSearcher
 
     store = _filtered_store(spark, sf_dir)
@@ -5359,33 +5378,25 @@ def q_knn_filtered_store_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         routed = spark.createDataFrame(
             got_pdf[["qid", "neighbor_id", "distance", "rank"]]
         )
-        exact = knn_exact(
-            searcher.visible().filter(pred).select("id", "emb"),
-            queries, k=10, metric="l2",
-        ).cache()
-        try:
-            exact.count()
-            if strategy == "pre_filter":
-                post_pdf, _, _ = SegmentSearcher(store, iconf).search_filtered(
-                    queries, pred, k=10, metric="l2",
-                    force_strategy="post_filter",
-                )
-                post = spark.createDataFrame(
-                    post_pdf[["qid", "neighbor_id", "distance", "rank"]]
-                )
-            else:
-                post = routed
-            routed_r = mean_recall(routed, exact, k=10)
-            post_r = mean_recall(post, exact, k=10)
-            print(
-                f"# filtered_store {case}: sel={sel:.3f} strategy={strategy} "
-                f"routed_recall={routed_r:.4f} post_recall={post_r:.4f}",
-                file=sys.stderr,
+        if strategy == "pre_filter":
+            post_pdf, _, _ = SegmentSearcher(store, iconf).search_filtered(
+                queries, pred, k=10, metric="l2",
+                force_strategy="post_filter",
             )
-            routed_ok = routed_r >= (1.0 if strategy == "pre_filter" else 0.9)
-            ok = strategy == expect and routed_ok and post_r >= 0.9
-        finally:
-            exact.unpersist()
+            post = spark.createDataFrame(
+                post_pdf[["qid", "neighbor_id", "distance", "rank"]]
+            )
+        else:
+            post = routed
+        rec = _exact_recalls(
+            searcher.visible().filter(pred),
+            queries,
+            f"filtered_store {case}: sel={sel:.3f} strategy={strategy}",
+            routed_recall=routed,
+            post_recall=post,
+        )
+        routed_ok = rec["routed_recall"] >= (1.0 if strategy == "pre_filter" else 0.9)
+        ok = strategy == expect and routed_ok and rec["post_recall"] >= 0.9
         rows.append((case, strategy, bool(ok)))
     return spark.createDataFrame(
         rows, "pred_case string, strategy string, route_ok boolean"
@@ -5415,10 +5426,8 @@ _ININDEX_CASES: list[tuple[str, str]] = [
     ("guard_rejects", "rejected"),
 ]
 
-_ININDEX_ORACLE = (
-    "SELECT * FROM (VALUES "
-    + ", ".join(f"('{c}', '{s}', true)" for c, s in _ININDEX_CASES)
-    + ") t(pred_case, strategy, route_ok)"
+_ININDEX_ORACLE = _values_oracle(
+    [(c, s, True) for c, s in _ININDEX_CASES], "pred_case, strategy, route_ok"
 )
 
 
@@ -5429,10 +5438,7 @@ def q_knn_inindex_filter_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     oversampling), clears the same recall floor as the sibling branches, a
     permissive hint stays correct, and a non-implied hint is rejected by
     the probe's implication guard (storage/search.py)."""
-    import sys
-
     from vstream_spark.config import VectorIndexConf
-    from vstream_spark.functions.metrics import mean_recall
     from vstream_spark.storage.search import SegmentSearcher
 
     store = _filtered_store(spark, sf_dir)
@@ -5474,20 +5480,12 @@ def q_knn_inindex_filter_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         got = spark.createDataFrame(
             got_pdf[["qid", "neighbor_id", "distance", "rank"]]
         )
-        exact = knn_exact(
-            searcher.visible().filter(pred).select("id", "emb"),
-            queries, k=10, metric="l2",
-        ).cache()
-        try:
-            exact.count()
-            r = mean_recall(got, exact, k=10)
-        finally:
-            exact.unpersist()
-        print(
-            f"# inindex_filter {case}: sel={sel:.3f} strategy={strategy} "
-            f"recall={r:.4f}",
-            file=sys.stderr,
-        )
+        r = _exact_recalls(
+            searcher.visible().filter(pred),
+            queries,
+            f"inindex_filter {case}: sel={sel:.3f} strategy={strategy}",
+            recall=got,
+        )["recall"]
         rows.append((case, strategy, bool(strategy == "in_index" and r >= 0.9)))
     return spark.createDataFrame(
         rows, "pred_case string, strategy string, route_ok boolean"
@@ -5541,10 +5539,8 @@ def _stream_filtered_source(spark: SparkSession, sf_dir: str) -> str:
 
 _STREAM_FILTERED_CASES: list[str] = ["filtered_in_index", "warm_restore_terminates"]
 
-_STREAM_FILTERED_ORACLE = (
-    "SELECT * FROM (VALUES "
-    + ", ".join(f"('{c}', true)" for c in _STREAM_FILTERED_CASES)
-    + ") t(pred_case, case_ok)"
+_STREAM_FILTERED_ORACLE = _values_oracle(
+    [(c, True) for c in _STREAM_FILTERED_CASES], "pred_case, case_ok"
 )
 
 
@@ -5694,10 +5690,8 @@ def _ref_bpe_local(words: dict[str, int], num_merges: int):
     return merges
 
 
-_TEXT_BPE_GATE_ORACLE = (
-    "SELECT * FROM (VALUES "
-    + ", ".join(f"({i}, true)" for i in range(1, 9))
-    + ") t(merge_rank, merge_ok)"
+_TEXT_BPE_GATE_ORACLE = _values_oracle(
+    [(i, True) for i in range(1, 9)], "merge_rank, merge_ok"
 )
 
 

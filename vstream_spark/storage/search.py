@@ -443,6 +443,24 @@ def _segment_index(seg: dict, conf: VectorIndexConf, metric: str):
     return idx
 
 
+_RESULT_DTYPES = {
+    "qid": "int64", "neighbor_id": "int64", "distance": "float64", "rank": "int32"
+}
+
+
+def _ranked(pdf: pd.DataFrame | None) -> pd.DataFrame:
+    """The pandas (qid, neighbor_id, distance, rank) result frame: rows
+    sorted by (qid, distance, neighbor_id) and ranked 1.. per query.
+    ``None`` gives the typed empty result."""
+    if pdf is None:
+        return pd.DataFrame({c: [] for c in _RESULT_DTYPES}).astype(_RESULT_DTYPES)
+    pdf = pdf.sort_values(
+        ["qid", "distance", "neighbor_id"], kind="stable"
+    ).reset_index(drop=True)
+    pdf["rank"] = pdf.groupby("qid").cumcount().astype("int32") + 1
+    return pdf[list(_RESULT_DTYPES)]
+
+
 class SegmentSearcher:
     """Top-k search across segments with pruning, temperature ordering and
     adaptive early termination."""
@@ -726,6 +744,39 @@ class SegmentSearcher:
         for sid in searched_ids:
             self._update_temperature(sid, hits=int(seg_hits.get(sid, 0)))
 
+    def _search_merged(
+        self,
+        queries: DataFrame,
+        k: int,
+        metric: str,
+        min_event_time: int | None,
+        max_event_time: int | None,
+        ef_search: int | None,
+        options: "SearchOptions | None",
+        update_termination: bool,
+        filter_expr: str | None,
+        recheck_filter: bool,
+    ) -> tuple[DataFrame | None, list[str], bool]:
+        """The steps :meth:`search` and :meth:`search_df` share: validate
+        the hint (which forces ``update_termination=False``), run the
+        chunked loop, record the visited segments and re-check filtered
+        hits. Returns the merged frame (``None`` when no segment survives
+        pruning), the visited segment ids and the effective
+        ``update_termination``."""
+        if filter_expr is not None:
+            validate_hint_expr(filter_expr)
+            update_termination = False
+        merged, searched_ids = self._run_loop(
+            queries, k, metric, min_event_time, max_event_time,
+            ef_search, options, filter_expr,
+        )
+        self.last_searched_ids = list(searched_ids)
+        if merged is not None and filter_expr is not None and recheck_filter:
+            merged = self._recheck_filter(
+                merged, filter_expr, min_event_time, max_event_time
+            )
+        return merged, searched_ids, update_termination
+
     def _recheck_filter(
         self,
         merged: DataFrame,
@@ -793,22 +844,12 @@ class SegmentSearcher:
         ``update_termination=False`` runs the search without writing the
         C8 EMA state (internal oversampled/filtered calls).
         """
-        if filter_expr is not None:
-            validate_hint_expr(filter_expr)
-            update_termination = False
-        merged, searched_ids = self._run_loop(
-            queries, k, metric, min_event_time, max_event_time,
-            ef_search, options, filter_expr,
+        merged, searched_ids, update_termination = self._search_merged(
+            queries, k, metric, min_event_time, max_event_time, ef_search,
+            options, update_termination, filter_expr, recheck_filter,
         )
-        self.last_searched_ids = list(searched_ids)
-        if merged is not None and filter_expr is not None and recheck_filter:
-            merged = self._recheck_filter(
-                merged, filter_expr, min_event_time, max_event_time
-            )
         if merged is None:
-            return pd.DataFrame(
-                {"qid": [], "neighbor_id": [], "distance": [], "rank": []}
-            ).astype({"qid": "int64", "neighbor_id": "int64", "distance": "float64", "rank": "int32"})
+            return _ranked(None)
         # final materialization: O(queries x k) rows — the result itself
         out = merged.toPandas()
         kth = out.groupby("qid")["distance"].max() if len(out) else pd.Series([], dtype=float)
@@ -821,10 +862,7 @@ class SegmentSearcher:
             else {}
         )
         self._finalize_stats(kth, seg_hits, searched_ids, update_termination)
-        out = out.drop(columns=[c for c in ("neighbor_ts", "_seg") if c in out.columns])
-        out = out.sort_values(["qid", "distance", "neighbor_id"], kind="stable").reset_index(drop=True)
-        out["rank"] = out.groupby("qid").cumcount().astype("int32") + 1
-        return out
+        return _ranked(out)
 
     def search_df(
         self,
@@ -852,20 +890,12 @@ class SegmentSearcher:
         ``recheck_filter=False`` (``search_filtered`` passes False — its
         own predicate re-check is at least as strict, so the extra join
         would be pure overhead on the hot filtered path)."""
-        if filter_expr is not None:
-            validate_hint_expr(filter_expr)
-            update_termination = False
-        merged, searched_ids = self._run_loop(
-            queries, k, metric, min_event_time, max_event_time,
-            ef_search, options, filter_expr,
+        merged, searched_ids, update_termination = self._search_merged(
+            queries, k, metric, min_event_time, max_event_time, ef_search,
+            options, update_termination, filter_expr, recheck_filter,
         )
-        self.last_searched_ids = list(searched_ids)
         if merged is None:
             return None
-        if filter_expr is not None and recheck_filter:
-            merged = self._recheck_filter(
-                merged, filter_expr, min_event_time, max_event_time
-            )
         from pyspark.sql import functions as F
 
         stat = (
@@ -1019,15 +1049,14 @@ class SegmentSearcher:
           / selectivity)`` (clamped by ``max_oversample_k``), then re-check
           and keep k per query.
 
-        The re-check/escalation tail is shared by both index branches and
-        stays a DataFrame end-to-end (ADVICE r12 + r12 twin-drift defect:
-        same convention as ``knn_filtered_adaptive`` — hits join the
-        column-pruned match-id scan, deficiency is a broadcast anti/semi
-        join against the FULL query frame, and only the final |Q| x k
-        result is collected). The internal index search runs with
-        ``update_termination=False`` (ADVICE r12 medium: an oversampled or
-        allowlist-inflated kth distance must not seed the C8 EMA a later
-        plain search terminates against).
+        Both index branches end in the re-check/escalation tail of
+        ``knn_filtered_adaptive`` (``recheck_and_escalate``, one
+        implementation since the r12 twin-drift defect), which stays a
+        DataFrame end-to-end; only the final |Q| x k result is collected.
+        The internal index search runs with ``update_termination=False``
+        (ADVICE r12 medium: an oversampled or allowlist-inflated kth
+        distance must not seed the C8 EMA a later plain search terminates
+        against).
 
         The visible() snapshot and the probe aggregates ride the
         PER-VERSION driver caches (:func:`_snapshot_cache_put`): repeated
@@ -1038,11 +1067,11 @@ class SegmentSearcher:
         selectivity)``; result is the pandas (qid, neighbor_id, distance,
         rank) frame of :meth:`search`.
         """
-        from pyspark.sql import Window
         from pyspark.sql import functions as F
 
         from vstream_spark.operators.filtered import (
             compute_k_over,
+            recheck_and_escalate,
             validate_force_strategy,
         )
         from vstream_spark.operators.knn import knn_exact
@@ -1057,15 +1086,9 @@ class SegmentSearcher:
                 "force_strategy='in_index' requires predicate_expr (the "
                 "executor-side allowlist is built from it)"
             )
-        empty = pd.DataFrame(
-            {"qid": [], "neighbor_id": [], "distance": [], "rank": []}
-        ).astype(
-            {"qid": "int64", "neighbor_id": "int64", "distance": "float64",
-             "rank": "int32"}
-        )
         vis = self._visible_cached(min_event_time, max_event_time)
         if vis is None:
-            return empty, "pre_filter", 0.0
+            return _ranked(None), "pre_filter", 0.0
         # one column-pruned probe: total + survivors (+ the hint
         # implication guard when an expr rides along) in a single
         # aggregation (no emb read); cached per (store version,
@@ -1114,25 +1137,12 @@ class SegmentSearcher:
             else ("in_index" if predicate_expr is not None else "post_filter")
         )
 
-        def _finish(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(
-                ["qid", "distance", "neighbor_id"], kind="stable"
-            ).reset_index(drop=True)
-            pdf["rank"] = pdf.groupby("qid").cumcount().astype("int32") + 1
-            return pdf[["qid", "neighbor_id", "distance", "rank"]]
-
         pred_vis = vis.filter(predicate)
         if strategy == "pre_filter":
             out = knn_exact(
                 pred_vis.select("id", "emb"), queries, k=k, metric=metric
             )
-            return (
-                _finish(
-                    out.select("qid", "neighbor_id", "distance").toPandas()
-                ),
-                strategy,
-                selectivity,
-            )
+            return _ranked(out.toPandas()), strategy, selectivity
 
         if strategy == "in_index":
             k_search, expr = k, predicate_expr
@@ -1152,71 +1162,20 @@ class SegmentSearcher:
             ef_search=max(ef_search or self.conf.ef_search, k_search),
             update_termination=False,
             filter_expr=expr,
-            # the predicate re-check below is at least as strict as the
-            # expr re-check (predicate => expr), so the generic
+            # recheck_and_escalate's predicate re-check is at least as
+            # strict as the expr re-check (predicate => expr), so the generic
             # _recheck_filter join would be pure overhead here
             recheck_filter=False,
         )
-        spark = queries.sparkSession
         if res is None:
-            res = spark.createDataFrame(
+            res = queries.sparkSession.createDataFrame(
                 [], "qid bigint, neighbor_id bigint, distance double"
             )
-        # predicate re-check: the |Q| x k' hit frame (small by
-        # construction) joins the column-pruned match-id scan — AQE
-        # broadcasts the hit side; the big side never shuffles. Then k
-        # best per query, all on the cluster.
-        keep = pred_vis.select(F.col("id").alias("neighbor_id"))
-        w_rank = Window.partitionBy("qid").orderBy(
-            F.col("distance").asc(), F.col("neighbor_id").asc()
-        )
-        got = (
-            res.join(keep, "neighbor_id")
-            .withColumn("_r", F.row_number().over(w_rank))
-            .filter(F.col("_r") <= k)
-            .drop("_r")
-            # lazy: deficient.count() below materializes this in one job
-            .localCheckpoint(eager=False)
-        )
-        # deficiency against the FULL query frame (a query whose every
-        # hit was tombstoned/filtered away must escalate, not vanish);
-        # the deficient-qid set stays a DataFrame — only its COUNT
-        # reaches the driver (same contract as knn_filtered_adaptive)
-        qcnt = (
-            queries.select("qid")
-            .join(
-                got.groupBy("qid").agg(F.count(F.lit(1)).alias("m")),
-                "qid",
-                "left",
-            )
-            .select("qid", F.coalesce(F.col("m"), F.lit(0)).alias("m"))
-        )
-        deficient = (
-            qcnt.filter(F.col("m") < k).select("qid")
-            .localCheckpoint(eager=False)
-        )
-        n_deficient = deficient.count()
-        out = (
-            got.join(F.broadcast(deficient), "qid", "left_anti")
-            if n_deficient
-            else got
-        )
-        if n_deficient:
-            esc = knn_exact(
-                pred_vis.select("id", "emb"),
-                queries.join(F.broadcast(deficient), "qid", "left_semi"),
-                k=k,
-                metric=metric,
-            ).select("qid", "neighbor_id", "distance")
-            out = out.unionByName(esc)
+        out = recheck_and_escalate(res, queries, pred_vis, k, metric)
         # the FINAL |Q| x k result is the only driver materialization
         # (the cached snapshot stays persisted for the NEXT call at
         # this store version; eviction, not call exit, unpersists it)
-        return (
-            _finish(out.select("qid", "neighbor_id", "distance").toPandas()),
-            strategy,
-            selectivity,
-        )
+        return _ranked(out.toPandas()), strategy, selectivity
 
     def _tombstones(
         self, min_event_time: int | None, max_event_time: int | None

@@ -190,7 +190,7 @@ def build_index_object(
     if has_op:
         dels = pdf[pdf["op"] == "D"]
         for rid, rtime in zip(dels["id"].to_numpy(), dels["event_time"].to_numpy()):
-            # neutral accessor (both index backends), not positional poking
+            # neutral accessor (every index kind), not positional poking
             t = idx.get_ts(int(rid), None)
             if t is not None and int(rtime) > t:
                 idx.mark_delete(int(rid))
