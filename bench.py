@@ -458,14 +458,14 @@ def main() -> None:
         # ef_search doubles as the nprobe override on IVF workers (the
         # searcher passes max(ef_search, k) through) — keep both at 32
         idx_conf = VectorIndexConf(
-            metric="l2", k=10, index_kind="ivf", nprobe=32, ef_search=32
+            metric="l2", index_kind="ivf", nprobe=32, ef_search=32
         )
         # best-of-2 like every other axis (idempotent overwrite of the same
         # artifact): the first build pays one-time python-worker/JIT setup
         t_build = None
         for _ in range(2):
             t0 = time.perf_counter()
-            store.build_segment_indexes(store.segments(), metric="l2", kind="ivf")
+            store.build_segment_indexes(store.segments(), VectorIndexConf(index_kind="ivf"))
             dt = time.perf_counter() - t0
             t_build = dt if t_build is None else min(t_build, dt)
         derived["index_build_vec_per_s"] = round(n_vec / t_build, 1)
@@ -531,7 +531,7 @@ def main() -> None:
             cap8 = max(1, -(-n_vec // 8))
             store8 = SegmentStore(spark, tmp + "/seg8", max_rows_per_segment=cap8)
             store8.upsert_batch(big)
-            store8.build_segment_indexes(store8.segments(), metric="l2", kind="ivf")
+            store8.build_segment_indexes(store8.segments(), VectorIndexConf(index_kind="ivf"))
             # fresh searcher PER REP (ADVICE r12): a shared searcher lets
             # rep 1 seed the C8 EMA and reps 2+ early-terminate, so the
             # best-of-N timing and the recall (computed from the LAST rep)
@@ -597,7 +597,7 @@ def main() -> None:
                 )
                 storeh.upsert_batch(cold_j)
             storeh.build_segment_indexes(
-                storeh.segments(), metric="l2", kind="ivf"
+                storeh.segments(), VectorIndexConf(index_kind="ivf")
             )
             iconf_h = dataclasses.replace(
                 idx_conf, termination_factor=1.2, segments_per_job=2
@@ -674,7 +674,7 @@ def main() -> None:
                 )
                 storep.upsert_batch(bigp)
                 storep.build_segment_indexes(
-                    storep.segments(), metric="l2", kind="ivf"
+                    storep.segments(), VectorIndexConf(index_kind="ivf")
                 )
                 best_qp = None
                 outp = None
@@ -754,10 +754,10 @@ def main() -> None:
                 spark, tmp + "/segf", max_rows_per_segment=max(1, -(-n_f // 4))
             )
             storef.upsert_batch(bigf)
-            storef.build_segment_indexes(storef.segments(), metric="l2", kind="hnsw")
+            storef.build_segment_indexes(storef.segments(), VectorIndexConf())
             pred = F.col("label") < 30
             iconf_f = VectorIndexConf(
-                metric="l2", k=10, index_kind="hnsw", ef_search=128,
+                metric="l2", index_kind="hnsw", ef_search=128,
                 termination_lower_bound=1.0,  # rep-stable full depth
             )
             best_qf = None

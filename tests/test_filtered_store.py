@@ -32,7 +32,7 @@ def store(spark, tmp_path_factory):
     st = SegmentStore(spark, str(tmp_path_factory.mktemp("fstore") / "segments"))
     for lo in (0, 120):
         seg = st.append_segment(spark.createDataFrame(_rows(lo, lo + 120), SCHEMA))
-        st.build_segment_index(seg, metric="l2", m=16, ef_construction=128)
+        st.build_segment_indexes([seg], VectorIndexConf())
     return st
 
 
@@ -447,7 +447,7 @@ def test_zone_map_prunes_segments_before_jobs(spark, tmp_path):
         ]
         seg = st.append_segment(spark.createDataFrame(rows, SCHEMA))
         assert "col_stats" in seg and "label" in seg["col_stats"]
-        st.build_segment_index(seg, metric="l2", m=16, ef_construction=128)
+        st.build_segment_indexes([seg], VectorIndexConf())
     searcher = SegmentSearcher(st, CONF)
     q = spark.createDataFrame([(0, [0.5] * DIM)], "qid long, emb array<float>")
     got, strategy, _ = searcher.search_filtered(
@@ -480,7 +480,7 @@ def test_zone_map_prunes_with_between_and_in_hints(spark, tmp_path):
             for i in range(60)
         ]
         seg = st.append_segment(spark.createDataFrame(rows, SCHEMA))
-        st.build_segment_index(seg, metric="l2", m=16, ef_construction=128)
+        st.build_segment_indexes([seg], VectorIndexConf())
     seg_ids = [s["id"] for s in st.segments()]
     q = spark.createDataFrame([(0, [0.5] * DIM)], "qid long, emb array<float>")
 
@@ -521,14 +521,14 @@ def test_filter_expr_recheck_drops_stale_only_matches(spark, tmp_path):
         for i in range(10, 30)
     ]
     sa = st.append_segment(spark.createDataFrame(rows_a, SCHEMA))
-    st.build_segment_index(sa, metric="l2", m=16, ef_construction=128)
+    st.build_segment_indexes([sa], VectorIndexConf())
     # segment B: NEWER version of id 7 with label 1 (fails the expr)
     rows_b = [(7, vec7, 1, 9000, 10**12, "I")] + [
         (i, rng.rand(DIM).astype(np.float32).tolist(), 0, i * 100, 10**12, "I")
         for i in range(30, 40)
     ]
     sb = st.append_segment(spark.createDataFrame(rows_b, SCHEMA))
-    st.build_segment_index(sb, metric="l2", m=16, ef_construction=128)
+    st.build_segment_indexes([sb], VectorIndexConf())
 
     searcher = SegmentSearcher(st, CONF)
     q = spark.createDataFrame([(0, vec7)], "qid long, emb array<float>")
@@ -621,7 +621,7 @@ def test_per_version_caches_reused_across_fresh_searchers(
 
     st = SegmentStore(spark, str(tmp_path / "cachestore"))
     seg = st.append_segment(spark.createDataFrame(_rows(0, 80), SCHEMA))
-    st.build_segment_index(seg, metric="l2", m=16, ef_construction=128)
+    st.build_segment_indexes([seg], VectorIndexConf())
     qdf = spark.createDataFrame(
         [(r[0], r[1]) for r in _rows(0, 80)[:6]], "qid bigint, emb array<float>"
     )
@@ -655,7 +655,7 @@ def test_per_version_caches_invalidated_by_store_mutation(spark, tmp_path):
     never serve a stale store state."""
     st = SegmentStore(spark, str(tmp_path / "mutstore"))
     seg = st.append_segment(spark.createDataFrame(_rows(0, 60), SCHEMA))
-    st.build_segment_index(seg, metric="l2", m=16, ef_construction=128)
+    st.build_segment_indexes([seg], VectorIndexConf())
     q = _rows(0, 60)[7]  # query vector = row 7's embedding
     qdf = spark.createDataFrame([(1, q[1])], "qid bigint, emb array<float>")
     pred = F.col("label") >= 0  # matches everything -> in_index route
@@ -668,7 +668,7 @@ def test_per_version_caches_invalidated_by_store_mutation(spark, tmp_path):
     st.upsert_batch(
         spark.createDataFrame([(9999, q[1], 5, 10**9, 10**12, "I")], SCHEMA)
     )
-    st.build_segment_indexes(st.segments(), metric="l2")
+    st.build_segment_indexes(st.segments(), VectorIndexConf())
     r2, _, _ = SegmentSearcher(st, CONF).search_filtered(
         qdf, pred, k=3, predicate_expr="label >= 0"
     )

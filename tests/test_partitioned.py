@@ -127,6 +127,38 @@ def test_worker_index_kinds_agree(spark):
         assert by == {0: 42, 1: 777}, kind
 
 
+def test_worker_auto_kind_resolves_by_shard_size(spark):
+    """index_kind='auto' in the partitioned worker goes through the shared
+    conf-driven builder: with auto_ivf_threshold below the shard size the
+    results equal index_kind='ivf' (same nlist/nprobe), above it they equal
+    index_kind='hnsw'."""
+    from vstream_spark.config import VectorIndexConf
+
+    rng = np.random.RandomState(5)
+    rows = [(int(i), rng.rand(32).astype(np.float32).tolist()) for i in range(600)]
+    vectors = spark.createDataFrame(rows, "id long, emb array<float>")
+    queries = spark.createDataFrame(
+        [(int(i), rows[i][1]) for i in range(0, 600, 40)], "qid long, emb array<float>"
+    )
+    conf = PartitionerConf(kind="simple", num_partitions=2)
+
+    def run(**kw):
+        # coarse settings keep both kinds approximate (ef_search doubles as
+        # the IVF nprobe: max(1, k) = 5 of 16 cells)
+        iconf = VectorIndexConf(
+            dim=32, m=4, ef_construction=8, ef_search=1, nlist=16, **kw
+        )
+        out = knn_partitioned_worker(
+            vectors, queries, conf, k=5, metric="l2", index_conf=iconf
+        )
+        return sorted((r.qid, r.neighbor_id, r.rank, r.distance) for r in out.collect())
+
+    ivf, hnsw = run(index_kind="ivf"), run(index_kind="hnsw")
+    assert ivf != hnsw  # the two kinds are told apart by their results
+    assert run(index_kind="auto", auto_ivf_threshold=50) == ivf
+    assert run(index_kind="auto", auto_ivf_threshold=10_000) == hnsw
+
+
 def test_worker_per_query_k(spark):
     """k=None: each query gets exactly its own k rows back (exact path)."""
     import numpy as np
@@ -156,7 +188,8 @@ def test_worker_per_query_k(spark):
 
 
 def test_worker_per_query_ef_search_column(spark):
-    """VectorSearchOptions parity (r4 VERDICT #10): an ``ef_search`` column
+    """Per-query search-option parity (vector_options.h:79-95, r4 VERDICT
+    #10): an ``ef_search`` column
     on the query side overrides index_conf.ef_search per query in the
     partitioned index worker. Proven by equivalence: a per-query-ef run with
     every query at ef=E returns exactly the global ef=E run's results, for

@@ -105,7 +105,9 @@ def test_segment_store_pq_artifact(spark, tmp_path):
             rows, "id bigint, emb array<float>, event_time bigint, ttl bigint, op string"
         )
     )
-    seg = st.build_segment_index(st.segments()[0], metric="l2", kind="pq", pq_m=4)
+    (seg,) = st.build_segment_indexes(
+        st.segments()[:1], VectorIndexConf(dim=8, index_kind="pq", pq_m=4)
+    )
     import os
 
     assert os.path.basename(seg["index_file"]) == "_pq-l2.idx"

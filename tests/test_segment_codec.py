@@ -6,6 +6,7 @@ import os
 import numpy as np
 import pytest
 
+from vstream_spark.config import VectorIndexConf
 from vstream_spark.storage.segments import SegmentStore
 
 SCHEMA = "id bigint, emb array<float>, event_time bigint, ttl bigint, op string"
@@ -64,7 +65,6 @@ def test_int8_smaller_on_disk(spark, tmp_path):
 
 
 def test_search_over_int8_store(spark, q_store):
-    from vstream_spark.config import VectorIndexConf
     from vstream_spark.operators.knn import knn_exact
     from vstream_spark.storage.search import SegmentSearcher
 
@@ -96,5 +96,5 @@ def test_compaction_preserves_codes_exactly(spark, q_store):
 
 
 def test_index_build_over_int8_segment(spark, q_store):
-    seg = q_store.build_segment_index(q_store.segments()[0], kind="hnsw")
+    (seg,) = q_store.build_segment_indexes(q_store.segments()[:1], VectorIndexConf(dim=8))
     assert os.path.exists(seg["index_file"])

@@ -108,29 +108,6 @@ def test_early_termination_skips_cold_segments(spark, store):
     assert searcher.termination_threshold != 1.0
 
 
-def test_per_query_termination_factor_override(spark, store):
-    """SearchOptions.termination_factor overrides the collection default for
-    ONE query: factor=0 can never satisfy kth <= 0*EMA, so every segment is
-    visited even though the collection config would terminate early."""
-    from vstream_spark.config import SearchOptions
-
-    conf = VectorIndexConf(
-        dim=8,
-        termination_lower_bound=0.0,
-        termination_factor=1e9,
-        termination_threshold=1.0,
-        segments_per_job=1,  # per-segment termination checks for this test
-    )
-    searcher = SegmentSearcher(store, conf)
-    q = _queries(spark, store, n=3)
-    searcher.search(q, k=2, options=SearchOptions(termination_factor=0.0))
-    assert len(searcher.temperature) == len(store.segments())  # no early stop
-    # and with the aggressive default, the next search stops after one
-    searcher2 = SegmentSearcher(store, conf)
-    searcher2.search(q, k=2)
-    assert len(searcher2.temperature) == 1
-
-
 def test_chunked_search_matches_segment_at_a_time(spark, tmp_path):
     """r11 VERDICT #1: segments_per_job chunking is a pure job-granularity
     change — on a 16-segment store, K=1 (the reference's SST-at-a-time
@@ -232,7 +209,7 @@ def test_segment_index_sidecar_and_dump(spark, store):
     from vstream_spark.storage.search import _INDEX_CACHE, _segment_index
 
     seg = store.segments()[1]
-    seg2 = store.build_segment_index(seg, metric="l2")
+    (seg2,) = store.build_segment_indexes([seg], VectorIndexConf(dim=8))
     assert os.path.exists(seg2["index_file"])
     assert os.path.basename(seg2["index_file"]).startswith("_hnsw")
     # manifest records the artifact
@@ -259,10 +236,10 @@ def test_ivf_segment_artifact_and_search(spark, store):
     from vstream_spark.storage.search import _INDEX_CACHE, _segment_index
 
     seg = store.segments()[0]
-    seg2 = store.build_segment_index(seg, metric="l2", kind="ivf", nlist=4)
+    conf = VectorIndexConf(dim=8, index_kind="ivf", nlist=4)
+    (seg2,) = store.build_segment_indexes([seg], conf)
     assert os.path.basename(seg2["index_file"]) == "_ivf-l2.idx"
     _INDEX_CACHE.clear()
-    conf = VectorIndexConf(dim=8, index_kind="ivf", nlist=4)
     idx = _segment_index(seg, conf, "l2")
     assert isinstance(idx, IvfIndex) and idx.n == seg["count"]
 
@@ -289,15 +266,15 @@ def test_auto_kind_selects_by_segment_size(spark, store):
 
     seg = store.segments()[2]
     # 100-row segment: auto resolves to hnsw above threshold 0 -> ivf
-    s_ivf = store.build_segment_index(seg, kind="auto", auto_ivf_threshold=10)
+    low = VectorIndexConf(dim=8, index_kind="auto", auto_ivf_threshold=10)
+    high = VectorIndexConf(dim=8, index_kind="auto", auto_ivf_threshold=1000)
+    (s_ivf,) = store.build_segment_indexes([seg], low)
     assert os.path.basename(s_ivf["index_file"]) == "_ivf-l2.idx"
-    s_hnsw = store.build_segment_index(seg, kind="auto", auto_ivf_threshold=1000)
+    (s_hnsw,) = store.build_segment_indexes([seg], high)
     assert os.path.basename(s_hnsw["index_file"]) == "_hnsw-l2.idx"
     _INDEX_CACHE.clear()
-    a = _segment_index(seg, VectorIndexConf(dim=8, index_kind="auto", auto_ivf_threshold=10), "l2")
-    assert isinstance(a, IvfIndex)
-    b = _segment_index(seg, VectorIndexConf(dim=8, index_kind="auto", auto_ivf_threshold=1000), "l2")
-    assert isinstance(b, HnswIndex)
+    assert isinstance(_segment_index(seg, low, "l2"), IvfIndex)
+    assert isinstance(_segment_index(seg, high, "l2"), HnswIndex)
 
 
 def test_ivf_deletes_and_freshness_through_store(spark, tmp_path):
@@ -305,7 +282,7 @@ def test_ivf_deletes_and_freshness_through_store(spark, tmp_path):
     st = SegmentStore(spark, str(tmp_path / "segivf"))
     rows = _vec_rows(0, 60) + [(7, None, 7 * 100 + 5, 10**12, "D")]
     st.append_segment(spark.createDataFrame(rows, SCHEMA))
-    st.build_segment_index(st.segments()[0], metric="l2", kind="ivf", nlist=2)
+    st.build_segment_indexes(st.segments()[:1], VectorIndexConf(dim=8, index_kind="ivf", nlist=2))
     searcher = SegmentSearcher(
         st, VectorIndexConf(dim=8, index_kind="ivf", nlist=2, termination_lower_bound=1.0)
     )
@@ -372,40 +349,6 @@ def test_declared_hnsw_query_uses_persisted_sidecars(spark):
     assert _HNSW_STORES[sf] is st
 
 
-def test_search_options_per_query_surface(spark, store):
-    """VectorSearchOptions parity (vector_options.h:79-95): per-query k
-    override, memtable-only search_sst=False, trigger_sort bypass, and
-    is_evict physical segment eviction."""
-    from vstream_spark.config import SearchOptions
-
-    conf = VectorIndexConf(dim=8, ef_search=64, termination_lower_bound=1.0)
-    searcher = SegmentSearcher(store, conf)
-    q = _queries(spark, store, n=3)
-
-    # per-query k override wins over the call k
-    got = searcher.search(q, k=5, metric="l2", options=SearchOptions(k=2))
-    assert got.groupby("qid").size().max() == 2
-
-    # search_sst=False answers from the NEWEST segment only: ids 200..299
-    mem_only = searcher.search(
-        q, k=5, metric="l2", options=SearchOptions(search_sst=False, trigger_sort=False)
-    )
-    assert len(mem_only) and (mem_only["neighbor_id"] >= 200).all()
-
-    # is_evict drops segments entirely below the freshness bound: the first
-    # segment (event_time 0..9900) is gone from the manifest afterwards.
-    # (materialize the query batch first — q's lineage scans the store's own
-    # parquet, which eviction deletes underneath; real queries arrive on a
-    # separate stream)
-    q_rows = spark.createDataFrame(q.collect(), q.schema)
-    n_before = len(store.segments())
-    searcher.search(
-        q_rows, k=5, metric="l2", min_event_time=10_000,
-        options=SearchOptions(is_evict=True),
-    )
-    assert len(store.segments()) == n_before - 1
-
-
 def test_parallel_multi_segment_index_build(spark, store):
     """build_segment_indexes (r11): N segments' sidecars build in ONE Spark
     job (one task per segment) and are byte-identical in effect to the
@@ -418,7 +361,7 @@ def test_parallel_multi_segment_index_build(spark, store):
 
     segs = store.segments()
     assert len(segs) == 3 and not any(s.get("index_file") for s in segs)
-    out = store.build_segment_indexes(segs, metric="l2", kind="hnsw")
+    out = store.build_segment_indexes(segs, VectorIndexConf(dim=8))
     assert len(out) == 3
     for s in out:
         assert os.path.exists(s["index_file"]), s
@@ -478,12 +421,13 @@ def test_searcher_state_drops_stale_segments(spark, store):
     assert set(s2.temperature) <= live
 
 
-def test_chunk_lookahead_identical_results_and_state(spark, tmp_path):
+def test_lookahead_over_chunks_identical_results_and_state(spark, tmp_path):
     """r13 VERDICT #2 (C4 prefetcher analog): chunk lookahead is pure job
-    scheduling — on a 16-segment store, lookahead on/off return IDENTICAL
-    rows at full depth, and under aggressive termination both stop after
-    the SAME one chunk (a prefetched-but-discarded chunk contributes no
-    hits, no temperature, no EMA state)."""
+    scheduling — on a 16-segment store, segments_per_job=3 (six chunks,
+    lookahead) returns the rows of segments_per_job=16 (one chunk, run
+    inline) at full depth, and under aggressive termination stops after
+    one chunk (a prefetched-but-discarded chunk contributes no hits, no
+    temperature, no EMA state)."""
     st = SegmentStore(spark, str(tmp_path / "segla"))
     for lo in range(0, 800, 50):
         st.append_segment(spark.createDataFrame(_vec_rows(lo, lo + 50), SCHEMA))
@@ -492,29 +436,30 @@ def test_chunk_lookahead_identical_results_and_state(spark, tmp_path):
         "qid long, emb array<float>",
     )
     outs, temps = {}, {}
-    for la in (True, False):
+    for spj in (3, 16):
         conf = VectorIndexConf(
-            dim=8, ef_search=256, termination_lower_bound=1.0,
-            segments_per_job=3, chunk_lookahead=la,
+            dim=8, ef_search=256, termination_lower_bound=1.0, segments_per_job=spj
         )
         searcher = SegmentSearcher(st, conf)
         out = searcher.search(q, k=7, metric="l2")
-        outs[la] = list(
+        outs[spj] = list(
             zip(out["qid"], out["neighbor_id"], out["rank"],
                 out["distance"].round(6))
         )
-        temps[la] = set(searcher.temperature)
+        temps[spj] = searcher.temperature
         assert len(searcher.temperature) == 16
-    assert outs[True] == outs[False]
-    assert temps[True] == temps[False]
+    assert outs[3] == outs[16]
+    assert temps[3] == temps[16]
 
-    # aggressive termination: one chunk searched either way; the in-flight
-    # lookahead chunk is discarded without leaving state behind
-    for la in (True, False):
+    # aggressive termination: each run stops after its first chunk; the
+    # lookahead run's in-flight second chunk is discarded without leaving
+    # state behind
+    for spj in (3, 16):
         conf = VectorIndexConf(
             dim=8, termination_lower_bound=0.0, termination_factor=1e9,
-            termination_threshold=1.0, segments_per_job=3, chunk_lookahead=la,
+            termination_threshold=1.0, segments_per_job=spj,
         )
         searcher = SegmentSearcher(st, conf)
         searcher.search(q, k=2)
-        assert len(searcher.temperature) == 3, la
+        assert len(searcher.temperature) == spj
+        assert set(searcher.temperature) == set(searcher.last_searched_ids)

@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from vstream_spark.config import VectorIndexConf
 from vstream_spark.operators.knn import knn_exact
 from vstream_spark.storage.segments import SegmentStore
 from vstream_spark.streaming.pipeline import (
@@ -168,7 +169,7 @@ def test_compact_preserves_time_ranges_and_indexes(spark, tmp_path):
             for i in range(lo, lo + 200)
         ]
         seg = st.append_segment(spark.createDataFrame(rows, schema))
-        st.build_segment_index(seg, metric="l2", kind="ivf", nlist=4)
+        st.build_segment_indexes([seg], VectorIndexConf(dim=8, index_kind="ivf", nlist=4))
     out = st.compact(max_rows_per_segment=200)
     assert len(out) == 3
     # disjoint, covering time ranges in order
@@ -192,7 +193,6 @@ def test_streaming_ingest_builds_index_on_flush(spark, tmp_path):
 
     import numpy as np
 
-    from vstream_spark.config import VectorIndexConf
     from vstream_spark.storage.segments import SegmentStore
     from vstream_spark.streaming.pipeline import StreamingVectorIngest
 
@@ -600,7 +600,6 @@ def test_streaming_query_warm_restore_early_terminates(spark, tmp_path):
     (fewer segments visited), with per-batch receipts in batch_stats."""
     import pandas as pd
 
-    from vstream_spark.config import VectorIndexConf
     from vstream_spark.streaming.pipeline import StreamingVectorQuery
 
     st = SegmentStore(spark, str(tmp_path / "segwarm"))
@@ -608,7 +607,7 @@ def test_streaming_query_warm_restore_early_terminates(spark, tmp_path):
         st.append_segment(
             spark.createDataFrame(_vec_rows(lo, lo + 100, dim=8), SCHEMA)
         )
-    st.build_segment_indexes(st.segments(), metric="l2", kind="hnsw")
+    st.build_segment_indexes(st.segments(), VectorIndexConf(dim=8))
     n_seg = len(st.segments())
     assert n_seg == 4
 
@@ -663,7 +662,6 @@ def test_streaming_query_filtered_three_plans(spark, tmp_path):
     filtered scan per query."""
     import pandas as pd
 
-    from vstream_spark.config import VectorIndexConf
     from vstream_spark.storage.search import SegmentSearcher
     from vstream_spark.streaming.pipeline import StreamingVectorQuery
 
@@ -680,7 +678,7 @@ def test_streaming_query_filtered_three_plans(spark, tmp_path):
             for i in range(lo, lo + 150)
         ]
         st.append_segment(spark.createDataFrame(rows, schema_l))
-    st.build_segment_indexes(st.segments(), metric="l2", kind="hnsw")
+    st.build_segment_indexes(st.segments(), VectorIndexConf(dim=8))
 
     qpdf = pd.DataFrame(
         {"qid": list(range(4)),
@@ -714,7 +712,6 @@ def test_streaming_query_filtered_three_plans(spark, tmp_path):
 def test_streaming_ingest_then_segment_search_e2e(spark, tmp_path):
     """inserts stream -> segments -> query batch -> HNSW segment search:
     the full VStreamSearchJob shape (SURVEY §3.1) on Spark."""
-    from vstream_spark.config import VectorIndexConf
     from vstream_spark.storage.search import SegmentSearcher
 
     rng = np.random.RandomState(1)

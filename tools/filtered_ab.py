@@ -69,7 +69,7 @@ def main() -> None:
             spark, tmp + "/store", max_rows_per_segment=max(1, -(-n_vec // 8))
         )
         store.upsert_batch(big)
-        store.build_segment_indexes(store.segments(), metric="l2", kind="hnsw")
+        store.build_segment_indexes(store.segments(), VectorIndexConf())
         n_seg = len(store.segments())
         queries = spark.createDataFrame(
             emb.filter(F.col("vec_id") % 25 == 0)
@@ -89,7 +89,7 @@ def main() -> None:
         results = {}
         for plan in ("post_filter", "in_index", "pre_filter"):
             conf = VectorIndexConf(
-                metric="l2", k=K, index_kind="hnsw", ef_search=128,
+                metric="l2", index_kind="hnsw", ef_search=128,
                 termination_lower_bound=1.0,  # rep-stable depth (segjob_ab)
             )
             best = None

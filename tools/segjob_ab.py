@@ -1,13 +1,11 @@
-"""A/B the SegmentSearcher job granularity + chunk lookahead (r11 VERDICT
-#1, r13 VERDICT #2 receipts).
+"""A/B the SegmentSearcher job granularity (r11 VERDICT #1 receipt).
 
 Builds ONE multi-segment store (the bench multiseg shape: embeddings table
 replayed 20x, cap = n/nseg -> ~nseg segments, IVF sidecars), then times the
 SAME query batch at segments_per_job = 1 (the r11 job-per-segment shape),
-the default 4, and all-at-once, each with the C4 prefetch-analog chunk
-lookahead on and off — best-of-N each, identical results asserted. Prints
-one JSON line; prose quoting these numbers should name the sf_dir and
-commit.
+the default 4, and all-at-once (one chunk, no lookahead) — best-of-N each,
+identical results asserted. Prints one JSON line; prose quoting these
+numbers should name the sf_dir and commit.
 
 Usage: python tools/segjob_ab.py [sf_dir] [reps] [nseg]  (default sf0.1, 4, 10)
 """
@@ -58,7 +56,7 @@ def main() -> None:
             max_rows_per_segment=max(1, -(-n_vec // nseg_target)),
         )
         store.upsert_batch(big)
-        store.build_segment_indexes(store.segments(), metric="l2", kind="ivf")
+        store.build_segment_indexes(store.segments(), VectorIndexConf(index_kind="ivf"))
         n_seg = len(store.segments())
         queries = emb.select(
             F.col("vec_id").alias("qid"), F.col("embedding").alias("emb")
@@ -67,21 +65,14 @@ def main() -> None:
 
         out = {"sf_dir": sf_dir, "segments": n_seg, "n_queries": n_q, "reps": reps}
         results = {}
-        # lookahead axis (r13 VERDICT #2): each granularity measured with the
-        # C4 prefetch-analog chunk lookahead ON (the default; suffix-free
-        # keys stay comparable to prior receipts where the loop was
-        # strictly sequential ~ lookahead off) and OFF (suffix _nola).
-        # spj=n_seg is one job for everything — lookahead is a no-op there.
-        variants = [(1, True), (1, False), (4, True), (4, False), (n_seg, True)]
-        for spj, la in variants:
+        for spj in (1, 4, n_seg):
             # termination disabled (lower_bound=1.0): every variant visits
             # every segment, so the A/B isolates job granularity alone and
             # results are rep-stable (a seeded C8 EMA would let reps 2+
             # stop early and muddy both timing and the equality check)
             conf = VectorIndexConf(
-                metric="l2", k=10, index_kind="ivf", nprobe=32, ef_search=32,
+                metric="l2", index_kind="ivf", nprobe=32, ef_search=32,
                 segments_per_job=spj, termination_lower_bound=1.0,
-                chunk_lookahead=la,
             )
             searcher = SegmentSearcher(store, conf)
             best = None
@@ -91,10 +82,8 @@ def main() -> None:
                 pdf = searcher.search(queries, k=10, metric="l2")
                 dt = time.perf_counter() - t0
                 best = dt if best is None else min(best, dt)
-            results[(spj, la)] = set(
-                zip(pdf["qid"], pdf["neighbor_id"], pdf["rank"])
-            )
-            out[f"qps_spj{spj}{'' if la else '_nola'}"] = round(n_q / best, 1)
+            results[spj] = set(zip(pdf["qid"], pdf["neighbor_id"], pdf["rank"]))
+            out[f"qps_spj{spj}"] = round(n_q / best, 1)
         # identical results at every granularity; equality on (qid,id,rank)
         vals = list(results.values())
         out["results_identical"] = all(v == vals[0] for v in vals[1:])

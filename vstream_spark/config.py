@@ -1,8 +1,8 @@
 """Engine configuration objects.
 
 Mirrors the configuration surface of the reference's ``util/Parameters.java``
-(456 lines of YAML-backed fields) and the C++ ``VectorColumnFamilyOptions`` /
-``VectorSearchOptions`` (``plugin/vectorbackend/options/vector_options.h:24-95``)
+(456 lines of YAML-backed fields) and the C++ collection and per-query search
+options (``plugin/vectorbackend/options/vector_options.h:24-95``)
 — but only the fields that are meaningful for a Spark-first engine. Dimension
 and metric are explicit config, never inferred (reference ``Parameters.java:40``,
 ``vector_options.h:25``).
@@ -17,25 +17,23 @@ SUPPORTED_METRICS = ("l2", "ip", "cosine")
 
 @dataclass(frozen=True)
 class VectorIndexConf:
-    """Per-collection vector index configuration.
+    """Per-collection vector index and search configuration — the one
+    config object for every index build and segment search.
 
     Reference mapping (SURVEY §2.6 C10): dim/metric from
-    ``VectorColumnFamilyOptions`` (``vector_options.h:24-53``); ``k`` and
-    termination knobs from ``VectorSearchOptions`` (``vector_options.h:79-95``);
-    HNSW shape (M/efConstruction/efSearch) from ``params.yaml:54-56`` —
-    retained for config parity although the round-1 per-partition worker is a
-    vectorized brute-force/IVF scan rather than a graph index.
-    ``max_elements_per_segment`` is the reference's 250k vectors-per-HNSW-table
-    (``params.yaml:58``).
+    ``VectorColumnFamilyOptions`` (``vector_options.h:24-53``); termination
+    knobs from the per-query search options (``vector_options.h:79-95``),
+    whose k/ef_search are ``SegmentSearcher.search`` arguments; HNSW
+    shape (M/efConstruction/efSearch) from ``params.yaml:54-56``. The
+    reference's 250k vectors-per-HNSW-table cap (``params.yaml:58``) is
+    ``SegmentStore(max_rows_per_segment=)``.
     """
 
     dim: int = 128
     metric: str = "l2"  # 'l2' (squared L2), 'ip', 'cosine' — hnswlib.h:252
-    k: int = 10
     m: int = 16
     ef_construction: int = 128
     ef_search: int = 16
-    max_elements_per_segment: int = 250_000
     # Segment artifact kind: 'hnsw' (graph; best recall/latency), 'ivf'
     # (coarse-quantized flat; ~20x cheaper flush-time build — the scale path
     # when segment churn outruns graph construction), 'pq' (product-quantized
@@ -61,15 +59,9 @@ class VectorIndexConf:
     # a scheduler round trip); >1 amortizes driver job-launch latency at
     # multi-segment stores without changing results (a chunk searches a
     # superset of what one-at-a-time would before each termination check).
+    # Over several chunks, chunk n+1's job is submitted while chunk n merges
+    # (C4 block-prefetch analog, hnsw_block_prefetcher.cc).
     segments_per_job: int = 4
-    # C4 block-prefetch analog (r13 VERDICT #2, hnsw_block_prefetcher.cc):
-    # submit chunk n+1's branch job from a lookahead thread WHILE chunk n's
-    # partials merge + the termination check round-trips, so executors never
-    # idle between chunks; a lookahead in flight when termination fires is
-    # discarded (at most one chunk of wasted work — the prefetcher's own
-    # trade). Pure job scheduling: results, temperature and EMA state are
-    # identical with it on or off.
-    chunk_lookahead: bool = True
     # FilterSeqTs parity toggle (hnswlib.h:135-146): move the freshness
     # bound INTO graph traversal — stale nodes route but never occupy ef
     # result slots, so a hard TTL can't under-fill k the way the post-hoc
@@ -94,32 +86,6 @@ class VectorIndexConf:
             )
         if self.segments_per_job < 1:
             raise ValueError("segments_per_job must be >= 1")
-
-
-@dataclass(frozen=True)
-class SearchOptions:
-    """Per-QUERY search options — ``VectorSearchOptions``
-    (``vector_options.h:79-95``): the reference lets every search carry its
-    own k plus execution toggles; collection-level defaults live in
-    ``VectorIndexConf``.
-
-    search_sst=False restricts the search to the newest segment only (the
-    memtable-analog — the reference skips SST files and answers from the
-    in-memory table); trigger_sort toggles the hot-cold temperature ordering
-    for this query (W4 periodic re-sort is driven by the searcher's stats
-    either way — this just bypasses the ordering); is_evict physically drops
-    segments that are entirely older than the query's freshness bound before
-    searching (``version_set.cc:2700-2730``).
-    """
-
-    k: int | None = None
-    ef_search: int | None = None
-    search_sst: bool = True
-    trigger_sort: bool = True
-    is_evict: bool = False
-    # per-query early-termination aggressiveness override (None = the
-    # collection default VectorIndexConf.termination_factor)
-    termination_factor: float | None = None
 
 
 @dataclass(frozen=True)

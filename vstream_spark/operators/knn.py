@@ -130,7 +130,7 @@ def knn_exact(
 
     ``vectors``: id, emb [, event_time, ttl, op]; ``queries``: qid, emb
     [, event_time, ttl, k]. If ``k`` is None each query's own ``k`` column is
-    used (per-query k, reference ``VectorSearchOptions.k``); ``k_cap`` is
+    used (per-query k, reference ``vector_options.h:79-95``); ``k_cap`` is
     its static upper bound (keeps the rank cut map-side — see ``topk``) and
     is derived with one small agg on the query side when not supplied.
 

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from vstream_spark.config import PartitionerConf, VectorIndexConf
 from vstream_spark.functions.distance import distance_expr
+from vstream_spark.index import build_from_conf
 from vstream_spark.operators.knn import apply_deletes, derive_k_cap, topk
 from vstream_spark.partitioners.dispatch import fit_partitioner
 
@@ -57,7 +58,7 @@ def knn_partitioned(
     Returns (qid, neighbor_id, distance, rank). Exact iff the partitioner
     routes every query to every partition holding candidate data ('simple');
     approximate (partition-pruned) for LSH partitioners. ``k=None`` uses
-    each query's own ``k`` column (VectorSearchOptions.k parity) — pass
+    each query's own ``k`` column (per-query k parity) — pass
     ``k_cap`` (a static upper bound on that column) so the rank cut stays
     map-side; see ``topk`` for why the dynamic filter alone is a scale trap.
     """
@@ -158,7 +159,7 @@ def knn_partitioned_worker(
     Each group = one partition's vector shard + the queries routed to it;
     the worker builds a local structure and emits per-partition top-k.
     ``k=None`` uses each query's own ``k`` column (per-query k, the
-    reference's ``VectorSearchOptions.k``): workers search at the group's
+    reference's per-query search option): workers search at the group's
     max k and the global merge trims each query to its own.
     ``nprobe_centroids``: if set, an IVF coarse quantizer is built per
     partition (kmeans-lite) and only the nearest ``nprobe_centroids`` cells
@@ -168,7 +169,7 @@ def knn_partitioned_worker(
     (HnswLibKeyedProcessFunction.java:19-101).
 
     Per-query search options travel as QUERY COLUMNS (the reference attaches
-    ``VectorSearchOptions`` to each query record, ``vector_options.h:79-95``):
+    its search options to each query record, ``vector_options.h:79-95``):
     ``k`` (with ``k=None``) and — when ``index_conf`` is set — an optional
     ``ef_search`` column overriding ``index_conf.ef_search`` per query
     (interpreted as nprobe by IVF workers, ignored by PQ's full ADC scan).
@@ -199,32 +200,7 @@ def knn_partitioned_worker(
         vids = vdf["id"].to_numpy()
         qids = qdf["qid"].to_numpy()
         if index_conf is not None:
-            kind = getattr(index_conf, "index_kind", "hnsw")
-            if kind == "auto":
-                kind = "ivf" if len(vids) > index_conf.auto_ivf_threshold else "hnsw"
-            if kind == "ivf":
-                from vstream_spark.index.ivf import build_ivf
-
-                idx = build_ivf(
-                    vmat.astype(np.float32), vids.astype(np.int64),
-                    metric=metric, nlist=index_conf.nlist,
-                    nprobe=index_conf.nprobe,
-                )
-            elif kind == "pq":
-                from vstream_spark.index.pq import build_pq
-
-                idx = build_pq(
-                    vmat.astype(np.float32), vids.astype(np.int64),
-                    metric=metric, m=index_conf.pq_m, nbits=index_conf.pq_nbits,
-                )
-            else:
-                from vstream_spark.index.hnsw import build_index
-
-                idx = build_index(
-                    vmat.astype(np.float32), vids.astype(np.int64),
-                    metric=metric, M=index_conf.m,
-                    ef_construction=index_conf.ef_construction,
-                )
+            kind, idx = build_from_conf(vmat, vids, index_conf, metric)
             kk = int(qdf["k"].max()) if per_query_k else k
             # PQ: over-fetch ADC candidates and rescore them EXACTLY against
             # the partition's float block (present in this worker anyway) —

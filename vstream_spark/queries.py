@@ -18,7 +18,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from vstream_spark.config import PartitionerConf
+from vstream_spark.config import PartitionerConf, VectorIndexConf
 from vstream_spark.functions import distance as D
 from vstream_spark.functions import text as T
 from vstream_spark.operators.dedup import (
@@ -157,9 +157,10 @@ SELECT qid, neighbor_id, distance, rank FROM ranked WHERE rank <= k
 
 @register("knn_per_query_k", _KNN_PER_QUERY_K_ORACLE)
 def q_knn_per_query_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-query k through the partitioned dataflow (VectorSearchOptions.k
-    parity): each query carries its own k; with the 'simple' partitioner
-    the result is exact, so the per-query rank cutoff hash-matches."""
+    """Per-query k through the partitioned dataflow (per-query k parity,
+    vector_options.h:79-95): each query carries its own k; with the
+    'simple' partitioner the result is exact, so the per-query rank cutoff
+    hash-matches."""
     emb = load_table(spark, sf_dir, "embeddings")
     vectors = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("emb"))
     queries = emb.filter(F.col("vec_id") % 25 == 0).select(
@@ -969,11 +970,9 @@ def _segment_store_fixture(
             F.lit(0).cast("long").alias("ttl"),
             F.lit("I").alias("op"),
         )
-        for half in (vectors.filter(F.col("id") % 2 == 0),
-                     vectors.filter(F.col("id") % 2 == 1)):
-            seg = store.append_segment(half)
-            store.build_segment_index(seg, metric="l2", m=16,
-                                      ef_construction=128, kind="hnsw")
+        segs = [store.append_segment(vectors.filter(F.col("id") % 2 == r))
+                for r in (0, 1)]
+        store.build_segment_indexes(segs, VectorIndexConf())
         cache[sf_dir] = store
     store.spark = spark
     return store
@@ -989,7 +988,6 @@ def q_knn_hnsw_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     (C3), searched by SegmentSearcher which LOADS the artifacts instead of
     rebuilding (C4) — the declared query demonstrates build-at-flush /
     load-at-search, the reference's hnsw_table_builder/reader split."""
-    from vstream_spark.config import VectorIndexConf
     from vstream_spark.storage.search import SegmentSearcher
 
     store = _hnsw_store(spark, sf_dir)
@@ -1003,7 +1001,6 @@ def q_knn_hnsw_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("knn_pq_ann")  # rows-only: product-quantized ADC per partition
 def q_knn_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vstream_spark.config import VectorIndexConf
 
     vectors, queries = _emb_pair(spark, sf_dir)
     conf = PartitionerConf(kind="simple", num_partitions=4)
@@ -1477,29 +1474,15 @@ _PARTITIONER_RECALL_SPECS: list[tuple[str, dict, float]] = [
 ]
 
 
-def _recall_gate_rows(spark, specs, run_variant) -> DataFrame:
+def _recall_gate_rows(spark, specs, vectors, queries, run_variant) -> DataFrame:
     """Shared driver loop: tiny fixed set of variants, each run fully
-    distributed; only a scalar mean recall comes back per variant."""
-    from vstream_spark.functions.metrics import mean_recall
-    from vstream_spark.operators.knn import knn_exact
-
-    import sys
-
-    rows = []
-    gt = None
-    try:
-        for variant, kw, floor in specs:
-            vectors, queries, ann = run_variant(variant, kw)
-            if gt is None:
-                gt = knn_exact(vectors, queries, k=10, metric="l2").cache()
-                gt.count()
-            r = mean_recall(ann, gt, k=10)
-            print(f"# recall_gate {variant}: recall@10={r:.4f} floor={floor}",
-                  file=sys.stderr)
-            rows.append((variant, bool(r >= floor)))
-    finally:
-        if gt is not None:
-            gt.unpersist()
+    distributed (``run_variant(variant, kw)`` -> result frame); only a
+    scalar mean recall comes back per variant."""
+    rec = _exact_recalls(
+        vectors, queries, "recall_gate",
+        **{variant: run_variant(variant, kw) for variant, kw, _ in specs},
+    )
+    rows = [(variant, bool(rec[variant] >= floor)) for variant, _, floor in specs]
     return spark.createDataFrame(rows, "variant string, recall_ok boolean")
 
 
@@ -1515,12 +1498,11 @@ def q_partitioner_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors, queries = _emb_pair(spark, sf_dir)
 
     def run(variant, kw):
-        conf = PartitionerConf(**kw)
-        return vectors, queries, knn_partitioned_worker(
-            vectors, queries, conf, k=10, metric="l2"
+        return knn_partitioned_worker(
+            vectors, queries, PartitionerConf(**kw), k=10, metric="l2"
         )
 
-    return _recall_gate_rows(spark, _PARTITIONER_RECALL_SPECS, run)
+    return _recall_gate_rows(spark, _PARTITIONER_RECALL_SPECS, vectors, queries, run)
 
 
 # --- Partition balance gate (r10 VERDICT #3) ---------------------------------
@@ -1599,28 +1581,24 @@ _INDEX_RECALL_SPECS: list[tuple[str, dict, float]] = [
 def q_index_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall floor for every per-partition index kind (W1/W5 HNSW worker,
     IVF coarse-quantizer scan, PQ ADC) against the exact-scan oracle."""
-    from vstream_spark.config import VectorIndexConf
 
     vectors, queries = _emb_pair(spark, sf_dir)
 
     def run(variant, kw):
         if variant == "ivf":
-            ann = ann_topk_ivf(
+            return ann_topk_ivf(
                 vectors, queries, k=10, metric="l2", num_partitions=4, nprobe=3
             )
-        else:
-            iconf = VectorIndexConf(dim=64, **kw)
-            ann = knn_partitioned_worker(
-                vectors,
-                queries,
-                PartitionerConf(kind="simple", num_partitions=4),
-                k=10,
-                metric="l2",
-                index_conf=iconf,
-            )
-        return vectors, queries, ann
+        return knn_partitioned_worker(
+            vectors,
+            queries,
+            PartitionerConf(kind="simple", num_partitions=4),
+            k=10,
+            metric="l2",
+            index_conf=VectorIndexConf(dim=64, **kw),
+        )
 
-    return _recall_gate_rows(spark, _INDEX_RECALL_SPECS, run)
+    return _recall_gate_rows(spark, _INDEX_RECALL_SPECS, vectors, queries, run)
 
 
 # --- LSH similarity-join pair recall (completes the no-oracle cleanup) --------
@@ -2191,7 +2169,6 @@ def q_knn_streaming_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     import sys
     import uuid
 
-    from vstream_spark.config import VectorIndexConf
     from vstream_spark.functions.metrics import mean_recall
     from vstream_spark.operators.knn import topk
     from vstream_spark.streaming.pipeline import run_stream_to_memory
@@ -5256,51 +5233,29 @@ _FILTERED_ROUTE_ORACLE = _values_oracle(
 )
 
 
-@register("knn_filtered_route_gate", _FILTERED_ROUTE_ORACLE)
-def q_knn_filtered_route_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Selectivity-adaptive filtered kNN: router picks the expected plan and
-    both plans agree on the answer (exact equality for pre_filter; recall
-    >= 0.9 for the oversampled post_filter) — see operators/filtered.py."""
-    from vstream_spark.config import VectorIndexConf
-    from vstream_spark.operators.filtered import knn_filtered_adaptive
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    vectors = emb.select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("emb"), "label"
-    )
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("emb")
-    )
+def _filtered_route_rows(spark, queries, base, tag, run) -> DataFrame:
+    """The loop both routing gates share. ``run(pred, force_strategy)``
+    returns ``(result, strategy, selectivity)``; ``base`` is the frame
+    whose ``filter(pred)`` exact top-k is the reference answer."""
     preds = {
         "selective": F.col("label") == 0,
         "weak": F.col("label") % 2 == 0,
     }
-    iconf = VectorIndexConf(
-        index_kind="hnsw", m=16, ef_construction=128, ef_search=128
-    )
     rows = []
     for case, expect in _FILTERED_ROUTE_CASES:
         pred = preds[case]
-        routed, strategy, sel = knn_filtered_adaptive(
-            vectors, queries, pred, k=10, metric="l2", index_conf=iconf
-        )
+        routed, strategy, sel = run(pred, None)
         # both branches must answer the same predicate: when routing
         # lands on pre_filter (identical to the exact scan by
         # construction — its exactness is pinned by tests/test_filtered)
         # force the OTHER branch so the oversampled post-filter plan is
         # exercised on this predicate too; when routing lands on
         # post_filter the routed result IS that branch already.
-        if strategy == "pre_filter":
-            post, _, _ = knn_filtered_adaptive(
-                vectors, queries, pred, k=10, metric="l2",
-                index_conf=iconf, force_strategy="post_filter",
-            )
-        else:
-            post = routed
+        post = run(pred, "post_filter")[0] if strategy == "pre_filter" else routed
         rec = _exact_recalls(
-            vectors.filter(pred),
+            base.filter(pred),
             queries,
-            f"filtered_route {case}: sel={sel:.3f} strategy={strategy}",
+            f"{tag} {case}: sel={sel:.3f} strategy={strategy}",
             routed_recall=routed,
             post_recall=post,
         )
@@ -5312,6 +5267,33 @@ def q_knn_filtered_route_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(
         rows, "pred_case string, strategy string, route_ok boolean"
     )
+
+
+@register("knn_filtered_route_gate", _FILTERED_ROUTE_ORACLE)
+def q_knn_filtered_route_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Selectivity-adaptive filtered kNN: router picks the expected plan and
+    both plans agree on the answer (exact equality for pre_filter; recall
+    >= 0.9 for the oversampled post_filter) — see operators/filtered.py."""
+    from vstream_spark.operators.filtered import knn_filtered_adaptive
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    vectors = emb.select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("emb"), "label"
+    )
+    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("emb")
+    )
+    iconf = VectorIndexConf(
+        index_kind="hnsw", m=16, ef_construction=128, ef_search=128
+    )
+
+    def run(pred, force):
+        return knn_filtered_adaptive(
+            vectors, queries, pred, k=10, metric="l2",
+            index_conf=iconf, force_strategy=force,
+        )
+
+    return _filtered_route_rows(spark, queries, vectors, "filtered_route", run)
 
 
 # --- Filtered search over the PERSISTED store (r11 VERDICT #3) ---------------
@@ -5336,24 +5318,13 @@ def _filtered_store(spark: SparkSession, sf_dir: str):
     )
 
 
-_FILTERED_STORE_CASES: list[tuple[str, str]] = [
-    ("selective", "pre_filter"),  # label = 0 -> ~0.10 <= threshold 0.25
-    ("weak", "post_filter"),  # label % 2 = 0 -> ~0.50 > threshold
-]
-
-_FILTERED_STORE_ORACLE = _values_oracle(
-    [(c, s, True) for c, s in _FILTERED_STORE_CASES], "pred_case, strategy, route_ok"
-)
-
-
-@register("knn_filtered_store_gate", _FILTERED_STORE_ORACLE)
+@register("knn_filtered_store_gate", _FILTERED_ROUTE_ORACLE)
 def q_knn_filtered_store_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SegmentSearcher.search_filtered: the router picks the expected plan
     over the persisted store, the pre_filter branch equals the exact scan of
     the visible snapshot, and the post_filter branch (oversampled sidecar-
     index search + re-check + escalation) clears a 0.9 recall floor — both
     branches forced for both predicates (storage/search.py)."""
-    from vstream_spark.config import VectorIndexConf
     from vstream_spark.storage.search import SegmentSearcher
 
     store = _filtered_store(spark, sf_dir)
@@ -5361,46 +5332,19 @@ def q_knn_filtered_store_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") % 25 == 0).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("emb")
     )
-    preds = {
-        "selective": F.col("label") == 0,
-        "weak": F.col("label") % 2 == 0,
-    }
     iconf = VectorIndexConf(
         dim=64, m=16, ef_construction=128, ef_search=128
     )
-    rows = []
-    for case, expect in _FILTERED_STORE_CASES:
-        pred = preds[case]
-        searcher = SegmentSearcher(store, iconf)
-        got_pdf, strategy, sel = searcher.search_filtered(
-            queries, pred, k=10, metric="l2"
+
+    def run(pred, force):
+        pdf, strategy, sel = SegmentSearcher(store, iconf).search_filtered(
+            queries, pred, k=10, metric="l2", force_strategy=force
         )
-        routed = spark.createDataFrame(
-            got_pdf[["qid", "neighbor_id", "distance", "rank"]]
-        )
-        if strategy == "pre_filter":
-            post_pdf, _, _ = SegmentSearcher(store, iconf).search_filtered(
-                queries, pred, k=10, metric="l2",
-                force_strategy="post_filter",
-            )
-            post = spark.createDataFrame(
-                post_pdf[["qid", "neighbor_id", "distance", "rank"]]
-            )
-        else:
-            post = routed
-        rec = _exact_recalls(
-            searcher.visible().filter(pred),
-            queries,
-            f"filtered_store {case}: sel={sel:.3f} strategy={strategy}",
-            routed_recall=routed,
-            post_recall=post,
-        )
-        routed_ok = rec["routed_recall"] >= (1.0 if strategy == "pre_filter" else 0.9)
-        ok = strategy == expect and routed_ok and rec["post_recall"] >= 0.9
-        rows.append((case, strategy, bool(ok)))
-    return spark.createDataFrame(
-        rows, "pred_case string, strategy string, route_ok boolean"
-    )
+        res = spark.createDataFrame(pdf[["qid", "neighbor_id", "distance", "rank"]])
+        return res, strategy, sel
+
+    visible = SegmentSearcher(store, iconf).visible()
+    return _filtered_route_rows(spark, queries, visible, "filtered_store", run)
 
 
 # --- In-index attribute filtering gate (r12 VERDICT missing #1) --------------
@@ -5438,7 +5382,6 @@ def q_knn_inindex_filter_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     oversampling), clears the same recall floor as the sibling branches, a
     permissive hint stays correct, and a non-implied hint is rejected by
     the probe's implication guard (storage/search.py)."""
-    from vstream_spark.config import VectorIndexConf
     from vstream_spark.storage.search import SegmentSearcher
 
     store = _filtered_store(spark, sf_dir)
@@ -5558,8 +5501,6 @@ def q_knn_streaming_filtered_gate(spark: SparkSession, sf_dir: str) -> DataFrame
     import tempfile
     import uuid
 
-    from vstream_spark.config import VectorIndexConf
-    from vstream_spark.functions.metrics import mean_recall
     from vstream_spark.storage.search import SegmentSearcher
     from vstream_spark.streaming.pipeline import StreamingVectorQuery
 
@@ -5594,21 +5535,14 @@ def q_knn_streaming_filtered_gate(spark: SparkSession, sf_dir: str) -> DataFrame
         got = spark.read.parquet(f"{work}/fres").select(
             "qid", "neighbor_id", "distance", "rank"
         )
-        exact = knn_exact(
-            SegmentSearcher(store, conf).visible().filter(pred).select("id", "emb"),
-            queries, k=10, metric="l2",
-        ).cache()
-        try:
-            exact.count()
-            r = mean_recall(got, exact, k=10)
-        finally:
-            exact.unpersist()
         strategies = [s["strategy"] for s in svq.batch_stats]
-        print(
-            f"# streaming_filtered: batches={len(svq.batch_stats)} "
-            f"strategies={strategies} recall={r:.4f}",
-            file=sys.stderr,
-        )
+        r = _exact_recalls(
+            SegmentSearcher(store, conf).visible().filter(pred),
+            queries,
+            f"streaming_filtered: batches={len(svq.batch_stats)} "
+            f"strategies={strategies}",
+            recall=got,
+        )["recall"]
         rows.append((
             "filtered_in_index",
             bool(

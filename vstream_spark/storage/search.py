@@ -50,8 +50,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from vstream_spark.config import SearchOptions, VectorIndexConf
-from vstream_spark.storage.segments import SegmentStore
+from vstream_spark.config import VectorIndexConf
+from vstream_spark.index import resolve_index_kind
+from vstream_spark.storage.segments import SegmentStore, build_index_object
 
 # executor-process-global index cache: segment id -> index object (O7).
 # LRU, not FIFO (r11 What's-wrong #3): a hot segment re-hit on every batch
@@ -398,11 +399,7 @@ def _segment_allowlist(seg: dict, expr: str) -> np.ndarray:
 
 def _segment_index(seg: dict, conf: VectorIndexConf, metric: str):
     """Build-or-fetch the segment's index on this executor."""
-    from vstream_spark.storage.segments import resolve_index_kind
-
-    kind = resolve_index_kind(
-        getattr(conf, "index_kind", "hnsw"), seg, conf.auto_ivf_threshold
-    )
+    kind = resolve_index_kind(conf, seg.get("count", 0))
     key = f"{seg['id']}:{kind}:{metric}"
     idx = _INDEX_CACHE.get(key)
     if idx is not None:
@@ -428,15 +425,7 @@ def _segment_index(seg: dict, conf: VectorIndexConf, metric: str):
             # flush-time sidecar path uses (storage/segments.py) — one
             # audited implementation of codec dequantize + tombstone
             # shadowing instead of two drifting copies
-            from vstream_spark.storage.segments import build_index_object
-
-            _, idx = build_index_object(
-                seg, kind, metric,
-                m=conf.m, ef_construction=conf.ef_construction,
-                nlist=conf.nlist, nprobe=conf.nprobe,
-                auto_ivf_threshold=conf.auto_ivf_threshold,
-                pq_m=conf.pq_m, pq_nbits=conf.pq_nbits,
-            )
+            _, idx = build_index_object(seg, conf, metric)
         if len(_INDEX_CACHE) >= _INDEX_CACHE_MAX:
             _INDEX_CACHE.popitem(last=False)  # evict least-recently-used
         _INDEX_CACHE[key] = idx
@@ -566,7 +555,6 @@ class SegmentSearcher:
         min_event_time: int | None,
         max_event_time: int | None,
         ef_search: int | None,
-        options: "SearchOptions | None",
         filter_expr: str | None = None,
     ) -> tuple[DataFrame | None, list[str]]:
         """The chunked segment loop shared by :meth:`search` (pandas
@@ -578,13 +566,6 @@ class SegmentSearcher:
         from pyspark.sql import functions as F
 
         conf = self.conf
-        if options is not None:
-            k = options.k if options.k is not None else k
-            ef_search = (
-                options.ef_search if options.ef_search is not None else ef_search
-            )
-            if options.is_evict and min_event_time is not None:
-                self.store.evict(min_event_time)
         segs = self.store.prune(min_event_time, max_event_time)
         if filter_expr is not None and segs:
             # attribute zone-map pruning (r13): when the hint is a pure
@@ -595,12 +576,7 @@ class SegmentSearcher:
             terms = prunable_terms(filter_expr)
             if terms:
                 segs = [s for s in segs if not segment_prunable(s, terms)]
-        if options is not None and not options.search_sst:
-            # memtable-only: the newest segment is the flush-most-recent
-            # analog of the in-memory table
-            segs = segs[-1:] if segs else segs
-        if options is None or options.trigger_sort:
-            segs = self._order_segments(segs)
+        segs = self._order_segments(segs)
         if not segs:
             return None, []
 
@@ -627,7 +603,7 @@ class SegmentSearcher:
         # per Spark job — their partials union INSIDE one job (independent
         # branches schedule concurrently), the merge + termination check run
         # per CHUNK. spj=1 reproduces the SST-at-a-time shape exactly.
-        spj = max(1, getattr(conf, "segments_per_job", 1))
+        spj = conf.segments_per_job
         chunks = [segs[at : at + spj] for at in range(0, len(segs), spj)]
 
         def _submit(chunk: list[dict]) -> DataFrame:
@@ -656,11 +632,12 @@ class SegmentSearcher:
         # n+1's branch job is submitted from a helper thread WHILE chunk n
         # merges, and its result is discarded if termination fires first
         # (one chunk of wasted work at most — the prefetcher's own trade).
-        # Results are identical by construction: the merge/termination
+        # Results equal a one-chunk-at-a-time loop: the merge/termination
         # sequence consumes chunks in the same order, and a discarded
-        # lookahead never contributes hits, temperature, or EMA state.
+        # lookahead never contributes hits, temperature, or EMA state. A
+        # single chunk runs inline.
         pool = fut = None
-        if len(chunks) > 1 and bool(getattr(conf, "chunk_lookahead", True)):
+        if len(chunks) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
             pool = ThreadPoolExecutor(
@@ -704,12 +681,7 @@ class SegmentSearcher:
                 .drop("_v", "_r")
             )
             merged = cur.localCheckpoint(eager=True)
-            tf = (
-                options.termination_factor
-                if options is not None and options.termination_factor is not None
-                else conf.termination_factor
-            )
-            if self._should_terminate(merged, k, searched, len(segs), tf):
+            if self._should_terminate(merged, k, searched, len(segs)):
                 break
         if pool is not None:
             # non-blocking: an in-flight discarded lookahead runs to
@@ -752,7 +724,6 @@ class SegmentSearcher:
         min_event_time: int | None,
         max_event_time: int | None,
         ef_search: int | None,
-        options: "SearchOptions | None",
         update_termination: bool,
         filter_expr: str | None,
         recheck_filter: bool,
@@ -768,7 +739,7 @@ class SegmentSearcher:
             update_termination = False
         merged, searched_ids = self._run_loop(
             queries, k, metric, min_event_time, max_event_time,
-            ef_search, options, filter_expr,
+            ef_search, filter_expr,
         )
         self.last_searched_ids = list(searched_ids)
         if merged is not None and filter_expr is not None and recheck_filter:
@@ -816,7 +787,6 @@ class SegmentSearcher:
         min_event_time: int | None = None,
         max_event_time: int | None = None,
         ef_search: int | None = None,
-        options: "SearchOptions | None" = None,
         update_termination: bool = True,
         filter_expr: str | None = None,
         recheck_filter: bool = True,
@@ -825,10 +795,8 @@ class SegmentSearcher:
 
         ``min_event_time`` is the freshness bound (query event_time - TTL);
         it prunes whole segments (C6) AND filters inside surviving indexes
-        (the FilterSeqTs analog). ``options`` carries the per-query
-        ``VectorSearchOptions`` toggles (``vector_options.h:79-95``):
-        k/ef_search overrides, memtable-only search, temperature-ordering
-        bypass, eviction-on-search, per-query termination_factor.
+        (the FilterSeqTs analog). ``k`` and ``ef_search`` are the per-query
+        search options of the reference (``vector_options.h:79-95``).
         ``filter_expr`` threads an attribute allowlist INTO index traversal
         on every segment (see :func:`_segment_allowlist`); it also FORCES
         ``update_termination=False`` — filtered per-query kth distances are
@@ -846,7 +814,7 @@ class SegmentSearcher:
         """
         merged, searched_ids, update_termination = self._search_merged(
             queries, k, metric, min_event_time, max_event_time, ef_search,
-            options, update_termination, filter_expr, recheck_filter,
+            update_termination, filter_expr, recheck_filter,
         )
         if merged is None:
             return _ranked(None)
@@ -872,7 +840,6 @@ class SegmentSearcher:
         min_event_time: int | None = None,
         max_event_time: int | None = None,
         ef_search: int | None = None,
-        options: "SearchOptions | None" = None,
         update_termination: bool = True,
         filter_expr: str | None = None,
         recheck_filter: bool = True,
@@ -892,7 +859,7 @@ class SegmentSearcher:
         would be pure overhead on the hot filtered path)."""
         merged, searched_ids, update_termination = self._search_merged(
             queries, k, metric, min_event_time, max_event_time, ef_search,
-            options, update_termination, filter_expr, recheck_filter,
+            update_termination, filter_expr, recheck_filter,
         )
         if merged is None:
             return None
@@ -1197,12 +1164,7 @@ class SegmentSearcher:
         )
 
     def _should_terminate(
-        self,
-        merged: DataFrame,
-        k: int,
-        searched: int,
-        total: int,
-        termination_factor: float | None = None,
+        self, merged: DataFrame, k: int, searched: int, total: int
     ) -> bool:
         """version_set.cc:2643-2649: enough files searched AND the current
         kth distance is under factor x EMA threshold for every query. The
@@ -1226,13 +1188,7 @@ class SegmentSearcher:
         if row["n_q"] == 0 or row["min_n"] < k:
             return False
         return bool(
-            row["max_kth"]
-            <= (
-                termination_factor
-                if termination_factor is not None
-                else self.conf.termination_factor
-            )
-            * self.termination_threshold
+            row["max_kth"] <= self.conf.termination_factor * self.termination_threshold
         )
 
     def _search_one(
@@ -1278,7 +1234,7 @@ class SegmentSearcher:
                 for j, (lbs, ds) in enumerate(
                     idx.search_batch(
                         qmat, k, ef, min_ts, allow_labels=allow,
-                        ts_in_traversal=getattr(conf, "ts_in_traversal", False),
+                        ts_in_traversal=conf.ts_in_traversal,
                     )
                 ):
                     qids.extend([int(pdf["qid"].iloc[j])] * len(lbs))

@@ -29,10 +29,14 @@ import os
 import time
 import uuid
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import MapType
 
+from vstream_spark.config import VectorIndexConf
+from vstream_spark.index import build_from_conf, resolve_index_kind
 from vstream_spark.storage.manifest import ManifestLog
 
 _META = "segments.json"
@@ -45,14 +49,6 @@ def _dequantize_segment_df(df: DataFrame) -> DataFrame:
     )
     cols = [c for c in df.columns if c not in ("emb_q", "emb_scale")]
     return df.select(*cols, emb.alias("emb"))
-
-
-def resolve_index_kind(kind: str, seg: dict, auto_ivf_threshold: int) -> str:
-    """'auto' -> hnsw up to the threshold, ivf above (bulk graph
-    construction is O(n^2) BLAS and crosses over around 64k rows)."""
-    if kind == "auto":
-        return "ivf" if seg.get("count", 0) > auto_ivf_threshold else "hnsw"
-    return kind
 
 
 _ZONE_CORE_COLS = {"emb", "emb_q", "emb_scale", "op", "sbkt", "rbkt"}
@@ -125,24 +121,15 @@ def attr_zone_stats(path: str) -> dict[str, list]:
     return out
 
 
-def build_index_object(
-    seg: dict,
-    kind: str,
-    metric: str = "l2",
-    m: int = 16,
-    ef_construction: int = 128,
-    nlist: int = 0,
-    nprobe: int = 8,
-    auto_ivf_threshold: int = 65_536,
-    pq_m: int = 8,
-    pq_nbits: int = 8,
-):
+def build_index_object(seg: dict, conf: VectorIndexConf, metric: str):
     """Build ONE segment's index object from its parquet via pyarrow —
-    the single shared builder behind every artifact path: the flush-time
+    the shared reader behind every artifact path: the flush-time
     sidecar build (``SegmentStore.build_segment_indexes``, one executor
     task per segment), and the search-side cache-miss rebuild
-    (``storage/search.py::_segment_index``). Returns ``(resolved_kind,
-    index)``.
+    (``storage/search.py::_segment_index``). The index itself comes from
+    :func:`vstream_spark.index.build_from_conf`; 'auto' resolves on the
+    segment's row count, the same count the searcher names sidecars by.
+    Returns ``(resolved_kind, index)``.
 
     Codec-aware: int8 segments dequantize with the same IEEE ops as the
     Catalyst projection (float32(double(q) * double(scale))) — bitwise
@@ -156,11 +143,7 @@ def build_index_object(
     import numpy as np
     import pyarrow.parquet as pq
 
-    from vstream_spark.index.hnsw import build_index
-    from vstream_spark.index.ivf import build_ivf
-    from vstream_spark.index.pq import build_pq
-
-    kind = resolve_index_kind(kind, seg, auto_ivf_threshold)
+    conf = replace(conf, index_kind=resolve_index_kind(conf, seg.get("count", 0)))
     int8 = seg.get("codec") == "int8"
     emb_cols = ["emb_q", "emb_scale"] if int8 else ["emb"]
     cols = ["id", *emb_cols, "event_time"]
@@ -179,14 +162,7 @@ def build_index_object(
         vecs = np.stack(ins["emb"].to_numpy()).astype(np.float32)
     ids = ins["id"].to_numpy().astype(np.int64)
     ts = ins["event_time"].to_numpy().astype(np.int64)
-    if kind == "ivf":
-        idx = build_ivf(vecs, ids, ts=ts, metric=metric, nlist=nlist, nprobe=nprobe)
-    elif kind == "pq":
-        idx = build_pq(vecs, ids, ts=ts, metric=metric, m=pq_m, nbits=pq_nbits)
-    else:
-        idx = build_index(
-            vecs, ids, ts=ts, metric=metric, M=m, ef_construction=ef_construction
-        )
+    kind, idx = build_from_conf(vecs, ids, conf, metric, ts=ts)
     if has_op:
         dels = pdf[pdf["op"] == "D"]
         for rid, rtime in zip(dels["id"].to_numpy(), dels["event_time"].to_numpy()):
@@ -518,64 +494,25 @@ class SegmentStore:
             segs.append(seg)
         return segs
 
-    def build_segment_index(
-        self,
-        seg: dict,
-        metric: str = "l2",
-        m: int = 16,
-        ef_construction: int = 128,
-        kind: str = "hnsw",
-        nlist: int = 0,
-        nprobe: int = 8,
-        auto_ivf_threshold: int = 65_536,
-        pq_m: int = 8,
-        pq_nbits: int = 8,
-    ) -> dict:
-        """C3 analog (hnsw_table_builder.cc): persist an index artifact next
-        to the segment's parquet so readers load instead of rebuild (C4).
+    def build_segment_indexes(self, segs: list[dict], conf: VectorIndexConf) -> list[dict]:
+        """C3 analog (hnsw_table_builder.cc): persist each segment's index
+        artifact next to its parquet so readers load instead of rebuild
+        (C4). The kind, its build parameters and the metric come from
+        ``conf``: ``index_kind='hnsw'`` builds the graph; ``'ivf'`` builds
+        the coarse k-means artifact (~20x cheaper — the scale path when
+        flush rate outruns graph construction); ``'pq'`` builds
+        product-quantized ADC codes (~32x less memory — for RAM-bound
+        segments); ``'auto'`` picks hnsw up to ``auto_ivf_threshold`` rows
+        and ivf above. The artifact lands beside the data
+        (``<segment>/_<kind>-<metric>.idx``, underscore prefix keeps it
+        invisible to parquet dataset discovery). Rebuild-on-retry is safe:
+        all builds are deterministic (label-sorted input).
 
-        ``kind='hnsw'`` builds the graph; ``kind='ivf'`` builds the coarse
-        k-means artifact (~20x cheaper — the scale path when flush rate
-        outruns graph construction); ``kind='pq'`` builds product-quantized
-        ADC codes (~32x less memory — for RAM-bound segments);
-        ``kind='auto'`` picks hnsw up to ``auto_ivf_threshold`` rows and ivf
-        above. The build runs in ONE executor task (the reference also
-        builds each SST's graph single-node at flush); the artifact lands
-        beside the data (``<segment>/_<kind>-<metric>.idx``, underscore
-        prefix keeps it invisible to parquet dataset discovery).
-        Rebuild-on-retry is safe: all builds are deterministic
-        (label-sorted input). Multi-segment stores should use
-        :meth:`build_segment_indexes` — one job, one task per segment.
-        """
-        return self.build_segment_indexes(
-            [seg], metric=metric, m=m, ef_construction=ef_construction,
-            kind=kind, nlist=nlist, nprobe=nprobe,
-            auto_ivf_threshold=auto_ivf_threshold, pq_m=pq_m, pq_nbits=pq_nbits,
-        )[0]
-
-    def build_segment_indexes(
-        self,
-        segs: list[dict],
-        metric: str = "l2",
-        m: int = 16,
-        ef_construction: int = 128,
-        kind: str = "hnsw",
-        nlist: int = 0,
-        nprobe: int = 8,
-        auto_ivf_threshold: int = 65_536,
-        pq_m: int = 8,
-        pq_nbits: int = 8,
-    ) -> list[dict]:
-        """C3 at fleet scale: build MANY segments' index artifacts in ONE
-        Spark job, one task per segment. The reference builds each SST's
-        graph single-node, but many SSTs build CONCURRENTLY across the
-        cluster as memtables rotate — this is that shape: a store that
-        flushed thousands of segments indexes them cluster-wide instead of
-        one sequential driver loop of single-task jobs (the r11 change;
-        the old per-segment path also repartition(1)-shuffled every row of
-        the segment through an exchange just to reach its one build task —
-        the task now reads the segment parquet directly via pyarrow, the
-        same reader the search-side cache uses).
+        All segments build in ONE Spark job, one task per segment: the
+        reference builds each SST's graph single-node, but many SSTs build
+        concurrently across the cluster as memtables rotate. Each task reads
+        its segment parquet directly via pyarrow, the same reader the
+        search-side cache uses.
 
         Each task writes the artifact beside its segment (tmp + atomic
         rename, unique tmp suffix so speculative/retried tasks can't
@@ -583,16 +520,13 @@ class SegmentStore:
         """
         if not segs:
             return []
-        params = dict(
-            m=m, ef_construction=ef_construction, nlist=nlist, nprobe=nprobe,
-            auto_ivf_threshold=auto_ivf_threshold, pq_m=pq_m, pq_nbits=pq_nbits,
-        )
+        metric = conf.metric
 
         def one(seg: dict) -> tuple[str, str]:
             import os
             import uuid
 
-            rkind, idx = build_index_object(seg, kind, metric, **params)
+            rkind, idx = build_index_object(seg, conf, metric)
             out = os.path.join(seg["path"], f"_{rkind}-{metric}.idx")
             tmp = f"{out}.tmp-{uuid.uuid4().hex[:8]}"
             with open(tmp, "wb") as f:
@@ -846,7 +780,7 @@ class SegmentStore:
         for kind in old_kinds:
             for metric in metrics or {"l2"}:
                 new_segs = self.build_segment_indexes(
-                    new_segs, metric=metric, kind=kind
+                    new_segs, VectorIndexConf(index_kind=kind, metric=metric)
                 )
         return self.segments()
 

@@ -320,14 +320,7 @@ class StreamingVectorIngest:
         # artifacts build in ONE parallel job
         segs = self.store.append_batch(batch_df)
         if segs and self.index_conf is not None:
-            c = self.index_conf
-            self.store.build_segment_indexes(
-                segs, metric=c.metric, m=c.m,
-                ef_construction=c.ef_construction, kind=c.index_kind,
-                nlist=c.nlist, nprobe=c.nprobe,
-                auto_ivf_threshold=c.auto_ivf_threshold,
-                pq_m=c.pq_m, pq_nbits=c.pq_nbits,
-            )
+            self.store.build_segment_indexes(segs, self.index_conf)
 
 
 class StreamingCurveIngest:
@@ -566,7 +559,7 @@ def streaming_set_similarity(
        location when relying on the default.
 
     State is BOUNDED when ``ttl`` is set (the reference's freshness
-    contract, vector TTL in ``VectorSearchOptions``): each bucket member
+    contract, vector TTL in its search options): each bucket member
     carries its event time (``event_time_col``; row order rank when absent),
     a new arrival only pairs with members whose event time is within ``ttl``
     of its own — SYMMETRIC, ``|et_i - et_j| <= ttl`` (r8 ADVICE #2: the old
