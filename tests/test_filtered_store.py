@@ -326,7 +326,8 @@ def test_in_index_segment_with_no_matches_is_skipped(spark, tmp_path):
     """Time-ranged segment whose allowlist is empty under the hint: the
     segment task short-circuits (no exhaustive component walk, no index
     load) and the result still matches exact — the other segment carries
-    the matches; LWW/merge unaffected."""
+    the matches; LWW/merge unaffected. Visited first in a chunk, the
+    empty segment is skipped and the chunk's next segment still runs."""
     st = SegmentStore(spark, str(tmp_path / "segskip"))
     # segment 1: ids 0..39 (labels 0-9 cycle); segment 2: ids 1000..1039
     # with label column forced to a value the predicate excludes
@@ -351,6 +352,17 @@ def test_in_index_segment_with_no_matches_is_skipped(spark, tmp_path):
         k=K, metric="l2",
     )
     _assert_same(got, exact)
+
+    # a hint zone maps cannot refute, with the empty segment visited FIRST
+    # in its chunk: the skip moves on to the chunk's next segment
+    empty = st.segments()[1]["id"]
+    searcher = SegmentSearcher(st, CONF)
+    searcher.temperature = {empty: 1.0}
+    q = spark.createDataFrame([(0, [0.4] * DIM)], "qid long, emb array<float>")
+    got = searcher.search(q, k=K, filter_expr="label % 2 = 0")
+    assert searcher.last_searched_ids[0] == empty
+    even = searcher.visible().filter(F.col("label") % 2 == 0).select("id", "emb")
+    _assert_same(got, knn_exact(even, q, k=K, metric="l2"))
 
 
 def test_search_filter_expr_never_writes_ema(store, queries):

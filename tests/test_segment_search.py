@@ -421,14 +421,13 @@ def test_searcher_state_drops_stale_segments(spark, store):
     assert set(s2.temperature) <= live
 
 
-def test_lookahead_over_chunks_identical_results_and_state(spark, tmp_path):
-    """r13 VERDICT #2 (C4 prefetcher analog): chunk lookahead is pure job
-    scheduling — on a 16-segment store, segments_per_job=3 (six chunks,
-    lookahead) returns the rows of segments_per_job=16 (one chunk, run
-    inline) at full depth, and under aggressive termination stops after
-    one chunk (a prefetched-but-discarded chunk contributes no hits, no
-    temperature, no EMA state)."""
-    st = SegmentStore(spark, str(tmp_path / "segla"))
+def test_chunking_leaves_identical_rows_and_state(spark, tmp_path):
+    """Chunk size is pure job granularity: on a 16-segment store,
+    segments_per_job=3 (six chunks) returns the rows and leaves the
+    temperatures of segments_per_job=16 (one chunk) at full depth, and
+    under aggressive termination each run stops after its first chunk
+    with temperature recorded for exactly the visited segments."""
+    st = SegmentStore(spark, str(tmp_path / "segchunk"))
     for lo in range(0, 800, 50):
         st.append_segment(spark.createDataFrame(_vec_rows(lo, lo + 50), SCHEMA))
     q = spark.createDataFrame(
@@ -451,9 +450,7 @@ def test_lookahead_over_chunks_identical_results_and_state(spark, tmp_path):
     assert outs[3] == outs[16]
     assert temps[3] == temps[16]
 
-    # aggressive termination: each run stops after its first chunk; the
-    # lookahead run's in-flight second chunk is discarded without leaving
-    # state behind
+    # aggressive termination: each run stops after its first chunk
     for spj in (3, 16):
         conf = VectorIndexConf(
             dim=8, termination_lower_bound=0.0, termination_factor=1e9,
@@ -463,3 +460,91 @@ def test_lookahead_over_chunks_identical_results_and_state(spark, tmp_path):
         searcher.search(q, k=2)
         assert len(searcher.temperature) == spj
         assert set(searcher.temperature) == set(searcher.last_searched_ids)
+
+
+def _count_jobs(spark, group, fn):
+    """Run ``fn`` under a job group; return its result and the number of
+    Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_one_job_per_chunk(spark, tmp_path):
+    """Each chunk of segments_per_job segments costs exactly one Spark job:
+    on an 8-segment store with termination off, eight chunks run seven
+    more jobs than one chunk, and a one-chunk search stays within the
+    fixed per-search jobs (query checkpoint, delete markers) plus one."""
+    st = SegmentStore(spark, str(tmp_path / "segjobs"))
+    for lo in range(0, 400, 50):
+        st.append_segment(spark.createDataFrame(_vec_rows(lo, lo + 50), SCHEMA))
+    q = spark.createDataFrame(
+        [(int(i), r[1]) for i, r in enumerate(_vec_rows(0, 400)) if r[0] % 37 == 0],
+        "qid long, emb array<float>",
+    )
+    jobs, rows = {}, {}
+    for spj in (1, 8):
+        conf = VectorIndexConf(
+            dim=8, ef_search=64, termination_lower_bound=1.0, segments_per_job=spj
+        )
+        out, jobs[spj] = _count_jobs(
+            spark, f"segjobs-spj{spj}",
+            lambda: SegmentSearcher(st, conf).search(q, k=5, metric="l2"),
+        )
+        rows[spj] = out.values.tolist()
+    assert rows[1] == rows[8]
+    assert jobs[1] - jobs[8] == 7
+    assert jobs[8] <= 5
+
+
+def test_tombstones_across_chunks(spark, tmp_path):
+    """Delete markers apply across chunk boundaries (segments_per_job=1):
+    a marker in a later chunk's segment removes a hit found in the first
+    chunk; a marker in a segment early termination never visits still
+    removes it (markers cover every pruned segment); a marker at the SAME
+    event_time as its insert keeps the insert."""
+    st = SegmentStore(spark, str(tmp_path / "segtomb"))
+    for lo in (0, 50):
+        st.append_segment(spark.createDataFrame(_vec_rows(lo, lo + 50), SCHEMA))
+    inserts = [s["id"] for s in st.segments()]
+    far = (np.ones(8, dtype=np.float32) * 50).tolist()
+    # marker segment: id 3 deleted after its insert (t=300), id 5 deleted
+    # at exactly its insert time (t=500), plus far-away inserts
+    st.append_segment(spark.createDataFrame(
+        [(3, None, 1000, 10**12, "D"), (5, None, 500, 10**12, "D")]
+        + [(i, far, 2000 + i, 10**12, "I") for i in range(200, 210)],
+        SCHEMA,
+    ))
+    q = spark.createDataFrame(
+        [(int(i), r[1]) for i, r in enumerate(_vec_rows(0, 50)) if r[0] in (3, 5)],
+        "qid long, emb array<float>",
+    )
+
+    def run(**term):
+        searcher = SegmentSearcher(
+            st, VectorIndexConf(dim=8, ef_search=256, segments_per_job=1, **term)
+        )
+        # visit the two insert segments first, the marker segment last
+        searcher.temperature = {inserts[0]: 2.0, inserts[1]: 1.0}
+        got = searcher.search(q, k=10, metric="l2")
+        return set(got["neighbor_id"]), searcher.last_searched_ids
+
+    # every chunk visited: the last chunk's marker drops the first's hit
+    ids, visited = run(termination_lower_bound=1.0)
+    assert len(visited) == 3
+    assert 3 not in ids and 5 in ids
+    # always-terminate: the dropped hit leaves query 3 short of k after the
+    # first chunk, the second fills it, and the marker segment is never
+    # searched
+    ids, visited = run(
+        termination_lower_bound=0.0, termination_factor=1e9,
+        termination_threshold=1.0,
+    )
+    assert visited == inserts
+    assert 3 not in ids and 5 in ids

@@ -3,9 +3,11 @@
 Builds ONE multi-segment store (the bench multiseg shape: embeddings table
 replayed 20x, cap = n/nseg -> ~nseg segments, IVF sidecars), then times the
 SAME query batch at segments_per_job = 1 (the r11 job-per-segment shape),
-the default 4, and all-at-once (one chunk, no lookahead) — best-of-N each,
-identical results asserted. Prints one JSON line; prose quoting these
-numbers should name the sf_dir and commit.
+the default 4, and all-at-once (one chunk) — best-of-N each, identical
+results asserted. Each variant runs under its own Spark job group, so the
+JSON line carries ``jobs_spj{n}`` (Spark jobs per search) next to
+``qps_spj{n}``; prose quoting these numbers should name the sf_dir and
+commit.
 
 Usage: python tools/segjob_ab.py [sf_dir] [reps] [nseg]  (default sf0.1, 4, 10)
 """
@@ -64,6 +66,7 @@ def main() -> None:
         n_q = queries.count()
 
         out = {"sf_dir": sf_dir, "segments": n_seg, "n_queries": n_q, "reps": reps}
+        sc = spark.sparkContext
         results = {}
         for spj in (1, 4, n_seg):
             # termination disabled (lower_bound=1.0): every variant visits
@@ -77,13 +80,22 @@ def main() -> None:
             searcher = SegmentSearcher(store, conf)
             best = None
             pdf = None
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                pdf = searcher.search(queries, k=10, metric="l2")
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
+            group = f"segjob-ab-spj{spj}"
+            sc.setJobGroup(group, group)
+            try:
+                for _ in range(reps):
+                    t0 = time.perf_counter()
+                    pdf = searcher.search(queries, k=10, metric="l2")
+                    dt = time.perf_counter() - t0
+                    best = dt if best is None else min(best, dt)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
             results[spj] = set(zip(pdf["qid"], pdf["neighbor_id"], pdf["rank"]))
             out[f"qps_spj{spj}"] = round(n_q / best, 1)
+            # job events reach the status tracker through the listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+            n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            out[f"jobs_spj{spj}"] = round(n_jobs / reps, 1)
         # identical results at every granularity; equality on (qid,id,rank)
         vals = list(results.values())
         out["results_identical"] = all(v == vals[0] for v in vals[1:])

@@ -52,15 +52,15 @@ class VectorIndexConf:
     # pattern) — recovers the recall quantization costs at larger shards
     pq_refine: int = 4
     # Segment-search job granularity (r11 VERDICT #1): the searcher visits
-    # this many temperature-ordered segments PER Spark job (their partials
-    # union inside one job; the M1 running merge + C8 termination check run
-    # once per chunk). 1 = the reference's SST-at-a-time shape
-    # (version_set.cc:2585-2697, where the per-file step is a C++ call, not
-    # a scheduler round trip); >1 amortizes driver job-launch latency at
-    # multi-segment stores without changing results (a chunk searches a
-    # superset of what one-at-a-time would before each termination check).
-    # Over several chunks, chunk n+1's job is submitted while chunk n merges
-    # (C4 block-prefetch analog, hnsw_block_prefetcher.cc).
+    # this many temperature-ordered segments PER Spark job (one task per
+    # query partition searches each of them in turn; the driver-side M1
+    # merge + C8 termination check run once per chunk over at most
+    # |Q|·k·(segments_per_job + 1) hit rows). 1 = the reference's
+    # SST-at-a-time shape (version_set.cc:2585-2697, where the per-file
+    # step is a C++ call, not a scheduler round trip); >1 amortizes driver
+    # job-launch latency at multi-segment stores without changing results
+    # (a chunk searches a superset of what one-at-a-time would before each
+    # termination check).
     segments_per_job: int = 4
     # FilterSeqTs parity toggle (hnswlib.h:135-146): move the freshness
     # bound INTO graph traversal — stale nodes route but never occupy ef

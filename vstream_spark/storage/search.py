@@ -22,23 +22,23 @@ generalized to ``segments_per_job`` temperature-ordered segments per Spark
 job. The reference's per-file step is a C++ function call; a literal
 job-per-segment translation pays a driver scheduler round trip per file,
 which at a 100×-scale store (thousands of post-prune segments) becomes the
-latency floor even though no data touches the driver (r11 VERDICT #1). A
-chunk unions its per-segment partials INSIDE one job (independent
-mapInPandas branches schedule concurrently), so driver job-launch cost is
-O(segments / segments_per_job); the M1 running merge and the C8 termination
-check run once per chunk. ``segments_per_job=1`` is exactly the old shape;
-chunking never changes results — a chunk searches a superset of what
-one-at-a-time would have before the same termination check, and the merge
-is order-insensitive (dist, id tiebreak).
+latency floor (r11 VERDICT #1). A chunk is ONE Spark job: one mapInPandas
+task per query partition searches every segment of the chunk in turn, so
+driver job-launch cost is O(segments / segments_per_job); the M1 running
+merge and the C8 termination check run once per chunk.
+``segments_per_job=1`` is the SST-at-a-time shape; chunking never changes
+results — a chunk searches a superset of what one-at-a-time would have
+before the same termination check, and the merge is order-insensitive
+(dist, id tiebreak).
 
-Each per-segment search is a distributed Spark job over the query batch;
-executors read the segment parquet directly (pyarrow) and keep the built
+Executors read the segment parquet directly (pyarrow) and keep the built
 index in a process-global LRU cache, so the vector data never flows through
-the driver. The running M1 merge is DISTRIBUTED too: per-chunk partials are
-localCheckpointed DataFrames (lineage truncated, partitions pinned on
-executors), unioned and cut to k via window functions; the driver holds only
-DataFrame handles plus O(queries) termination statistics — strictly less
-state than the reference's parallelism-1 reduce (``params.yaml:34``).
+the driver. Only each chunk's per-segment top-k partials (at most
+|Q|·k·segments_per_job rows) come back through Arrow, and the M1 merge —
+delete-marker filter, last-writer-wins dedup, top-k cut, C8 check — runs
+in pandas on the driver, the way the reference folds each file's results
+into one buffer at reduce parallelism 1 (``params.yaml:33-34``). The driver
+holds at most |Q|·k·(segments_per_job + 1) hit rows.
 """
 
 from __future__ import annotations
@@ -435,6 +435,37 @@ def _segment_index(seg: dict, conf: VectorIndexConf, metric: str):
 _RESULT_DTYPES = {
     "qid": "int64", "neighbor_id": "int64", "distance": "float64", "rank": "int32"
 }
+_HIT_SCHEMA = (
+    "qid long, neighbor_id long, distance double, neighbor_ts long, _seg string"
+)
+
+
+def _drop_deleted(
+    hits: pd.DataFrame, tombs: tuple[np.ndarray, np.ndarray]
+) -> pd.DataFrame:
+    """Cross-segment deletes: drop hits whose id carries a delete marker
+    strictly newer than the hit's insert time (an equal time keeps the
+    insert). ``tombs`` is (sorted ids, max delete time per id)."""
+    ids, del_time = tombs
+    nid = hits["neighbor_id"].to_numpy()
+    at = np.minimum(np.searchsorted(ids, nid), len(ids) - 1)
+    gone = (ids[at] == nid) & (del_time[at] > hits["neighbor_ts"].to_numpy())
+    return hits[~gone]
+
+
+def _merge_topk(hits: pd.DataFrame, k: int) -> pd.DataFrame:
+    """M1 running merge: duplicate ids across segments resolve to the
+    NEWEST version (last-writer-wins, the memtable-over-SST precedence),
+    then the k best per qid with the (dist, id) tiebreak."""
+    newest = hits.sort_values(
+        "neighbor_ts", ascending=False, kind="stable"
+    ).drop_duplicates(["qid", "neighbor_id"])
+    return (
+        newest.sort_values(["qid", "distance", "neighbor_id"], kind="stable")
+        .groupby("qid")
+        .head(k)
+        .reset_index(drop=True)
+    )
 
 
 def _ranked(pdf: pd.DataFrame | None) -> pd.DataFrame:
@@ -556,15 +587,12 @@ class SegmentSearcher:
         max_event_time: int | None,
         ef_search: int | None,
         filter_expr: str | None = None,
-    ) -> tuple[DataFrame | None, list[str]]:
+    ) -> tuple[pd.DataFrame | None, list[str]]:
         """The chunked segment loop shared by :meth:`search` (pandas
         surface) and :meth:`search_df` (DataFrame surface). Returns the
-        merged top-k frame — columns (qid, neighbor_id, distance,
+        merged top-k pandas frame — columns (qid, neighbor_id, distance,
         neighbor_ts, _seg) — plus the visited segment ids; ``None`` when no
         segment survives pruning."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
         conf = self.conf
         segs = self.store.prune(min_event_time, max_event_time)
         if filter_expr is not None and segs:
@@ -582,118 +610,38 @@ class SegmentSearcher:
 
         ef = max(ef_search or conf.ef_search, k)
         # widen + checkpoint the query frame ONCE per search (r12 VERDICT
-        # #1): each segment branch used to build its own widen(queries)
-        # over the raw source — S re-scans and S round-robin exchanges per
-        # search, multiplying with segment count exactly where chunking cut
-        # driver overhead. The reference reads the query once; so do we.
+        # #1): every chunk job reads the same executor-pinned query blocks
+        # instead of re-scanning and re-exchanging the query source.
         from vstream_spark.operators.util import widen
 
         qdf = widen(queries.select("qid", "emb")).localCheckpoint(eager=True)
+        # delete markers cover EVERY pruned segment, not only the visited
+        # ones: a marker in a segment termination never reaches still
+        # removes the hit it shadows
         tombs = self._tombstones(min_event_time, max_event_time)
-        w_lww = Window.partitionBy("qid", "neighbor_id").orderBy(
-            F.col("neighbor_ts").desc()
-        )
-        w_rank = Window.partitionBy("qid").orderBy(
-            F.col("distance").asc(), F.col("neighbor_id").asc()
-        )
-        merged: DataFrame | None = None
-        searched = 0
+        merged: pd.DataFrame | None = None
         searched_ids: list[str] = []
-        # r11 VERDICT #1: visit segments_per_job temperature-ordered segments
-        # per Spark job — their partials union INSIDE one job (independent
-        # branches schedule concurrently), the merge + termination check run
-        # per CHUNK. spj=1 reproduces the SST-at-a-time shape exactly.
         spj = conf.segments_per_job
-        chunks = [segs[at : at + spj] for at in range(0, len(segs), spj)]
-
-        def _submit(chunk: list[dict]) -> DataFrame:
-            # tag each hit with its segment of origin so temperature (C7)
-            # derives from the final merged frame in the SAME materialization
-            # instead of a per-segment count() job (r4 What's-wrong #3:
-            # 2 jobs per segment -> S + O(1) jobs per search)
-            branches = [
-                self._search_one(
-                    seg, qdf, k, metric, min_event_time, ef, filter_expr
-                ).withColumn("_seg", F.lit(seg["id"]))
-                for seg in chunk
-            ]
-            part = branches[0]
-            for b in branches[1:]:
-                part = part.unionByName(b)
-            # pin the partial on executors + truncate lineage: later rounds
-            # must not re-run earlier segments' searches
-            return part.localCheckpoint(eager=True)
-
-        # C4 block-prefetch analog (r13 VERDICT #2): the strictly-sequential
-        # loop left executors idle during every per-chunk merge/termination
-        # round trip — the reference overlaps block IO with traversal via its
-        # prefetcher + async IO (hnsw_block_prefetcher.cc,
-        # VectorEnvironmentCreator.java:107). One-chunk lookahead: chunk
-        # n+1's branch job is submitted from a helper thread WHILE chunk n
-        # merges, and its result is discarded if termination fires first
-        # (one chunk of wasted work at most — the prefetcher's own trade).
-        # Results equal a one-chunk-at-a-time loop: the merge/termination
-        # sequence consumes chunks in the same order, and a discarded
-        # lookahead never contributes hits, temperature, or EMA state. A
-        # single chunk runs inline.
-        pool = fut = None
-        if len(chunks) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            pool = ThreadPoolExecutor(
-                max_workers=1, thread_name_prefix="seg-lookahead"
+        for at in range(0, len(segs), spj):
+            chunk = segs[at : at + spj]
+            part = self._search_chunk(
+                chunk, qdf, k, metric, min_event_time, ef, filter_expr
             )
-            fut = pool.submit(_submit, chunks[0])
-        for ci, chunk in enumerate(chunks):
-            if pool is not None:
-                part = fut.result()
-                if ci + 1 < len(chunks):
-                    fut = pool.submit(_submit, chunks[ci + 1])
-            else:
-                part = _submit(chunk)
             if tombs is not None:
-                # cross-segment deletes: drop hits whose id carries a delete
-                # marker strictly newer than the hit's insert time
-                part = (
-                    part.join(
-                        F.broadcast(tombs),
-                        part["neighbor_id"] == tombs["id"],
-                        "left",
-                    )
-                    .filter(
-                        F.col("del_time").isNull()
-                        | ~(F.col("del_time") > F.col("neighbor_ts"))
-                    )
-                    .drop("id", "del_time")
-                )
-            searched += len(chunk)
+                part = _drop_deleted(part, tombs)
             searched_ids.extend(s["id"] for s in chunk)
-            cur = part if merged is None else merged.unionByName(part)
-            # M1 running merge (distributed): duplicate ids across segments
-            # resolve to the NEWEST version (last-writer-wins, the
-            # memtable-over-SST precedence), then k best per qid with the
-            # (dist, id) tiebreak
-            cur = (
-                cur.withColumn("_v", F.row_number().over(w_lww))
-                .filter(F.col("_v") == 1)
-                .withColumn("_r", F.row_number().over(w_rank))
-                .filter(F.col("_r") <= k)
-                .drop("_v", "_r")
+            merged = _merge_topk(
+                part if merged is None
+                else pd.concat([merged, part], ignore_index=True),
+                k,
             )
-            merged = cur.localCheckpoint(eager=True)
-            if self._should_terminate(merged, k, searched, len(segs)):
+            if self._should_terminate(merged, k, len(searched_ids), len(segs)):
                 break
-        if pool is not None:
-            # non-blocking: an in-flight discarded lookahead runs to
-            # completion on its own thread (its checkpointed blocks are
-            # released by the ContextCleaner once the handle drops)
-            pool.shutdown(wait=False)
         return merged, searched_ids
 
     def _finalize_stats(
         self,
-        kth_by_qid: "pd.Series",
-        seg_hits: dict,
+        merged: pd.DataFrame,
         searched_ids: list[str],
         update_termination: bool = True,
     ) -> None:
@@ -705,14 +653,18 @@ class SegmentSearcher:
         contaminates plain-search termination state). Temperature still
         updates either way: contributed hits are real heat regardless of
         the search's k."""
-        if update_termination and len(kth_by_qid):
+        if update_termination and len(merged):
+            kth = float(merged.groupby("qid")["distance"].max().mean())
             w = self.conf.termination_weight
             self.termination_threshold = (
-                (1.0 - w) * self.termination_threshold
-                + w * float(kth_by_qid.mean())
+                (1.0 - w) * self.termination_threshold + w * kth
                 if self.termination_threshold > 0.0
-                else float(kth_by_qid.mean())
+                else kth
             )
+        # C7 temperature from the merged result: a segment's heat is the
+        # number of its hits that SURVIVED the merge (segments that keep
+        # winning the top-k stay hot; zero-contribution segments decay)
+        seg_hits = merged.groupby("_seg").size()
         for sid in searched_ids:
             self._update_temperature(sid, hits=int(seg_hits.get(sid, 0)))
 
@@ -727,13 +679,12 @@ class SegmentSearcher:
         update_termination: bool,
         filter_expr: str | None,
         recheck_filter: bool,
-    ) -> tuple[DataFrame | None, list[str], bool]:
+    ) -> pd.DataFrame | None:
         """The steps :meth:`search` and :meth:`search_df` share: validate
         the hint (which forces ``update_termination=False``), run the
-        chunked loop, record the visited segments and re-check filtered
-        hits. Returns the merged frame (``None`` when no segment survives
-        pruning), the visited segment ids and the effective
-        ``update_termination``."""
+        chunked loop, record the visited segments, re-check filtered hits
+        and update the C7/C8 state. Returns the merged pandas frame
+        (``None`` when no segment survives pruning)."""
         if filter_expr is not None:
             validate_hint_expr(filter_expr)
             update_termination = False
@@ -742,19 +693,22 @@ class SegmentSearcher:
             ef_search, filter_expr,
         )
         self.last_searched_ids = list(searched_ids)
-        if merged is not None and filter_expr is not None and recheck_filter:
+        if merged is None:
+            return None
+        if filter_expr is not None and recheck_filter:
             merged = self._recheck_filter(
                 merged, filter_expr, min_event_time, max_event_time
             )
-        return merged, searched_ids, update_termination
+        self._finalize_stats(merged, searched_ids, update_termination)
+        return merged
 
     def _recheck_filter(
         self,
-        merged: DataFrame,
+        merged: pd.DataFrame,
         filter_expr: str,
         min_event_time: int | None,
         max_event_time: int | None,
-    ) -> DataFrame:
+    ) -> pd.DataFrame:
         """LWW-consistent predicate re-check for the public ``filter_expr``
         surfaces (ADVICE r13 medium): the per-segment allowlist is
         PERMISSIVE — any insert version of an id matching the expr keeps
@@ -763,21 +717,26 @@ class SegmentSearcher:
         entered its own segment's allowlist, so it isn't in the merge to
         outrank it) and the result would contain an id whose CURRENT
         visible attributes fail the filter, at the stale vector's distance.
-        One broadcast-friendly semi-join against the ids whose
-        LWW-resolved visible row satisfies the expr removes exactly those
-        hits. The hit side is |Q| x k (tiny); the visible frame rides the
-        per-version snapshot cache (repeated filtered calls against an
-        unchanged store re-check against the already-materialized
-        snapshot instead of re-running the LWW shuffle)."""
+        One broadcast-friendly semi-join of the merged hit ids against the
+        ids whose LWW-resolved visible row satisfies the expr removes
+        exactly those hits. The hit side is at most |Q| x k ids; the
+        visible frame rides the per-version snapshot cache (repeated
+        filtered calls against an unchanged store re-check against the
+        already-materialized snapshot instead of re-running the LWW
+        shuffle)."""
         from pyspark.sql import functions as F
 
         vis = self._visible_cached(min_event_time, max_event_time)
-        if vis is None:
+        if vis is None or merged.empty:
             return merged
         keep = vis.filter(F.expr(filter_expr)).select(
             F.col("id").alias("neighbor_id")
         )
-        return merged.join(keep, "neighbor_id", "left_semi")
+        hit_ids = vis.sparkSession.createDataFrame(
+            merged[["neighbor_id"]].drop_duplicates(), "neighbor_id long"
+        )
+        kept = hit_ids.join(keep, "neighbor_id", "left_semi").toPandas()
+        return merged[merged["neighbor_id"].isin(kept["neighbor_id"])]
 
     def search(
         self,
@@ -812,25 +771,12 @@ class SegmentSearcher:
         ``update_termination=False`` runs the search without writing the
         C8 EMA state (internal oversampled/filtered calls).
         """
-        merged, searched_ids, update_termination = self._search_merged(
-            queries, k, metric, min_event_time, max_event_time, ef_search,
-            update_termination, filter_expr, recheck_filter,
+        return _ranked(
+            self._search_merged(
+                queries, k, metric, min_event_time, max_event_time, ef_search,
+                update_termination, filter_expr, recheck_filter,
+            )
         )
-        if merged is None:
-            return _ranked(None)
-        # final materialization: O(queries x k) rows — the result itself
-        out = merged.toPandas()
-        kth = out.groupby("qid")["distance"].max() if len(out) else pd.Series([], dtype=float)
-        # C7 temperature from the merged result: a segment's heat is the
-        # number of its hits that SURVIVED the merge (segments that keep
-        # winning the top-k stay hot; zero-contribution segments decay)
-        seg_hits = (
-            out.groupby("_seg").size().to_dict()
-            if "_seg" in out.columns and len(out)
-            else {}
-        )
-        self._finalize_stats(kth, seg_hits, searched_ids, update_termination)
-        return _ranked(out)
 
     def search_df(
         self,
@@ -844,12 +790,10 @@ class SegmentSearcher:
         filter_expr: str | None = None,
         recheck_filter: bool = True,
     ) -> DataFrame | None:
-        """:meth:`search`'s DataFrame surface: the same chunked loop, but
-        the merged (qid, neighbor_id, distance) frame stays ON THE CLUSTER
-        — callers that re-check/join/escalate (``search_filtered``) compose
-        further DataFrame work without a driver round trip (ADVICE r12:
-        collect only the FINAL |Q| x k result). Stats (C7/C8) come from one
-        O(|Q| x segments) aggregation over the checkpointed merge. Returns
+        """:meth:`search`'s DataFrame surface: the same chunked loop, with
+        the merged (qid, neighbor_id, distance) result handed back as a
+        DataFrame so callers that re-check/join/escalate
+        (``search_filtered``) compose further DataFrame work on it. Returns
         ``None`` when no segment survives pruning; ranks are NOT attached
         (the caller cuts/ranks after its own joins). ``filter_expr``
         forces ``update_termination=False`` and, like :meth:`search`,
@@ -857,27 +801,16 @@ class SegmentSearcher:
         ``recheck_filter=False`` (``search_filtered`` passes False — its
         own predicate re-check is at least as strict, so the extra join
         would be pure overhead on the hot filtered path)."""
-        merged, searched_ids, update_termination = self._search_merged(
+        merged = self._search_merged(
             queries, k, metric, min_event_time, max_event_time, ef_search,
             update_termination, filter_expr, recheck_filter,
         )
         if merged is None:
             return None
-        from pyspark.sql import functions as F
-
-        stat = (
-            merged.groupBy("qid", "_seg")
-            .agg(F.count(F.lit(1)).alias("n"), F.max("distance").alias("kth"))
-            .toPandas()
+        return queries.sparkSession.createDataFrame(
+            merged[["qid", "neighbor_id", "distance"]],
+            "qid long, neighbor_id long, distance double",
         )
-        kth = (
-            stat.groupby("qid")["kth"].max()
-            if len(stat)
-            else pd.Series([], dtype=float)
-        )
-        seg_hits = stat.groupby("_seg")["n"].sum().to_dict() if len(stat) else {}
-        self._finalize_stats(kth, seg_hits, searched_ids, update_termination)
-        return merged.select("qid", "neighbor_id", "distance")
 
     def visible(
         self,
@@ -1018,8 +951,9 @@ class SegmentSearcher:
 
         Both index branches end in the re-check/escalation tail of
         ``knn_filtered_adaptive`` (``recheck_and_escalate``, one
-        implementation since the r12 twin-drift defect), which stays a
-        DataFrame end-to-end; only the final |Q| x k result is collected.
+        implementation since the r12 twin-drift defect), which runs as
+        DataFrame work over the segment loop's merged hits (driver-merged,
+        at most |Q| x k' rows) and collects only the final |Q| x k result.
         The internal index search runs with ``update_termination=False``
         (ADVICE r12 medium: an oversampled or allowlist-inflated kth
         distance must not seed the C8 EMA a later plain search terminates
@@ -1139,113 +1073,109 @@ class SegmentSearcher:
                 [], "qid bigint, neighbor_id bigint, distance double"
             )
         out = recheck_and_escalate(res, queries, pred_vis, k, metric)
-        # the FINAL |Q| x k result is the only driver materialization
-        # (the cached snapshot stays persisted for the NEXT call at
-        # this store version; eviction, not call exit, unpersists it)
+        # the cached snapshot stays persisted for the NEXT call at this
+        # store version; eviction, not call exit, unpersists it
         return _ranked(out.toPandas()), strategy, selectivity
 
     def _tombstones(
         self, min_event_time: int | None, max_event_time: int | None
-    ) -> DataFrame | None:
-        """Delete markers visible to this search: (id, del_time) as a SMALL
-        DataFrame (reference deleteRatio 0.1) broadcast into the merge join;
-        only markers at or before the snapshot bound apply — the
-        tombstone-set analog of the version CF (C9). None when the store has
-        no op column (pure-insert segments)."""
+    ) -> tuple[np.ndarray, np.ndarray] | None:
+        """Delete markers visible to this search, collected to the driver
+        once per search as (sorted ids, max delete time per id) — a SMALL
+        set (reference deleteRatio 0.1); only markers at or before the
+        snapshot bound apply — the tombstone-set analog of the version CF
+        (C9). None when the store has no op column (pure-insert segments)
+        or no marker applies."""
         df = self.store.read(min_event_time=None, max_event_time=max_event_time)
         if df is None or "op" not in df.columns:
             return None
         from pyspark.sql import functions as F
 
-        return (
-            df.filter(F.col("op") == "D")
-            .groupBy("id")
-            .agg(F.max("event_time").alias("del_time"))
-        )
+        marks = df.filter(F.col("op") == "D").select("id", "event_time").toPandas()
+        if marks.empty:
+            return None
+        last = marks.groupby("id")["event_time"].max()
+        return last.index.to_numpy(np.int64), last.to_numpy(np.int64)
 
     def _should_terminate(
-        self, merged: DataFrame, k: int, searched: int, total: int
+        self, merged: pd.DataFrame, k: int, searched: int, total: int
     ) -> bool:
         """version_set.cc:2643-2649: enough files searched AND the current
-        kth distance is under factor x EMA threshold for every query. The
-        check aggregates the (already tiny, checkpointed) merged frame down
-        to O(queries) rows; only scalars reach the driver."""
-        from pyspark.sql import functions as F
-
+        kth distance is under factor x EMA threshold for every query."""
         if searched >= total:
             return False
         if searched <= self.conf.termination_lower_bound * total:
             return False
         if self.termination_threshold <= 0.0:
             return False
-        row = merged.groupBy("qid").agg(
-            F.count("*").alias("n"), F.max("distance").alias("kth")
-        ).agg(
-            F.min("n").alias("min_n"),
-            F.count("*").alias("n_q"),
-            F.max("kth").alias("max_kth"),
-        ).collect()[0]
-        if row["n_q"] == 0 or row["min_n"] < k:
+        per_q = merged.groupby("qid")["distance"].agg(["size", "max"])
+        if per_q.empty or per_q["size"].min() < k:
             return False
         return bool(
-            row["max_kth"] <= self.conf.termination_factor * self.termination_threshold
+            per_q["max"].max()
+            <= self.conf.termination_factor * self.termination_threshold
         )
 
-    def _search_one(
+    def _search_chunk(
         self,
-        seg: dict,
+        chunk: list[dict],
         qdf: DataFrame,
         k: int,
         metric: str,
         min_ts: int | None,
         ef: int,
         filter_expr: str | None = None,
-    ) -> DataFrame:
-        """One segment's per-query index search. ``qdf`` is the loop's
-        pre-widened, checkpointed (qid, emb) frame — every branch reuses the
-        SAME executor-pinned blocks (r12 VERDICT #1: no per-segment re-scan
-        / re-exchange of the query source). ``filter_expr`` builds the
-        segment's attribute allowlist executor-side and threads it INTO
-        graph/cell traversal (the FilterSeqTs-functor analog)."""
+    ) -> pd.DataFrame:
+        """One chunk of segments as ONE Spark job: each task takes its
+        partition of the loop's pre-widened, checkpointed (qid, emb) frame,
+        stacks the queries once and searches every segment of the chunk in
+        turn. The per-segment top-k partials — tagged with their segment of
+        origin (``_seg``) so C7 temperature derives from the merged result
+        — come back to the driver through Arrow. ``filter_expr`` builds
+        each segment's attribute allowlist executor-side and threads it
+        INTO graph/cell traversal (the FilterSeqTs-functor analog)."""
         conf = self.conf
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            idx = None
-            allow = None
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                if idx is None:
-                    if filter_expr is not None:
-                        allow = _segment_allowlist(seg, filter_expr)
-                        if len(allow) == 0:
-                            # time-ranged segments can be predicate-empty
-                            # even when GLOBAL selectivity routed to
-                            # in_index (attribute correlated with ingest
-                            # time): an empty allowlist would otherwise
-                            # degrade the filtered walk to an exhaustive
-                            # component scan per query just to return
-                            # nothing — skip the segment outright (no
-                            # index load either)
-                            return
-                    idx = _segment_index(seg, conf, metric)
-                qmat = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
-                qids, nids, dists, nts = [], [], [], []
-                for j, (lbs, ds) in enumerate(
-                    idx.search_batch(
-                        qmat, k, ef, min_ts, allow_labels=allow,
-                        ts_in_traversal=conf.ts_in_traversal,
-                    )
-                ):
-                    qids.extend([int(pdf["qid"].iloc[j])] * len(lbs))
-                    nids.extend(lbs)
-                    dists.extend(ds)
-                    nts.extend(idx.get_ts(int(lb)) for lb in lbs)
+            pdfs = [b for b in batches if len(b)]
+            if not pdfs:
+                return
+            pdf = pd.concat(pdfs, ignore_index=True)
+            qids = pdf["qid"].to_numpy(np.int64)
+            qmat = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
+            for seg in chunk:
+                allow = None
+                if filter_expr is not None:
+                    allow = _segment_allowlist(seg, filter_expr)
+                    if len(allow) == 0:
+                        # time-ranged segments can be predicate-empty even
+                        # when GLOBAL selectivity routed to in_index
+                        # (attribute correlated with ingest time): an empty
+                        # allowlist would otherwise degrade the filtered
+                        # walk to an exhaustive component scan per query
+                        # just to return nothing — skip the segment (no
+                        # index load either) and go on with the chunk
+                        continue
+                idx = _segment_index(seg, conf, metric)
+                res = idx.search_batch(
+                    qmat, k, ef, min_ts, allow_labels=allow,
+                    ts_in_traversal=conf.ts_in_traversal,
+                )
+                nids = np.concatenate(
+                    [np.asarray(lbs, dtype=np.int64) for lbs, _ in res]
+                )
                 yield pd.DataFrame(
-                    {"qid": qids, "neighbor_id": nids, "distance": dists,
-                     "neighbor_ts": nts}
+                    {
+                        "qid": np.repeat(qids, [len(lbs) for lbs, _ in res]),
+                        "neighbor_id": nids,
+                        "distance": np.concatenate(
+                            [np.asarray(ds, dtype=np.float64) for _, ds in res]
+                        ),
+                        "neighbor_ts": np.array(
+                            [idx.get_ts(int(lb)) for lb in nids], dtype=np.int64
+                        ),
+                        "_seg": seg["id"],
+                    }
                 )
 
-        return qdf.mapInPandas(
-            run, "qid long, neighbor_id long, distance double, neighbor_ts long"
-        )
+        return qdf.mapInPandas(run, _HIT_SCHEMA).toPandas()
