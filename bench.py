@@ -569,7 +569,7 @@ def main() -> None:
         # and the termination guard never opens. Here: a seed search
         # establishes temperature (the hot segment wins every top-k slot)
         # and the kth EMA, then save_state(); every timed rep constructs a
-        # FRESH searcher with restore_state=True — the per-micro-batch
+        # FRESH searcher restored with load_state() — the per-micro-batch
         # lifecycle StreamingVectorQuery runs — so it visits hottest-first
         # and early-terminates after the first chunk at full recall (the
         # cold segments contain no true neighbors). The cold twin (fresh
@@ -617,9 +617,8 @@ def main() -> None:
             outw = None
             searched_w = 0
             for _ in range(d_reps):
-                searcher_hw = SegmentSearcher(
-                    storeh, iconf_h, restore_state=True
-                )
+                searcher_hw = SegmentSearcher(storeh, iconf_h)
+                searcher_hw.load_state()
                 t0 = time.perf_counter()
                 outw = searcher_hw.search(queries, k=10, metric="l2")
                 dt = time.perf_counter() - t0

@@ -359,22 +359,14 @@ def test_in_index_segment_with_no_matches_is_skipped(spark, tmp_path):
     searcher = SegmentSearcher(st, CONF)
     searcher.temperature = {empty: 1.0}
     q = spark.createDataFrame([(0, [0.4] * DIM)], "qid long, emb array<float>")
-    got = searcher.search(q, k=K, filter_expr="label % 2 = 0")
+    pred = F.col("label") % 2 == 0
+    got, strategy, _ = searcher.search_filtered(
+        q, pred, k=K, force_strategy="in_index", predicate_expr="label % 2 = 0"
+    )
+    assert strategy == "in_index"
     assert searcher.last_searched_ids[0] == empty
-    even = searcher.visible().filter(F.col("label") % 2 == 0).select("id", "emb")
+    even = searcher.visible().filter(pred).select("id", "emb")
     _assert_same(got, knn_exact(even, q, k=K, metric="l2"))
-
-
-def test_search_filter_expr_never_writes_ema(store, queries):
-    """filter_expr on the PUBLIC search surface forces the EMA write off —
-    filtered kth distances are inflated vs plain ones, so letting a direct
-    search(filter_expr=...) caller seed the threshold would re-open the
-    ADVICE-r12 contamination one layer above search_filtered."""
-    searcher = SegmentSearcher(store, CONF)
-    searcher.search(queries, k=K, filter_expr="label % 2 = 0")
-    assert searcher.termination_threshold == 0.0
-    df = searcher.search_df(queries, k=K, filter_expr="label % 2 = 0")
-    assert df is not None and searcher.termination_threshold == 0.0
 
 
 def test_prunable_terms_parser():
@@ -477,6 +469,15 @@ def test_zone_map_prunes_segments_before_jobs(spark, tmp_path):
         q, k=K, metric="l2",
     )
     _assert_same(got, exact)
+    # a hint every zone map refutes prunes ALL segments: no segment is
+    # searched and the empty hit set escalates to an empty exact answer
+    got, strategy, _ = searcher.search_filtered(
+        q, F.col("label") > 500, k=K, force_strategy="in_index",
+        predicate_expr="label > 500",
+    )
+    assert strategy == "in_index" and searcher.last_searched_ids == []
+    assert got.empty
+    assert list(got.columns) == ["qid", "neighbor_id", "distance", "rank"]
 
 
 def test_zone_map_prunes_with_between_and_in_hints(spark, tmp_path):
@@ -516,14 +517,14 @@ def test_zone_map_prunes_with_between_and_in_hints(spark, tmp_path):
         _assert_same(got, exact)
 
 
-def test_filter_expr_recheck_drops_stale_only_matches(spark, tmp_path):
+def test_in_index_drops_stale_only_matches(spark, tmp_path):
     """ADVICE r13 medium: the per-segment allowlist is permissive (ANY
     insert version of an id matching the expr keeps the id), so an id whose
     only MATCHING version is stale could win the LWW merge at the stale
     vector's distance — the live version (which fails the expr) never
-    entered its own segment's allowlist to outrank it. The public
-    search/search_df surfaces must re-check hits against the LWW-visible
-    snapshot and drop exactly those ids."""
+    entered its own segment's allowlist to outrank it. search_filtered's
+    predicate re-check against the LWW-visible snapshot drops exactly
+    those ids."""
     st = SegmentStore(spark, str(tmp_path / "segstale"))
     rng = np.random.RandomState(2)
     vec7 = rng.rand(DIM).astype(np.float32).tolist()
@@ -544,16 +545,6 @@ def test_filter_expr_recheck_drops_stale_only_matches(spark, tmp_path):
 
     searcher = SegmentSearcher(st, CONF)
     q = spark.createDataFrame([(0, vec7)], "qid long, emb array<float>")
-    got = searcher.search(q, k=K, filter_expr="label = 0")
-    assert 7 not in set(got["neighbor_id"])  # stale-only match dropped
-    df = searcher.search_df(q, k=K, filter_expr="label = 0")
-    assert 7 not in {r.neighbor_id for r in df.collect()}
-    # recheck_filter=False restores the raw permissive merge (the surface
-    # search_filtered composes with its own stricter re-check)
-    raw = searcher.search_df(q, k=K, filter_expr="label = 0",
-                             recheck_filter=False)
-    assert 7 in {r.neighbor_id for r in raw.collect()}
-    # and search_filtered (in_index) is already correct end-to-end
     got_f, strategy, _ = searcher.search_filtered(
         q, F.col("label") == 0, k=K,
         force_strategy="in_index", predicate_expr="label = 0",
@@ -561,44 +552,43 @@ def test_filter_expr_recheck_drops_stale_only_matches(spark, tmp_path):
     assert strategy == "in_index" and 7 not in set(got_f["neighbor_id"])
 
 
-def test_allowlist_cache_bounded_by_bytes():
+def test_allowlist_cache_bounded_by_bytes(tmp_path, monkeypatch):
     """ADVICE r13 low: the allowlist cache evicts LRU-first by TOTAL BYTES,
-    not entry count — large allowlists can't pin unbounded executor memory."""
-    import numpy as np
+    not entry count — large allowlists can't pin unbounded executor memory.
+    Drives _segment_allowlist itself over tiny segment parquet dirs."""
+    from collections import OrderedDict
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     import vstream_spark.storage.search as sm
 
-    old_cache = dict(sm._ALLOW_CACHE)
-    old_bytes = sm._ALLOW_CACHE_BYTES
-    old_max = sm._ALLOW_CACHE_MAX_BYTES
-    sm._ALLOW_CACHE.clear()
-    sm._ALLOW_CACHE_BYTES = 0
-    try:
-        sm._ALLOW_CACHE_MAX_BYTES = 3 * 8 * 100  # three 100-int64 arrays
+    monkeypatch.setattr(sm, "_ALLOW_CACHE", OrderedDict())
+    monkeypatch.setattr(sm, "_ALLOW_CACHE_BYTES", 0)
+    monkeypatch.setattr(sm, "_ALLOW_CACHE_MAX_BYTES", 3 * 8 * 100)
 
-        def put(key, n):
-            ids = np.arange(n, dtype=np.int64)
-            while sm._ALLOW_CACHE and sm._ALLOW_CACHE_BYTES + ids.nbytes > sm._ALLOW_CACHE_MAX_BYTES:
-                _, old = sm._ALLOW_CACHE.popitem(last=False)
-                sm._ALLOW_CACHE_BYTES -= old.nbytes
-            sm._ALLOW_CACHE[key] = ids
-            sm._ALLOW_CACHE_BYTES += ids.nbytes
+    def allow(name, n):
+        path = tmp_path / name
+        path.mkdir()
+        pq.write_table(
+            pa.table({"id": np.arange(n, dtype=np.int64),
+                      "label": np.zeros(n, dtype=np.int32)}),
+            str(path / "part-0.parquet"),
+        )
+        ids = sm._segment_allowlist({"id": name, "path": str(path)}, "label = 0")
+        assert len(ids) == n
 
-        # the eviction loop above is the same code _segment_allowlist runs;
-        # drive it directly (no Spark) and check the byte invariant
-        for k in ("a", "b", "c"):
-            put(k, 100)
-        assert set(sm._ALLOW_CACHE) == {"a", "b", "c"}
-        put("d", 200)  # needs 2 evictions: a and b go, c+d stay
-        assert set(sm._ALLOW_CACHE) == {"c", "d"}
-        assert sm._ALLOW_CACHE_BYTES == 8 * 300
-        put("e", 1000)  # larger than the whole budget: evict all, keep e
-        assert set(sm._ALLOW_CACHE) == {"e"}
-    finally:
-        sm._ALLOW_CACHE.clear()
-        sm._ALLOW_CACHE.update(old_cache)
-        sm._ALLOW_CACHE_BYTES = old_bytes
-        sm._ALLOW_CACHE_MAX_BYTES = old_max
+    def cached():
+        return {key.split(":")[0] for key in sm._ALLOW_CACHE}
+
+    for name in ("a", "b", "c"):  # three 100-int64 arrays fill the budget
+        allow(name, 100)
+    assert cached() == {"a", "b", "c"}
+    allow("d", 200)  # needs 2 evictions: a and b go, c+d stay
+    assert cached() == {"c", "d"}
+    assert sm._ALLOW_CACHE_BYTES == 8 * 300
+    allow("e", 1000)  # larger than the whole budget: evict all, keep e
+    assert cached() == {"e"}
 
 
 def test_zone_map_excludes_float_columns(spark, tmp_path):

@@ -50,26 +50,6 @@ def test_search_matches_exact_across_segments(spark, store):
         assert list(grp["distance"]) == sorted(grp["distance"])
 
 
-def test_search_and_search_df_agree(spark, store):
-    """The pandas and DataFrame surfaces share one search path: on the same
-    multi-segment store, fresh searchers return the same rows and leave the
-    same C7 temperature and C8 termination state behind."""
-    conf = VectorIndexConf(dim=8, ef_search=64)
-    q = _queries(spark, store, n=6).cache()
-    a, b = SegmentSearcher(store, conf), SegmentSearcher(store, conf)
-    got = a.search(q, k=5, metric="l2")
-    df = b.search_df(q, k=5, metric="l2").toPandas()
-    cols = ["qid", "neighbor_id", "distance"]
-    assert len(got) == 6 * 5
-    assert (
-        got[cols].sort_values(cols).values.tolist()
-        == df[cols].sort_values(cols).values.tolist()
-    )
-    assert a.last_searched_ids == b.last_searched_ids
-    assert a.temperature == b.temperature and a.temperature
-    assert a.termination_threshold == b.termination_threshold > 0.0
-
-
 def test_ttl_pruning_filters_results(spark, store):
     conf = VectorIndexConf(dim=8)
     searcher = SegmentSearcher(store, conf)
@@ -389,8 +369,8 @@ def test_searcher_state_persists_across_restarts(spark, store):
     keeps per-table temperature in version metadata so heat ordering and
     the termination EMA survive restarts (util/metrics.h:77-109). The
     Spark analog is a JSON sidecar beside the manifest: save_state /
-    load_state round-trip both, restore_state=True loads at construction,
-    and a cold store (no file) stays at the defaults."""
+    load_state round-trip both, and a cold store (no file) stays at the
+    defaults."""
     conf = VectorIndexConf(dim=8, ef_search=64)
     s1 = SegmentSearcher(store, conf)
     assert s1.load_state() is False  # no state yet: cold defaults kept
@@ -400,7 +380,8 @@ def test_searcher_state_persists_across_restarts(spark, store):
     assert s1.termination_threshold > 0.0 and s1.temperature
     s1.save_state()
 
-    s2 = SegmentSearcher(store, conf, restore_state=True)
+    s2 = SegmentSearcher(store, conf)
+    assert s2.load_state() is True
     assert s2.termination_threshold == s1.termination_threshold
     assert s2.temperature == s1.temperature
     # restored heat drives the same C7 visit order
@@ -415,7 +396,8 @@ def test_searcher_state_drops_stale_segments(spark, store):
     s1.search(_queries(spark, store), k=3)
     s1.temperature["gone-segment"] = 9.9  # simulate a compacted-away id
     s1.save_state()
-    s2 = SegmentSearcher(store, conf, restore_state=True)
+    s2 = SegmentSearcher(store, conf)
+    s2.load_state()
     assert "gone-segment" not in s2.temperature
     live = {s["id"] for s in store.segments()}
     assert set(s2.temperature) <= live

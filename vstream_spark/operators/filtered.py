@@ -53,7 +53,9 @@ from vstream_spark.operators.knn import knn_exact, topk
 __all__ = [
     "compute_k_over",
     "knn_filtered_adaptive",
+    "probe_selectivity",
     "recheck_and_escalate",
+    "route_strategy",
     "validate_force_strategy",
 ]
 
@@ -94,6 +96,49 @@ def compute_k_over(
     if max_oversample_k is not None:
         k_over = max(k, min(k_over, max_oversample_k))
     return k_over
+
+
+def probe_selectivity(
+    vectors: DataFrame, predicate: Column, predicate_expr: str | None = None
+) -> tuple[int, float]:
+    """The selectivity probe: ``(rows, fraction matching predicate)`` from
+    ONE column-pruned aggregation (the embedding column is not read).
+
+    With a ``predicate_expr`` hint, the same scan also enforces the
+    implication predicate => hint: a matching row whose hint is false or
+    NULL would be invisible to an allowlist built from the hint, so any
+    such row raises instead of silently under-filling a query's k."""
+    aggs = [F.count(F.lit(1)).alias("n"), F.count_if(predicate).alias("m")]
+    if predicate_expr is not None:
+        aggs.append(
+            F.count_if(
+                predicate & ~F.coalesce(F.expr(predicate_expr), F.lit(False))
+            ).alias("viol")
+        )
+    row = vectors.select(*aggs).first()
+    if predicate_expr is not None and row["viol"]:
+        raise ValueError(
+            f"predicate_expr {predicate_expr!r} is not implied by "
+            f"the predicate: {row['viol']} matching rows fail it — "
+            "the in-index allowlist would silently exclude them. "
+            "Pass an equal-or-weaker SQL hint (or none, to use the "
+            "oversampled post_filter branch)."
+        )
+    return row["n"], (row["m"] / row["n"]) if row["n"] else 0.0
+
+
+def route_strategy(
+    selectivity: float,
+    selectivity_threshold: float,
+    force_strategy: str | None,
+    index_strategy: str,
+) -> str:
+    """The routing rule: ``selectivity <= selectivity_threshold`` goes to
+    the exact ``pre_filter`` scan, anything weaker to ``index_strategy``
+    (the caller's index-backed branch); a forced strategy wins."""
+    if force_strategy is not None:
+        return force_strategy
+    return "pre_filter" if selectivity <= selectivity_threshold else index_strategy
 
 
 def knn_filtered_adaptive(
@@ -137,15 +182,9 @@ def knn_filtered_adaptive(
     validate_force_strategy(force_strategy)
 
     pred_vectors = vectors.filter(predicate)
-    # one column-pruned scan: total + survivors together (no embedding read)
-    n_total, n_match = vectors.select(
-        F.count(F.lit(1)).alias("n"),
-        F.count_if(predicate).alias("m"),
-    ).first()
-    selectivity = (n_match / n_total) if n_total else 0.0
-
-    strategy = force_strategy or (
-        "pre_filter" if selectivity <= selectivity_threshold else "post_filter"
+    n_total, selectivity = probe_selectivity(vectors, predicate)
+    strategy = route_strategy(
+        selectivity, selectivity_threshold, force_strategy, "post_filter"
     )
     if strategy == "pre_filter":
         out = knn_exact(

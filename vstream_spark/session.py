@@ -55,6 +55,11 @@ _DEFAULT_CONF: dict[str, str] = {
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
     "spark.ui.enabled": "false",
     "spark.driver.host": "127.0.0.1",
+    # pyspark's applyInPandasWithState serializer pads with all-NA frames
+    # before pd.concat, and pandas >= 2.1 warns on every such concat; the
+    # filter names only that category from that module.
+    "spark.executorEnv.PYTHONWARNINGS":
+        "ignore::FutureWarning:pyspark.sql.pandas.serializers",
 }
 
 

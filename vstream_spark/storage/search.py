@@ -39,10 +39,17 @@ delete-marker filter, last-writer-wins dedup, top-k cut, C8 check — runs
 in pandas on the driver, the way the reference folds each file's results
 into one buffer at reduce parallelism 1 (``params.yaml:33-34``). The driver
 holds at most |Q|·k·(segments_per_job + 1) hit rows.
+
+``SegmentSearcher`` has two entry points over that one loop: ``search``
+(plain top-k; feeds the C8 EMA) and ``search_filtered`` (attribute-filtered
+top-k; routes on a selectivity probe to an exact pre-filter scan or to the
+loop with an executor-side allowlist or an oversampled k', then re-checks
+the predicate against the LWW-visible snapshot; never writes the EMA).
 """
 
 from __future__ import annotations
 
+import re
 from collections import OrderedDict
 from collections.abc import Iterator
 
@@ -91,7 +98,7 @@ _ALLOW_CACHE_BYTES = 0
 # store eagerly evicts its predecessors (they can never be hit again).
 _SNAPSHOT_CACHE: "OrderedDict[tuple, DataFrame | None]" = OrderedDict()
 _SNAPSHOT_CACHE_MAX = 4
-_PROBE_CACHE: "OrderedDict[tuple, tuple[int, int]]" = OrderedDict()
+_PROBE_CACHE: "OrderedDict[tuple, tuple[int, float]]" = OrderedDict()
 _PROBE_CACHE_MAX = 256
 
 
@@ -124,14 +131,14 @@ def _snapshot_cache_put(key: tuple, df: "DataFrame | None") -> None:
 # could make duckdb match FEWER rows than the guard validated, silently
 # narrowing the allowlist below the matches (a false negative the
 # deficiency check cannot see when a query still fills k).
-_HINT_TOKEN = __import__("re").compile(
+_HINT_TOKEN = re.compile(
     r"""\s+                                  # whitespace
       | '(?:[^']|'')*'                       # SQL string literal
       | \d+(?:\.\d*)?(?:[eE][+-]?\d+)?       # numeric literal
       | [A-Za-z_][A-Za-z_0-9]*               # identifier / keyword
       | <> | != | <= | >= | [=<>+\-*/%(),]   # safe operators
     """,
-    __import__("re").X,
+    re.X,
 )
 _HINT_KEYWORDS = {
     "and", "or", "not", "in", "between", "is", "null", "true", "false",
@@ -142,17 +149,17 @@ _FLIP = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}
 _CMP_OPS = {"=", "==", "<>", "!=", "<", "<=", ">", ">="}
 
 
-def _hint_tokens(expr: str) -> list[str] | None:
-    """Tokenize a hint with the validated grammar's lexer; None on any gap
-    (an unlexable character means the expr is outside the grammar — the
-    sound parse result is 'no pruning'). Adjacent ``= =`` re-merges to
-    ``==`` (the lexer emits single-char ``=``); a unary minus fuses into
-    the following numeric literal so ``label > -5`` parses."""
+def _hint_tokens(expr: str) -> list[str]:
+    """Tokenize a hint with the validated grammar's lexer; raises
+    ValueError naming the offset of the first unlexable character (the
+    expr is outside the grammar). Adjacent ``= =`` re-merges to ``==``
+    (the lexer emits single-char ``=``); a unary minus fuses into the
+    following numeric literal so ``label > -5`` parses."""
     toks: list[str] = []
     pos = 0
     for m in _HINT_TOKEN.finditer(expr):
         if m.start() != pos:
-            return None
+            break
         pos = m.end()
         t = m.group(0)
         if t.strip() == "":
@@ -170,7 +177,13 @@ def _hint_tokens(expr: str) -> list[str] | None:
             continue
         toks.append(t)
     if pos != len(expr):
-        return None
+        raise ValueError(
+            f"predicate_expr contains an unsupported construct at "
+            f"offset {pos}: {expr[pos:pos+20]!r} — hints are limited "
+            "to comparisons, + - * / %, AND/OR/NOT, IN, BETWEEN, "
+            "IS [NOT] NULL, literals and column names (the subset "
+            "whose Spark and duckdb semantics provably agree)"
+        )
     return toks
 
 
@@ -182,10 +195,8 @@ def _num(tok: str) -> float | None:
 
 
 def _is_ident(tok: str) -> bool:
-    import re as _re
-
     return bool(
-        _re.match(r"^[A-Za-z_][A-Za-z_0-9]*$", tok)
+        re.match(r"^[A-Za-z_][A-Za-z_0-9]*$", tok)
         and tok.lower() not in _HINT_KEYWORDS
     )
 
@@ -202,8 +213,9 @@ def prunable_terms(expr: str) -> list[tuple] | None:
 
     OR/NOT/parens/arithmetic/col-col comparisons all return None (a range
     test cannot refute ``label % 2 = 0`` from [min,max])."""
-    toks = _hint_tokens(expr)
-    if toks is None:
+    try:
+        toks = _hint_tokens(expr)
+    except ValueError:
         return None
     terms: list[tuple] = []
     i, n = 0, len(toks)
@@ -300,34 +312,14 @@ def validate_hint_expr(expr: str) -> None:
     Identifiers immediately followed by ``(`` (function calls) are also
     rejected — no function whitelist yet, and function semantics are the
     classic cross-engine divergence surface."""
-    import re as _re
-
-    pos, prev_ident = 0, False
-    for m in _re.finditer(_HINT_TOKEN, expr):
-        if m.start() != pos:
-            raise ValueError(
-                f"predicate_expr contains an unsupported construct at "
-                f"offset {pos}: {expr[pos:pos+20]!r} — hints are limited "
-                "to comparisons, + - * / %, AND/OR/NOT, IN, BETWEEN, "
-                "IS [NOT] NULL, literals and column names (the subset "
-                "whose Spark and duckdb semantics provably agree)"
-            )
-        tok = m.group(0)
-        if prev_ident and tok == "(":
+    toks = _hint_tokens(expr)
+    for prev, tok in zip(toks, toks[1:]):
+        if tok == "(" and _is_ident(prev):
             raise ValueError(
                 "predicate_expr must not contain function calls — only "
                 "the operator subset whose Spark and duckdb semantics "
                 f"provably agree is supported: {expr!r}"
             )
-        prev_ident = bool(
-            _re.match(r"[A-Za-z_]", tok) and tok.lower() not in _HINT_KEYWORDS
-        )
-        pos = m.end()
-    if pos != len(expr):
-        raise ValueError(
-            f"predicate_expr contains an unsupported construct at offset "
-            f"{pos}: {expr[pos:pos+20]!r}"
-        )
 
 
 def _segment_allowlist(seg: dict, expr: str) -> np.ndarray:
@@ -485,12 +477,7 @@ class SegmentSearcher:
     """Top-k search across segments with pruning, temperature ordering and
     adaptive early termination."""
 
-    def __init__(
-        self,
-        store: SegmentStore,
-        conf: VectorIndexConf | None = None,
-        restore_state: bool = False,
-    ):
+    def __init__(self, store: SegmentStore, conf: VectorIndexConf | None = None):
         self.store = store
         self.conf = conf or VectorIndexConf()
         # per-store EMA of the kth-distance termination threshold (C8)
@@ -501,8 +488,6 @@ class SegmentSearcher:
         # post-termination) — the observable that lets callers/tests see C8
         # early termination without instrumenting the loop
         self.last_searched_ids: list[str] = []
-        if restore_state:
-            self.load_state()
 
     # -- C7/C8 state persistence ----------------------------------------------
     # The reference persists per-table temperature in version metadata so
@@ -587,12 +572,16 @@ class SegmentSearcher:
         max_event_time: int | None,
         ef_search: int | None,
         filter_expr: str | None = None,
-    ) -> tuple[pd.DataFrame | None, list[str]]:
-        """The chunked segment loop shared by :meth:`search` (pandas
-        surface) and :meth:`search_df` (DataFrame surface). Returns the
-        merged top-k pandas frame — columns (qid, neighbor_id, distance,
-        neighbor_ts, _seg) — plus the visited segment ids; ``None`` when no
-        segment survives pruning."""
+    ) -> pd.DataFrame | None:
+        """The chunked segment loop behind :meth:`search` and the index
+        branches of :meth:`search_filtered`. Records the visited segment
+        ids in ``last_searched_ids`` and updates their C7 temperatures
+        from the merged result; the C8 EMA is left to the caller. Returns
+        the merged top-k pandas frame — columns (qid, neighbor_id,
+        distance, neighbor_ts, _seg) — or ``None`` when no segment
+        survives pruning. ``filter_expr`` (a validated hint) zone-map
+        prunes segments and threads each segment's allowlist into
+        traversal (:meth:`_search_chunk`)."""
         conf = self.conf
         segs = self.store.prune(min_event_time, max_event_time)
         if filter_expr is not None and segs:
@@ -606,7 +595,8 @@ class SegmentSearcher:
                 segs = [s for s in segs if not segment_prunable(s, terms)]
         segs = self._order_segments(segs)
         if not segs:
-            return None, []
+            self.last_searched_ids = []
+            return None
 
         ef = max(ef_search or conf.ef_search, k)
         # widen + checkpoint the query frame ONCE per search (r12 VERDICT
@@ -637,106 +627,14 @@ class SegmentSearcher:
             )
             if self._should_terminate(merged, k, len(searched_ids), len(segs)):
                 break
-        return merged, searched_ids
-
-    def _finalize_stats(
-        self,
-        merged: pd.DataFrame,
-        searched_ids: list[str],
-        update_termination: bool = True,
-    ) -> None:
-        """C8 EMA threshold + C7 temperature updates from one search's
-        merged result. ``update_termination=False`` skips the EMA write
-        (ADVICE r12: the oversampled internal search inside
-        ``search_filtered`` must not seed/inflate the threshold a later
-        plain ``search`` terminates against — filtered-search depth never
-        contaminates plain-search termination state). Temperature still
-        updates either way: contributed hits are real heat regardless of
-        the search's k."""
-        if update_termination and len(merged):
-            kth = float(merged.groupby("qid")["distance"].max().mean())
-            w = self.conf.termination_weight
-            self.termination_threshold = (
-                (1.0 - w) * self.termination_threshold + w * kth
-                if self.termination_threshold > 0.0
-                else kth
-            )
+        self.last_searched_ids = searched_ids
         # C7 temperature from the merged result: a segment's heat is the
         # number of its hits that SURVIVED the merge (segments that keep
         # winning the top-k stay hot; zero-contribution segments decay)
         seg_hits = merged.groupby("_seg").size()
         for sid in searched_ids:
             self._update_temperature(sid, hits=int(seg_hits.get(sid, 0)))
-
-    def _search_merged(
-        self,
-        queries: DataFrame,
-        k: int,
-        metric: str,
-        min_event_time: int | None,
-        max_event_time: int | None,
-        ef_search: int | None,
-        update_termination: bool,
-        filter_expr: str | None,
-        recheck_filter: bool,
-    ) -> pd.DataFrame | None:
-        """The steps :meth:`search` and :meth:`search_df` share: validate
-        the hint (which forces ``update_termination=False``), run the
-        chunked loop, record the visited segments, re-check filtered hits
-        and update the C7/C8 state. Returns the merged pandas frame
-        (``None`` when no segment survives pruning)."""
-        if filter_expr is not None:
-            validate_hint_expr(filter_expr)
-            update_termination = False
-        merged, searched_ids = self._run_loop(
-            queries, k, metric, min_event_time, max_event_time,
-            ef_search, filter_expr,
-        )
-        self.last_searched_ids = list(searched_ids)
-        if merged is None:
-            return None
-        if filter_expr is not None and recheck_filter:
-            merged = self._recheck_filter(
-                merged, filter_expr, min_event_time, max_event_time
-            )
-        self._finalize_stats(merged, searched_ids, update_termination)
         return merged
-
-    def _recheck_filter(
-        self,
-        merged: pd.DataFrame,
-        filter_expr: str,
-        min_event_time: int | None,
-        max_event_time: int | None,
-    ) -> pd.DataFrame:
-        """LWW-consistent predicate re-check for the public ``filter_expr``
-        surfaces (ADVICE r13 medium): the per-segment allowlist is
-        PERMISSIVE — any insert version of an id matching the expr keeps
-        the id — so when only a STALE version of an id satisfies the expr,
-        that stale hit would win the LWW merge (the live version never
-        entered its own segment's allowlist, so it isn't in the merge to
-        outrank it) and the result would contain an id whose CURRENT
-        visible attributes fail the filter, at the stale vector's distance.
-        One broadcast-friendly semi-join of the merged hit ids against the
-        ids whose LWW-resolved visible row satisfies the expr removes
-        exactly those hits. The hit side is at most |Q| x k ids; the
-        visible frame rides the per-version snapshot cache (repeated
-        filtered calls against an unchanged store re-check against the
-        already-materialized snapshot instead of re-running the LWW
-        shuffle)."""
-        from pyspark.sql import functions as F
-
-        vis = self._visible_cached(min_event_time, max_event_time)
-        if vis is None or merged.empty:
-            return merged
-        keep = vis.filter(F.expr(filter_expr)).select(
-            F.col("id").alias("neighbor_id")
-        )
-        hit_ids = vis.sparkSession.createDataFrame(
-            merged[["neighbor_id"]].drop_duplicates(), "neighbor_id long"
-        )
-        kept = hit_ids.join(keep, "neighbor_id", "left_semi").toPandas()
-        return merged[merged["neighbor_id"].isin(kept["neighbor_id"])]
 
     def search(
         self,
@@ -746,71 +644,28 @@ class SegmentSearcher:
         min_event_time: int | None = None,
         max_event_time: int | None = None,
         ef_search: int | None = None,
-        update_termination: bool = True,
-        filter_expr: str | None = None,
-        recheck_filter: bool = True,
     ) -> pd.DataFrame:
         """Returns a pandas frame (qid, neighbor_id, distance, rank).
 
         ``min_event_time`` is the freshness bound (query event_time - TTL);
         it prunes whole segments (C6) AND filters inside surviving indexes
         (the FilterSeqTs analog). ``k`` and ``ef_search`` are the per-query
-        search options of the reference (``vector_options.h:79-95``).
-        ``filter_expr`` threads an attribute allowlist INTO index traversal
-        on every segment (see :func:`_segment_allowlist`); it also FORCES
-        ``update_termination=False`` — filtered per-query kth distances are
-        systematically larger than unfiltered ones, so letting them seed
-        the C8 EMA would re-open the ADVICE-r12 contamination one layer up.
-        Returned hits are re-checked against the LWW-visible snapshot
-        (:meth:`_recheck_filter`) so every returned id's CURRENT attributes
-        satisfy the expr — a query may therefore return FEWER than k rows
-        when only stale versions of eligible ids were walked; callers that
-        need fill guarantees use :meth:`search_filtered`, which escalates
-        deficient queries to the exact branch. ``recheck_filter=False``
-        skips that join for callers that re-check downstream themselves.
-        ``update_termination=False`` runs the search without writing the
-        C8 EMA state (internal oversampled/filtered calls).
+        search options of the reference (``vector_options.h:79-95``). The
+        mean per-query kth distance feeds the C8 termination EMA; the
+        attribute-filtered surface is :meth:`search_filtered`.
         """
-        return _ranked(
-            self._search_merged(
-                queries, k, metric, min_event_time, max_event_time, ef_search,
-                update_termination, filter_expr, recheck_filter,
+        merged = self._run_loop(
+            queries, k, metric, min_event_time, max_event_time, ef_search
+        )
+        if merged is not None and len(merged):
+            kth = float(merged.groupby("qid")["distance"].max().mean())
+            w = self.conf.termination_weight
+            self.termination_threshold = (
+                (1.0 - w) * self.termination_threshold + w * kth
+                if self.termination_threshold > 0.0
+                else kth
             )
-        )
-
-    def search_df(
-        self,
-        queries: DataFrame,
-        k: int = 10,
-        metric: str = "l2",
-        min_event_time: int | None = None,
-        max_event_time: int | None = None,
-        ef_search: int | None = None,
-        update_termination: bool = True,
-        filter_expr: str | None = None,
-        recheck_filter: bool = True,
-    ) -> DataFrame | None:
-        """:meth:`search`'s DataFrame surface: the same chunked loop, with
-        the merged (qid, neighbor_id, distance) result handed back as a
-        DataFrame so callers that re-check/join/escalate
-        (``search_filtered``) compose further DataFrame work on it. Returns
-        ``None`` when no segment survives pruning; ranks are NOT attached
-        (the caller cuts/ranks after its own joins). ``filter_expr``
-        forces ``update_termination=False`` and, like :meth:`search`,
-        re-checks hits against the LWW-visible snapshot unless
-        ``recheck_filter=False`` (``search_filtered`` passes False — its
-        own predicate re-check is at least as strict, so the extra join
-        would be pure overhead on the hot filtered path)."""
-        merged = self._search_merged(
-            queries, k, metric, min_event_time, max_event_time, ef_search,
-            update_termination, filter_expr, recheck_filter,
-        )
-        if merged is None:
-            return None
-        return queries.sparkSession.createDataFrame(
-            merged[["qid", "neighbor_id", "distance"]],
-            "qid long, neighbor_id long, distance double",
-        )
+        return _ranked(merged)
 
     def visible(
         self,
@@ -920,8 +775,10 @@ class SegmentSearcher:
         #3): the selectivity-adaptive routing of ``operators/filtered.py``
         composed with the segment loop. ``predicate`` is a Column over the
         store's row schema (segments may persist arbitrary attribute
-        columns alongside id/emb). Routing/validation/k' scaffolding is
-        SHARED with ``knn_filtered_adaptive`` (same module-of-truth).
+        columns alongside id/emb). The selectivity probe, the routing rule,
+        validation and k' scaffolding are SHARED with
+        ``knn_filtered_adaptive`` (``probe_selectivity``,
+        ``route_strategy``: one module of truth).
 
         Three physical plans (r12 VERDICT missing #1 added the middle one):
 
@@ -949,30 +806,32 @@ class SegmentSearcher:
           / selectivity)`` (clamped by ``max_oversample_k``), then re-check
           and keep k per query.
 
-        Both index branches end in the re-check/escalation tail of
-        ``knn_filtered_adaptive`` (``recheck_and_escalate``, one
-        implementation since the r12 twin-drift defect), which runs as
-        DataFrame work over the segment loop's merged hits (driver-merged,
-        at most |Q| x k' rows) and collects only the final |Q| x k result.
-        The internal index search runs with ``update_termination=False``
-        (ADVICE r12 medium: an oversampled or allowlist-inflated kth
-        distance must not seed the C8 EMA a later plain search terminates
-        against).
+        Both index branches run the segment loop (:meth:`_run_loop`) and
+        end in the re-check/escalation tail of ``knn_filtered_adaptive``
+        (``recheck_and_escalate``, one implementation since the r12
+        twin-drift defect), which runs as DataFrame work over the loop's
+        merged hits (at most |Q| x k' rows) and collects only the final
+        |Q| x k result. Its predicate re-check is at least as strict as
+        the hint (predicate => expr), so an id whose only matching version
+        is stale drops there. The index branches update C7 temperatures
+        but never write the C8 EMA (ADVICE r12 medium: an oversampled or
+        allowlist-inflated kth distance must not seed the threshold a
+        later plain search terminates against).
 
-        The visible() snapshot and the probe aggregates ride the
-        PER-VERSION driver caches (:func:`_snapshot_cache_put`): repeated
-        filtered searches against an unchanged store — the streaming
-        consumer's shape — skip both the snapshot shuffle and the probe
-        job entirely; any store mutation bumps the manifest version and
-        the next call rebuilds. Returns ``(result, strategy,
+        The visible() snapshot and the probe result ride the PER-VERSION
+        driver caches (:func:`_snapshot_cache_put`): repeated filtered
+        searches against an unchanged store — the streaming consumer's
+        shape — skip both the snapshot shuffle and the probe job entirely;
+        any store mutation bumps the manifest version and the next call
+        rebuilds. Returns ``(result, strategy,
         selectivity)``; result is the pandas (qid, neighbor_id, distance,
         rank) frame of :meth:`search`.
         """
-        from pyspark.sql import functions as F
-
         from vstream_spark.operators.filtered import (
             compute_k_over,
+            probe_selectivity,
             recheck_and_escalate,
+            route_strategy,
             validate_force_strategy,
         )
         from vstream_spark.operators.knn import knn_exact
@@ -990,12 +849,8 @@ class SegmentSearcher:
         vis = self._visible_cached(min_event_time, max_event_time)
         if vis is None:
             return _ranked(None), "pre_filter", 0.0
-        # one column-pruned probe: total + survivors (+ the hint
-        # implication guard when an expr rides along) in a single
-        # aggregation (no emb read); cached per (store version,
-        # predicate, hint) — only cached on SUCCESS, so a hit also
-        # certifies the implication guard passed at this version; at
-        # deployment scale this comes free from catalog stats
+        # cached only on SUCCESS, so a hit also certifies the implication
+        # guard passed at this store version
         probe_key = self._version_key(min_event_time, max_event_time) + (
             str(predicate),
             predicate_expr,
@@ -1003,39 +858,17 @@ class SegmentSearcher:
         hit = _PROBE_CACHE.get(probe_key)
         if hit is not None:
             _PROBE_CACHE.move_to_end(probe_key)
-            n_total, n_match = hit
         else:
-            aggs = [
-                F.count(F.lit(1)).alias("n"),
-                F.count_if(predicate).alias("m"),
-            ]
-            if predicate_expr is not None:
-                # predicate => expr: a matching row whose expr is false
-                # OR null would be invisible to the in-index allowlist
-                aggs.append(
-                    F.count_if(
-                        predicate
-                        & ~F.coalesce(F.expr(predicate_expr), F.lit(False))
-                    ).alias("viol")
-                )
-            row = vis.select(*aggs).first()
-            n_total, n_match = row["n"], row["m"]
-            if predicate_expr is not None and row["viol"]:
-                raise ValueError(
-                    f"predicate_expr {predicate_expr!r} is not implied by "
-                    f"the predicate: {row['viol']} matching rows fail it — "
-                    "the in-index allowlist would silently exclude them. "
-                    "Pass an equal-or-weaker SQL hint (or none, to use the "
-                    "oversampled post_filter branch)."
-                )
+            hit = probe_selectivity(vis, predicate, predicate_expr)
             while len(_PROBE_CACHE) >= _PROBE_CACHE_MAX:
                 _PROBE_CACHE.popitem(last=False)
-            _PROBE_CACHE[probe_key] = (n_total, n_match)
-        selectivity = (n_match / n_total) if n_total else 0.0
-        strategy = force_strategy or (
-            "pre_filter"
-            if selectivity <= selectivity_threshold
-            else ("in_index" if predicate_expr is not None else "post_filter")
+            _PROBE_CACHE[probe_key] = hit
+        n_total, selectivity = hit
+        strategy = route_strategy(
+            selectivity,
+            selectivity_threshold,
+            force_strategy,
+            "in_index" if predicate_expr is not None else "post_filter",
         )
 
         pred_vis = vis.filter(predicate)
@@ -1054,25 +887,17 @@ class SegmentSearcher:
                 ),
                 None,
             )
-        res = self.search_df(
-            queries,
-            k=k_search,
-            metric=metric,
-            min_event_time=min_event_time,
-            max_event_time=max_event_time,
-            ef_search=max(ef_search or self.conf.ef_search, k_search),
-            update_termination=False,
-            filter_expr=expr,
-            # recheck_and_escalate's predicate re-check is at least as
-            # strict as the expr re-check (predicate => expr), so the generic
-            # _recheck_filter join would be pure overhead here
-            recheck_filter=False,
+        merged = self._run_loop(
+            queries, k_search, metric, min_event_time, max_event_time,
+            ef_search, expr,
         )
-        if res is None:
-            res = queries.sparkSession.createDataFrame(
-                [], "qid bigint, neighbor_id bigint, distance double"
-            )
-        out = recheck_and_escalate(res, queries, pred_vis, k, metric)
+        hits = queries.sparkSession.createDataFrame(
+            (_ranked(None) if merged is None else merged)[
+                ["qid", "neighbor_id", "distance"]
+            ],
+            "qid long, neighbor_id long, distance double",
+        )
+        out = recheck_and_escalate(hits, queries, pred_vis, k, metric)
         # the cached snapshot stays persisted for the NEXT call at this
         # store version; eviction, not call exit, unpersists it
         return _ranked(out.toPandas()), strategy, selectivity

@@ -355,10 +355,10 @@ class StreamingVectorQuery:
     SegmentStore — the streaming consumer surface of the SegmentSearcher
     loop (C4/C6/C7/C8), with two r14 additions:
 
-    - **Warm state (r13 VERDICT #5).** Each micro-batch's searcher is
-      constructed with ``restore_state=True`` and ``save_state()`` runs
-      after the batch, so the C7 temperature ordering and the C8
-      termination EMA accumulate ACROSS micro-batches and restarts — the
+    - **Warm state (r13 VERDICT #5).** Each micro-batch's searcher runs
+      ``load_state()`` before the batch and ``save_state()`` after it, so
+      the C7 temperature ordering and the C8 termination EMA accumulate
+      ACROSS micro-batches and restarts — the
       reference keeps the same stats in version metadata
       (``util/metrics.h:77-109``); a per-batch searcher otherwise starts
       cold every time and never early-terminates. ``restore_state=False``
