@@ -314,19 +314,20 @@ def test_declared_hnsw_query_uses_persisted_sidecars(spark):
     reuse the same store (load, never rebuild)."""
     import os
 
-    from vstream_spark.queries import _HNSW_STORES, REGISTRY
+    from vstream_spark.queries import _STORES, REGISTRY
 
     sf = "/root/testdata/sf0.001"
+    key = ("knn-hnsw-store-", sf)
     fn, _ = REGISTRY["knn_hnsw_ann"]
     assert fn(spark, sf).count() > 0
-    st = _HNSW_STORES[sf]
+    st = _STORES[key][0]
     segs = st.segments()
     assert len(segs) == 2
     for s in segs:
         assert s.get("index_file") and os.path.exists(s["index_file"])
     # second invocation: same store object -> no re-ingest, no re-build
     fn(spark, sf)
-    assert _HNSW_STORES[sf] is st
+    assert _STORES[key][0] is st
 
 
 def test_parallel_multi_segment_index_build(spark, store):

@@ -12,7 +12,13 @@ lineitem events documents embeddings pre-registered on the same parquet.
 
 from __future__ import annotations
 
+import dataclasses
+import functools
 import math
+import os
+import shutil
+import sys
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -76,14 +82,39 @@ def _values_oracle(rows, cols: str) -> str:
     return f"SELECT * FROM (VALUES {values}) t({cols})"
 
 
+def register_gate(name: str, cols: str, checks: list):
+    """Register a self-checking query. The decorated function returns
+    ``{check: ok}`` and the query emits one ``(*check, ok)`` row per entry,
+    where a check is a scalar or a tuple filling the leading ``cols``. The
+    oracle is every declared check with ``ok`` true, so a failed, missing
+    or differently labelled check mismatches."""
+
+    def row(check, ok) -> tuple:
+        return (*(check if isinstance(check, tuple) else (check,)), ok)
+
+    expected = [row(c, True) for c in checks]
+    types = {str: "string", int: "int", bool: "boolean"}
+    schema = ", ".join(
+        f"{col} {types[type(v)]}" for col, v in zip(cols.split(", "), expected[0])
+    )
+
+    def deco(fn: Callable[[SparkSession, str], dict]) -> QueryFn:
+        @functools.wraps(fn)
+        def gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+            rows = [row(c, bool(ok)) for c, ok in fn(spark, sf_dir).items()]
+            return spark.createDataFrame(rows, schema)
+
+        return register(name, _values_oracle(expected, cols))(gate)
+
+    return deco
+
+
 def _exact_recalls(
     vectors: DataFrame, queries: DataFrame, tag: str, **results: DataFrame
 ) -> dict:
     """Recall@10 of each result frame against the exact l2 top-10 of
     ``queries`` over ``vectors`` (cached while the recalls run), printed to
     stderr as ``# <tag> <name>=<recall> ...``."""
-    import sys
-
     from vstream_spark.functions.metrics import mean_recall
 
     exact = knn_exact(
@@ -101,14 +132,126 @@ def _exact_recalls(
     return rec
 
 
+def _recall_ok(
+    vectors: DataFrame, queries: DataFrame, tag: str, floor: float, result: DataFrame
+) -> bool:
+    """Whether ``result`` clears recall@10 ``floor`` (`_exact_recalls`);
+    the floor is logged with the recall."""
+    rec = _exact_recalls(vectors, queries, f"{tag} floor={floor}", recall=result)
+    return rec["recall"] >= floor
+
+
+def _query_set(emb: DataFrame, *extra) -> DataFrame:
+    """The declared kNN query set: every 25th row of the embeddings table
+    ``emb`` as ``(qid, emb, *extra)``; ``extra`` columns are evaluated over
+    ``emb``."""
+    return emb.filter(F.col("vec_id") % 25 == 0).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("emb"), *extra
+    )
+
+
+def _vectors(emb: DataFrame, *extra) -> DataFrame:
+    """The searched side of a declared kNN query: every row of ``emb`` as
+    ``(id, emb, *extra)``."""
+    return emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("emb"), *extra)
+
+
 def _emb_pair(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Vectors = all embeddings; queries = every 25th embedding (no TTL)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    vectors = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("emb"))
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("emb")
+    return _vectors(emb), _query_set(emb)
+
+
+# Per-process fixture memos keyed by (temp-dir prefix, sf_dir). Only the
+# on-disk inputs and stores are reused: every stream and search over them
+# runs fresh per call.
+_INPUT_DIRS: dict[tuple[str, str], str] = {}
+_STORES: dict[tuple[str, str], tuple] = {}
+
+
+def _input_dir(prefix: str, sf_dir: str, write: Callable[[str], None]) -> str:
+    """Memoised fixture input dir: ``write(dir)`` fills a fresh temp dir
+    once per (prefix, sf_dir). A failed write removes the dir and caches
+    nothing; a dir deleted since the last call is written again."""
+    src = _INPUT_DIRS.get((prefix, sf_dir))
+    if src is not None and os.path.isdir(src):
+        return src
+    src = tempfile.mkdtemp(prefix=prefix)
+    try:
+        write(src)
+    except BaseException:
+        shutil.rmtree(src, ignore_errors=True)
+        raise
+    _INPUT_DIRS[(prefix, sf_dir)] = src
+    return src
+
+
+def _store(spark: SparkSession, sf_dir: str, prefix: str, fill: Callable) -> tuple:
+    """Memoised SegmentStore of a declared query: ``fill(store)`` loads a
+    fresh store in a temp dir once per (prefix, sf_dir). Returns ``(store,
+    fill(store))`` with ``store.spark`` set to the caller's session. A failed
+    fill removes the store dir and caches nothing, as in ``_input_dir``."""
+    from vstream_spark.storage.segments import SegmentStore
+
+    entry = _STORES.get((prefix, sf_dir))
+    if entry is None:
+        store = SegmentStore(spark, tempfile.mkdtemp(prefix=prefix))
+        try:
+            entry = (store, fill(store))
+        except BaseException:
+            shutil.rmtree(store.base_dir, ignore_errors=True)
+            raise
+        _STORES[(prefix, sf_dir)] = entry
+    entry[0].spark = spark
+    return entry
+
+
+def _file_stream(
+    spark: SparkSession, schema, path: str, files_per_trigger: int = 1
+) -> DataFrame:
+    """Parquet file stream over fixture files, ``files_per_trigger`` files
+    per micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", files_per_trigger)
+        .parquet(path)
     )
-    return vectors, queries
+
+
+def _drain(
+    stream_df: DataFrame, name: str, state_src: str | None,
+    output_mode: str = "append",
+) -> DataFrame:
+    """Drain ``stream_df`` (availableNow) into the memory table ``name`` and
+    return that table. ``name`` is fixed per entry, so a repeat call
+    replaces the table instead of leaving one more on the driver. A
+    stateful stream passes its input path ``state_src``, from which the
+    state partition count is derived; ``None`` leaves the session's."""
+    from vstream_spark.streaming.pipeline import (
+        run_stream_to_memory,
+        stream_state_partitions,
+    )
+
+    spark = stream_df.sparkSession
+    run_stream_to_memory(
+        stream_df, name, output_mode=output_mode,
+        state_partitions=(
+            None if state_src is None else stream_state_partitions(spark, state_src)
+        ),
+    )
+    return spark.table(name)
+
+
+def _ranked_sql(k: int) -> str:
+    """Closing CTE and SELECT of a kNN oracle: rank ``scored`` (qid,
+    neighbor_id, distance) per query, ties by neighbor id; keep the top
+    ``k``."""
+    return f"""ranked AS (
+  SELECT qid, neighbor_id, distance,
+         CAST(row_number() OVER (PARTITION BY qid ORDER BY distance ASC, neighbor_id ASC) AS INTEGER) AS rank
+  FROM scored)
+SELECT qid, neighbor_id, distance, rank FROM ranked WHERE rank <= {k}
+"""
 
 
 def _knn_oracle(metric: str, k: int = 10) -> str:
@@ -161,13 +304,8 @@ def q_knn_per_query_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector_options.h:79-95): each query carries its own k; with the
     'simple' partitioner the result is exact, so the per-query rank cutoff
     hash-matches."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    vectors = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("emb"))
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("emb"),
-        (F.lit(5) + F.col("vec_id") % 6).alias("k"),
-    )
+    vectors, queries = _emb_pair(spark, sf_dir)
+    queries = queries.withColumn("k", F.lit(5) + F.col("qid") % 6)
     conf = PartitionerConf(kind="simple", num_partitions=8)
     # k_cap=10 (k is 5..10): keeps the rank cut map-side (WindowGroupLimit)
     # — without it the sf1 rehearsal measured this query at 62x on 10x data
@@ -195,19 +333,18 @@ def q_knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     the label predicate lands in the DataFrame BEFORE the distance join, so
     Catalyst pushes it into the parquet scan — candidates never even load."""
     emb = load_table(spark, sf_dir, "embeddings")
-    vectors = emb.filter(F.col("label") % 2 == 0).select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("emb")
-    )
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("emb")
-    )
-    return knn_exact(vectors, queries, k=10, metric="l2")
+    vectors = _vectors(emb.filter(F.col("label") % 2 == 0))
+    return knn_exact(vectors, _query_set(emb), k=10, metric="l2")
 
 
 # --- kNN with TTL freshness + insert/delete stream semantics (W2/W3) --------
 
-_KNN_TTL_ORACLE = f"""
-WITH vectors AS ({VECTORS_FIXTURE_SQL}),
+
+def _ttl_lww_oracle(ctes: str) -> str:
+    """TTL-window + last-writer-wins top-k oracle over the ``vectors`` CTE
+    that ``ctes`` defines, answering the fixture query stream."""
+    return f"""
+WITH {ctes},
 queries AS ({QUERIES_FIXTURE_SQL}),
 inserts AS (SELECT * FROM vectors WHERE op = 'I'),
 deletes AS (SELECT * FROM vectors WHERE op = 'D'),
@@ -232,13 +369,23 @@ SELECT qid, neighbor_id, distance, rank FROM ranked WHERE rank <= k
 """
 
 
+def _ttl_lww_search(
+    spark: SparkSession, sf_dir: str, vectors: DataFrame
+) -> DataFrame:
+    """Spark side of `_ttl_lww_oracle`: exact top-k of the fixture query
+    stream over ``vectors`` under TTL windows and last-writer-wins deletes."""
+    return knn_exact(
+        vectors, queries_fixture(spark, sf_dir), k=None, metric="l2",
+        honor_ttl=True, honor_deletes=True,
+    )
+
+
+_KNN_TTL_ORACLE = _ttl_lww_oracle(f"vectors AS ({VECTORS_FIXTURE_SQL})")
+
+
 @register("knn_ttl_delete", _KNN_TTL_ORACLE)
 def knn_ttl_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    vectors = vectors_fixture(spark, sf_dir)
-    queries = queries_fixture(spark, sf_dir)
-    return knn_exact(
-        vectors, queries, k=None, metric="l2", honor_ttl=True, honor_deletes=True
-    )
+    return _ttl_lww_search(spark, sf_dir, vectors_fixture(spark, sf_dir))
 
 
 # --- Relational floor (SURVEY §2.7: Spark SQL provides these natively) ------
@@ -398,11 +545,7 @@ def knn_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("knn_ivf_ann")  # rows-only: kmeans coarse quantizer + probed scan
 def knn_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    vectors = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("emb"))
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("emb")
-    )
+    vectors, queries = _emb_pair(spark, sf_dir)
     return ann_topk_ivf(vectors, queries, k=10, metric="l2", num_partitions=4, nprobe=2)
 
 
@@ -444,14 +587,18 @@ LIMIT 50
 """
 
 
+def _doc_tokens(docs: DataFrame) -> DataFrame:
+    """``(doc_id, tok)``: one row per whitespace token of each document."""
+    return docs.select(
+        "doc_id", F.explode(F.split(F.trim(F.col("text")), " ")).alias("tok")
+    )
+
+
 @register("text_top_tokens", _TOP_TOKENS_ORACLE)
 def q_text_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus token frequencies (vocabulary induction / BPE-prep step):
     top-50 tokens by term and document frequency, deterministic tiebreak."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), " ")).alias("tok")
-    )
+    toks = _doc_tokens(load_table(spark, sf_dir, "documents"))
     return (
         toks.groupBy("tok")
         .agg(
@@ -847,13 +994,17 @@ def q_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity_join_exact(emb, emb, threshold=0.4)
 
 
-@register("similarity_join_lsh")  # rows-only: LSH-bucketed candidate pruning
-def q_similarity_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
+def _lsh_join(emb: DataFrame) -> DataFrame:
+    """The declared LSH-bucketed cosine >= 0.4 self-join of ``emb``."""
     conf = PartitionerConf(
         kind="lsh", num_partitions=16, num_families=6, num_hashes=2, bucket_width=1.0
     )
     return lsh_similarity_join(emb, threshold=0.4, conf=conf)
+
+
+@register("similarity_join_lsh")  # rows-only: LSH-bucketed candidate pruning
+def q_similarity_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _lsh_join(load_table(spark, sf_dir, "embeddings"))
 
 
 # --- Embedding-cosine near-dup (semantic dedup) ------------------------------
@@ -934,38 +1085,27 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- HNSW per-partition graph index (W1/W5 worker, rows-only ANN) ------------
 
-# Per-process segment stores for the declared HNSW query: the graph is built
-# ONCE at flush time (C3, hnsw_table_builder.cc builds the SST's graph when
-# the memtable flushes — not at query time) and every search LOADS the
-# persisted sidecar (C4, executor index cache). Keyed by sf_dir.
-_HNSW_STORES: dict[str, object] = {}
+# HNSW search parameters of the recall-gated stream-state and store searches
+_GATE_HNSW = VectorIndexConf(dim=64, m=16, ef_construction=128, ef_search=128)
 
 
-def _segment_store_fixture(
-    spark: SparkSession,
-    sf_dir: str,
-    cache: dict[str, object],
-    prefix: str,
-    extra_cols: tuple[str, ...] = (),
+# Segment stores for the declared HNSW query: the graph is built ONCE at
+# flush time (C3, hnsw_table_builder.cc builds the SST's graph when the
+# memtable flushes — not at query time) and every search LOADS the
+# persisted sidecar (C4, executor index cache).
+def _two_segment_store(
+    spark: SparkSession, sf_dir: str, prefix: str, extra_cols: tuple[str, ...] = ()
 ):
-    """ONE recipe for every declared-query segment store (embeddings table
-    -> two flushed segments, each with its HNSW sidecar): the search paths
-    exercise the multi-segment merge AND the artifact load path.
+    """ONE recipe for the indexed declared-query segment stores (embeddings
+    table -> two flushed segments, each with its HNSW sidecar): the search
+    paths exercise the multi-segment merge AND the artifact load path.
     ``extra_cols`` persists attribute columns (e.g. 'label') in the segment
-    parquet for predicate-filtered searches. Per-sf caching + the
-    store.spark session refresh live here once, not per copy."""
-    from vstream_spark.storage.segments import SegmentStore
+    parquet for predicate-filtered searches."""
 
-    store = cache.get(sf_dir)
-    if store is None:
-        import tempfile
-
-        store = SegmentStore(spark, tempfile.mkdtemp(prefix=prefix))
+    def fill(store) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
-        vectors = emb.select(
-            F.col("vec_id").alias("id"),
-            F.col("embedding").alias("emb"),
-            *extra_cols,
+        vectors = _vectors(
+            emb, *extra_cols,
             (F.col("vec_id") * 10).cast("long").alias("event_time"),
             F.lit(0).cast("long").alias("ttl"),
             F.lit("I").alias("op"),
@@ -973,13 +1113,12 @@ def _segment_store_fixture(
         segs = [store.append_segment(vectors.filter(F.col("id") % 2 == r))
                 for r in (0, 1)]
         store.build_segment_indexes(segs, VectorIndexConf())
-        cache[sf_dir] = store
-    store.spark = spark
-    return store
+
+    return _store(spark, sf_dir, prefix, fill)[0]
 
 
 def _hnsw_store(spark: SparkSession, sf_dir: str):
-    return _segment_store_fixture(spark, sf_dir, _HNSW_STORES, "knn-hnsw-store-")
+    return _two_segment_store(spark, sf_dir, "knn-hnsw-store-")
 
 
 @register("knn_hnsw_ann")  # rows-only: persisted per-segment HNSW graphs
@@ -1063,21 +1202,18 @@ def q_hashed_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hashed_tf(load_table(spark, sf_dir, "documents"), dim=64)
 
 
-def _embed_knn_oracle(dim: int = 64, k: int = 5) -> str:
-    """Full pipeline oracle: hashed-TF -> densify -> L2-normalize (float32)
-    -> cosine top-k — the whole embed+search composition reproduced in SQL."""
-    dist = D.distance_sql("q.emb", "v.emb", "cosine")
-    return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS tok FROM documents),
-tf AS (
+def _embed_ctes(dim: int, tf: str) -> str:
+    """CTEs ``tf`` (named by the caller) through ``emb_t (doc_id, emb)``
+    over a token CTE ``toks``: hashed-TF -> densify -> L2-normalize
+    (float32), the SQL twin of `embed_text`."""
+    return f"""{tf} AS (
   SELECT doc_id,
          CAST(('0x' || substring(md5(tok), 1, 15))::BIGINT % {dim} AS INTEGER) AS bucket,
          count(*) AS tf
   FROM toks GROUP BY doc_id, bucket),
 m AS (
   SELECT doc_id, map_from_entries(list(struct_pack(k := bucket, v := tf::DOUBLE))) AS mm
-  FROM tf GROUP BY doc_id),
+  FROM {tf} GROUP BY doc_id),
 dense AS (
   SELECT doc_id, list_transform(range(0, {dim}), i -> coalesce(mm[i::INTEGER][1], 0.0)) AS d
   FROM m),
@@ -1086,17 +1222,22 @@ normed AS (
 emb_t AS (
   SELECT doc_id,
          list_transform(d, x -> CAST(x / (CASE WHEN n > 0 THEN n ELSE 1.0 END) AS FLOAT)) AS emb
-  FROM normed),
+  FROM normed),"""
+
+
+def _embed_knn_oracle(dim: int = 64, k: int = 5) -> str:
+    """Full pipeline oracle: hashed-TF -> densify -> L2-normalize (float32)
+    -> cosine top-k — the whole embed+search composition reproduced in SQL."""
+    dist = D.distance_sql("q.emb", "v.emb", "cosine")
+    return f"""
+WITH toks AS (
+  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS tok FROM documents),
+{_embed_ctes(dim, "tf")}
 q AS (SELECT doc_id AS qid, emb FROM emb_t WHERE doc_id % 50 = 0),
 scored AS (
   SELECT q.qid, v.doc_id AS neighbor_id, {dist} AS distance
   FROM emb_t v CROSS JOIN q),
-ranked AS (
-  SELECT qid, neighbor_id, distance,
-         CAST(row_number() OVER (PARTITION BY qid ORDER BY distance ASC, neighbor_id ASC) AS INTEGER) AS rank
-  FROM scored)
-SELECT qid, neighbor_id, distance, rank FROM ranked WHERE rank <= {k}
-"""
+{_ranked_sql(k)}"""
 
 
 @register("text_embed_knn", _embed_knn_oracle())
@@ -1134,6 +1275,17 @@ GROUP BY date_trunc('hour', ts), event_type
 """
 
 
+def _rounded_rollup(roll: DataFrame) -> DataFrame:
+    """A streamed rollup's output columns, sum_value rounded as the rollup
+    oracles round it."""
+    return roll.select(
+        "window_start",
+        "event_type",
+        "n_events",
+        F.round(F.col("sum_value"), 4).cast("double").alias("sum_value"),
+    )
+
+
 @register("streaming_event_rollup", _STREAM_ROLLUP_ORACLE)
 def q_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window rollup executed as a real streaming query
@@ -1141,23 +1293,13 @@ def q_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streaming result hash-matches the batch oracle."""
     from vstream_spark.streaming.pipeline import (
         read_event_stream,
-        run_stream_to_memory,
-        stream_state_partitions,
         streaming_event_rollup,
     )
 
-    roll = streaming_event_rollup(read_event_stream(spark, sf_dir)).select(
-        "window_start",
-        "event_type",
-        "n_events",
-        F.round(F.col("sum_value"), 4).cast("double").alias("sum_value"),
+    roll = _rounded_rollup(streaming_event_rollup(read_event_stream(spark, sf_dir)))
+    return _drain(
+        roll, "_streaming_rollup_result", f"{sf_dir}/events.parquet", "complete"
     )
-    run_stream_to_memory(
-        roll, "_streaming_rollup_result",
-        state_partitions=stream_state_partitions(
-            spark, f"{sf_dir}/events.parquet"),
-    )
-    return spark.table("_streaming_rollup_result")
 
 
 _STREAMING_DEDUP_ORACLE = """
@@ -1171,20 +1313,13 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (availableNow), appended to memory; hash-matches batch DISTINCT."""
     from vstream_spark.streaming.pipeline import (
         read_event_stream,
-        run_stream_to_memory,
-        stream_state_partitions,
         streaming_dedup_keys,
     )
 
     ded = streaming_dedup_keys(
         read_event_stream(spark, sf_dir), ["user_id", "event_type"]
     )
-    run_stream_to_memory(
-        ded, "_streaming_dedup_result", output_mode="append",
-        state_partitions=stream_state_partitions(
-            spark, f"{sf_dir}/events.parquet"),
-    )
-    return spark.table("_streaming_dedup_result")
+    return _drain(ded, "_streaming_dedup_result", f"{sf_dir}/events.parquet")
 
 
 # --- Streaming vector search (the reference's end-to-end job) ----------------
@@ -1193,9 +1328,6 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a REAL Structured Streaming query (applyInPandasWithState, availableNow over
 # 3 micro-batches: inserts / inserts+deletes / queries) in exact mode, so the
 # result hash-matches the batch oracle (deletes LWW + TTL freshness window).
-
-# per-process fixture-dir cache for the streaming query (see q_knn_streaming)
-_KNN_STREAMING_SRC: dict[str, str] = {}
 
 _KNN_STREAMING_SCHEMA = (
     "partition_id int, op string, id bigint, emb array<float>, "
@@ -1210,12 +1342,6 @@ def _knn_streaming_fixture(spark: SparkSession, sf_dir: str) -> str:
     cutting event_time < 1000. Files are cached per (process, sf_dir); the
     STREAM itself (state machine, micro-batch replay, merge) runs fresh on
     every invocation — only the on-disk input batches are reused."""
-    import shutil
-    import tempfile
-
-    src = _KNN_STREAMING_SRC.get(sf_dir)
-    if src is not None and __import__("os").path.isdir(src):
-        return src
     num_parts = 4
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select(
@@ -1234,34 +1360,25 @@ def _knn_streaming_fixture(spark: SparkSession, sf_dir: str) -> str:
         F.lit(10_000_000).cast("long").alias("event_time"),
         F.lit(0).cast("long").alias("ttl"),
     )
-    queries = (
-        emb.filter(F.col("vec_id") % 25 == 0)
-        .select(
-            "vec_id",
-            "embedding",
-            F.explode(F.sequence(F.lit(0), F.lit(num_parts - 1))).alias("pid"),
-        )
-        .select(
-            F.col("pid").cast("int").alias("partition_id"),
-            F.lit("Q").alias("op"),
-            F.col("vec_id").alias("id"),
-            F.col("embedding").cast("array<float>").alias("emb"),
-            F.lit(20_000_000).cast("long").alias("event_time"),
-            F.lit(19_999_000).cast("long").alias("ttl"),
-        )
+    queries = _query_set(
+        emb, F.explode(F.sequence(F.lit(0), F.lit(num_parts - 1))).alias("pid")
+    ).select(
+        F.col("pid").cast("int").alias("partition_id"),
+        F.lit("Q").alias("op"),
+        F.col("qid").alias("id"),
+        F.col("emb").cast("array<float>").alias("emb"),
+        F.lit(20_000_000).cast("long").alias("event_time"),
+        F.lit(19_999_000).cast("long").alias("ttl"),
     )
-    src = tempfile.mkdtemp(prefix="knn-streaming-")
-    try:
+
+    def write(src: str) -> None:
         base.filter(F.col("id") % 2 == 0).coalesce(1).write.parquet(f"{src}/b000")
         base.filter(F.col("id") % 2 == 1).unionByName(deletes).coalesce(1).write.parquet(
             f"{src}/b001"
         )
         queries.coalesce(1).write.parquet(f"{src}/b002")
-    except Exception:
-        shutil.rmtree(src, ignore_errors=True)
-        raise
-    _KNN_STREAMING_SRC[sf_dir] = src
-    return src
+
+    return _input_dir("knn-streaming-", sf_dir, write)
 
 
 _KNN_STREAMING_ORACLE = f"""
@@ -1274,12 +1391,7 @@ scored AS (
   SELECT q.qid, v.vec_id AS neighbor_id,
          {D.distance_sql("q.embedding", "v.embedding", "l2")} AS distance
   FROM v CROSS JOIN q),
-ranked AS (
-  SELECT qid, neighbor_id, distance,
-         CAST(row_number() OVER (PARTITION BY qid ORDER BY distance ASC, neighbor_id ASC) AS INTEGER) AS rank
-  FROM scored)
-SELECT qid, neighbor_id, distance, rank FROM ranked WHERE rank <= 10
-"""
+{_ranked_sql(10)}"""
 
 
 @register("knn_streaming", _KNN_STREAMING_ORACLE)
@@ -1290,28 +1402,14 @@ def q_knn_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     1000. State persists across batches (applyInPandasWithState); the global
     merge is the M1 top-k. Exact mode => hash-matches batch kNN with
     deletes+TTL."""
-    import uuid
-
     from vstream_spark.operators.knn import topk
-    from vstream_spark.streaming.pipeline import run_stream_to_memory
     from vstream_spark.streaming.stateful import stateful_exact_vector_search
 
     src = _knn_streaming_fixture(spark, sf_dir)
-    name = f"_knn_streaming_{uuid.uuid4().hex[:8]}"
-    stream = (
-        spark.readStream.schema(_KNN_STREAMING_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
+    stream = _file_stream(spark, _KNN_STREAMING_SCHEMA, f"{src}/*")
     partials = stateful_exact_vector_search(stream, k=10, metric="l2")
-    from vstream_spark.streaming.pipeline import stream_state_partitions
-
-    run_stream_to_memory(
-        partials, name, output_mode="append",
-        state_partitions=stream_state_partitions(spark, src),
-    )
     # data ids are unreplicated (one partition each) -> (qid, id) unique
-    return topk(spark.table(name), 10, dedup=False).select(
+    return topk(_drain(partials, "_knn_streaming", src), 10, dedup=False).select(
         "qid", "neighbor_id", "distance", "rank"
     )
 
@@ -1474,7 +1572,7 @@ _PARTITIONER_RECALL_SPECS: list[tuple[str, dict, float]] = [
 ]
 
 
-def _recall_gate_rows(spark, specs, vectors, queries, run_variant) -> DataFrame:
+def _recall_gate(specs, vectors, queries, run_variant) -> dict:
     """Shared driver loop: tiny fixed set of variants, each run fully
     distributed (``run_variant(variant, kw)`` -> result frame); only a
     scalar mean recall comes back per variant."""
@@ -1482,16 +1580,14 @@ def _recall_gate_rows(spark, specs, vectors, queries, run_variant) -> DataFrame:
         vectors, queries, "recall_gate",
         **{variant: run_variant(variant, kw) for variant, kw, _ in specs},
     )
-    rows = [(variant, bool(rec[variant] >= floor)) for variant, _, floor in specs]
-    return spark.createDataFrame(rows, "variant string, recall_ok boolean")
+    return {variant: rec[variant] >= floor for variant, _, floor in specs}
 
 
-def _recall_gate_oracle(specs) -> str:
-    return _values_oracle([(v, True) for v, _, _ in specs], "variant, recall_ok")
-
-
-@register("knn_partitioner_recall", _recall_gate_oracle(_PARTITIONER_RECALL_SPECS))
-def q_partitioner_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register_gate(
+    "knn_partitioner_recall", "variant, recall_ok",
+    [v for v, _, _ in _PARTITIONER_RECALL_SPECS],
+)
+def q_partitioner_recall(spark: SparkSession, sf_dir: str) -> dict:
     """Recall floor for EVERY exchange operator of SURVEY §2.3 (P1-P9, all
     dispatch names of PartitionFunction.getPartitionFunction) through the
     partition -> per-partition search -> top-k merge dataflow."""
@@ -1502,7 +1598,7 @@ def q_partitioner_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             vectors, queries, PartitionerConf(**kw), k=10, metric="l2"
         )
 
-    return _recall_gate_rows(spark, _PARTITIONER_RECALL_SPECS, vectors, queries, run)
+    return _recall_gate(_PARTITIONER_RECALL_SPECS, vectors, queries, run)
 
 
 # --- Partition balance gate (r10 VERDICT #3) ---------------------------------
@@ -1534,26 +1630,19 @@ _BALANCE_GATE_SPECS: list[tuple[str, dict, float]] = [
     ("odyssey", dict(kind="odyssey", num_partitions=8), 2.5),
 ]
 
-_BALANCE_GATE_ORACLE = _values_oracle(
-    [(v, True) for v, _, _ in _BALANCE_GATE_SPECS]
-    + [("equidepth_relieves_lsh_skew", True)],
-    "variant, balance_ok",
+
+@register_gate(
+    "partition_balance_gate", "variant, balance_ok",
+    [v for v, _, _ in _BALANCE_GATE_SPECS] + ["equidepth_relieves_lsh_skew"],
 )
-
-
-@register("partition_balance_gate", _BALANCE_GATE_ORACLE)
-def q_partition_balance_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_partition_balance_gate(spark: SparkSession, sf_dir: str) -> dict:
     """max/mean partition load bound for every partitioner family on
     clustered data, plus the skew-relief contrast (equi-depth < plain LSH).
     Each fit+measure is fully distributed; one scalar returns per family."""
-    import sys
-
     from vstream_spark.partitioners.dispatch import balance_factor, fit_partitioner
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("emb")
-    )
-    rows = []
+    emb, _ = _emb_pair(spark, sf_dir)
+    oks = {}
     factors: dict[str, float] = {}
     for variant, kw, bound in _BALANCE_GATE_SPECS:
         part = fit_partitioner(PartitionerConf(**kw), emb)
@@ -1563,11 +1652,9 @@ def q_partition_balance_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"# balance_gate {variant}: max/mean={bf:.3f} bound={bound}",
             file=sys.stderr,
         )
-        rows.append((variant, bool(bf <= bound)))
-    rows.append(
-        ("equidepth_relieves_lsh_skew", bool(factors["lsh+hilbert"] < factors["lsh"]))
-    )
-    return spark.createDataFrame(rows, "variant string, balance_ok boolean")
+        oks[variant] = bf <= bound
+    oks["equidepth_relieves_lsh_skew"] = factors["lsh+hilbert"] < factors["lsh"]
+    return oks
 
 
 _INDEX_RECALL_SPECS: list[tuple[str, dict, float]] = [
@@ -1577,8 +1664,10 @@ _INDEX_RECALL_SPECS: list[tuple[str, dict, float]] = [
 ]
 
 
-@register("knn_index_recall", _recall_gate_oracle(_INDEX_RECALL_SPECS))
-def q_index_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register_gate(
+    "knn_index_recall", "variant, recall_ok", [v for v, _, _ in _INDEX_RECALL_SPECS]
+)
+def q_index_recall(spark: SparkSession, sf_dir: str) -> dict:
     """Recall floor for every per-partition index kind (W1/W5 HNSW worker,
     IVF coarse-quantizer scan, PQ ADC) against the exact-scan oracle."""
 
@@ -1598,7 +1687,7 @@ def q_index_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             index_conf=VectorIndexConf(dim=64, **kw),
         )
 
-    return _recall_gate_rows(spark, _INDEX_RECALL_SPECS, vectors, queries, run)
+    return _recall_gate(_INDEX_RECALL_SPECS, vectors, queries, run)
 
 
 # --- LSH similarity-join pair recall (completes the no-oracle cleanup) --------
@@ -1610,14 +1699,12 @@ def q_similarity_join_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     must clear 0.8 (single boolean row; the gate absorbs bucketing jitter)."""
     emb = load_table(spark, sf_dir, "embeddings")
     exact = similarity_join_exact(emb, emb, threshold=0.4).select("id_a", "id_b")
-    conf = PartitionerConf(
-        kind="lsh", num_partitions=16, num_families=6, num_hashes=2, bucket_width=1.0
-    )
-    lsh = lsh_similarity_join(emb, threshold=0.4, conf=conf).select("id_a", "id_b")
+    lsh = _lsh_join(emb).select("id_a", "id_b")
     n_exact = exact.count()
     n_hit = exact.join(lsh, ["id_a", "id_b"]).count()
-    ok = n_exact == 0 or n_hit / n_exact >= 0.8
-    return spark.createDataFrame([(bool(ok),)], "pair_recall_ok boolean")
+    recall = n_hit / n_exact if n_exact else 1.0
+    print(f"# similarity_join_lsh floor=0.8 pair_recall={recall:.4f}", file=sys.stderr)
+    return spark.createDataFrame([(recall >= 0.8,)], "pair_recall_ok boolean")
 
 
 # --- Relational breadth: CUBE, set operations, window frames ------------------
@@ -1849,8 +1936,9 @@ def q_rel_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Search over the compressed surface (C5 accuracy contract) ---------------
 
-_KNN_QUANT_ORACLE = f"""
-WITH s AS (
+# int8 quantize -> dequantize of the embeddings table as CTEs ``s``, ``deq``
+# (the SQL twin of `_int8_vectors`)
+_INT8_CTES = """WITH s AS (
   SELECT vec_id, embedding,
          list_max(list_transform(embedding, x -> abs(x::DOUBLE))) / 127.0 AS scale
   FROM embeddings),
@@ -1860,7 +1948,30 @@ deq AS (
            CAST(CAST(CASE WHEN scale > 0.0
                   THEN CAST(round(x::DOUBLE / scale) AS TINYINT)
                   ELSE CAST(0 AS TINYINT) END AS DOUBLE) * scale AS FLOAT)) AS emb
-  FROM s),
+  FROM s),"""
+
+
+def _int8_vectors(emb: DataFrame) -> DataFrame:
+    """``(id, emb)`` of the embeddings table ``emb`` after the int8
+    quantize -> dequantize arithmetic `SegmentStore(codec='int8')` applies
+    at flush/scan. The scale is materialized as a column BEFORE the
+    code/dequantize lambdas reference it: inlined, the max-abs fold
+    re-evaluates per array element (quantize.py scale_expr; same values,
+    measured ~3x on this shape)."""
+    from vstream_spark.operators.quantize import quantize_expr, scale_expr
+
+    pre = emb.select(
+        "vec_id", "embedding", scale_expr(F.col("embedding")).alias("_s")
+    )
+    _, codes = quantize_expr(F.col("embedding"), scale=F.col("_s"))
+    deq = F.transform(
+        codes, lambda x: (x.cast("double") * F.col("_s")).cast("float")
+    )
+    return pre.select(F.col("vec_id").alias("id"), deq.alias("emb"))
+
+
+_KNN_QUANT_ORACLE = f"""
+{_INT8_CTES}
 scored AS (
   SELECT q.vec_id AS qid, v.vec_id AS neighbor_id,
          {D.distance_sql("q.embedding", "v.emb", "l2")} AS distance
@@ -1882,22 +1993,8 @@ def q_knn_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     at flush/scan (bitwise-identical IEEE ops, so this hash-match IS the
     codec's search-accuracy contract). Full-precision queries, compressed
     collection — the asymmetric setup every SQ deployment runs."""
-    from vstream_spark.operators.quantize import quantize_expr, scale_expr
-
     emb = load_table(spark, sf_dir, "embeddings")
-    # same scale-hoisting as knn_rerank: column first, lambdas second
-    pre = emb.select(
-        "vec_id", "embedding", scale_expr(F.col("embedding")).alias("_s")
-    )
-    _, codes = quantize_expr(F.col("embedding"), scale=F.col("_s"))
-    deq = F.transform(
-        codes, lambda x: (x.cast("double") * F.col("_s")).cast("float")
-    )
-    vectors = pre.select(F.col("vec_id").alias("id"), deq.alias("emb"))
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("emb")
-    )
-    return knn_exact(vectors, queries, k=10, metric="l2")
+    return knn_exact(_int8_vectors(emb), _query_set(emb), k=10, metric="l2")
 
 
 # --- Exact substring duplication (Lee et al. dedup signal) -------------------
@@ -1941,7 +2038,6 @@ def q_text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # after the data watermark still aggregate (in-threshold lateness); the
 # rest are dropped.
 
-_LATE_ROLLUP_SRC: dict[str, str] = {}
 _LATE_SPLIT = "2024-01-20 00:00:00"
 _LATE_DELAY_S = 7201  # != multiple of 1h; event µs jitter keeps wm unaligned
 
@@ -1977,17 +2073,9 @@ def q_streaming_late_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-matching the oracle proves the drop rule (late rows to expired
     windows discarded, in-threshold late rows aggregated) and the append
     emission rule (only watermark-closed windows emitted)."""
-    import shutil
-    import tempfile
-    import uuid
+    from vstream_spark.streaming.pipeline import streaming_event_rollup
 
-    from vstream_spark.streaming.pipeline import (
-        run_stream_to_memory,
-        streaming_event_rollup,
-    )
-
-    src = _LATE_ROLLUP_SRC.get(sf_dir)
-    if src is None or not __import__("os").path.isdir(src):
+    def write(src: str) -> None:
         # raw-nanos preimages of the split predicate (guide §6, same proof
         # as _RELATIONAL_RAW_PUSHDOWN: ts < T <=> raw <= unix_micros(T)*1000
         # - 1; ts >= T <=> raw >= unix_micros(T)*1000). On nanos-vintage
@@ -2005,39 +2093,19 @@ def q_streaming_late_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         on_time = F.col("event_id") % 7 != 3
         pre = F.col("ts") < _LATE_SPLIT
-        src = tempfile.mkdtemp(prefix="late-rollup-")
-        try:
-            ev_pre.filter(pre & on_time).coalesce(1).write.parquet(f"{src}/b000")
-            ev_post.filter(~pre).coalesce(1).write.parquet(f"{src}/b001")
-            ev_pre.filter(pre & ~on_time).coalesce(1).write.parquet(f"{src}/b002")
-        except Exception:
-            shutil.rmtree(src, ignore_errors=True)
-            raise
-        _LATE_ROLLUP_SRC[sf_dir] = src
+        ev_pre.filter(pre & on_time).coalesce(1).write.parquet(f"{src}/b000")
+        ev_post.filter(~pre).coalesce(1).write.parquet(f"{src}/b001")
+        ev_pre.filter(pre & ~on_time).coalesce(1).write.parquet(f"{src}/b002")
+
+    src = _input_dir("late-rollup-", sf_dir, write)
     schema = load_table(spark, sf_dir, "events").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
+    stream = _file_stream(spark, schema, f"{src}/*")
     if dict(stream.dtypes).get("ts") == "timestamp_ntz":
         # session tz pinned UTC -> value-preserving reinterpretation
         # (withWatermark requires TIMESTAMP; rollup emits NTZ back)
         stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     roll = streaming_event_rollup(stream, watermark=f"{_LATE_DELAY_S} seconds")
-    name = f"_late_rollup_{uuid.uuid4().hex[:8]}"
-    from vstream_spark.streaming.pipeline import stream_state_partitions
-
-    run_stream_to_memory(
-        roll, name, output_mode="append",
-        state_partitions=stream_state_partitions(spark, src),
-    )
-    return spark.table(name).select(
-        "window_start",
-        "event_type",
-        "n_events",
-        F.round(F.col("sum_value"), 4).cast("double").alias("sum_value"),
-    )
+    return _rounded_rollup(_drain(roll, "_late_rollup", src))
 
 
 # --- Sequence packing (training-sequence construction) -----------------------
@@ -2125,10 +2193,7 @@ def q_text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tokenizer-coverage signal). The vocab is a TakeOrdered top-k (40 driver
     rows) broadcast back — no shuffle touches the exploded token stream
     besides the per-doc count."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), " ")).alias("tok")
-    )
+    toks = _doc_tokens(load_table(spark, sf_dir, "documents"))
     vocab = (
         toks.groupBy("tok")
         .agg(F.count("*").alias("c"))
@@ -2156,57 +2221,30 @@ def q_text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Streaming ANN recall gate (HNSW-in-state through the micro-batch flow) --
 
 
-@register(
-    "knn_streaming_ann_recall",
-    "SELECT * FROM (VALUES ('hnsw_stream', true)) t(variant, recall_ok)",
-)
-def q_knn_streaming_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register_gate("knn_streaming_ann_recall", "variant, recall_ok", ["hnsw_stream"])
+def q_knn_streaming_ann_recall(spark: SparkSession, sf_dir: str) -> dict:
     """The reference's ACTUAL runtime shape — per-partition HNSW graphs held
     in streaming state (RocksDBKeyedProcessFunction.processElement), built
     incrementally across micro-batches, searched approximately — gated on
     recall@10 >= 0.8 vs the batch exact oracle with the same deletes + TTL
     window. Complements `knn_streaming` (exact mode, hash-matched)."""
-    import sys
-    import uuid
-
-    from vstream_spark.functions.metrics import mean_recall
     from vstream_spark.operators.knn import topk
-    from vstream_spark.streaming.pipeline import run_stream_to_memory
     from vstream_spark.streaming.stateful import stateful_vector_search
 
     src = _knn_streaming_fixture(spark, sf_dir)
-    name = f"_knn_streaming_ann_{uuid.uuid4().hex[:8]}"
-    stream = (
-        spark.readStream.schema(_KNN_STREAMING_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    iconf = VectorIndexConf(dim=64, m=16, ef_construction=128, ef_search=128)
-    partials = stateful_vector_search(stream, iconf, k=10, metric="l2")
-    from vstream_spark.streaming.pipeline import stream_state_partitions
-
-    run_stream_to_memory(
-        partials, name, output_mode="append",
-        state_partitions=stream_state_partitions(spark, src),
-    )
-    ann = topk(spark.table(name), 10, dedup=False)
+    stream = _file_stream(spark, _KNN_STREAMING_SCHEMA, f"{src}/*")
+    partials = stateful_vector_search(stream, _GATE_HNSW, k=10, metric="l2")
+    ann = topk(_drain(partials, "_knn_streaming_ann", src), 10, dedup=False)
     # batch exact ground truth under the same visibility rules: deletes
     # (ids ≡3 mod 10) applied, TTL window [1000, 20_000_000] on event_time
-    emb = load_table(spark, sf_dir, "embeddings")
-    vectors = emb.filter(
-        (F.col("vec_id") % 10 != 3)
-        & (F.col("vec_id") * 10 >= 1000)
-        & (F.col("vec_id") * 10 <= 20_000_000)
-    ).select(F.col("vec_id").alias("id"), F.col("embedding").alias("emb"))
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("emb")
+    vectors, queries = _emb_pair(spark, sf_dir)
+    vectors = vectors.filter(
+        (F.col("id") % 10 != 3)
+        & (F.col("id") * 10 >= 1000)
+        & (F.col("id") * 10 <= 20_000_000)
     )
-    gt = knn_exact(vectors, queries, k=10, metric="l2")
-    r = mean_recall(ann, gt, k=10)
-    print(f"# knn_streaming_ann recall@10={r:.4f} floor=0.8", file=sys.stderr)
-    return spark.createDataFrame(
-        [("hnsw_stream", bool(r >= 0.8))], "variant string, recall_ok boolean"
-    )
+    ok = _recall_ok(vectors, queries, "knn_streaming_ann", 0.8, ann)
+    return {"hnsw_stream": ok}
 
 
 # --- Exact per-group quantiles (analytics staple) ----------------------------
@@ -2238,12 +2276,53 @@ def q_rel_event_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- P5 dynamic epochs in a BATCH dataflow (multi-epoch, recall-gated) -------
 
 
-@register(
-    "knn_epoch_batch_recall",
-    "SELECT * FROM (VALUES ('epochs_learned', true), ('fresh_prune', true), "
-    "('recall', true)) t(check_name, ok)",
+def _epoch_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, int]:
+    """``(vectors, queries, t_now)`` of the epoch gates: vectors carry
+    event_time = vec_id * 10, and the query set is stamped ``t_now`` = 10 x
+    the row count, the end of that event-time range."""
+    emb = load_table(spark, sf_dir, "embeddings").withColumn(
+        "embedding", F.col("embedding").cast("array<float>")
+    )
+    t_now = emb.count() * 10
+    vectors = _vectors(emb, (F.col("vec_id") * 10).cast("long").alias("event_time"))
+    queries = _query_set(emb, F.lit(t_now).cast("long").alias("event_time"))
+    return vectors, queries, t_now
+
+
+def _epoch_partitioner(interval: int, max_ttl: int | None = None):
+    """The epoch gates' lsh+hilbert partitioner: one curve epoch per
+    ``interval`` of event time; queries fan to epochs within ``max_ttl``."""
+    from vstream_spark.partitioners.epochs import EpochCurvePartitioner
+
+    conf = PartitionerConf(
+        kind="lsh+hilbert", num_partitions=8, num_hashes=4, bucket_width=2.0,
+        sfc_bits=7, replication_factor=2, update_interval=interval,
+        max_ttl=max_ttl,
+    )
+    return EpochCurvePartitioner(conf, curve="hilbert", use_lsh=True)
+
+
+def _epoch_topk(part, pv: DataFrame, queries: DataFrame) -> DataFrame:
+    """Top-10 of ``queries`` routed by ``part`` over the routed vectors
+    ``pv`` (partition_id, id, emb)."""
+    from vstream_spark.operators.knn import topk
+
+    pq = part.partition_queries(queries).select(
+        "partition_id", "qid", F.col("emb").alias("qemb")
+    )
+    cand = pv.join(pq, "partition_id").select(
+        "qid",
+        F.col("id").alias("neighbor_id"),
+        D.distance_expr(F.col("emb"), F.col("qemb"), "l2").alias("distance"),
+    )
+    return topk(cand, 10)  # replication_factor=2 -> dedup inside topk
+
+
+@register_gate(
+    "knn_epoch_batch_recall", "check_name, ok",
+    ["epochs_learned", "fresh_prune", "recall"],
 )
-def q_knn_epoch_batch_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_knn_epoch_batch_recall(spark: SparkSession, sf_dir: str) -> dict:
     """P5 dynamic-epoch partitioning as a DECLARED BATCH query (r4 VERDICT
     #7): event-timed vectors span THREE ``update_interval`` epochs, each
     epoch learns its own equi-depth curve boundaries
@@ -2254,94 +2333,35 @@ def q_knn_epoch_batch_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly shrinks the query fan-out vs fanning every epoch, and (3)
     recall@10 of the epoch-partitioned search vs exact kNN over the same
     freshness window clears the lsh+hilbert floor."""
-    import sys
-
-    from vstream_spark.functions.metrics import mean_recall
-    from vstream_spark.operators.knn import topk
-    from vstream_spark.partitioners.epochs import EpochCurvePartitioner
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.count()
-    t_now = n * 10
+    vectors, queries, t_now = _epoch_inputs(spark, sf_dir)
     interval = (t_now + 3) // 3  # event_time = vec_id*10 -> exactly 3 epochs
     max_ttl = int(1.9 * interval)  # fresh = epochs 1,2; epoch 0 is stale
-    vectors = emb.select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").cast("array<float>").alias("emb"),
-        (F.col("vec_id") * 10).cast("long").alias("event_time"),
-    )
-    conf = PartitionerConf(
-        kind="lsh+hilbert", num_partitions=8, num_hashes=4, bucket_width=2.0,
-        sfc_bits=7, replication_factor=2, update_interval=interval,
-        max_ttl=max_ttl,
-    )
-    part = EpochCurvePartitioner(conf, curve="hilbert", use_lsh=True)
+    part = _epoch_partitioner(interval, max_ttl)
     part.update(vectors)  # each epoch learns from its own rows
     epochs_ok = len(part.epochs) == 3
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").cast("array<float>").alias("emb"),
-        F.lit(t_now).cast("long").alias("event_time"),
-    )
-    pv = part.partition_data(vectors).select(
-        "partition_id", "id", "emb", "event_time"
-    )
-    pq = part.partition_queries(queries).select(
-        "partition_id", "qid", F.col("emb").alias("qemb")
-    )
     # fresh-epoch pruning check: an identical partitioner with no TTL bound
     # fans to every epoch — strictly more (query, partition) pairs
-    conf_all = PartitionerConf(
-        kind="lsh+hilbert", num_partitions=8, num_hashes=4, bucket_width=2.0,
-        sfc_bits=7, replication_factor=2, update_interval=interval,
-        max_ttl=None,
-    )
-    part_all = EpochCurvePartitioner(conf_all, curve="hilbert", use_lsh=True)
+    part_all = _epoch_partitioner(interval)
     part_all.epochs = part.epochs  # same learned state, no freshness bound
     prune_ok = (
-        pq.count() < part_all.partition_queries(queries).count()
+        part.partition_queries(queries).count()
+        < part_all.partition_queries(queries).count()
     )
     # freshness contract on DATA: candidates must lie inside the window
-    cand = (
-        pv.filter(F.col("event_time") >= F.lit(t_now - max_ttl))
-        .join(pq, "partition_id")
-        .select(
-            "qid",
-            F.col("id").alias("neighbor_id"),
-            D.distance_expr(F.col("emb"), F.col("qemb"), "l2").alias("distance"),
-        )
+    fresh = F.col("event_time") >= F.lit(t_now - max_ttl)
+    pv = part.partition_data(vectors).filter(fresh).select("partition_id", "id", "emb")
+    recall_ok = _recall_ok(
+        vectors.filter(fresh), queries.select("qid", "emb"), "knn_epoch_batch",
+        0.4, _epoch_topk(part, pv, queries),
     )
-    ann = topk(cand, 10)  # replication_factor=2 -> dedup inside topk
-    gt = knn_exact(
-        vectors.filter(F.col("event_time") >= F.lit(t_now - max_ttl)).select(
-            "id", "emb"
-        ),
-        queries.select("qid", "emb"),
-        k=10,
-        metric="l2",
-    )
-    r = mean_recall(ann, gt, k=10)
-    print(f"# knn_epoch_batch recall@10={r:.4f} floor=0.4", file=sys.stderr)
-    return spark.createDataFrame(
-        [
-            ("epochs_learned", bool(epochs_ok)),
-            ("fresh_prune", bool(prune_ok)),
-            ("recall", bool(r >= 0.4)),
-        ],
-        "check_name string, ok boolean",
-    )
+    return {"epochs_learned": epochs_ok, "fresh_prune": prune_ok, "recall": recall_ok}
 
 
 # --- P5 dynamic epochs in the STREAMING dataflow (recall-gated) --------------
 
-_EPOCH_STREAM_SRC: dict[str, str] = {}
 
-
-@register(
-    "knn_epoch_stream_recall",
-    "SELECT * FROM (VALUES ('lsh+hilbert_epochs', true)) t(variant, recall_ok)",
-)
-def q_knn_epoch_stream_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register_gate("knn_epoch_stream_recall", "variant, recall_ok", ["lsh+hilbert_epochs"])
+def q_knn_epoch_stream_recall(spark: SparkSession, sf_dir: str) -> dict:
     """The paper's headline P5 mode end-to-end IN STREAMING: two micro-batch
     epochs flow through StreamingCurveIngest, which re-learns quantile
     boundaries per epoch (LSHashSpaceFillingPartitioner.java:118-145) and
@@ -2349,74 +2369,31 @@ def q_knn_epoch_stream_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merged top-10 must clear recall@10 >= 0.4 vs exact (floor set ~0.15
     below the sf0.01 measurement, consistent with the batch lsh+hilbert
     gate)."""
-    import shutil
-    import sys
-    import tempfile
-
-    from vstream_spark.functions.metrics import mean_recall
-    from vstream_spark.operators.knn import topk
-    from vstream_spark.partitioners.epochs import EpochCurvePartitioner
     from vstream_spark.streaming.pipeline import StreamingCurveIngest
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.count()
-    interval = (n * 10 + 1) // 2  # event_time = vec_id*10 -> exactly 2 epochs
-    vectors = emb.select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").cast("array<float>").alias("emb"),
-        (F.col("vec_id") * 10).cast("long").alias("event_time"),
-    )
-    src = _EPOCH_STREAM_SRC.get(sf_dir)
-    if src is None or not __import__("os").path.isdir(src):
-        src = tempfile.mkdtemp(prefix="epoch-stream-")
-        try:
-            vectors.filter(F.col("event_time") < interval).coalesce(1).write.parquet(
-                f"{src}/b000"
-            )
-            vectors.filter(F.col("event_time") >= interval).coalesce(1).write.parquet(
-                f"{src}/b001"
-            )
-        except Exception:
-            shutil.rmtree(src, ignore_errors=True)
-            raise
-        _EPOCH_STREAM_SRC[sf_dir] = src
-    conf = PartitionerConf(
-        kind="lsh+hilbert", num_partitions=8, num_hashes=4, bucket_width=2.0,
-        sfc_bits=7, replication_factor=2, update_interval=interval,
-    )
-    part = EpochCurvePartitioner(conf, curve="hilbert", use_lsh=True)
-    routed = tempfile.mkdtemp(prefix="epoch-routed-")
-    ckpt = tempfile.mkdtemp(prefix="epoch-ckpt-")
-    stream = (
-        spark.readStream.schema("id bigint, emb array<float>, event_time bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    q = StreamingCurveIngest(part, routed).start(stream, ckpt)
-    q.awaitTermination()
-    pv = spark.read.parquet(routed).select("partition_id", "id", "emb")
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").cast("array<float>").alias("emb"),
-        F.lit(n * 10).cast("long").alias("event_time"),
-    )
-    pq = part.partition_queries(queries).select(
-        "partition_id", "qid", F.col("emb").alias("qemb")
-    )
-    cand = pv.join(pq, "partition_id").select(
-        "qid",
-        F.col("id").alias("neighbor_id"),
-        D.distance_expr(F.col("emb"), F.col("qemb"), "l2").alias("distance"),
-    )
-    ann = topk(cand, 10)  # replication_factor=2 -> dedup needed
-    gt = knn_exact(
-        vectors.select("id", "emb"), queries.select("qid", "emb"), k=10, metric="l2"
-    )
-    r = mean_recall(ann, gt, k=10)
-    print(f"# knn_epoch_stream recall@10={r:.4f} floor=0.4", file=sys.stderr)
-    return spark.createDataFrame(
-        [("lsh+hilbert_epochs", bool(r >= 0.4))], "variant string, recall_ok boolean"
-    )
+    vectors, queries, t_now = _epoch_inputs(spark, sf_dir)
+    interval = (t_now + 1) // 2  # event_time = vec_id*10 -> exactly 2 epochs
+
+    def write(src: str) -> None:
+        early = F.col("event_time") < interval
+        vectors.filter(early).coalesce(1).write.parquet(f"{src}/b000")
+        vectors.filter(~early).coalesce(1).write.parquet(f"{src}/b001")
+
+    src = _input_dir("epoch-stream-", sf_dir, write)
+    part = _epoch_partitioner(interval)
+    with tempfile.TemporaryDirectory(
+        prefix="epoch-stream-run-", ignore_cleanup_errors=True
+    ) as work:
+        stream = _file_stream(spark, vectors.schema, f"{src}/*")
+        StreamingCurveIngest(part, f"{work}/routed").start(
+            stream, f"{work}/ckpt"
+        ).awaitTermination()
+        pv = spark.read.parquet(f"{work}/routed").select("partition_id", "id", "emb")
+        ok = _recall_ok(
+            vectors, queries.select("qid", "emb"), "knn_epoch_stream", 0.4,
+            _epoch_topk(part, pv, queries),
+        )
+    return {"lsh+hilbert_epochs": ok}
 
 
 # ===========================================================================
@@ -2584,6 +2561,26 @@ def q_emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Bigram LM statistics ----------------------------------------------------
 
+
+def _bigrams(docs: DataFrame) -> DataFrame:
+    """``(doc_id, bigram, w1)``: one row per adjacent whitespace-token pair
+    of each document, ``w1`` its first word."""
+    t = F.split(F.trim(F.col("text")), " ")
+    pairs = F.arrays_zip(
+        F.slice(t, 1, F.size(t) - 1).alias("a"),
+        F.slice(t, 2, F.size(t) - 1).alias("b"),
+    )
+    return (
+        docs.filter(F.size(t) >= 2)
+        .select("doc_id", F.explode(pairs).alias("p"))
+        .select(
+            "doc_id",
+            F.concat_ws(" ", F.col("p.a"), F.col("p.b")).alias("bigram"),
+            F.col("p.a").alias("w1"),
+        )
+    )
+
+
 _BIGRAM_ORACLE = """
 WITH toks AS (SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents),
 bi AS (
@@ -2607,17 +2604,7 @@ def q_text_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the n-gram LM / tokenizer-training statistic. Pure Catalyst: slice +
     arrays_zip + explode, one partial-aggregated groupBy — the shuffle
     carries only (bigram, partial counts)."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = F.split(F.trim(F.col("text")), " ")
-    pairs = F.arrays_zip(
-        F.slice(t, 1, F.size(t) - 1).alias("a"),
-        F.slice(t, 2, F.size(t) - 1).alias("b"),
-    )
-    bi = (
-        docs.filter(F.size(t) >= 2)
-        .select("doc_id", F.explode(pairs).alias("p"))
-        .select("doc_id", F.concat_ws(" ", F.col("p.a"), F.col("p.b")).alias("bigram"))
-    )
+    bi = _bigrams(load_table(spark, sf_dir, "documents"))
     counted = bi.groupBy("bigram").agg(
         F.count("*").alias("n"), F.countDistinct("doc_id").alias("df")
     )
@@ -2708,8 +2695,6 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, so the batch SQL oracle hash-matches."""
     from vstream_spark.streaming.pipeline import (
         read_event_stream,
-        run_stream_to_memory,
-        stream_state_partitions,
         streaming_interval_join,
     )
 
@@ -2717,12 +2702,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = ev.filter(F.col("event_type") == "purchase")
     clicks = ev.filter(F.col("event_type") == "click")
     j = streaming_interval_join(purchases, clicks, lookback="1 hour")
-    run_stream_to_memory(
-        j, "_streaming_ij_result", output_mode="append",
-        state_partitions=stream_state_partitions(
-            spark, f"{sf_dir}/events.parquet"),
-    )
-    return spark.table("_streaming_ij_result")
+    return _drain(j, "_streaming_ij_result", f"{sf_dir}/events.parquet")
 
 
 # --- Conversion funnel (sequential event analytics) --------------------------
@@ -2911,9 +2891,7 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (doc_id, tok) partial count. ln() differs across libm in the last
     ulp -> round 6dp on both engines."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), " ")).alias("tok")
-    )
+    toks = _doc_tokens(docs)
     dfreq = toks.groupBy("tok").agg(F.countDistinct("doc_id").alias("df"))
     # distributed top-V (TakeOrderedAndProject), not a global 1-partition window
     vocab = dfreq.orderBy(F.col("df").desc(), F.col("tok").asc()).limit(50)
@@ -2976,6 +2954,19 @@ def q_media_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _AUDIO_WIN = 64
 _AUDIO_SILENCE_RMS = 64.0
+
+
+def _audio_doc_stats(wins: DataFrame) -> DataFrame:
+    """Per-document audio stats from per-window ``(doc_id, rms, peak)``
+    rows, shared by both audio_stats plans."""
+    return wins.groupBy("doc_id").agg(
+        F.count("*").alias("n_windows"),
+        F.sum(
+            F.when(F.col("rms") < _AUDIO_SILENCE_RMS, 1).otherwise(0)
+        ).cast("long").alias("silent_windows"),
+        F.round(F.sum("rms"), 6).cast("double").alias("rms_sum"),
+        F.max("peak").cast("long").alias("peak"),
+    )
 
 
 def _audio_stats_oracle() -> str:
@@ -3045,14 +3036,7 @@ def q_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.max("s").alias("peak"),
     )
-    return wins.groupBy("doc_id").agg(
-        F.count("*").alias("n_windows"),
-        F.sum(
-            F.when(F.col("rms") < _AUDIO_SILENCE_RMS, 1).otherwise(0)
-        ).cast("long").alias("silent_windows"),
-        F.round(F.sum("rms"), 6).cast("double").alias("rms_sum"),
-        F.max("peak").cast("long").alias("peak"),
-    )
+    return _audio_doc_stats(wins)
 
 
 @register("audio_stats_frames", _audio_stats_oracle())
@@ -3080,14 +3064,7 @@ def q_audio_stats_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rms"),
         "peak",
     )
-    return wins.groupBy("doc_id").agg(
-        F.count("*").alias("n_windows"),
-        F.sum(
-            F.when(F.col("rms") < _AUDIO_SILENCE_RMS, 1).otherwise(0)
-        ).cast("long").alias("silent_windows"),
-        F.round(F.sum("rms"), 6).cast("double").alias("rms_sum"),
-        F.max("peak").cast("long").alias("peak"),
-    )
+    return _audio_doc_stats(wins)
 
 
 # DuckDB twin of the full perceptual-hash pipeline (r5 VERDICT #3: this was
@@ -3197,10 +3174,10 @@ def q_knn_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vstream_spark.operators.similarity import maxsim_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    qm = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.floor(F.col("vec_id") / 100.0).cast("int").alias("gid"),
-        F.col("vec_id").alias("mid"),
-        F.col("embedding").alias("emb"),
+    qm = _query_set(emb).select(
+        F.floor(F.col("qid") / 100.0).cast("int").alias("gid"),
+        F.col("qid").alias("mid"),
+        "emb",
     )
     dm = emb.select(
         (F.col("vec_id") % 50).cast("int").alias("dgid"),
@@ -3265,23 +3242,13 @@ def q_streaming_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (window, type), watermark-evicted."""
     from vstream_spark.streaming.pipeline import (
         read_event_stream,
-        run_stream_to_memory,
-        stream_state_partitions,
         streaming_sliding_rollup,
     )
 
-    roll = streaming_sliding_rollup(read_event_stream(spark, sf_dir)).select(
-        "window_start",
-        "event_type",
-        "n_events",
-        F.round(F.col("sum_value"), 4).cast("double").alias("sum_value"),
+    roll = _rounded_rollup(streaming_sliding_rollup(read_event_stream(spark, sf_dir)))
+    return _drain(
+        roll, "_streaming_sliding_result", f"{sf_dir}/events.parquet", "complete"
     )
-    run_stream_to_memory(
-        roll, "_streaming_sliding_result",
-        state_partitions=stream_state_partitions(
-            spark, f"{sf_dir}/events.parquet"),
-    )
-    return spark.table("_streaming_sliding_result")
 
 
 # --- Cohort retention matrix -------------------------------------------------
@@ -3363,21 +3330,7 @@ def q_text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     count aggregations keyed by bigram/w1 joined back to the token stream;
     the vocab size is ONE driver scalar. avg(ln) rounded 6dp (cross-engine
     float order + libm ln ulp)."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = F.split(F.trim(F.col("text")), " ")
-    pairs = F.arrays_zip(
-        F.slice(t, 1, F.size(t) - 1).alias("a"),
-        F.slice(t, 2, F.size(t) - 1).alias("b"),
-    )
-    bi = (
-        docs.filter(F.size(t) >= 2)
-        .select("doc_id", F.explode(pairs).alias("p"))
-        .select(
-            "doc_id",
-            F.concat_ws(" ", F.col("p.a"), F.col("p.b")).alias("bigram"),
-            F.col("p.a").alias("w1"),
-        )
-    )
+    bi = _bigrams(load_table(spark, sf_dir, "documents"))
     bc = bi.groupBy("bigram").agg(F.count("*").alias("c2"))
     uc = bi.groupBy("w1").agg(F.count("*").alias("c1"))
     nv = bi.select("bigram").distinct().count()
@@ -3425,17 +3378,7 @@ def q_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RERANK_CAND_K, _RERANK_K = 50, 10
 
 _KNN_RERANK_ORACLE = f"""
-WITH s AS (
-  SELECT vec_id, embedding,
-         list_max(list_transform(embedding, x -> abs(x::DOUBLE))) / 127.0 AS scale
-  FROM embeddings),
-deq AS (
-  SELECT vec_id,
-         list_transform(embedding, x ->
-           CAST(CAST(CASE WHEN scale > 0.0
-                  THEN CAST(round(x::DOUBLE / scale) AS TINYINT)
-                  ELSE CAST(0 AS TINYINT) END AS DOUBLE) * scale AS FLOAT)) AS emb
-  FROM s),
+{_INT8_CTES}
 stage1 AS (
   SELECT qid, neighbor_id FROM (
     SELECT q.vec_id AS qid, v.vec_id AS neighbor_id,
@@ -3466,26 +3409,12 @@ def q_knn_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank join touches only Q x 50 rows — the expensive exact fold runs on
     0.1% of the pairs the one-stage exact search would."""
     from vstream_spark.operators.knn import topk
-    from vstream_spark.operators.quantize import quantize_expr, scale_expr
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # scale materialized as a column BEFORE the code/dequantize lambdas
-    # reference it: inlined, the max-abs fold re-evaluates per array element
-    # (quantize.py scale_expr; same values, measured ~3x on this shape)
-    pre = emb.select(
-        "vec_id", "embedding", scale_expr(F.col("embedding")).alias("_s")
-    )
-    _, codes = quantize_expr(F.col("embedding"), scale=F.col("_s"))
-    deq = F.transform(
-        codes, lambda x: (x.cast("double") * F.col("_s")).cast("float")
-    )
-    coarse = pre.select(F.col("vec_id").alias("id"), deq.alias("emb"))
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("emb")
-    )
-    cands = knn_exact(coarse, queries, k=_RERANK_CAND_K, metric="l2").select(
-        "qid", "neighbor_id"
-    )
+    queries = _query_set(emb)
+    cands = knn_exact(
+        _int8_vectors(emb), queries, k=_RERANK_CAND_K, metric="l2"
+    ).select("qid", "neighbor_id")
     full = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_vemb")
     )
@@ -3555,12 +3484,11 @@ def q_emb_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Distributed PCA over the embeddings (fit + project, self-gated) ---------
 
 
-@register(
-    "emb_pca_gate",
-    "SELECT * FROM (VALUES ('orthonormal', true), ('variance_explained', true), "
-    "('projection_consistent', true)) t(check_name, ok)",
+@register_gate(
+    "emb_pca_gate", "check_name, ok",
+    ["orthonormal", "variance_explained", "projection_consistent"],
 )
-def q_emb_pca_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_emb_pca_gate(spark: SparkSession, sf_dir: str) -> dict:
     """Distributed PCA end-to-end: covariance by Arrow-batch partial
     moments (O(batches * D^2) shuffle cells, rows never collect), D x D
     eigh on the driver, map-only JVM-fold projection. The gate proves
@@ -3575,9 +3503,7 @@ def q_emb_pca_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     k = 8
     mean, comps, eigvals = pca_fit(emb, k=k)
-    ortho_ok = bool(
-        np.max(np.abs(comps @ comps.T - np.eye(k))) < 1e-8
-    )
+    ortho_ok = np.max(np.abs(comps @ comps.T - np.eye(k))) < 1e-8
     proj = pca_project(emb, mean, comps)
     # distributed variance per component (E[pc^2] - E[pc]^2)
     aggs = proj.agg(
@@ -3587,21 +3513,18 @@ def q_emb_pca_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     proj_var = np.array(
         [float(aggs[f"m2_{j}"]) - float(aggs[f"m1_{j}"]) ** 2 for j in range(k)]
     )
-    consistent_ok = bool(np.max(np.abs(proj_var - eigvals)) < 1e-6)
+    consistent_ok = np.max(np.abs(proj_var - eigvals)) < 1e-6
     # variance explained: eigvals vs the covariance trace (sum of ALL
     # eigvals) — full k is the probed embedding dimension, not a literal,
     # so a wider table can't silently truncate the denominator
     dim = len(emb.select("embedding").head()[0])
     _, _, all_vals = pca_fit(emb, k=dim)
     var_ratio = float(eigvals.sum() / all_vals.sum())
-    return spark.createDataFrame(
-        [
-            ("orthonormal", ortho_ok),
-            ("variance_explained", bool(var_ratio >= 0.2)),
-            ("projection_consistent", consistent_ok),
-        ],
-        "check_name string, ok boolean",
-    )
+    return {
+        "orthonormal": ortho_ok,
+        "variance_explained": var_ratio >= 0.2,
+        "projection_consistent": consistent_ok,
+    }
 
 
 # --- q21-shape: multi-correlated EXISTS / NOT EXISTS -------------------------
@@ -3701,26 +3624,6 @@ def q_events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the compacted store must hash-match the SAME oracle as knn_ttl_delete:
 # compaction is a physical rewrite with zero semantic drift.
 
-_COMPACTED_STORES: dict[str, object] = {}
-
-
-def _compacted_store(spark: SparkSession, sf_dir: str):
-    from vstream_spark.storage.segments import SegmentStore
-
-    store = _COMPACTED_STORES.get(sf_dir)
-    if store is None:
-        import tempfile
-
-        store = SegmentStore(spark, tempfile.mkdtemp(prefix="knn-compact-store-"))
-        vectors = vectors_fixture(spark, sf_dir)
-        for slot in range(3):
-            store.upsert_batch(vectors.filter(F.col("id") % 3 == slot))
-        assert len(store.segments()) == 3
-        store.compact()
-        _COMPACTED_STORES[sf_dir] = store
-    store.spark = spark
-    return store
-
 
 @register("knn_compacted", _KNN_TTL_ORACLE)
 def q_knn_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3728,12 +3631,17 @@ def q_knn_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     same oracle as knn_ttl_delete — proving the LSM maintenance path
     (per-batch annihilation, tombstone persistence, event-time-ranged
     compaction) never changes query results."""
-    store = _compacted_store(spark, sf_dir)
-    vectors = store.read()  # (id, emb, event_time, op) across compacted segs
-    queries = queries_fixture(spark, sf_dir)
-    return knn_exact(
-        vectors, queries, k=None, metric="l2", honor_ttl=True, honor_deletes=True
-    )
+
+    def fill(store) -> None:
+        vectors = vectors_fixture(spark, sf_dir)
+        for slot in range(3):
+            store.upsert_batch(vectors.filter(F.col("id") % 3 == slot))
+        assert len(store.segments()) == 3
+        store.compact()
+
+    store, _ = _store(spark, sf_dir, "knn-compact-store-", fill)
+    # (id, emb, event_time, op) across compacted segs
+    return _ttl_lww_search(spark, sf_dir, store.read())
 
 
 # --- Bounded-state streaming dedup (dropDuplicatesWithinWatermark) -----------
@@ -3754,8 +3662,6 @@ def q_streaming_dedup_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result processing-order-independent."""
     from vstream_spark.streaming.pipeline import (
         read_event_stream,
-        run_stream_to_memory,
-        stream_state_partitions,
         streaming_dedup_keys_bounded,
     )
 
@@ -3763,12 +3669,7 @@ def q_streaming_dedup_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_event_stream(spark, sf_dir), ["user_id", "event_type"],
         watermark="40 days",
     ).select("user_id", "event_type")
-    run_stream_to_memory(
-        ded, "_streaming_dedup_bounded", output_mode="append",
-        state_partitions=stream_state_partitions(
-            spark, f"{sf_dir}/events.parquet"),
-    )
-    return spark.table("_streaming_dedup_bounded")
+    return _drain(ded, "_streaming_dedup_bounded", f"{sf_dir}/events.parquet")
 
 
 # --- Odyssey (P8) in EXACT mode with a full hash-match oracle ----------------
@@ -3799,52 +3700,10 @@ def q_knn_odyssey_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the pinned snapshot sees exactly the first slice — while the same store's
 # latest read serves both.
 
-_SNAPSHOT_STORES: dict[str, tuple[object, int]] = {}
-
-
-def _snapshot_store(spark: SparkSession, sf_dir: str):
-    from vstream_spark.storage.segments import SegmentStore
-
-    entry = _SNAPSHOT_STORES.get(sf_dir)
-    if entry is None:
-        import tempfile
-
-        store = SegmentStore(spark, tempfile.mkdtemp(prefix="knn-snap-store-"))
-        vectors = vectors_fixture(spark, sf_dir)
-        store.upsert_batch(vectors.filter(F.col("id") % 2 == 0))
-        v_pin = store.manifest.version()
-        store.upsert_batch(vectors.filter(F.col("id") % 2 == 1))
-        entry = (store, v_pin)
-        _SNAPSHOT_STORES[sf_dir] = entry
-    entry[0].spark = spark
-    return entry
-
-
-_KNN_SNAPSHOT_ORACLE = f"""
-WITH all_vectors AS ({VECTORS_FIXTURE_SQL}),
-vectors AS (SELECT * FROM all_vectors WHERE id % 2 = 0),
-queries AS ({QUERIES_FIXTURE_SQL}),
-inserts AS (SELECT * FROM vectors WHERE op = 'I'),
-deletes AS (SELECT * FROM vectors WHERE op = 'D'),
-live AS (
-  SELECT i.* FROM inserts i
-  WHERE NOT EXISTS (
-    SELECT 1 FROM deletes d WHERE d.id = i.id AND d.event_time > i.event_time
-  )
-),
-scored AS (
-  SELECT q.qid, v.id AS neighbor_id, {D.l2sq_sql("q.emb", "v.emb")} AS distance, q.k AS k
-  FROM live v
-  JOIN queries q
-    ON v.event_time >= q.event_time - q.ttl AND v.event_time <= q.event_time
-),
-ranked AS (
-  SELECT qid, neighbor_id, distance, k,
-         CAST(row_number() OVER (PARTITION BY qid ORDER BY distance ASC, neighbor_id ASC) AS INTEGER) AS rank
-  FROM scored
+_KNN_SNAPSHOT_ORACLE = _ttl_lww_oracle(
+    f"all_vectors AS ({VECTORS_FIXTURE_SQL}),\n"
+    "vectors AS (SELECT * FROM all_vectors WHERE id % 2 = 0)"
 )
-SELECT qid, neighbor_id, distance, rank FROM ranked WHERE rank <= k
-"""
 
 
 @register("knn_snapshot", _KNN_SNAPSHOT_ORACLE)
@@ -3854,12 +3713,16 @@ def q_knn_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     first flush exactly (oracle = the TTL/LWW search restricted to slice 1).
     Same guarantee RocksDB gives a reader holding GetSnapshot() across
     later writes."""
-    store, v_pin = _snapshot_store(spark, sf_dir)
-    vectors = store.read(as_of=v_pin)
-    queries = queries_fixture(spark, sf_dir)
-    return knn_exact(
-        vectors, queries, k=None, metric="l2", honor_ttl=True, honor_deletes=True
-    )
+
+    def fill(store) -> int:
+        vectors = vectors_fixture(spark, sf_dir)
+        store.upsert_batch(vectors.filter(F.col("id") % 2 == 0))
+        v_pin = store.manifest.version()
+        store.upsert_batch(vectors.filter(F.col("id") % 2 == 1))
+        return v_pin
+
+    store, v_pin = _store(spark, sf_dir, "knn-snap-store-", fill)
+    return _ttl_lww_search(spark, sf_dir, store.read(as_of=v_pin))
 
 
 # --- Semantic dedup (SemDeDup shape: cluster, then near-dup within cluster) --
@@ -4070,11 +3933,7 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     (historical count + mean value): the profile is broadcast into every
     micro-batch, the stream side never shuffles, and no join state
     accumulates. Drained availableNow == the batch LEFT JOIN oracle."""
-    from vstream_spark.streaming.pipeline import (
-        read_event_stream,
-        run_stream_to_memory,
-        streaming_enrich,
-    )
+    from vstream_spark.streaming.pipeline import read_event_stream, streaming_enrich
 
     events = load_table(spark, sf_dir, "events")
     prof = events.groupBy("user_id").agg(
@@ -4082,8 +3941,7 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.avg("value"), 6).cast("double").alias("user_avg_value"),
     )
     enriched = streaming_enrich(read_event_stream(spark, sf_dir), prof)
-    run_stream_to_memory(enriched, "_streaming_enrich", output_mode="append")
-    return spark.table("_streaming_enrich")
+    return _drain(enriched, "_streaming_enrich", None)
 
 
 # --- Bulk erasure (delete-by-predicate maintenance op) -----------------------
@@ -4093,56 +3951,15 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 # plus one synthetic delete marker per erased id, through the same TTL/LWW
 # search.
 
-_GDPR_STORES: dict[str, object] = {}
-
 _GDPR_MARKER_T = "1000 * (SELECT count(*) FROM embeddings) + 500"
 
-_KNN_ERASE_ORACLE = f"""
-WITH base AS ({VECTORS_FIXTURE_SQL}),
+_KNN_ERASE_ORACLE = _ttl_lww_oracle(f"""base AS ({VECTORS_FIXTURE_SQL}),
 vectors AS (
   SELECT * FROM base
   UNION ALL
   SELECT id, emb, CAST({_GDPR_MARKER_T} AS BIGINT) AS event_time, ttl, 'D' AS op
   FROM base WHERE op = 'I' AND id % 5 = 0
-),
-queries AS ({QUERIES_FIXTURE_SQL}),
-inserts AS (SELECT * FROM vectors WHERE op = 'I'),
-deletes AS (SELECT * FROM vectors WHERE op = 'D'),
-live AS (
-  SELECT i.* FROM inserts i
-  WHERE NOT EXISTS (
-    SELECT 1 FROM deletes d WHERE d.id = i.id AND d.event_time > i.event_time
-  )
-),
-scored AS (
-  SELECT q.qid, v.id AS neighbor_id, {D.l2sq_sql("q.emb", "v.emb")} AS distance, q.k AS k
-  FROM live v
-  JOIN queries q
-    ON v.event_time >= q.event_time - q.ttl AND v.event_time <= q.event_time
-),
-ranked AS (
-  SELECT qid, neighbor_id, distance, k,
-         CAST(row_number() OVER (PARTITION BY qid ORDER BY distance ASC, neighbor_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT qid, neighbor_id, distance, rank FROM ranked WHERE rank <= k
-"""
-
-
-def _gdpr_store(spark: SparkSession, sf_dir: str):
-    from vstream_spark.storage.segments import SegmentStore
-
-    store = _GDPR_STORES.get(sf_dir)
-    if store is None:
-        import tempfile
-
-        store = SegmentStore(spark, tempfile.mkdtemp(prefix="knn-erase-store-"))
-        store.upsert_batch(vectors_fixture(spark, sf_dir))
-        n = load_table(spark, sf_dir, "embeddings").count()
-        store.delete_where(F.col("id") % 5 == 0, event_time=1000 * n + 500)
-        _GDPR_STORES[sf_dir] = store
-    store.spark = spark
-    return store
+)""")
 
 
 @register("knn_erase", _KNN_ERASE_ORACLE)
@@ -4150,12 +3967,14 @@ def q_knn_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Search after ``delete_where(id % 5 == 0)``: the erased ids are
     invisible (LWW tombstones win), everything else ranks identically —
     hash-matched against the stream-delete semantics replayed in SQL."""
-    store = _gdpr_store(spark, sf_dir)
-    vectors = store.read()
-    queries = queries_fixture(spark, sf_dir)
-    return knn_exact(
-        vectors, queries, k=None, metric="l2", honor_ttl=True, honor_deletes=True
-    )
+
+    def fill(store) -> None:
+        store.upsert_batch(vectors_fixture(spark, sf_dir))
+        n = load_table(spark, sf_dir, "embeddings").count()
+        store.delete_where(F.col("id") % 5 == 0, event_time=1000 * n + 500)
+
+    store, _ = _store(spark, sf_dir, "knn-erase-store-", fill)
+    return _ttl_lww_search(spark, sf_dir, store.read())
 
 
 # --- Weighted sampling without replacement (Efraimidis-Spirakis) -------------
@@ -4234,23 +4053,7 @@ WITH docs_u AS (
   UNION ALL SELECT -1 AS doc_id, '{_HYBRID_QTEXT}' AS text),
 toks AS (
   SELECT doc_id, unnest(string_split(trim(text), ' ')) AS tok FROM docs_u),
-tfb AS (
-  SELECT doc_id,
-         CAST(('0x' || substring(md5(tok), 1, 15))::BIGINT % {dim} AS INTEGER) AS bucket,
-         count(*) AS tf
-  FROM toks GROUP BY doc_id, bucket),
-m AS (
-  SELECT doc_id, map_from_entries(list(struct_pack(k := bucket, v := tf::DOUBLE))) AS mm
-  FROM tfb GROUP BY doc_id),
-dense AS (
-  SELECT doc_id, list_transform(range(0, {dim}), i -> coalesce(mm[i::INTEGER][1], 0.0)) AS d
-  FROM m),
-normed AS (
-  SELECT doc_id, sqrt(list_sum(list_transform(d, x -> x*x))) AS n, d FROM dense),
-emb_t AS (
-  SELECT doc_id,
-         list_transform(d, x -> CAST(x / (CASE WHEN n > 0 THEN n ELSE 1.0 END) AS FLOAT)) AS emb
-  FROM normed),
+{_embed_ctes(dim, "tfb")}
 q AS (SELECT emb FROM emb_t WHERE doc_id = -1),
 cos AS (
   SELECT v.doc_id, {dist} AS distance FROM emb_t v CROSS JOIN q WHERE v.doc_id >= 0),
@@ -4323,14 +4126,11 @@ def q_knn_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Diversified rerank gate (MMR) -------------------------------------------
 
-_MMR_GATE_ORACLE = (
-    "SELECT * FROM (VALUES ('k_rows', true), ('subset_and_top1', true), "
-    "('diversity', true)) t(check_name, ok)"
+
+@register_gate(
+    "knn_mmr_gate", "check_name, ok", ["k_rows", "subset_and_top1", "diversity"]
 )
-
-
-@register("knn_mmr_gate", _MMR_GATE_ORACLE)
-def q_knn_mmr_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_knn_mmr_gate(spark: SparkSession, sf_dir: str) -> dict:
     """MMR diversity rerank over first-stage exact top-50: the gate proves
     (1) exactly k picks per query, (2) picks come from the candidate set
     with the relevance-best candidate first (MMR's anchor), and (3) the
@@ -4346,10 +4146,9 @@ def q_knn_mmr_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache the first stage: every check below re-reads it (subset, top-1,
     # both diversity scans) — without the cache the exact search re-runs 4x
     cands = knn_exact(vectors, queries, k=50, metric="l2").cache()
+    nbr_emb = vectors.select(F.col("id").alias("neighbor_id"), "emb")
     joined = (
-        cands.join(
-            vectors.select(F.col("id").alias("neighbor_id"), "emb"), "neighbor_id"
-        )
+        cands.join(nbr_emb, "neighbor_id")
         .withColumn("rel", -F.col("distance"))
         .select("qid", "neighbor_id", "emb", "rel")
     )
@@ -4381,9 +4180,9 @@ def q_knn_mmr_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Mean over picks (rank >= 2) of each pick's MAX cosine similarity
         to the items selected before it — the redundancy term MMR greedily
         minimizes at every step."""
-        withe = sel.join(
-            vectors.select(F.col("id").alias("neighbor_id"), "emb"), "neighbor_id"
-        ).select("qid", F.col("rank").alias("r"), "emb")
+        withe = sel.join(nbr_emb, "neighbor_id").select(
+            "qid", F.col("rank").alias("r"), "emb"
+        )
         a = withe.select("qid", F.col("r").alias("ra"), F.col("emb").alias("ea"))
         b = withe.select(
             F.col("qid").alias("_q"), F.col("r").alias("rb"), F.col("emb").alias("eb")
@@ -4403,14 +4202,11 @@ def q_knn_mmr_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) <= (mean_max_sim_to_selected(plain.select("qid", "neighbor_id", "rank")) + 0.02)
     mmr.unpersist()
     cands.unpersist()
-    return spark.createDataFrame(
-        [
-            ("k_rows", bool(k_rows_ok)),
-            ("subset_and_top1", bool(subset_ok and top1_ok)),
-            ("diversity", bool(diversity_ok)),
-        ],
-        "check_name string, ok boolean",
-    )
+    return {
+        "k_rows": k_rows_ok,
+        "subset_and_top1": subset_ok and top1_ok,
+        "diversity": diversity_ok,
+    }
 
 
 # --- Edit-distance-verified near-dup (MinHash candidates -> Levenshtein) -----
@@ -4812,8 +4608,6 @@ def q_events_ts_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Streaming set-similarity join (cross-batch LSH state) -------------------
 
-_DOCS_STREAM_SRC: dict[str, tuple[str, int]] = {}
-
 
 def _docs_stream_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     """documents split into 3 micro-batch slots (doc_id % 3), each slot
@@ -4821,37 +4615,37 @@ def _docs_stream_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     micro-batch has file-level parallelism (a single file per trigger
     serialized the whole signature UDF chain onto one task — guide §2.6;
     a real stream delivers many files per trigger, the fixture should too).
-    Returns ``(src, files_per_slot)``; readers must pass
-    ``maxFilesPerTrigger=files_per_slot`` so one trigger == one slot.
-    Files cached per (process, sf_dir). Each row carries an event time
-    ``et = (doc_id % 3) * 10`` — constant within a batch, advancing 10 per
-    batch — so the TTL-bounded variant has a SQL-expressible freshness
-    window (|slot diff| <= 1 at ttl=10). Writes sleep between slots so file
-    mtimes order the replay deterministically: every slot file predates
-    every later-slot file, so the K oldest unseen files are exactly one
-    slot (the bounded mode's output depends on arrival order by design: an
-    arrival looks BACK ttl units, it cannot see forward)."""
-    import os
-    import tempfile
+    Returns ``(src, files_per_slot)``; readers must stream
+    ``files_per_slot`` files per trigger so one trigger == one slot.
+    Files cached per (process, sf_dir, files_per_slot). Each row carries
+    an event time ``et = (doc_id % 3) * 10`` — constant within a batch,
+    advancing 10 per batch — so the TTL-bounded variant has a
+    SQL-expressible freshness window (|slot diff| <= 1 at ttl=10). Writes
+    sleep between slots so file mtimes order the replay deterministically:
+    every slot file predates every later-slot file, so the K oldest unseen
+    files are exactly one slot (the bounded mode's output depends on
+    arrival order by design: an arrival looks BACK ttl units, it cannot see
+    forward)."""
     import time as _time
 
-    cached = _DOCS_STREAM_SRC.get(sf_dir)
-    if cached is not None and os.path.isdir(cached[0]):
-        return cached
     files_per_slot = max(
         1, min(16, spark.sparkContext.defaultParallelism // 4)
     )
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", ((F.col("doc_id") % 3) * 10).cast("long").alias("et")
     )
-    out = tempfile.mkdtemp(prefix="docs-stream-")
-    for slot in range(3):
-        if slot:
-            _time.sleep(1.05)  # distinct mtimes => deterministic batch order
-        d = docs.filter(F.col("doc_id") % 3 == slot)
-        (d.repartition(files_per_slot) if files_per_slot > 1 else d.coalesce(1)
-         ).write.mode("append").parquet(out)
-    _DOCS_STREAM_SRC[sf_dir] = (out, files_per_slot)
+
+    def write(out: str) -> None:
+        for slot in range(3):
+            if slot:
+                _time.sleep(1.05)  # distinct mtimes => deterministic batch order
+            d = docs.filter(F.col("doc_id") % 3 == slot)
+            (d.repartition(files_per_slot) if files_per_slot > 1 else d.coalesce(1)
+             ).write.mode("append").parquet(out)
+
+    # the file count is part of the key: a dir written for another
+    # parallelism would not replay one slot per trigger
+    out = _input_dir(f"docs-stream-{files_per_slot}-", sf_dir, write)
     return out, files_per_slot
 
 
@@ -4864,18 +4658,11 @@ def q_streaming_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch bucket join, unrolled over time."""
     from vstream_spark.streaming.pipeline import (
         derived_state_shards,
-        run_stream_to_memory,
-        stream_state_partitions,
         streaming_set_similarity,
     )
 
     src, files_per_slot = _docs_stream_fixture(spark, sf_dir)
-    schema = "doc_id bigint, text string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_slot)
-        .parquet(src)
-    )
+    stream = _file_stream(spark, "doc_id bigint, text string", src, files_per_slot)
     # data-derived shard count (r15): every (band, shard) group pays a fixed
     # pandas-state invocation cost per trigger, so groups track input bytes,
     # not cores — 512 -> 64 groups at sf0.1, measured 6.05 -> 4.02 s for the
@@ -4883,11 +4670,7 @@ def q_streaming_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = streaming_set_similarity(
         stream, threshold=0.5, state_shards=derived_state_shards(spark, src)
     )
-    run_stream_to_memory(
-        pairs, "_streaming_mhlsh", output_mode="append",
-        state_partitions=stream_state_partitions(spark, src),
-    )
-    return spark.table("_streaming_mhlsh")
+    return _drain(pairs, "_streaming_mhlsh", src)
 
 
 @register(
@@ -4908,17 +4691,12 @@ def q_streaming_minhash_lsh_bounded(spark: SparkSession, sf_dir: str) -> DataFra
     order is pinned by file mtimes)."""
     from vstream_spark.streaming.pipeline import (
         derived_state_shards,
-        run_stream_to_memory,
-        stream_state_partitions,
         streaming_set_similarity,
     )
 
     src, files_per_slot = _docs_stream_fixture(spark, sf_dir)
-    schema = "doc_id bigint, text string, et bigint"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_slot)
-        .parquet(src)
+    stream = _file_stream(
+        spark, "doc_id bigint, text string, et bigint", src, files_per_slot
     )
     # data-derived shard count (r15) — see q_streaming_minhash_lsh; results
     # are shard-independent (eviction is lazy bookkeeping; the symmetric
@@ -4927,11 +4705,7 @@ def q_streaming_minhash_lsh_bounded(spark: SparkSession, sf_dir: str) -> DataFra
         stream, threshold=0.5, ttl=10, event_time_col="et",
         state_shards=derived_state_shards(spark, src),
     )
-    run_stream_to_memory(
-        pairs, "_streaming_mhlsh_bounded", output_mode="append",
-        state_partitions=stream_state_partitions(spark, src),
-    )
-    return spark.table("_streaming_mhlsh_bounded")
+    return _drain(pairs, "_streaming_mhlsh_bounded", src)
 
 
 # --- Namespaced (multi-tenant) search ----------------------------------------
@@ -4943,12 +4717,7 @@ scored AS (
   SELECT q.qid, v.vec_id AS neighbor_id,
          {D.distance_sql("q.embedding", "v.embedding", "l2")} AS distance
   FROM embeddings v JOIN q ON v.label = q.label),
-ranked AS (
-  SELECT qid, neighbor_id, distance,
-         CAST(row_number() OVER (PARTITION BY qid ORDER BY distance ASC, neighbor_id ASC) AS INTEGER) AS rank
-  FROM scored)
-SELECT qid, neighbor_id, distance, rank FROM ranked WHERE rank <= 10
-"""
+{_ranked_sql(10)}"""
 
 
 @register("knn_namespaced", _KNN_NAMESPACED_ORACLE)
@@ -4961,13 +4730,9 @@ def q_knn_namespaced(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vstream_spark.operators.knn import topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    vectors = emb.select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("emb"),
-        F.col("label").alias("ns"),
-    )
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb"),
-        F.col("label").alias("qns"),
+    vectors = _vectors(emb, F.col("label").alias("ns"))
+    queries = _query_set(emb, F.col("label").alias("qns")).withColumnRenamed(
+        "emb", "qemb"
     )
     # the BHJ probe side drives the per-pair distance work: widen the tiny
     # embeddings scan (1-2 splits at rehearsal scale) to the cluster
@@ -5020,10 +4785,7 @@ def q_knn_sparse_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot product over a top-200 vocabulary. The only big exchange keys on
     the term (posting lists); scoring is a partial-aggregated integer sum —
     exact, and the execution shape dense search can never produce."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), " ")).alias("tok")
-    )
+    toks = _doc_tokens(load_table(spark, sf_dir, "documents"))
     # tf is computed for the vocab collect() below AND re-derived by the
     # main scoring job: pin it so the tokenize+explode+aggregate pass runs
     # once — the collect() was already paying for it in full
@@ -5228,12 +4990,8 @@ _FILTERED_ROUTE_CASES: list[tuple[str, str]] = [
     ("weak", "post_filter"),  # label % 2 = 0 -> ~0.50 > threshold
 ]
 
-_FILTERED_ROUTE_ORACLE = _values_oracle(
-    [(c, s, True) for c, s in _FILTERED_ROUTE_CASES], "pred_case, strategy, route_ok"
-)
 
-
-def _filtered_route_rows(spark, queries, base, tag, run) -> DataFrame:
+def _filtered_route_rows(queries, base, tag, run) -> dict:
     """The loop both routing gates share. ``run(pred, force_strategy)``
     returns ``(result, strategy, selectivity)``; ``base`` is the frame
     whose ``filter(pred)`` exact top-k is the reference answer."""
@@ -5241,7 +4999,7 @@ def _filtered_route_rows(spark, queries, base, tag, run) -> DataFrame:
         "selective": F.col("label") == 0,
         "weak": F.col("label") % 2 == 0,
     }
-    rows = []
+    oks = {}
     for case, expect in _FILTERED_ROUTE_CASES:
         pred = preds[case]
         routed, strategy, sel = run(pred, None)
@@ -5263,26 +5021,22 @@ def _filtered_route_rows(spark, queries, base, tag, run) -> DataFrame:
         # was chosen; the approximate branch clears the 0.9 floor
         routed_ok = rec["routed_recall"] >= (1.0 if strategy == "pre_filter" else 0.9)
         ok = strategy == expect and routed_ok and rec["post_recall"] >= 0.9
-        rows.append((case, strategy, bool(ok)))
-    return spark.createDataFrame(
-        rows, "pred_case string, strategy string, route_ok boolean"
-    )
+        oks[(case, strategy)] = ok
+    return oks
 
 
-@register("knn_filtered_route_gate", _FILTERED_ROUTE_ORACLE)
-def q_knn_filtered_route_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register_gate(
+    "knn_filtered_route_gate", "pred_case, strategy, route_ok", _FILTERED_ROUTE_CASES
+)
+def q_knn_filtered_route_gate(spark: SparkSession, sf_dir: str) -> dict:
     """Selectivity-adaptive filtered kNN: router picks the expected plan and
     both plans agree on the answer (exact equality for pre_filter; recall
     >= 0.9 for the oversampled post_filter) — see operators/filtered.py."""
     from vstream_spark.operators.filtered import knn_filtered_adaptive
 
     emb = load_table(spark, sf_dir, "embeddings")
-    vectors = emb.select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("emb"), "label"
-    )
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("emb")
-    )
+    vectors = _vectors(emb, "label")
+    queries = _query_set(emb)
     iconf = VectorIndexConf(
         index_kind="hnsw", m=16, ef_construction=128, ef_search=128
     )
@@ -5293,7 +5047,7 @@ def q_knn_filtered_route_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             index_conf=iconf, force_strategy=force,
         )
 
-    return _filtered_route_rows(spark, queries, vectors, "filtered_route", run)
+    return _filtered_route_rows(queries, vectors, "filtered_route", run)
 
 
 # --- Filtered search over the PERSISTED store (r11 VERDICT #3) ---------------
@@ -5304,22 +5058,21 @@ def q_knn_filtered_route_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # filter with freshness INSIDE index traversal over persisted tables:
 # FilterSeqTs, hnswlib.h:135-146).
 
-_FILTERED_STORES: dict[str, object] = {}
-
 
 def _filtered_store(spark: SparkSession, sf_dir: str):
     """Two-segment store that PERSISTS the label attribute alongside id/emb
     — the predicate column lives in the segment parquet, so the pre-filter
     branch pushes it into the pruned scan. Same recipe as `_hnsw_store`
-    (shared `_segment_store_fixture`)."""
-    return _segment_store_fixture(
-        spark, sf_dir, _FILTERED_STORES, "knn-filtered-store-",
-        extra_cols=("label",),
+    (shared `_two_segment_store`)."""
+    return _two_segment_store(
+        spark, sf_dir, "knn-filtered-store-", extra_cols=("label",)
     )
 
 
-@register("knn_filtered_store_gate", _FILTERED_ROUTE_ORACLE)
-def q_knn_filtered_store_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register_gate(
+    "knn_filtered_store_gate", "pred_case, strategy, route_ok", _FILTERED_ROUTE_CASES
+)
+def q_knn_filtered_store_gate(spark: SparkSession, sf_dir: str) -> dict:
     """SegmentSearcher.search_filtered: the router picks the expected plan
     over the persisted store, the pre_filter branch equals the exact scan of
     the visible snapshot, and the post_filter branch (oversampled sidecar-
@@ -5328,23 +5081,17 @@ def q_knn_filtered_store_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vstream_spark.storage.search import SegmentSearcher
 
     store = _filtered_store(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("emb")
-    )
-    iconf = VectorIndexConf(
-        dim=64, m=16, ef_construction=128, ef_search=128
-    )
+    _, queries = _emb_pair(spark, sf_dir)
 
     def run(pred, force):
-        pdf, strategy, sel = SegmentSearcher(store, iconf).search_filtered(
+        pdf, strategy, sel = SegmentSearcher(store, _GATE_HNSW).search_filtered(
             queries, pred, k=10, metric="l2", force_strategy=force
         )
         res = spark.createDataFrame(pdf[["qid", "neighbor_id", "distance", "rank"]])
         return res, strategy, sel
 
-    visible = SegmentSearcher(store, iconf).visible()
-    return _filtered_route_rows(spark, queries, visible, "filtered_store", run)
+    visible = SegmentSearcher(store, _GATE_HNSW).visible()
+    return _filtered_route_rows(queries, visible, "filtered_store", run)
 
 
 # --- In-index attribute filtering gate (r12 VERDICT missing #1) --------------
@@ -5370,13 +5117,11 @@ _ININDEX_CASES: list[tuple[str, str]] = [
     ("guard_rejects", "rejected"),
 ]
 
-_ININDEX_ORACLE = _values_oracle(
-    [(c, s, True) for c, s in _ININDEX_CASES], "pred_case, strategy, route_ok"
+
+@register_gate(
+    "knn_inindex_filter_gate", "pred_case, strategy, route_ok", _ININDEX_CASES
 )
-
-
-@register("knn_inindex_filter_gate", _ININDEX_ORACLE)
-def q_knn_inindex_filter_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_knn_inindex_filter_gate(spark: SparkSession, sf_dir: str) -> dict:
     """SegmentSearcher.search_filtered's in_index branch: a weak predicate
     with a SQL hint routes to in-traversal filtering at depth k (no
     oversampling), clears the same recall floor as the sibling branches, a
@@ -5385,26 +5130,21 @@ def q_knn_inindex_filter_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vstream_spark.storage.search import SegmentSearcher
 
     store = _filtered_store(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("emb")
-    )
-    iconf = VectorIndexConf(dim=64, m=16, ef_construction=128, ef_search=128)
+    _, queries = _emb_pair(spark, sf_dir)
 
-    rows = []
+    oks = {}
     for case, _expect in _ININDEX_CASES:
         pred = F.col("label") % 2 == 0  # ~0.5 selectivity: above the pre bound
-        searcher = SegmentSearcher(store, iconf)
+        searcher = SegmentSearcher(store, _GATE_HNSW)
         if case == "guard_rejects":
             try:
                 searcher.search_filtered(
                     queries, pred, k=10, metric="l2",
                     force_strategy="in_index", predicate_expr="label = 3",
                 )
-                strategy, ok = "not_rejected", False
+                oks[(case, "not_rejected")] = False
             except ValueError:
-                strategy, ok = "rejected", True
-            rows.append((case, strategy, ok))
+                oks[(case, "rejected")] = True
             continue
         if case == "between_hint":
             # ~0.6 selectivity range predicate over the fixture's label
@@ -5423,16 +5163,15 @@ def q_knn_inindex_filter_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         got = spark.createDataFrame(
             got_pdf[["qid", "neighbor_id", "distance", "rank"]]
         )
-        r = _exact_recalls(
+        recall_ok = _recall_ok(
             searcher.visible().filter(pred),
             queries,
             f"inindex_filter {case}: sel={sel:.3f} strategy={strategy}",
-            recall=got,
-        )["recall"]
-        rows.append((case, strategy, bool(strategy == "in_index" and r >= 0.9)))
-    return spark.createDataFrame(
-        rows, "pred_case string, strategy string, route_ok boolean"
-    )
+            0.9,
+            got,
+        )
+        oks[(case, strategy)] = recall_ok and strategy == "in_index"
+    return oks
 
 
 # --- Streaming filtered search + warm-state gate (r13 VERDICT #5 + #7) -------
@@ -5446,144 +5185,104 @@ def q_knn_inindex_filter_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # seeds + saves the termination EMA and batch 2 restores WARM and
 # early-terminates on its first search.
 
-_STREAM_FILTERED_SRC: dict[str, str] = {}
-
 
 def _stream_filtered_source(spark: SparkSession, sf_dir: str) -> str:
     """Two-file query stream (each file = one micro-batch): the filtered-
     store query set split in half. Files cached per (process, sf_dir); the
     stream itself runs fresh per invocation."""
-    import os
-    import shutil
-    import tempfile
-
-    src = _STREAM_FILTERED_SRC.get(sf_dir)
-    if src is not None and os.path.isdir(src):
-        return src
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").cast("array<float>").alias("emb"),
-    )
-    src = tempfile.mkdtemp(prefix="stream-filtered-q-")
-    try:
-        queries.filter(F.col("qid") % 50 == 0).coalesce(1).write.parquet(
-            f"{src}/b000"
-        )
-        queries.filter(F.col("qid") % 50 != 0).coalesce(1).write.parquet(
-            f"{src}/b001"
-        )
-    except Exception:
-        shutil.rmtree(src, ignore_errors=True)
-        raise
-    _STREAM_FILTERED_SRC[sf_dir] = src
-    return src
+    queries = _query_set(emb.withColumn(
+        "embedding", F.col("embedding").cast("array<float>")
+    ))
+
+    def write(src: str) -> None:
+        first = F.col("qid") % 50 == 0
+        queries.filter(first).coalesce(1).write.parquet(f"{src}/b000")
+        queries.filter(~first).coalesce(1).write.parquet(f"{src}/b001")
+
+    return _input_dir("stream-filtered-q-", sf_dir, write)
 
 
-_STREAM_FILTERED_CASES: list[str] = ["filtered_in_index", "warm_restore_terminates"]
-
-_STREAM_FILTERED_ORACLE = _values_oracle(
-    [(c, True) for c in _STREAM_FILTERED_CASES], "pred_case, case_ok"
+@register_gate(
+    "knn_streaming_filtered_gate", "pred_case, case_ok",
+    ["filtered_in_index", "warm_restore_terminates"],
 )
-
-
-@register("knn_streaming_filtered_gate", _STREAM_FILTERED_ORACLE)
-def q_knn_streaming_filtered_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_knn_streaming_filtered_gate(spark: SparkSession, sf_dir: str) -> dict:
     """StreamingVectorQuery over the persisted filtered store: (a) a label
     predicate + SQL hint rides every micro-batch through the in_index plan
     and the drained results clear the 0.9 recall floor vs the exact
     filtered scan; (b) warm C7/C8 restore is load-bearing — batch 2's
     searcher early-terminates where batch 1 ran full depth
     (streaming/pipeline.py, storage/search.py)."""
-    import os
-    import shutil
-    import sys
-    import tempfile
-    import uuid
-
     from vstream_spark.storage.search import SegmentSearcher
     from vstream_spark.streaming.pipeline import StreamingVectorQuery
 
     store = _filtered_store(spark, sf_dir)
     n_seg = len(store.segments())
     src = _stream_filtered_source(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 25 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("emb")
-    )
+    _, queries = _emb_pair(spark, sf_dir)
     state_path = os.path.join(store.base_dir, "_searcher_state.json")
-    rows = []
-    work = tempfile.mkdtemp(prefix=f"stream-filtered-{uuid.uuid4().hex[:8]}-")
+    oks = {}
+    work = tempfile.mkdtemp(prefix="stream-filtered-")
     try:
-        def _stream():
-            return (
-                spark.readStream.schema("qid long, emb array<float>")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{src}/*")
+        def lane(name: str, conf: VectorIndexConf, **kw):
+            """Drain the query stream through one StreamingVectorQuery."""
+            svq = StreamingVectorQuery(
+                store, f"{work}/{name}res", index_conf=conf, k=10, metric="l2", **kw
             )
+            stream = _file_stream(spark, "qid long, emb array<float>", f"{src}/*")
+            svq.start(stream, f"{work}/{name}ckpt").awaitTermination()
+            return svq
 
         # (a) filtered lane: three-plan routing per micro-batch (in_index
         # via the hint), cold state (no interference with case b)
         pred = F.col("label") % 2 == 0
-        conf = VectorIndexConf(dim=64, m=16, ef_construction=128, ef_search=128)
-        svq = StreamingVectorQuery(
-            store, f"{work}/fres", index_conf=conf, k=10, metric="l2",
-            predicate=pred, predicate_expr="label % 2 = 0",
+        svq = lane(
+            "f", _GATE_HNSW, predicate=pred, predicate_expr="label % 2 = 0",
             restore_state=False,
         )
-        svq.start(_stream(), f"{work}/fckpt").awaitTermination()
         got = spark.read.parquet(f"{work}/fres").select(
             "qid", "neighbor_id", "distance", "rank"
         )
         strategies = [s["strategy"] for s in svq.batch_stats]
-        r = _exact_recalls(
-            SegmentSearcher(store, conf).visible().filter(pred),
+        recall_ok = _recall_ok(
+            SegmentSearcher(store, _GATE_HNSW).visible().filter(pred),
             queries,
             f"streaming_filtered: batches={len(svq.batch_stats)} "
             f"strategies={strategies}",
-            recall=got,
-        )["recall"]
-        rows.append((
-            "filtered_in_index",
-            bool(
-                len(svq.batch_stats) == 2
-                and all(s == "in_index" for s in strategies)
-                and r >= 0.9
-            ),
-        ))
+            0.9,
+            got,
+        )
+        oks["filtered_in_index"] = (
+            recall_ok
+            and len(svq.batch_stats) == 2
+            and all(s == "in_index" for s in strategies)
+        )
 
         # (b) warm-restore lane: aggressive EMA termination, spj=1 so the
         # depth difference is observable per segment. Start from a clean
         # state file (the fixture store is session-shared).
         if os.path.exists(state_path):
             os.remove(state_path)
-        conf2 = VectorIndexConf(
-            dim=64, m=16, ef_construction=128, ef_search=128,
-            termination_lower_bound=0.0, termination_factor=1e9,
+        conf = dataclasses.replace(
+            _GATE_HNSW, termination_lower_bound=0.0, termination_factor=1e9,
             segments_per_job=1,
         )
-        svq2 = StreamingVectorQuery(
-            store, f"{work}/wres", index_conf=conf2, k=10, metric="l2",
-            restore_state=True,
-        )
-        svq2.start(_stream(), f"{work}/wckpt").awaitTermination()
+        svq2 = lane("w", conf, restore_state=True)
         stats = sorted(svq2.batch_stats, key=lambda s: s["batch_id"])
         print(f"# streaming_warm_restore: stats={stats}", file=sys.stderr)
-        rows.append((
-            "warm_restore_terminates",
-            bool(
-                len(stats) == 2
-                and stats[0]["restored"] is False
-                and stats[0]["searched_segments"] == n_seg
-                and stats[1]["restored"] is True
-                and stats[1]["searched_segments"] < n_seg
-            ),
-        ))
+        oks["warm_restore_terminates"] = (
+            len(stats) == 2
+            and stats[0]["restored"] is False
+            and stats[0]["searched_segments"] == n_seg
+            and stats[1]["restored"] is True
+            and stats[1]["searched_segments"] < n_seg
+        )
     finally:
         shutil.rmtree(work, ignore_errors=True)
         if os.path.exists(state_path):
             os.remove(state_path)  # leave the shared fixture pristine
-    return spark.createDataFrame(rows, "pred_case string, case_ok boolean")
+    return oks
 
 
 # --- BPE merge-parity gate (r11 VERDICT #5) ----------------------------------
@@ -5624,13 +5323,8 @@ def _ref_bpe_local(words: dict[str, int], num_merges: int):
     return merges
 
 
-_TEXT_BPE_GATE_ORACLE = _values_oracle(
-    [(i, True) for i in range(1, 9)], "merge_rank, merge_ok"
-)
-
-
-@register("text_bpe_gate", _TEXT_BPE_GATE_ORACLE)
-def q_text_bpe_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register_gate("text_bpe_gate", "merge_rank, merge_ok", list(range(1, 9)))
+def q_text_bpe_gate(spark: SparkSession, sf_dir: str) -> dict:
     """Each of the 8 distributed BPE merges (pair, count, order) equals the
     single-node reference replay — operators/bpe.py's Catalyst fold vs a
     pure-Python Sennrich loop over identical word counts."""
@@ -5640,8 +5334,7 @@ def q_text_bpe_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     got = train_bpe(docs, num_merges=8)
     words = {r["word"]: int(r["n"]) for r in word_counts(docs).collect()}
     want = _ref_bpe_local(words, 8)
-    rows = [
-        (i + 1, bool(i < len(got) and i < len(want) and got[i] == want[i]))
+    return {
+        i + 1: i < len(got) and i < len(want) and got[i] == want[i]
         for i in range(8)
-    ]
-    return spark.createDataFrame(rows, "merge_rank int, merge_ok boolean")
+    }

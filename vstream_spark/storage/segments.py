@@ -226,9 +226,6 @@ class SegmentStore:
         later, regardless of subsequent flushes."""
         return self.manifest.snapshot(as_of)
 
-    def _write_manifest(self, segs: list[dict]) -> None:
-        self.manifest.replace(segs)
-
     # -- write path ----------------------------------------------------------
 
     def _flush_stats(self, vectors: DataFrame):
