@@ -1,13 +1,13 @@
 """IvfIndex: the coarse-quantized flat segment artifact (C3/C4 scale path).
 
-Same worker contract as HnswIndex: min_ts freshness, mark_delete
-tombstones, deterministic build, dumps/loads roundtrip.
+The freshness, tombstone, allowlist and persistence contract it shares
+with the other kinds is tested in test_index_contract.py.
 """
 
 import numpy as np
 import pytest
 
-from vstream_spark.index.ivf import IvfIndex, build_ivf
+from vstream_spark.index.ivf import build_ivf
 
 
 def _data(n, dim=16, seed=1):
@@ -62,37 +62,6 @@ def test_deterministic_artifact_bytes():
     assert a.dumps() == c.dumps()
 
 
-def test_min_ts_and_tombstones():
-    vecs, labels = _data(500)
-    ts = np.arange(500, dtype=np.int64)
-    idx = build_ivf(vecs, labels, ts=ts, nlist=8, nprobe=8)
-    q = vecs[100].astype(np.float64)
-    got, _ = idx.search(q, 10, min_ts=250)
-    assert len(got) and all(idx.ts[idx._by_label[int(lb)]] >= 250 for lb in got)
-    got_all, _ = idx.search(q, 5)
-    assert got_all[0] == 100
-    assert idx.mark_delete(100)
-    assert not idx.mark_delete(10_000)
-    got2, _ = idx.search(q, 5)
-    assert 100 not in got2
-    # per-query min_ts array through search_batch
-    outs = idx.search_batch(np.stack([q, q]), 5, min_ts=np.array([0, 400]))
-    assert len(outs) == 2
-    assert all(idx.ts[idx._by_label[int(lb)]] >= 400 for lb in outs[1][0])
-
-
-def test_save_load_roundtrip():
-    vecs, labels = _data(300)
-    idx = build_ivf(vecs, labels, nlist=8)
-    idx.mark_delete(5)
-    clone = IvfIndex.loads(idx.dumps())
-    q = vecs[7].astype(np.float64)
-    a, da = idx.search(q, 10)
-    b, db = clone.search(q, 10)
-    assert a.tolist() == b.tolist() and da.tolist() == db.tolist()
-    assert 5 not in b
-
-
 def test_empty_and_tiny():
     e = build_ivf(np.zeros((0, 8)), np.empty(0, dtype=np.int64))
     lbs, _ = e.search(np.zeros(8), 5)
@@ -108,11 +77,6 @@ def test_auto_nlist_scales():
     assert idx.nlist == 30  # sqrt(900)
     assert len(idx.offsets) == idx.nlist + 1
     assert idx.offsets[-1] == 900
-
-
-def test_bad_metric():
-    with pytest.raises(ValueError):
-        IvfIndex(8, metric="hamming")
 
 
 def test_ivf_boundary_ties_break_by_label():
@@ -137,26 +101,3 @@ def test_ivf_boundary_ties_break_by_label():
     # top-5 = the 5 smallest labels among the copies (7, 47, 87, ...)
     assert ds.max() < 1e-12 and len(set(ds.tolist())) == 1
     assert got.tolist() == [7, 47, 87, 127, 167]
-
-
-def test_allow_labels_filters_in_index():
-    """In-index attribute filter: disallowed rows never enter the probed
-    cells' distance scan; with nprobe=all the result is exact over the
-    allowed set."""
-    vecs, labels = _data(500)
-    idx = build_ivf(vecs, labels, metric="l2", nlist=8)
-    allow = labels[labels % 5 == 0]
-    rng = np.random.RandomState(3)
-    for q in rng.rand(10, 16).astype(np.float64):
-        # slot mask is over the index's INTERNAL (cell-sorted) row order
-        lbs, ds = idx.search(q, 10, ef_search=8,
-                             allow=np.isin(idx.labels[: idx.n], allow))
-        assert set(lbs) <= set(allow.tolist())
-        assert list(lbs) == _exact_topk(vecs[allow], allow, q, 10)
-    # batch surface builds the slot mask once from labels
-    res = idx.search_batch(vecs[:4].astype(np.float64), 10, ef_search=8,
-                           allow_labels=allow)
-    for j, (lbs, _) in enumerate(res):
-        assert list(lbs) == _exact_topk(
-            vecs[allow], allow, vecs[j].astype(np.float64), 10
-        )

@@ -71,12 +71,15 @@ def test_worker_path_matches_jvm_path(spark, dfs):
 
 
 def test_ivf_probe_recall(spark, dfs):
+    """Per-partition IVF through ``index_conf``: ef_search doubles as nprobe
+    (the worker probes max(ef_search, k) cells), so 10 of 32 cells here."""
+    from vstream_spark.config import VectorIndexConf
+
     vdf, qdf = dfs
     conf = PartitionerConf(kind="kmeans", num_partitions=4, replication_factor=1)
+    iconf = VectorIndexConf(dim=DIM, index_kind="ivf", nlist=32, ef_search=K)
     exact = _result_sets(knn_exact(vdf, qdf, k=K))
-    ann = _result_sets(
-        knn_partitioned_worker(vdf, qdf, conf, k=K, nprobe_centroids=3)
-    )
+    ann = _result_sets(knn_partitioned_worker(vdf, qdf, conf, k=K, index_conf=iconf))
     recalls = [len(ann.get(q, set()) & ids) / K for q, ids in exact.items()]
     assert np.mean(recalls) >= 0.8, f"mean recall {np.mean(recalls):.3f}"
 

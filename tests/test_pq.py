@@ -57,25 +57,6 @@ def test_deterministic_and_order_invariant():
     assert a.dumps() == c.dumps()
 
 
-def test_min_ts_tombstones_and_roundtrip():
-    vecs, labels = _data(800)
-    ts = np.arange(800, dtype=np.int64)
-    idx = build_pq(vecs, labels, ts=ts, m=4)
-    q = vecs[100].astype(np.float64)
-    got, _ = idx.search(q, 10, min_ts=400)
-    assert len(got) and all(idx.ts[idx._by_label[int(lb)]] >= 400 for lb in got)
-    assert idx.search(q, 5)[0][0] == 100  # self is nearest at 256 codes/subspace
-    idx.mark_delete(100)
-    assert 100 not in idx.search(q, 5)[0]
-    clone = PqIndex.loads(idx.dumps())
-    a, da = idx.search(q, 10)
-    b, db = clone.search(q, 10)
-    assert a.tolist() == b.tolist() and da.tolist() == db.tolist()
-    # per-query min_ts arrays via search_batch
-    outs = idx.search_batch(np.stack([q, q]), 5, min_ts=np.array([0, 700]))
-    assert all(idx.ts[idx._by_label[int(lb)]] >= 700 for lb in outs[1][0])
-
-
 def test_tiny_and_invalid():
     one = build_pq(np.ones((1, 8)), np.array([3], dtype=np.int64), m=4)
     lbs, _ = one.search(np.ones(8), 2)
@@ -84,8 +65,6 @@ def test_tiny_and_invalid():
     assert len(empty.search(np.zeros(8), 3)[0]) == 0
     with pytest.raises(ValueError):
         PqIndex(10, m=4)  # 10 % 4 != 0
-    with pytest.raises(ValueError):
-        PqIndex(8, metric="hamming")
 
 
 def test_segment_store_pq_artifact(spark, tmp_path):
@@ -118,17 +97,3 @@ def test_segment_store_pq_artifact(spark, tmp_path):
     q = spark.createDataFrame([(0, rows[7][1])], "qid long, emb array<float>")
     got = SegmentSearcher(st, conf).search(q, k=5, metric="l2")
     assert got["neighbor_id"].iloc[0] == 7  # 256 codes/subspace: self found
-
-
-def test_allow_labels_filters_adc_scan():
-    """In-index attribute filter on the ADC path: the allow mask composes
-    with tombstones before the code gather; only allowed labels return."""
-    vecs, labels = _data(1000)
-    idx = build_pq(vecs, labels, metric="l2", m=4)
-    allow = labels[labels % 4 == 0]
-    idx.mark_delete(8)  # allowed but tombstoned
-    res = idx.search_batch(vecs[:5].astype(np.float64), 10,
-                           allow_labels=allow)
-    for lbs, ds in res:
-        assert set(lbs) <= set(allow.tolist()) - {8}
-        assert list(ds) == sorted(ds)

@@ -299,3 +299,32 @@ def test_upsert_batch_rotated_return_reports_full_flush(spark, tmp_path):
     assert out["min_event_time"] == 0 and out["max_event_time"] == 2490
     assert len(out["segments"]) >= 3
     assert sum(s["count"] for s in out["segments"]) == 250
+
+
+def test_segment_rotation_does_not_over_split(spark, tmp_path):
+    """Rotation buckets are sized with headroom for percentile_approx's
+    rank error: at 40,000 rows and a 2,500-row cap, buckets sized at exactly
+    the cap came out a few rows over it, and the re-split halved each of
+    those (20 segments where 16 hold the rows). The 40,000-row shape is
+    needed: below about 10,000 rows the quantiles are exact."""
+    from pyspark.sql import functions as F
+
+    from vstream_spark.storage.segments import SegmentStore
+
+    n, cap = 40_000, 2_500
+    # 2,000 event times replayed 20 times, each replay 10^9 later
+    rows = spark.range(0, n, 1, 20).select(
+        F.col("id"),
+        F.array(*[F.sin(F.col("id") * (j + 1)).cast("float") for j in range(4)]).alias("emb"),
+        ((F.col("id") % 2000) * 10 + (F.col("id") / 2000).cast("long") * 10**9).alias(
+            "event_time"
+        ),
+        F.lit(10**12).alias("ttl"),
+        F.lit("I").alias("op"),
+    )
+    st = SegmentStore(spark, str(tmp_path / "split"), dim=4, max_rows_per_segment=cap)
+    segs = st.append_batch(rows)
+    counts = [s["count"] for s in segs]
+    assert sum(counts) == n
+    assert max(counts) <= cap, counts
+    assert len(segs) <= -(-n // cap) + 1, counts

@@ -80,9 +80,11 @@ class VectorIndexConf:
             raise ValueError(f"metric must be one of {SUPPORTED_METRICS}, got {self.metric!r}")
         if self.dim <= 0:
             raise ValueError("dim must be positive")
-        if self.index_kind not in ("hnsw", "ivf", "pq", "auto"):
+        from vstream_spark.index import KINDS
+
+        if self.index_kind not in (*KINDS, "auto"):
             raise ValueError(
-                f"index_kind must be 'hnsw', 'ivf', 'pq' or 'auto', got {self.index_kind!r}"
+                f"index_kind must be one of {sorted(KINDS)} or 'auto', got {self.index_kind!r}"
             )
         if self.segments_per_job < 1:
             raise ValueError("segments_per_job must be >= 1")

@@ -1,11 +1,41 @@
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 import numpy as np
 
 from vstream_spark.config import VectorIndexConf
-from vstream_spark.index.hnsw import HnswIndex
+from vstream_spark.index.base import SlotIndex
+from vstream_spark.index.hnsw import HnswIndex, build_index
+from vstream_spark.index.ivf import IvfIndex, build_ivf
+from vstream_spark.index.pq import PqIndex, build_pq
 
-__all__ = ["HnswIndex", "build_from_conf", "resolve_index_kind"]
+__all__ = ["HnswIndex", "KINDS", "SlotIndex", "build_from_conf", "resolve_index_kind"]
+
+
+class Kind(NamedTuple):
+    """One index kind: its class, whose ``loads`` reads the kind's
+    artifacts, and its build ``(vecs, ids, conf, metric, ts) -> index``
+    with the conf's parameters."""
+
+    cls: type[SlotIndex]
+    build: Callable
+
+
+# The one place a kind name maps to code: segment sidecars are named by
+# kind, the searcher loads them through ``cls`` and every build (segment
+# artifacts, the partitioned worker) goes through ``build``.
+KINDS = {
+    "hnsw": Kind(HnswIndex, lambda vecs, ids, conf, metric, ts: build_index(
+        vecs, ids, ts=ts, metric=metric, M=conf.m, ef_construction=conf.ef_construction
+    )),
+    "ivf": Kind(IvfIndex, lambda vecs, ids, conf, metric, ts: build_ivf(
+        vecs, ids, ts=ts, metric=metric, nlist=conf.nlist, nprobe=conf.nprobe
+    )),
+    "pq": Kind(PqIndex, lambda vecs, ids, conf, metric, ts: build_pq(
+        vecs, ids, ts=ts, metric=metric, m=conf.pq_m, nbits=conf.pq_nbits
+    )),
+}
 
 
 def resolve_index_kind(conf: VectorIndexConf, n: int) -> str:
@@ -24,22 +54,9 @@ def build_from_conf(
     metric: str,
     ts: np.ndarray | None = None,
 ):
-    """Build the index ``conf`` names over one shard — the single hnsw /
-    ivf / pq dispatch behind segment artifacts and the partitioned worker.
-    Returns ``(resolved_kind, index)``."""
-    from vstream_spark.index.hnsw import build_index
-    from vstream_spark.index.ivf import build_ivf
-    from vstream_spark.index.pq import build_pq
-
+    """Build the index ``conf`` names over one shard — behind segment
+    artifacts and the partitioned worker. Returns ``(resolved_kind, index)``."""
     vecs = np.asarray(vecs, dtype=np.float32)
     ids = np.asarray(ids, dtype=np.int64)
     kind = resolve_index_kind(conf, len(ids))
-    if kind == "ivf":
-        idx = build_ivf(vecs, ids, ts=ts, metric=metric, nlist=conf.nlist, nprobe=conf.nprobe)
-    elif kind == "pq":
-        idx = build_pq(vecs, ids, ts=ts, metric=metric, m=conf.pq_m, nbits=conf.pq_nbits)
-    else:
-        idx = build_index(
-            vecs, ids, ts=ts, metric=metric, M=conf.m, ef_construction=conf.ef_construction
-        )
-    return kind, idx
+    return kind, KINDS[kind].build(vecs, ids, conf, metric, ts)

@@ -23,10 +23,10 @@ graph walks (like hnswlib's filter functor) but never appear in results.
 from __future__ import annotations
 
 import heapq
-import io
-import pickle
 
 import numpy as np
+
+from vstream_spark.index.base import SlotIndex
 
 
 def _l2(vecs: np.ndarray, q: np.ndarray) -> np.ndarray:
@@ -58,28 +58,13 @@ def _level_of(label: int, seed: int, m_l: float) -> int:
     return int(-np.log(u) * m_l)
 
 
-_TS_MISSING = object()  # get_ts sentinel: "no default given"
-
-
-def _as_label_array(allow_labels) -> np.ndarray:
-    """Allowlist in any shape (ndarray / list / set) -> int64 array without
-    a Python-object round trip for the common ndarray case."""
-    if isinstance(allow_labels, np.ndarray):
-        return allow_labels.astype(np.int64, copy=False)
-    if isinstance(allow_labels, (set, frozenset)):
-        return np.fromiter(allow_labels, dtype=np.int64, count=len(allow_labels))
-    return np.asarray(list(allow_labels), dtype=np.int64)
-
-
-def allow_mask(labels: np.ndarray, allow_labels) -> np.ndarray:
-    """Label collection -> slot-level bool mask over ``labels`` — THE
-    shared allowlist-mask builder for every index kind (hnsw/ivf/pq), so
-    dtype/shape handling lives once."""
-    return np.isin(labels, _as_label_array(allow_labels))
-
-
-class HnswIndex:
+class HnswIndex(SlotIndex):
     """Hierarchical navigable small-world graph over float32 vectors."""
+
+    _CTOR = ("dim", "metric", "M", "ef_construction", "seed")
+    _STATE = ("vecs", "labels", "ts", "deleted", "links", "entry", "max_level")
+    _SLOT_ARRAYS = ("vecs", "labels", "ts", "deleted")
+    _AT_REST = {"vecs": np.float32}  # compact artifact
 
     def __init__(
         self,
@@ -90,10 +75,7 @@ class HnswIndex:
         seed: int = 42,
         capacity: int = 1024,
     ):
-        if metric not in _DISTS:
-            raise ValueError(f"metric must be one of {sorted(_DISTS)}")
-        self.dim = dim
-        self.metric = metric
+        super().__init__(dim, metric, capacity)
         self.M = M
         self.M0 = 2 * M
         self.ef_construction = ef_construction
@@ -102,14 +84,9 @@ class HnswIndex:
         self._dist = _DISTS[metric]
         # float64 storage: distance kernels run without per-call astype
         self.vecs = np.empty((capacity, dim), dtype=np.float64)
-        self.labels = np.empty(capacity, dtype=np.int64)
-        self.ts = np.empty(capacity, dtype=np.int64)
-        self.deleted = np.zeros(capacity, dtype=bool)
-        self.n = 0
         self.links: list[list[list[int]]] = []  # node -> level -> neighbor ids
         self.entry: int = -1
         self.max_level: int = -1
-        self._by_label: dict[int, int] = {}
         # packed level-0 adjacency (lazy; rebuilt after mutations) — lets the
         # beam search gather/filter neighbors in numpy instead of Python sets
         self._packed: tuple[np.ndarray, np.ndarray] | None = None
@@ -121,7 +98,7 @@ class HnswIndex:
         if self.n + need <= cap:
             return
         new = max(cap * 2, self.n + need)
-        for name in ("vecs", "labels", "ts", "deleted"):
+        for name in self._SLOT_ARRAYS:
             arr = getattr(self, name)
             grown = np.zeros((new,) + arr.shape[1:], dtype=arr.dtype)
             grown[: self.n] = arr[: self.n]
@@ -180,25 +157,6 @@ class HnswIndex:
             ep = chosen[0] if chosen else ep
         if level > self.max_level:
             self.entry, self.max_level = i, level
-
-    def mark_delete(self, label: int) -> bool:
-        """Tombstone a label (hnswlib markDelete analog). The node keeps
-        routing traffic; it is filtered from results."""
-        i = self._by_label.get(label)
-        if i is None:
-            return False
-        self.deleted[i] = True
-        return True
-
-    def get_ts(self, label: int, default=_TS_MISSING):
-        """Event-time of a label.
-        Returns ``default`` for unknown labels when given, else KeyError."""
-        slot = self._by_label.get(int(label))
-        if slot is None:
-            if default is _TS_MISSING:
-                raise KeyError(label)
-            return default
-        return int(self.ts[slot])
 
     # -- search ---------------------------------------------------------------
 
@@ -438,91 +396,16 @@ class HnswIndex:
             np.asarray([d for d, _ in ok], dtype=np.float64),
         )
 
-    def _allow_mask(self, allow_labels) -> np.ndarray:
-        """Label collection -> slot-level bool mask (shared batch helper)."""
-        return allow_mask(self.labels[: self.n], allow_labels)
-
-    def search_batch(
-        self,
-        qmat: np.ndarray,
-        k: int,
-        ef_search: int | None = None,
-        min_ts=None,
-        allow_labels=None,
-        ts_in_traversal: bool = False,
-    ):
-        """Batched search: (qids-aligned) lists of label/distance arrays.
-        min_ts may be a scalar or a per-query array (per-query TTL);
-        allow_labels (optional) is a label collection applied in-traversal
-        to every query in the batch (mask built once); ts_in_traversal
-        moves the freshness bound into the walk as well (FilterSeqTs).
-        The composed eligibility mask is hoisted out of the per-query loop
-        whenever min_ts is query-invariant (scalar or None) — three O(n)
-        boolean passes per BATCH, not per query."""
-        allow = self._allow_mask(allow_labels) if allow_labels is not None else None
-        per_query_ts = min_ts is not None and not np.isscalar(min_ts)
-        eligible = (
-            self._eligibility(
+    def _batch_kwargs(self, min_ts, allow, ts_in_traversal: bool) -> dict:
+        """The composed eligibility mask is hoisted out of the per-query
+        loop whenever min_ts is query-invariant (scalar or None) — three
+        O(n) boolean passes per BATCH, not per query."""
+        eligible = None
+        if not np.ndim(min_ts):
+            eligible = self._eligibility(
                 None if min_ts is None else int(min_ts), allow, ts_in_traversal
             )
-            if not per_query_ts
-            else None
-        )
-        out = []
-        for j in range(qmat.shape[0]):
-            mt = None
-            if min_ts is not None:
-                mt = int(min_ts) if np.isscalar(min_ts) else int(min_ts[j])
-            out.append(
-                self.search(
-                    qmat[j], k, ef_search, mt, allow=allow,
-                    ts_in_traversal=ts_in_traversal, eligible=eligible,
-                )
-            )
-        return out
-
-    # -- persistence (C3/C4 analog: segment index artifact) -------------------
-
-    def dumps(self) -> bytes:
-        buf = io.BytesIO()
-        pickle.dump(
-            {
-                "dim": self.dim,
-                "metric": self.metric,
-                "M": self.M,
-                "ef_construction": self.ef_construction,
-                "seed": self.seed,
-                "vecs": self.vecs[: self.n].astype(np.float32),  # compact artifact
-                "labels": self.labels[: self.n].copy(),
-                "ts": self.ts[: self.n].copy(),
-                "deleted": self.deleted[: self.n].copy(),
-                "links": self.links,
-                "entry": self.entry,
-                "max_level": self.max_level,
-            },
-            buf,
-            protocol=4,
-        )
-        return buf.getvalue()
-
-    @classmethod
-    def loads(cls, data: bytes) -> "HnswIndex":
-        d = pickle.loads(data)
-        idx = cls(
-            d["dim"], d["metric"], d["M"], d["ef_construction"], d["seed"],
-            capacity=max(1, len(d["labels"])),
-        )
-        n = len(d["labels"])
-        idx.vecs[:n] = d["vecs"]
-        idx.labels[:n] = d["labels"]
-        idx.ts[:n] = d["ts"]
-        idx.deleted[:n] = d["deleted"]
-        idx.n = n
-        idx.links = d["links"]
-        idx.entry = d["entry"]
-        idx.max_level = d["max_level"]
-        idx._by_label = {int(lb): i for i, lb in enumerate(d["labels"])}
-        return idx
+        return {"ts_in_traversal": ts_in_traversal, "eligible": eligible}
 
 
 _BULK_THRESHOLD = 2048
@@ -720,8 +603,7 @@ def build_index_bulk(
     idx.vecs[:n] = vecs
     idx.labels[:n] = labels
     idx.ts[:n] = ts
-    idx.n = n
-    idx._by_label = {int(lb): i for i, lb in enumerate(labels)}
+    idx._map_labels()
     levels = np.array(
         [_level_of(int(lb), seed, idx.m_l) for lb in labels], dtype=np.int64
     )

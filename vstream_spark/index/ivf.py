@@ -21,14 +21,10 @@ is a slice + one matmul — cache-friendly and allocation-free.
 
 from __future__ import annotations
 
-import io
-import pickle
-
 import numpy as np
 
-
+from vstream_spark.index.base import SlotIndex
 from vstream_spark.index.hnsw import _DISTS
-from vstream_spark.index.hnsw import _TS_MISSING
 
 
 def _pairwise(q: np.ndarray, vecs: np.ndarray, metric: str) -> np.ndarray:
@@ -115,31 +111,21 @@ def _kmeans(
     return centroids.astype(np.float64)
 
 
-class IvfIndex:
-    """Coarse-quantized flat index over float64 vectors.
+class IvfIndex(SlotIndex):
+    """Coarse-quantized flat index over float64 vectors. ``ef_search`` in
+    the search signatures is interpreted as ``nprobe``."""
 
-    Exposes the same worker surface as ``HnswIndex`` (``search``,
-    ``search_batch``, ``mark_delete``, ``ts``, ``_by_label``, ``dumps`` /
-    ``loads``) so ``SegmentSearcher`` treats both kinds interchangeably.
-    ``ef_search`` in the search signatures is interpreted as ``nprobe``.
-    """
+    _CTOR = ("dim", "metric", "nlist", "nprobe")
+    _STATE = ("centroids", "vecs", "labels", "ts", "deleted", "offsets")
 
     def __init__(self, dim: int, metric: str = "l2", nlist: int = 64, nprobe: int = 8):
-        if metric not in _DISTS:
-            raise ValueError(f"metric must be one of {sorted(_DISTS)}")
-        self.dim = dim
-        self.metric = metric
+        super().__init__(dim, metric)
         self.nlist = nlist
         self.nprobe = nprobe
         self.centroids = np.empty((0, dim), dtype=np.float64)
         # rows sorted by (cell, label); offsets[c]:offsets[c+1] slices cell c
         self.vecs = np.empty((0, dim), dtype=np.float64)
-        self.labels = np.empty(0, dtype=np.int64)
-        self.ts = np.empty(0, dtype=np.int64)
-        self.deleted = np.zeros(0, dtype=bool)
         self.offsets = np.zeros(nlist + 1, dtype=np.int64)
-        self.n = 0
-        self._by_label: dict[int, int] = {}
 
     # -- search ---------------------------------------------------------------
 
@@ -206,85 +192,6 @@ class IvfIndex:
         top = cand[order]
         return self.labels[idx[top]], ds[top]
 
-    def search_batch(
-        self, qmat: np.ndarray, k: int, ef_search=None, min_ts=None,
-        allow_labels=None, ts_in_traversal: bool = False,
-    ):
-        """Batched search; min_ts may be scalar or per-query array.
-        allow_labels (optional label collection) applies in-index to every
-        query in the batch (slot mask built once). ``ts_in_traversal`` is
-        accepted for worker-surface parity and ignored: the flat cell scan
-        ALREADY filters min_ts before candidate selection, so it can never
-        under-fill k the way a post-hoc graph filter can."""
-        allow = None
-        if allow_labels is not None:
-            from vstream_spark.index.hnsw import allow_mask
-
-            allow = allow_mask(self.labels[: self.n], allow_labels)
-        out = []
-        for j in range(qmat.shape[0]):
-            mt = None
-            if min_ts is not None:
-                mt = int(min_ts[j]) if np.ndim(min_ts) else int(min_ts)
-            out.append(self.search(qmat[j], k, ef_search, mt, allow=allow))
-        return out
-
-    # -- mutation -------------------------------------------------------------
-
-    def mark_delete(self, label: int) -> bool:
-        i = self._by_label.get(label)
-        if i is None:
-            return False
-        self.deleted[i] = True
-        return True
-
-    def get_ts(self, label: int, default=_TS_MISSING):
-        """Event-time of a label (neutral accessor shared across index
-        kinds, so segment call sites need no layout-specific poking).
-        Returns ``default`` for unknown labels when given, else KeyError."""
-        slot = self._by_label.get(int(label))
-        if slot is None:
-            if default is _TS_MISSING:
-                raise KeyError(label)
-            return default
-        return int(self.ts[slot])
-
-    # -- persistence ----------------------------------------------------------
-
-    def dumps(self) -> bytes:
-        buf = io.BytesIO()
-        pickle.dump(
-            {
-                "dim": self.dim,
-                "metric": self.metric,
-                "nlist": self.nlist,
-                "nprobe": self.nprobe,
-                "centroids": self.centroids,
-                "vecs": self.vecs,
-                "labels": self.labels,
-                "ts": self.ts,
-                "deleted": self.deleted,
-                "offsets": self.offsets,
-            },
-            buf,
-            protocol=4,
-        )
-        return buf.getvalue()
-
-    @classmethod
-    def loads(cls, data: bytes) -> "IvfIndex":
-        d = pickle.loads(data)
-        idx = cls(d["dim"], d["metric"], d["nlist"], d["nprobe"])
-        idx.centroids = d["centroids"]
-        idx.vecs = d["vecs"]
-        idx.labels = d["labels"]
-        idx.ts = d["ts"]
-        idx.deleted = d["deleted"]
-        idx.offsets = d["offsets"]
-        idx.n = len(idx.labels)
-        idx._by_label = {int(lb): i for i, lb in enumerate(idx.labels)}
-        return idx
-
 
 def build_ivf(
     vecs: np.ndarray,
@@ -331,6 +238,5 @@ def build_ivf(
     idx.offsets = np.concatenate(
         ([0], np.cumsum(np.bincount(assign, minlength=nlist)))
     ).astype(np.int64)
-    idx.n = n
-    idx._by_label = {int(lb): i for i, lb in enumerate(idx.labels)}
+    idx._map_labels()
     return idx

@@ -8,9 +8,7 @@ runs by Asymmetric Distance Computation — one (m, 256) query table, then a
 pure gather+sum over the uint8 code matrix. No float vectors are kept at
 query time.
 
-Same worker contract as HnswIndex/IvfIndex (``search``, ``search_batch``,
-``mark_delete``, ``ts``, ``_by_label``, ``dumps``/``loads``); the
-``ef_search`` knob is ignored (ADC always scans every live code — still
+The ``ef_search`` knob is ignored (ADC always scans every live code — still
 ~100x less memory traffic than a float scan). Deterministic: per-subspace
 k-means uses the seeded Lloyd from ``index.ivf``; codes and codebooks are
 byte-stable for a given input set.
@@ -22,30 +20,24 @@ cos_dist = ||u - v||^2 / 2.
 
 from __future__ import annotations
 
-import io
-import pickle
-
 import numpy as np
 
-
+from vstream_spark.index.base import SlotIndex
 from vstream_spark.index.ivf import _kmeans
-from vstream_spark.index.hnsw import _TS_MISSING
-
-_METRICS = ("l2", "ip", "cosine")
 
 
-class PqIndex:
+class PqIndex(SlotIndex):
     """ADC search over uint8 product codes."""
 
+    _CTOR = ("dim", "metric", "m", "nbits")
+    _STATE = ("codebooks", "codes", "labels", "ts", "deleted")
+
     def __init__(self, dim: int, metric: str = "l2", m: int = 8, nbits: int = 8):
-        if metric not in _METRICS:
-            raise ValueError(f"metric must be one of {sorted(_METRICS)}")
+        super().__init__(dim, metric)
         if dim % m != 0:
             raise ValueError(f"dim {dim} not divisible by m {m} subvectors")
         if not 1 <= nbits <= 8:
             raise ValueError("nbits must be in [1, 8]")
-        self.dim = dim
-        self.metric = metric
         self.m = m
         self.nbits = nbits
         self.ksub = 1 << nbits
@@ -53,11 +45,6 @@ class PqIndex:
         # (m, ksub, dsub) per-subspace centroids
         self.codebooks = np.zeros((m, self.ksub, self.dsub), dtype=np.float32)
         self.codes = np.empty((0, m), dtype=np.uint8)
-        self.labels = np.empty(0, dtype=np.int64)
-        self.ts = np.empty(0, dtype=np.int64)
-        self.deleted = np.zeros(0, dtype=bool)
-        self.n = 0
-        self._by_label: dict[int, int] = {}
 
     # -- search ---------------------------------------------------------------
 
@@ -104,74 +91,6 @@ class PqIndex:
         order = np.lexsort((self.labels[idx[top]], ds[top]))
         top = top[order]
         return self.labels[idx[top]], ds[top].astype(np.float64)
-
-    def search_batch(
-        self, qmat: np.ndarray, k: int, ef_search=None, min_ts=None,
-        allow_labels=None, ts_in_traversal: bool = False,
-    ):
-        # ts_in_traversal accepted for worker-surface parity, ignored: the
-        # ADC scan already filters min_ts before top-k selection
-        allow = None
-        if allow_labels is not None:
-            from vstream_spark.index.hnsw import allow_mask
-
-            allow = allow_mask(self.labels[: self.n], allow_labels)
-        out = []
-        for j in range(qmat.shape[0]):
-            mt = None
-            if min_ts is not None:
-                mt = int(min_ts[j]) if np.ndim(min_ts) else int(min_ts)
-            out.append(self.search(qmat[j], k, ef_search, mt, allow=allow))
-        return out
-
-    # -- mutation -------------------------------------------------------------
-
-    def mark_delete(self, label: int) -> bool:
-        i = self._by_label.get(label)
-        if i is None:
-            return False
-        self.deleted[i] = True
-        return True
-
-    def get_ts(self, label: int, default=_TS_MISSING):
-        """Event-time of a label (neutral accessor shared across index
-        kinds, so segment call sites need no layout-specific poking).
-        Returns ``default`` for unknown labels when given, else KeyError."""
-        slot = self._by_label.get(int(label))
-        if slot is None:
-            if default is _TS_MISSING:
-                raise KeyError(label)
-            return default
-        return int(self.ts[slot])
-
-    # -- persistence ----------------------------------------------------------
-
-    def dumps(self) -> bytes:
-        buf = io.BytesIO()
-        pickle.dump(
-            {
-                "dim": self.dim, "metric": self.metric, "m": self.m,
-                "nbits": self.nbits, "codebooks": self.codebooks,
-                "codes": self.codes, "labels": self.labels, "ts": self.ts,
-                "deleted": self.deleted,
-            },
-            buf,
-            protocol=4,
-        )
-        return buf.getvalue()
-
-    @classmethod
-    def loads(cls, data: bytes) -> "PqIndex":
-        d = pickle.loads(data)
-        idx = cls(d["dim"], d["metric"], d["m"], d["nbits"])
-        idx.codebooks = d["codebooks"]
-        idx.codes = d["codes"]
-        idx.labels = d["labels"]
-        idx.ts = d["ts"]
-        idx.deleted = d["deleted"]
-        idx.n = len(idx.labels)
-        idx._by_label = {int(lb): i for i, lb in enumerate(idx.labels)}
-        return idx
 
     def memory_bytes(self) -> int:
         """Code storage only (the float vectors are NOT retained)."""
@@ -225,6 +144,5 @@ def build_pq(
     idx.labels = labels
     idx.ts = ts
     idx.deleted = np.zeros(n, dtype=bool)
-    idx.n = n
-    idx._by_label = {int(lb): i for i, lb in enumerate(labels)}
+    idx._map_labels()
     return idx

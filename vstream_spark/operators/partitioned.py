@@ -18,9 +18,10 @@ Two search paths:
 
 * **numpy worker path** (``knn_partitioned_worker``): cogrouped
   ``applyInPandas`` — one Arrow batch per partition holding its vector shard
-  and routed queries; vectorized brute-force (or IVF) top-k inside. This is
-  the seam where a real graph index (HNSW) plugs in per-partition; at 100 TB
-  the shard is index-backed and only (qid, id, dist) rows leave the executor.
+  and routed queries; vectorized brute-force top-k inside, or with
+  ``index_conf`` a per-partition index of any kind (``index.KINDS``); at
+  100 TB the shard is index-backed and only (qid, id, dist) rows leave the
+  executor.
 
 The merge is the window top-k of operators.knn.topk — ascending distance, id
 tiebreak, dedup by id (replicated data under k1>1 families produces duplicate
@@ -151,7 +152,6 @@ def knn_partitioned_worker(
     k: int | None = 10,
     metric: str = "l2",
     honor_deletes: bool = False,
-    nprobe_centroids: int | None = None,
     index_conf: "VectorIndexConf | None" = None,
 ) -> DataFrame:
     """Cogrouped-pandas per-partition worker (the W1-W5 analog).
@@ -161,11 +161,9 @@ def knn_partitioned_worker(
     ``k=None`` uses each query's own ``k`` column (per-query k, the
     reference's per-query search option): workers search at the group's
     max k and the global merge trims each query to its own.
-    ``nprobe_centroids``: if set, an IVF coarse quantizer is built per
-    partition (kmeans-lite) and only the nearest ``nprobe_centroids`` cells
-    are scanned — the scale path for big shards. ``index_conf``: if set, a
-    per-partition index (kind per ``index_conf.index_kind``) is built and
-    searched with ef_search — the reference's W1/W5 worker structure
+    ``index_conf``: if set, a per-partition index (kind per
+    ``index_conf.index_kind``) is built and searched with ef_search — the
+    reference's W1/W5 worker structure
     (HnswLibKeyedProcessFunction.java:19-101).
 
     Per-query search options travel as QUERY COLUMNS (the reference attaches
@@ -239,9 +237,7 @@ def knn_partitioned_worker(
                 out_dist.extend(ds)
         else:
             kk = int(qdf["k"].max()) if per_query_k else k
-            out_qid, out_id, out_dist = _local_topk(
-                vmat, qmat, vids, qids, kk, metric, nprobe_centroids
-            )
+            out_qid, out_id, out_dist = _local_topk(vmat, qmat, vids, qids, kk, metric)
         out = pd.DataFrame({"qid": out_qid, "neighbor_id": out_id, "distance": out_dist})
         if per_query_k:
             kmap = dict(zip(qdf["qid"].astype("int64"), qdf["k"].astype("int64")))
@@ -295,22 +291,10 @@ def _topk_rows(dist_row: np.ndarray, vids: np.ndarray, k: int):
     return idx
 
 
-def _local_topk(vmat, qmat, vids, qids, k, metric, nprobe):
+def _local_topk(vmat, qmat, vids, qids, k, metric):
     out_qid: list[int] = []
     out_id: list[int] = []
     out_dist: list[float] = []
-    if nprobe and len(vmat) > 4 * nprobe:
-        cells, centroids = _ivf_assign(vmat, nprobe)
-        qc = _pairwise_dist(centroids, qmat, "l2")  # (Q, C)
-        for qi in range(len(qmat)):
-            probe = np.argsort(qc[qi])[:nprobe]
-            cand = np.concatenate([cells[c] for c in probe])
-            d = _pairwise_dist(vmat[cand], qmat[qi : qi + 1], metric)[0]
-            sel = _topk_rows(d, vids[cand], k)
-            out_qid.extend([qids[qi]] * len(sel))
-            out_id.extend(vids[cand][sel])
-            out_dist.extend(d[sel])
-        return out_qid, out_id, out_dist
     dmat = _pairwise_dist(vmat, qmat, metric)
     for qi in range(len(qmat)):
         sel = _topk_rows(dmat[qi], vids, k)
@@ -318,25 +302,6 @@ def _local_topk(vmat, qmat, vids, qids, k, metric, nprobe):
         out_id.extend(vids[sel])
         out_dist.extend(dmat[qi][sel])
     return out_qid, out_id, out_dist
-
-
-def _ivf_assign(vmat: np.ndarray, nprobe: int, iters: int = 5, seed: int = 42):
-    """kmeans-lite coarse quantizer: ~sqrt(N) centroids, deterministic."""
-    n = len(vmat)
-    ncells = max(nprobe, int(np.sqrt(n)))
-    rng = np.random.RandomState(seed)
-    centroids = vmat[rng.choice(n, size=min(ncells, n), replace=False)]
-    for _ in range(iters):
-        assign = np.argmin(_pairwise_dist(centroids, vmat, "l2"), axis=1)
-        for c in range(len(centroids)):
-            members = vmat[assign == c]
-            if len(members):
-                centroids[c] = members.mean(axis=0)
-    assign = np.argmin(_pairwise_dist(centroids, vmat, "l2"), axis=1)
-    cells = [np.where(assign == c)[0] for c in range(len(centroids))]
-    cells = [c for c in cells if len(c)]
-    centroids = np.stack([vmat[c].mean(axis=0) for c in cells])
-    return cells, centroids
 
 
 def partial_results_complete(

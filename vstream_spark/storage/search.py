@@ -58,7 +58,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from vstream_spark.config import VectorIndexConf
-from vstream_spark.index import resolve_index_kind
+from vstream_spark.index import KINDS, resolve_index_kind
 from vstream_spark.storage.segments import SegmentStore, build_index_object
 
 # executor-process-global index cache: segment id -> index object (O7).
@@ -399,11 +399,6 @@ def _segment_index(seg: dict, conf: VectorIndexConf, metric: str):
     if idx is None:
         import os
 
-        from vstream_spark.index.hnsw import HnswIndex
-        from vstream_spark.index.ivf import IvfIndex
-        from vstream_spark.index.pq import PqIndex
-
-        loader = {"ivf": IvfIndex, "pq": PqIndex}.get(kind, HnswIndex)
         sidecar = os.path.join(seg["path"], f"_{kind}-{metric}.idx")
         if not os.path.exists(sidecar) and kind == "hnsw":
             # legacy manifests recorded the hnsw artifact as index_file
@@ -411,7 +406,7 @@ def _segment_index(seg: dict, conf: VectorIndexConf, metric: str):
         if os.path.exists(sidecar):
             # C4: load the persisted artifact instead of rebuilding
             with open(sidecar, "rb") as f:
-                idx = loader.loads(f.read())
+                idx = KINDS[kind].cls.loads(f.read())
         else:
             # cache-miss rebuild through the SAME pyarrow builder the
             # flush-time sidecar path uses (storage/segments.py) — one
@@ -996,9 +991,7 @@ class SegmentSearcher:
                         "distance": np.concatenate(
                             [np.asarray(ds, dtype=np.float64) for _, ds in res]
                         ),
-                        "neighbor_ts": np.array(
-                            [idx.get_ts(int(lb)) for lb in nids], dtype=np.int64
-                        ),
+                        "neighbor_ts": idx.ts_of(nids),
                         "_seg": seg["id"],
                     }
                 )

@@ -40,6 +40,9 @@ from vstream_spark.index import build_from_conf, resolve_index_kind
 from vstream_spark.storage.manifest import ManifestLog
 
 _META = "segments.json"
+# percentile_approx accuracy of the time-ranged split: each bound it returns
+# lies within n / accuracy ranks of its target over n rows
+_QUANTILE_ACCURACY = 10_000
 
 
 def _dequantize_segment_df(df: DataFrame) -> DataFrame:
@@ -165,12 +168,28 @@ def build_index_object(seg: dict, conf: VectorIndexConf, metric: str):
     kind, idx = build_from_conf(vecs, ids, conf, metric, ts=ts)
     if has_op:
         dels = pdf[pdf["op"] == "D"]
-        for rid, rtime in zip(dels["id"].to_numpy(), dels["event_time"].to_numpy()):
-            # neutral accessor (every index kind), not positional poking
-            t = idx.get_ts(int(rid), None)
-            if t is not None and int(rtime) > t:
-                idx.mark_delete(int(rid))
+        idx.delete_older(dels["id"].to_numpy(), dels["event_time"].to_numpy())
     return kind, idx
+
+
+def _segment_meta(
+    seg_id: str, path: str, n: int, tmin: int, tmax: int, codec: str | None
+) -> dict:
+    """One segment's manifest entry: id, path, row count, event-time range,
+    the attribute zone map (footer-read, no scan) and the codec."""
+    seg = {
+        "id": seg_id,
+        "path": path,
+        "count": int(n),
+        "min_event_time": int(tmin),
+        "max_event_time": int(tmax),
+    }
+    zs = attr_zone_stats(path)
+    if zs:
+        seg["col_stats"] = zs
+    if codec:
+        seg["codec"] = codec
+    return seg
 
 
 class SegmentStore:
@@ -273,18 +292,9 @@ class SegmentStore:
         # zstd stands as the supported path (COVERAGE.md C5).
         vectors = self._encode(vectors)
         vectors.write.mode("errorifexists").option("compression", "zstd").parquet(path)
-        seg = {
-            "id": seg_id,
-            "path": path,
-            "count": int(stats["n"]),
-            "min_event_time": int(stats["tmin"]),
-            "max_event_time": int(stats["tmax"]),
-        }
-        zs = attr_zone_stats(path)
-        if zs:
-            seg["col_stats"] = zs  # attribute zone map (footer-read, no scan)
-        if self.codec:
-            seg["codec"] = self.codec
+        seg = _segment_meta(
+            seg_id, path, stats["n"], stats["tmin"], stats["tmax"], self.codec
+        )
         self.manifest.append(seg)
         return seg
 
@@ -305,17 +315,28 @@ class SegmentStore:
         return vectors
 
     def _write_time_ranged(
-        self, df: DataFrame, n_out: int, cap: int | None, prefix: str
+        self, df: DataFrame, total: int, cap: int, prefix: str
     ) -> list[dict]:
         """Shared time-ranged split writer (flush rotation AND compaction —
-        one implementation so the two paths cannot drift): bucket ``df`` by
-        event-time quantiles, write ALL buckets in ONE partitioned parquet
-        job, then HARD-enforce the row ``cap`` by re-splitting any staged
-        bucket still over it. Returns one ``{path, n, tmin, tmax}`` dict
-        per final bucket, ordered by (tmin, path).
+        one implementation so the two paths cannot drift): bucket the
+        ``total`` rows of ``df`` by event-time quantiles, write ALL buckets
+        in ONE partitioned parquet job, then HARD-enforce the row ``cap`` by
+        re-splitting any staged bucket still over it. Returns one
+        ``{path, n, tmin, tmax}`` dict per final bucket, ordered by
+        (tmin, path).
 
         Why quantiles, not hash: hash-split segments would all carry the
         full time range and defeat C6 TTL pruning forever after.
+
+        Bucket count: ``percentile_approx`` places each bound within
+        ``total / accuracy`` ranks of its target, so a bucket between two
+        bounds can hold up to twice that many rows more than its target.
+        Buckets are sized with that headroom below the cap; sized at
+        exactly the cap, every bucket that drew an upward error crossed it
+        and the re-split below halved it. A flush large enough for the
+        error to eat half the cap sizes buckets at half the cap and leaves
+        the rest to the re-split, rather than asking for ever more
+        quantiles.
 
         Why the re-split: quantile bounds compare with strict ``>``, so
         duplicate timestamps COLLAPSE buckets — a batch stamped with one
@@ -336,12 +357,15 @@ class SegmentStore:
         """
         import shutil
 
+        rank_err = total // _QUANTILE_ACCURACY  # whole ranks within n / accuracy
+        per_bucket = max((cap + 1) // 2, cap - 2 * rank_err)
+        n_out = 1 if total <= cap else -(-total // per_bucket)
         if n_out <= 1:
             bucket = F.lit(0)
         else:
             qs = [i / n_out for i in range(1, n_out)]
             bounds = df.agg(
-                F.percentile_approx("event_time", qs, 10_000).alias("b")
+                F.percentile_approx("event_time", qs, _QUANTILE_ACCURACY).alias("b")
             ).collect()[0]["b"]
             uniq = sorted({int(b) for b in bounds})
             bucket = sum(
@@ -353,7 +377,7 @@ class SegmentStore:
         )
         (
             df.withColumn("sbkt", bucket)
-            .repartition(max(1, n_out), "sbkt")
+            .repartition(n_out, "sbkt")
             .write.option("compression", "zstd")
             .partitionBy("sbkt")
             .parquet(staging)
@@ -383,7 +407,7 @@ class SegmentStore:
         work = _bucket_stats(staging, "sbkt")
         while work:
             path, n, tmin, tmax = work.pop()
-            if cap is None or n <= cap:
+            if n <= cap:
                 parts.append(
                     {"path": path, "n": n, "tmin": tmin, "tmax": tmax}
                 )
@@ -471,22 +495,13 @@ class SegmentStore:
         if n <= cap:
             seg = self.append_segment(vectors, _stats=stats0)
             return [seg] if seg is not None else []
-        n_out = -(-n // cap)
-        parts = self._write_time_ranged(self._encode(vectors), n_out, cap, "flush")
+        parts = self._write_time_ranged(self._encode(vectors), n, cap, "flush")
         segs = []
         for p in parts:
-            seg = {
-                "id": f"seg-{uuid.uuid4().hex[:12]}",
-                "path": p["path"],
-                "count": p["n"],
-                "min_event_time": p["tmin"],
-                "max_event_time": p["tmax"],
-            }
-            zs = attr_zone_stats(p["path"])
-            if zs:
-                seg["col_stats"] = zs
-            if self.codec:
-                seg["codec"] = self.codec
+            seg = _segment_meta(
+                f"seg-{uuid.uuid4().hex[:12]}", p["path"], p["n"], p["tmin"], p["tmax"],
+                self.codec,
+            )
             self.manifest.append(seg)
             segs.append(seg)
         return segs
@@ -723,21 +738,8 @@ class SegmentStore:
             # mixed store (e.g. codec flipped mid-life): normalize to the
             # store's configured codec via the float surface (one recode)
             out_codec = self.codec
-            df = self._read_segments(segs)
-            if out_codec == "int8" and "emb" in df.columns:
-                from vstream_spark.operators.quantize import (
-                    quantize_expr,
-                    scale_expr,
-                )
-
-                others = [c for c in df.columns if c != "emb"]
-                df = df.select(
-                    *others, "emb", scale_expr(F.col("emb")).alias("emb_scale")
-                )
-                _, q = quantize_expr(F.col("emb"), scale=F.col("emb_scale"))
-                df = df.select(*others, "emb_scale", q.alias("emb_q"))
+            df = self._encode(self._read_segments(segs))
         total = df.count()
-        n_out = max(1, -(-total // max_rows_per_segment))
         old_paths = [s["path"] for s in segs]
         old_kinds = {
             os.path.basename(s["index_file"]).split("-")[0].lstrip("_")
@@ -749,22 +751,14 @@ class SegmentStore:
             for s in segs
             if s.get("index_file")
         }
-        parts = self._write_time_ranged(df, n_out, max_rows_per_segment, "compact")
-        new_segs = []
-        for p in parts:
-            seg = {
-                "id": f"seg-compact-{uuid.uuid4().hex[:8]}",
-                "path": p["path"],
-                "count": p["n"],
-                "min_event_time": p["tmin"],
-                "max_event_time": p["tmax"],
-            }
-            zs = attr_zone_stats(p["path"])
-            if zs:
-                seg["col_stats"] = zs
-            if out_codec:
-                seg["codec"] = out_codec
-            new_segs.append(seg)
+        parts = self._write_time_ranged(df, total, max_rows_per_segment, "compact")
+        new_segs = [
+            _segment_meta(
+                f"seg-compact-{uuid.uuid4().hex[:8]}", p["path"], p["n"], p["tmin"],
+                p["tmax"], out_codec,
+            )
+            for p in parts
+        ]
         self.manifest.replace(new_segs)
         # remove old segment data best-effort (local fs; on object stores this
         # is the VACUUM step)
