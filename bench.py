@@ -753,7 +753,9 @@ def main() -> None:
                 spark, tmp + "/segf", max_rows_per_segment=max(1, -(-n_f // 4))
             )
             storef.upsert_batch(bigf)
-            storef.build_segment_indexes(storef.segments(), VectorIndexConf())
+            storef.build_segment_indexes(
+                storef.segments(), VectorIndexConf(index_kind="hnsw")
+            )
             pred = F.col("label") < 30
             iconf_f = VectorIndexConf(
                 metric="l2", index_kind="hnsw", ef_search=128,

@@ -277,10 +277,10 @@ def test_allow_none_path_unchanged():
 
 def test_ts_in_traversal_fills_k_where_post_hoc_underfills():
     """FilterSeqTs parity (hnswlib.h:135-146): with a hard freshness bound
-    leaving few eligible nodes, the legacy post-hoc filter drops stale
-    nodes AFTER they occupied ef result slots — the result can under-fill
-    k. In-traversal ts filtering routes through stale nodes but fills the
-    heap with eligible ones only, returning the exact fresh top-k."""
+    leaving few eligible nodes, a filter applied AFTER the walk drops stale
+    nodes that occupied ef result slots — the result can under-fill k.
+    ``search(min_ts=)`` filters in traversal: stale nodes route but the
+    heap fills with eligible ones only, returning the exact fresh top-k."""
     vecs, labels = _data(n=400)
     ts = np.arange(400, dtype=np.int64)
     idx = build_index(vecs, labels, ts=ts, M=16, ef_construction=128)
@@ -289,10 +289,10 @@ def test_ts_in_traversal_fills_k_where_post_hoc_underfills():
     rng = np.random.RandomState(21)
     underfilled = 0
     for q in rng.rand(20, vecs.shape[1]):
-        legacy, _ = idx.search(q, k, ef_search=ef, min_ts=min_ts)
-        strict, sd = idx.search(
-            q, k, ef_search=ef, min_ts=min_ts, ts_in_traversal=True
-        )
+        # the post-hoc filter: the unbounded walk's ef results, then the bound
+        walk, _ = idx.search(q, ef, ef_search=ef)
+        legacy = [lb for lb in walk if ts[lb] >= min_ts][:k]
+        strict, sd = idx.search(q, k, ef_search=ef, min_ts=min_ts)
         underfilled += len(legacy) < k
         assert len(strict) == k
         assert all(lb >= min_ts for lb in strict)
@@ -305,12 +305,13 @@ def test_ts_in_traversal_fills_k_where_post_hoc_underfills():
 
 
 def test_ts_in_traversal_noop_without_bound():
+    """A bound no node falls below leaves the walk's result as it is."""
     vecs, labels = _data(n=200)
-    idx = build_index(vecs, labels)
+    idx = build_index(vecs, labels, ts=np.arange(200, dtype=np.int64))
     rng = np.random.RandomState(2)
     for q in rng.rand(5, vecs.shape[1]):
         a = idx.search(q, 10, ef_search=64)
-        b = idx.search(q, 10, ef_search=64, ts_in_traversal=True)
+        b = idx.search(q, 10, ef_search=64, min_ts=0)
         assert list(a[0]) == list(b[0]) and list(a[1]) == list(b[1])
 
 

@@ -14,10 +14,12 @@ from vstream_spark.index import KINDS, build_from_conf
 N, DIM = 500, 16
 
 # per kind: its build conf, and the ef_search that makes a search exhaustive
-# (hnsw: a beam over every node; ivf: nprobe = nlist). pq ranks by ADC
-# distances at any ef, so it is never compared with the exact scan.
+# (flat: any, it is exact; hnsw: a beam over every node; ivf: nprobe =
+# nlist). pq ranks by ADC distances at any ef, so it is never compared with
+# the exact scan.
 _KIND = {
-    "hnsw": (VectorIndexConf(dim=DIM), N),
+    "flat": (VectorIndexConf(dim=DIM), 1),
+    "hnsw": (VectorIndexConf(dim=DIM, index_kind="hnsw"), N),
     "ivf": (VectorIndexConf(dim=DIM, index_kind="ivf", nlist=8, nprobe=8), 8),
     "pq": (VectorIndexConf(dim=DIM, index_kind="pq", pq_m=4), None),
 }
@@ -81,21 +83,24 @@ def test_min_ts_and_tombstones(kind, idx):
     assert 100 not in idx.search(q, 5, ef)[0]
 
 
-@pytest.mark.parametrize("ts_in_traversal", [False, True])
-def test_per_query_min_ts_array(kind, idx, ts_in_traversal):
+@pytest.mark.parametrize("tombstoned", [False, True])
+def test_per_query_min_ts_array(kind, idx, tombstoned):
     """Per-query TTL: row j of a batch with a ``min_ts`` array equals a
     one-query batch with the scalar ``min_ts[j]`` (hnsw hoists its
-    eligibility mask only in the scalar case)."""
+    eligibility mask only in the scalar case), on a clean index and on one
+    with tombstones, which no row returns."""
     vecs, _, _ = _data()
+    dead = set(range(0, N, 5)) | {3, 450} if tombstoned else set()
+    for lb in sorted(dead):
+        idx.mark_delete(lb)
     qmat = vecs[[3, 100, 200, 450]].astype(np.float64)
     mts = np.array([0, 150, 400, 490])
-    outs = idx.search_batch(qmat, 5, 16, min_ts=mts, ts_in_traversal=ts_in_traversal)
+    outs = idx.search_batch(qmat, 5, 16, min_ts=mts)
     assert len(outs) == 4
     for j, (lbs, ds) in enumerate(outs):
         assert all(idx.get_ts(lb) >= mts[j] for lb in lbs)
-        ((one_l, one_d),) = idx.search_batch(
-            qmat[j : j + 1], 5, 16, min_ts=int(mts[j]), ts_in_traversal=ts_in_traversal
-        )
+        assert not dead & set(lbs.tolist())
+        ((one_l, one_d),) = idx.search_batch(qmat[j : j + 1], 5, 16, min_ts=int(mts[j]))
         assert lbs.tolist() == one_l.tolist() and ds.tolist() == one_d.tolist()
     assert all(len(lbs) for lbs, _ in outs[:3])
 
@@ -173,3 +178,31 @@ def test_delete_older_matches_mark_delete_loop(kind):
     assert 0 < b.deleted[: b.n].sum() < len(marks)
     assert np.array_equal(a.deleted[: a.n], b.deleted[: b.n])
     assert a.dumps() == b.dumps()
+
+
+@pytest.mark.parametrize("metric", ["l2", "ip", "cosine"])
+def test_flat_is_exact_under_every_filter(metric):
+    """The flat kind is the exact scan: with tombstones, a per-query
+    ``min_ts`` and an allowlist at once, every query of a batch gets the
+    brute-force top-k over the rows that pass all three, in (distance,
+    label) order, and the same labels and distances as a search of that
+    query alone."""
+    from vstream_spark.index.hnsw import _DISTS
+
+    vecs, labels, ts = _data()
+    _, idx = build_from_conf(vecs, labels, VectorIndexConf(dim=DIM, metric=metric), metric, ts=ts)
+    dead = np.arange(0, N, 7)
+    idx.delete_older(dead, ts[dead] + 1)
+    allow = labels[labels % 2 == 0]
+    qmat = np.random.RandomState(5).rand(70, DIM)
+    mts = np.random.RandomState(6).randint(0, N, len(qmat))
+    res = idx.search_batch(qmat, 10, None, mts, allow_labels=allow)
+    mask = idx.allow_mask(allow)
+    for q, mt, (lbs, ds) in zip(qmat, mts, res):
+        keep = (labels % 2 == 0) & (labels % 7 != 0) & (ts >= mt)
+        d = _DISTS[metric](vecs[keep].astype(np.float64), q)
+        order = np.lexsort((labels[keep], d))[:10]
+        assert lbs.tolist() == labels[keep][order].tolist()
+        np.testing.assert_allclose(ds, d[order], rtol=1e-12, atol=1e-12)
+        one_l, one_d = idx.search(q, 10, None, int(mt), allow=mask)
+        assert one_l.tolist() == lbs.tolist() and one_d.tolist() == ds.tolist()

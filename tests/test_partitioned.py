@@ -134,7 +134,7 @@ def test_worker_auto_kind_resolves_by_shard_size(spark):
     """index_kind='auto' in the partitioned worker goes through the shared
     conf-driven builder: with auto_ivf_threshold below the shard size the
     results equal index_kind='ivf' (same nlist/nprobe), above it they equal
-    index_kind='hnsw'."""
+    index_kind='flat', the exact scan."""
     from vstream_spark.config import VectorIndexConf
 
     rng = np.random.RandomState(5)
@@ -146,8 +146,8 @@ def test_worker_auto_kind_resolves_by_shard_size(spark):
     conf = PartitionerConf(kind="simple", num_partitions=2)
 
     def run(**kw):
-        # coarse settings keep both kinds approximate (ef_search doubles as
-        # the IVF nprobe: max(1, k) = 5 of 16 cells)
+        # coarse settings keep ivf approximate (ef_search doubles as the
+        # IVF nprobe: max(1, k) = 5 of 16 cells)
         iconf = VectorIndexConf(
             dim=32, m=4, ef_construction=8, ef_search=1, nlist=16, **kw
         )
@@ -156,10 +156,10 @@ def test_worker_auto_kind_resolves_by_shard_size(spark):
         )
         return sorted((r.qid, r.neighbor_id, r.rank, r.distance) for r in out.collect())
 
-    ivf, hnsw = run(index_kind="ivf"), run(index_kind="hnsw")
-    assert ivf != hnsw  # the two kinds are told apart by their results
+    ivf, flat = run(index_kind="ivf"), run(index_kind="flat")
+    assert ivf != flat  # the two kinds are told apart by their results
     assert run(index_kind="auto", auto_ivf_threshold=50) == ivf
-    assert run(index_kind="auto", auto_ivf_threshold=10_000) == hnsw
+    assert run(index_kind="auto", auto_ivf_threshold=10_000) == flat
 
 
 def test_worker_per_query_k(spark):

@@ -96,5 +96,7 @@ def test_compaction_preserves_codes_exactly(spark, q_store):
 
 
 def test_index_build_over_int8_segment(spark, q_store):
-    (seg,) = q_store.build_segment_indexes(q_store.segments()[:1], VectorIndexConf(dim=8))
+    (seg,) = q_store.build_segment_indexes(
+        q_store.segments()[:1], VectorIndexConf(dim=8, index_kind="hnsw")
+    )
     assert os.path.exists(seg["index_file"])

@@ -74,6 +74,7 @@ def test_early_termination_skips_cold_segments(spark, store):
     # results per query, termination triggers if kth dist <= factor * EMA.
     conf = VectorIndexConf(
         dim=8,
+        index_kind="hnsw",  # indexed segments: one per job at spj=1
         termination_lower_bound=0.0,
         termination_factor=1e9,  # always under threshold once EMA is seeded
         termination_threshold=1.0,
@@ -128,6 +129,7 @@ def test_chunked_termination_checks_per_chunk(spark, tmp_path):
         st.append_segment(spark.createDataFrame(_vec_rows(lo, lo + 50), SCHEMA))
     conf = VectorIndexConf(
         dim=8,
+        index_kind="hnsw",  # flat segments would all share one chunk
         termination_lower_bound=0.0,
         termination_factor=1e9,
         termination_threshold=1.0,
@@ -158,8 +160,8 @@ def test_index_cache_is_lru(spark, store):
         assert _segment_index(segs[0], conf, "l2") is a  # hit refreshes 0
         _segment_index(segs[2], conf, "l2")  # evicts LRU -> 1, keeps hot 0
         keys = set(_INDEX_CACHE)
-        assert f"{segs[0]['id']}:hnsw:l2" in keys  # hot entry retained
-        assert f"{segs[1]['id']}:hnsw:l2" not in keys  # LRU evicted
+        assert f"{segs[0]['id']}:flat:l2" in keys  # hot entry retained
+        assert f"{segs[1]['id']}:flat:l2" not in keys  # LRU evicted
         assert _segment_index(segs[0], conf, "l2") is a  # still the object
     finally:
         search_mod._INDEX_CACHE_MAX = old_max
@@ -176,7 +178,7 @@ def test_index_cache_reused(spark, store):
     a = _segment_index(seg, conf, "l2")
     b = _segment_index(seg, conf, "l2")
     assert a is b  # second call is a cache hit
-    assert f"{seg['id']}:hnsw:l2" in _INDEX_CACHE
+    assert f"{seg['id']}:flat:l2" in _INDEX_CACHE
     c = _segment_index(seg, conf, "cosine")
     assert c is not a  # metric participates in the key
     d = _segment_index(seg, VectorIndexConf(dim=8, index_kind="ivf"), "l2")
@@ -189,7 +191,8 @@ def test_segment_index_sidecar_and_dump(spark, store):
     from vstream_spark.storage.search import _INDEX_CACHE, _segment_index
 
     seg = store.segments()[1]
-    (seg2,) = store.build_segment_indexes([seg], VectorIndexConf(dim=8))
+    conf = VectorIndexConf(dim=8, index_kind="hnsw")
+    (seg2,) = store.build_segment_indexes([seg], conf)
     assert os.path.exists(seg2["index_file"])
     assert os.path.basename(seg2["index_file"]).startswith("_hnsw")
     # manifest records the artifact
@@ -198,7 +201,7 @@ def test_segment_index_sidecar_and_dump(spark, store):
     assert store.read().count() == 300
     # loader prefers the sidecar (fresh cache key -> load path)
     _INDEX_CACHE.clear()
-    idx = _segment_index(seg2, VectorIndexConf(dim=8), "l2")
+    idx = _segment_index(seg2, conf, "l2")
     assert idx.n == seg2["count"]
     # M4 dump lists every id with its segment
     d = store.dump()
@@ -238,23 +241,26 @@ def test_ivf_segment_artifact_and_search(spark, store):
 
 
 def test_auto_kind_selects_by_segment_size(spark, store):
+    import glob
     import os
 
-    from vstream_spark.index.hnsw import HnswIndex
+    from vstream_spark.index.flat import FlatIndex
     from vstream_spark.index.ivf import IvfIndex
     from vstream_spark.storage.search import _INDEX_CACHE, _segment_index
 
     seg = store.segments()[2]
-    # 100-row segment: auto resolves to hnsw above threshold 0 -> ivf
+    # 100-row segment: auto resolves to ivf above the threshold, to flat
+    # (no artifact, searched from its parquet) at or below it
     low = VectorIndexConf(dim=8, index_kind="auto", auto_ivf_threshold=10)
     high = VectorIndexConf(dim=8, index_kind="auto", auto_ivf_threshold=1000)
     (s_ivf,) = store.build_segment_indexes([seg], low)
     assert os.path.basename(s_ivf["index_file"]) == "_ivf-l2.idx"
-    (s_hnsw,) = store.build_segment_indexes([seg], high)
-    assert os.path.basename(s_hnsw["index_file"]) == "_hnsw-l2.idx"
+    (s_flat,) = store.build_segment_indexes([seg], high)
+    assert s_flat == seg
+    assert [os.path.basename(p) for p in glob.glob(seg["path"] + "/_*.idx")] == ["_ivf-l2.idx"]
     _INDEX_CACHE.clear()
     assert isinstance(_segment_index(seg, low, "l2"), IvfIndex)
-    assert isinstance(_segment_index(seg, high, "l2"), HnswIndex)
+    assert isinstance(_segment_index(seg, high, "l2"), FlatIndex)
 
 
 def test_ivf_deletes_and_freshness_through_store(spark, tmp_path):
@@ -342,7 +348,7 @@ def test_parallel_multi_segment_index_build(spark, store):
 
     segs = store.segments()
     assert len(segs) == 3 and not any(s.get("index_file") for s in segs)
-    out = store.build_segment_indexes(segs, VectorIndexConf(dim=8))
+    out = store.build_segment_indexes(segs, VectorIndexConf(dim=8, index_kind="hnsw"))
     assert len(out) == 3
     for s in out:
         assert os.path.exists(s["index_file"]), s
@@ -352,9 +358,9 @@ def test_parallel_multi_segment_index_build(spark, store):
 
     _INDEX_CACHE.clear()
     q = _queries(spark, store)
-    got = SegmentSearcher(store, VectorIndexConf(dim=8, ef_search=64)).search(
-        q, k=5, metric="l2"
-    )
+    got = SegmentSearcher(
+        store, VectorIndexConf(dim=8, index_kind="hnsw", ef_search=64)
+    ).search(q, k=5, metric="l2")
     want = (
         knn_exact(store.read().filter("op = 'I'"), q, k=5, metric="l2")
         .toPandas()
@@ -420,7 +426,8 @@ def test_chunking_leaves_identical_rows_and_state(spark, tmp_path):
     outs, temps = {}, {}
     for spj in (3, 16):
         conf = VectorIndexConf(
-            dim=8, ef_search=256, termination_lower_bound=1.0, segments_per_job=spj
+            dim=8, index_kind="hnsw", ef_search=256, termination_lower_bound=1.0,
+            segments_per_job=spj,
         )
         searcher = SegmentSearcher(st, conf)
         out = searcher.search(q, k=7, metric="l2")
@@ -436,8 +443,8 @@ def test_chunking_leaves_identical_rows_and_state(spark, tmp_path):
     # aggressive termination: each run stops after its first chunk
     for spj in (3, 16):
         conf = VectorIndexConf(
-            dim=8, termination_lower_bound=0.0, termination_factor=1e9,
-            termination_threshold=1.0, segments_per_job=spj,
+            dim=8, index_kind="hnsw", termination_lower_bound=0.0,
+            termination_factor=1e9, termination_threshold=1.0, segments_per_job=spj,
         )
         searcher = SegmentSearcher(st, conf)
         searcher.search(q, k=2)
@@ -460,10 +467,11 @@ def _count_jobs(spark, group, fn):
 
 
 def test_one_job_per_chunk(spark, tmp_path):
-    """Each chunk of segments_per_job segments costs exactly one Spark job:
-    on an 8-segment store with termination off, eight chunks run seven
-    more jobs than one chunk, and a one-chunk search stays within the
-    fixed per-search jobs (query checkpoint, delete markers) plus one."""
+    """Each chunk of segments_per_job indexed segments costs exactly one
+    Spark job: on an 8-segment hnsw store with termination off, eight
+    chunks run four more jobs than four chunks, and a one-chunk search is
+    one job (its query frame needs no checkpoint, and the delete markers
+    are read without Spark)."""
     st = SegmentStore(spark, str(tmp_path / "segjobs"))
     for lo in range(0, 400, 50):
         st.append_segment(spark.createDataFrame(_vec_rows(lo, lo + 50), SCHEMA))
@@ -472,18 +480,19 @@ def test_one_job_per_chunk(spark, tmp_path):
         "qid long, emb array<float>",
     )
     jobs, rows = {}, {}
-    for spj in (1, 8):
+    for spj in (1, 2, 8):
         conf = VectorIndexConf(
-            dim=8, ef_search=64, termination_lower_bound=1.0, segments_per_job=spj
+            dim=8, index_kind="hnsw", ef_search=64, termination_lower_bound=1.0,
+            segments_per_job=spj,
         )
         out, jobs[spj] = _count_jobs(
             spark, f"segjobs-spj{spj}",
             lambda: SegmentSearcher(st, conf).search(q, k=5, metric="l2"),
         )
         rows[spj] = out.values.tolist()
-    assert rows[1] == rows[8]
-    assert jobs[1] - jobs[8] == 7
-    assert jobs[8] <= 5
+    assert rows[1] == rows[2] == rows[8]
+    assert jobs[1] - jobs[2] == 4
+    assert jobs[8] == 1
 
 
 def test_tombstones_across_chunks(spark, tmp_path):
@@ -511,7 +520,10 @@ def test_tombstones_across_chunks(spark, tmp_path):
 
     def run(**term):
         searcher = SegmentSearcher(
-            st, VectorIndexConf(dim=8, ef_search=256, segments_per_job=1, **term)
+            st,
+            VectorIndexConf(
+                dim=8, index_kind="hnsw", ef_search=256, segments_per_job=1, **term
+            ),
         )
         # visit the two insert segments first, the marker segment last
         searcher.temperature = {inserts[0]: 2.0, inserts[1]: 1.0}
@@ -531,3 +543,153 @@ def test_tombstones_across_chunks(spark, tmp_path):
     )
     assert visited == inserts
     assert 3 not in ids and 5 in ids
+
+
+def test_flat_segments_need_no_artifact_and_one_job(spark, tmp_path):
+    """Under the default 'auto' a small segment is flat: the flush-time
+    build writes no sidecar and launches no job, and a search over eight
+    flat segments is ONE job whatever segments_per_job says, with the
+    rows of an eight-job hnsw search at full depth."""
+    import glob
+
+    st = SegmentStore(spark, str(tmp_path / "segflat"))
+    for lo in range(0, 400, 50):
+        st.append_segment(spark.createDataFrame(_vec_rows(lo, lo + 50), SCHEMA))
+    conf = VectorIndexConf(dim=8, termination_lower_bound=1.0, segments_per_job=1)
+    segs, build_jobs = _count_jobs(
+        spark, "flat-build", lambda: st.build_segment_indexes(st.segments(), conf)
+    )
+    assert build_jobs == 0 and segs == st.segments()
+    assert not any(s.get("index_file") for s in segs)
+    assert not any(glob.glob(s["path"] + "/_*.idx") for s in segs)
+    q = spark.createDataFrame(
+        [(int(i), r[1]) for i, r in enumerate(_vec_rows(0, 400)) if r[0] % 37 == 0],
+        "qid long, emb array<float>",
+    )
+    searcher = SegmentSearcher(st, conf)
+    out, jobs = _count_jobs(spark, "flat-search", lambda: searcher.search(q, k=5))
+    assert jobs == 1 and len(searcher.last_searched_ids) == 8
+    hnsw = VectorIndexConf(
+        dim=8, index_kind="hnsw", ef_search=400, termination_lower_bound=1.0,
+        segments_per_job=1,
+    )
+    want = SegmentSearcher(st, hnsw).search(q, k=5)
+    assert out[["qid", "neighbor_id", "rank"]].values.tolist() == (
+        want[["qid", "neighbor_id", "rank"]].values.tolist()
+    )
+
+
+def test_flat_search_matches_knn_exact_row_for_row(spark, tmp_path):
+    """A search over flat segments is the exact answer: with delete markers
+    in a later segment (one strictly newer than its insert, one at the same
+    time, which keeps it) and a freshness bound, every row equals
+    ``knn_exact`` over the visible snapshot, and so it does with an
+    executor-side allowlist threaded into the scan (in_index)."""
+    from pyspark.sql import functions as F
+
+    from vstream_spark.operators.knn import knn_exact
+
+    st = SegmentStore(spark, str(tmp_path / "segexact"))
+    for lo in (0, 60, 120):
+        st.append_segment(spark.createDataFrame(_vec_rows(lo, lo + 60), SCHEMA))
+    dels = [(i, None, i * 100 + 1, 10**12, "D") for i in range(40, 180, 9)]
+    dels.append((50, None, 5000, 10**12, "D"))  # same time as its insert
+    st.append_segment(spark.createDataFrame(dels, SCHEMA))
+    q = spark.createDataFrame(
+        [(int(i), r[1]) for i, r in enumerate(_vec_rows(0, 180, seed=7)) if i % 15 == 0],
+        "qid long, emb array<float>",
+    )
+    searcher = SegmentSearcher(st, VectorIndexConf(dim=8))
+    got = searcher.search(q, k=7, min_event_time=3000)
+    vis = searcher.visible(min_event_time=3000).select("id", "emb")
+    want = knn_exact(vis, q, k=7).toPandas().sort_values(["qid", "rank"])
+    assert got[["qid", "neighbor_id", "rank"]].values.tolist() == (
+        want[["qid", "neighbor_id", "rank"]].values.tolist()
+    )
+    np.testing.assert_allclose(got["distance"], want["distance"], rtol=1e-6)
+    assert 50 in set(vis.toPandas()["id"])  # the tie keeps the insert
+    assert not set(got["neighbor_id"]) & {i for i in range(40, 180, 9)}
+    even = F.col("id") % 2 == 0
+    got, strategy, _ = searcher.search_filtered(
+        q, even, k=7, min_event_time=3000, force_strategy="in_index",
+        predicate_expr="id % 2 = 0",
+    )
+    want = knn_exact(vis.filter(even), q, k=7).toPandas().sort_values(["qid", "rank"])
+    assert strategy == "in_index"
+    assert got[["qid", "neighbor_id", "rank"]].values.tolist() == (
+        want[["qid", "neighbor_id", "rank"]].values.tolist()
+    )
+
+
+def test_delete_marker_cache_follows_manifest_and_bound(spark, tmp_path):
+    """The searcher's delete markers come from a driver cache with one
+    entry per live segment: markers after the snapshot bound do not apply,
+    an evicted segment's entry goes, and after compaction only the new
+    segments are cached, with the same markers."""
+    st = SegmentStore(spark, str(tmp_path / "segmarks"))
+    st.append_segment(spark.createDataFrame(_vec_rows(0, 10), SCHEMA))
+    st.append_segment(spark.createDataFrame(
+        [(1, None, 5000, 10**12, "D"), (2, None, 9000, 10**12, "D")]
+        + _vec_rows(100, 110), SCHEMA,
+    ))
+    searcher = SegmentSearcher(st, VectorIndexConf(dim=8))
+    ids, times = searcher._tombstones(None)
+    assert ids.tolist() == [1, 2] and times.tolist() == [5000, 9000]
+    ids, times = searcher._tombstones(6000)
+    assert ids.tolist() == [1] and times.tolist() == [5000]
+    assert set(st._markers) == {s["id"] for s in st.segments()}
+    st.append_segment(spark.createDataFrame(_vec_rows(200, 210), SCHEMA))
+    assert st.evict(older_than_event_time=1000) == 1  # the first segment
+    st.delete_markers()
+    assert set(st._markers) == {s["id"] for s in st.segments()}
+    st.compact()
+    ids, times = searcher._tombstones(None)
+    assert ids.tolist() == [1, 2] and times.tolist() == [5000, 9000]
+    assert set(st._markers) == {s["id"] for s in st.segments()}
+
+
+def test_compaction_builds_each_new_segments_resolved_kind(spark, tmp_path):
+    """Flat segments carry no sidecar. Compacting two of them into one past
+    the flat bound (``auto_ivf_threshold``) builds that segment's 'auto'
+    kind, ivf, so no executor has to rebuild it on a cache miss; a
+    compaction that stays under the bound builds nothing. A store whose
+    inputs carry artifacts keeps exactly their kinds past the bound."""
+    import glob
+    import os
+
+    from pyspark.sql import functions as F
+
+    bound = VectorIndexConf().auto_ivf_threshold
+
+    def rows(lo, n):
+        return spark.range(lo, lo + n).select(
+            F.col("id"),
+            F.array(*[F.rand(seed=j).cast("float") for j in range(4)]).alias("emb"),
+            F.col("id").alias("event_time"),
+            F.lit(10**12).cast("long").alias("ttl"),
+            F.lit("I").alias("op"),
+        )
+
+    st = SegmentStore(spark, str(tmp_path / "segcompact"))
+    st.append_segment(rows(0, 200))
+    st.append_segment(rows(200, 200))
+    (small,) = st.compact()
+    assert not small.get("index_file")
+    st.append_segment(rows(400, bound - 300))
+    st.append_segment(rows(100 + bound, bound - 300))
+    assert st.build_segment_indexes(st.segments(), VectorIndexConf(dim=4)) == st.segments()
+    (big,) = st.compact()
+    assert big["count"] == 2 * bound - 200 > bound
+    assert os.path.basename(big["index_file"]) == "_ivf-l2.idx"
+    assert os.path.exists(big["index_file"])
+
+    pinned = SegmentStore(spark, str(tmp_path / "segpinned"))
+    pinned.append_segment(rows(0, bound))
+    pinned.append_segment(rows(bound, bound))
+    pinned.build_segment_indexes(
+        pinned.segments(), VectorIndexConf(dim=4, index_kind="hnsw")
+    )
+    (merged,) = pinned.compact()
+    assert merged["count"] == 2 * bound
+    sidecars = glob.glob(os.path.join(merged["path"], "_*.idx"))
+    assert [os.path.basename(p) for p in sidecars] == ["_hnsw-l2.idx"]

@@ -221,3 +221,87 @@ def test_continuous_trigger_matches_availablenow(spark, tmp_path):
     # hit at distance 0: state crossed the tick boundary
     assert len(got) == 3
     assert got[0] == (0.0, 3)
+
+
+class _State:
+    """The slice of pyspark's GroupState the stateful workers use."""
+
+    def __init__(self, blob=None):
+        self.blob = blob
+
+    @property
+    def exists(self):
+        return self.blob is not None
+
+    @property
+    def get(self):
+        return (self.blob,)
+
+    def update(self, value):
+        self.blob = value[0]
+
+
+def _one_batch(fn, rows, blob=None):
+    import pandas as pd
+
+    state = _State(blob)
+    pdf = pd.DataFrame(rows, columns=["id", "emb", "event_time", "ttl", "op"])
+    out = list(fn((0,), iter([pdf]), state))
+    return (pd.concat(out) if out else pd.DataFrame(columns=["qid"])), state.blob
+
+
+def test_auto_worker_matches_exact_in_one_batch():
+    """Under 'auto' a small partition is an exact flat index: in ONE batch
+    with an upsert (id 7 re-inserted with a new vector), a delete (id 20,
+    after its insert) and a TTL bound (event_time >= 150), every query
+    gets the exact worker's neighbors in its order. The state is flat."""
+    from vstream_spark.index import FlatIndex, loads
+    from vstream_spark.streaming.stateful import (
+        stateful_exact_search_fn,
+        stateful_search_fn,
+    )
+
+    rng = np.random.RandomState(9)
+    vecs = rng.rand(41, 8).astype(np.float32)
+    rows = [(i, vecs[i].tolist(), i * 10, None, "I") for i in range(40)]
+    rows += [(7, vecs[40].tolist(), 500, None, "I"), (20, None, 600, None, "D")]
+    qs = [vecs[7], vecs[40], vecs[20], vecs[2]] + list(rng.rand(4, 8).astype(np.float32))
+    rows += [(1000 + j, q.tolist(), 1000, 850, "Q") for j, q in enumerate(qs)]
+    got, blob = _one_batch(stateful_search_fn(VectorIndexConf(dim=8), k=5), rows)
+    want, _ = _one_batch(stateful_exact_search_fn(k=5), rows)
+    assert isinstance(loads(blob), FlatIndex)
+    assert len(got) == len(want) == 5 * len(qs)
+    for qid, g in got.groupby("qid"):
+        w = want[want["qid"] == qid]
+        assert g["neighbor_id"].tolist() == w["neighbor_id"].tolist()
+        np.testing.assert_allclose(g["distance"], w["distance"], rtol=1e-9, atol=1e-12)
+    hits = set(got["neighbor_id"])
+    assert 20 not in hits and all(i == 7 or i >= 15 for i in hits)
+    assert got[got["qid"] == 1001]["neighbor_id"].iloc[0] == 7  # the upsert
+
+
+def test_auto_worker_stays_flat_and_keeps_an_hnsw_blob():
+    """Under 'auto' a partition stays flat past ``auto_ivf_threshold`` (a
+    bound measured on one-off builds, not on per-trigger inserts), with
+    its tombstones; an HNSW state blob, as an 'hnsw' worker writes it,
+    stays an HNSW under 'auto' (checkpoints written before the flat kind
+    keep working)."""
+    from vstream_spark.index import FlatIndex, HnswIndex, loads
+    from vstream_spark.streaming.stateful import stateful_search_fn
+
+    rng = np.random.RandomState(3)
+    vecs = rng.rand(60, 8).astype(np.float32)
+    fn = stateful_search_fn(VectorIndexConf(dim=8, auto_ivf_threshold=30), k=3)
+    first = [(i, vecs[i].tolist(), i, None, "I") for i in range(40)]
+    first += [(5, None, 100, None, "D"), (99, vecs[5].tolist(), 200, None, "Q")]
+    out, blob = _one_batch(fn, first)
+    flat = loads(blob)
+    assert isinstance(flat, FlatIndex) and flat.n == 40
+    assert flat.deleted[flat.slots([5])].all()
+    assert 5 not in set(out["neighbor_id"]) and len(out) == 3
+    hnsw_fn = stateful_search_fn(VectorIndexConf(dim=8, index_kind="hnsw"), k=3)
+    _, blob = _one_batch(hnsw_fn, first[:40])
+    assert isinstance(loads(blob), HnswIndex)
+    third = [(i, vecs[i].tolist(), i, None, "I") for i in range(40, 60)]
+    _, blob = _one_batch(fn, third, blob)
+    assert isinstance(loads(blob), HnswIndex) and loads(blob).n == 60

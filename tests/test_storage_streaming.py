@@ -607,7 +607,7 @@ def test_streaming_query_warm_restore_early_terminates(spark, tmp_path):
         st.append_segment(
             spark.createDataFrame(_vec_rows(lo, lo + 100, dim=8), SCHEMA)
         )
-    st.build_segment_indexes(st.segments(), VectorIndexConf(dim=8))
+    st.build_segment_indexes(st.segments(), VectorIndexConf(dim=8, index_kind="hnsw"))
     n_seg = len(st.segments())
     assert n_seg == 4
 
@@ -618,7 +618,7 @@ def test_streaming_query_warm_restore_early_terminates(spark, tmp_path):
     )
     stream = _query_file_stream(spark, tmp_path, qpdf, n_batches=2)
     conf = VectorIndexConf(
-        dim=8, ef_search=64,
+        dim=8, index_kind="hnsw", ef_search=64,
         termination_lower_bound=0.0, termination_factor=1e9,
         segments_per_job=1,
     )

@@ -69,7 +69,7 @@ def main() -> None:
             spark, tmp + "/store", max_rows_per_segment=max(1, -(-n_vec // 8))
         )
         store.upsert_batch(big)
-        store.build_segment_indexes(store.segments(), VectorIndexConf())
+        store.build_segment_indexes(store.segments(), VectorIndexConf(index_kind="hnsw"))
         n_seg = len(store.segments())
         queries = spark.createDataFrame(
             emb.filter(F.col("vec_id") % 25 == 0)

@@ -7,9 +7,9 @@ ties the insert wins), its hnsw, ivf and pq sidecars through
 ``build_index_object``, and a ``stateful_search_fn`` state blob from two
 batches; it records every search result. ``check DIR`` (run with the NEWER
 checkout) loads those sidecars and the blob, repeats the same searches and
-batch, and prints per kind whether results are identical, whether a
-re-dump is byte-identical and whether its own fresh build is byte-identical
-with the same pickled keys.
+batch, and prints per kind whether results are identical (with and
+without a freshness bound apart), whether a re-dump is byte-identical and
+whether its own fresh build is byte-identical with the same pickled keys.
 
 Usage: PYTHONPATH=<old checkout> python tools/format_receipt.py write DIR
        PYTHONPATH=<new checkout> python tools/format_receipt.py check DIR
@@ -57,13 +57,33 @@ def write_segment(seg_dir: str) -> None:
     pq.write_table(tbl, os.path.join(seg_dir, "part-0.parquet"))
 
 
+MIN_TS = (None, 2000, np.arange(len(QUERIES)) * 300)
+
+
 def searches(idx) -> list:
+    """Results in (min_ts, allow, query) order: the first 2 * len(QUERIES)
+    have no freshness bound."""
     out = []
-    for min_ts in (None, 2000, np.arange(len(QUERIES)) * 300):
+    for min_ts in MIN_TS:
         for allow in (None, IDS[::2]):
             for lbs, ds in idx.search_batch(QUERIES, K, 16, min_ts, allow_labels=allow):
                 out.append((lbs.tolist(), ds.tolist()))
     return out
+
+
+def compare(got: list, want: list) -> str:
+    """Identical results, split by whether a freshness bound applied; a
+    bounded result that differs is counted by whether it holds more hits
+    than the recorded one (hnsw applies the bound inside its walk since
+    the flat kind landed, so a bound no longer leaves its results short)."""
+    cut = 2 * len(QUERIES)
+    diff = [(g, w) for g, w in zip(got[cut:], want[cut:]) if g != w]
+    return (
+        f"unbounded identical={got[:cut] == want[:cut]}, "
+        f"bounded identical {len(want) - cut - len(diff)}/{len(want) - cut} "
+        f"(of the rest: {sum(len(g[0]) > len(w[0]) for g, w in diff)} fuller, "
+        f"{sum(len(g[0]) < len(w[0]) for g, w in diff)} shorter)"
+    )
 
 
 class _State:
@@ -129,7 +149,7 @@ def main() -> None:
         idx = KINDS[kind].cls.loads(blob)
         _, fresh = build_index_object(seg, conf, "l2")
         print(
-            f"{kind}: searches identical={searches(idx) == rec[kind]}, "
+            f"{kind}: searches {compare(searches(idx), rec[kind])}, "
             f"re-dump byte-identical={idx.dumps() == blob}, "
             f"fresh build byte-identical={fresh.dumps() == blob}, "
             f"keys same={list(pickle.loads(blob)) == list(pickle.loads(fresh.dumps()))}"
@@ -138,8 +158,12 @@ def main() -> None:
         first = f.read()
     rows, nxt = run_stateful(first, N // 2, N, 6000)
     want_rows, want_next = rec["stateful"]
+    per_q = [pd.Series(r.get("qid", [])).value_counts() for r in (rows, want_rows)]
     print(
-        f"stateful: rows identical={rows == want_rows} ({len(rows.get('qid', []))} rows), "
+        f"stateful: rows identical={rows == want_rows} "
+        f"({len(rows.get('qid', []))} rows, {len(want_rows.get('qid', []))} recorded; "
+        f"queries with fewer hits than recorded: "
+        f"{int((per_q[0].reindex(per_q[1].index, fill_value=0) < per_q[1]).sum())}), "
         f"next blob byte-identical={nxt == want_next}"
     )
 

@@ -34,17 +34,22 @@ class VectorIndexConf:
     m: int = 16
     ef_construction: int = 128
     ef_search: int = 16
-    # Segment artifact kind: 'hnsw' (graph; best recall/latency), 'ivf'
-    # (coarse-quantized flat; ~20x cheaper flush-time build — the scale path
-    # when segment churn outruns graph construction), 'pq' (product-quantized
-    # ADC codes, ~32x less memory — the path when segments outgrow executor
-    # RAM), or 'auto' (hnsw up to auto_ivf_threshold rows, ivf above: bulk
-    # graph construction is O(n^2) BLAS and crosses over around 64k rows).
-    # nlist=0 -> ~sqrt(n).
-    index_kind: str = "hnsw"
+    # Index kind of every segment and partition build: 'flat' (exact scan,
+    # no artifact at flush: its parquet is the index), 'hnsw' (graph),
+    # 'ivf' (coarse-quantized flat; ~20x cheaper build than the graph),
+    # 'pq' (product-quantized ADC codes, ~32x less memory — the path when
+    # segments outgrow executor RAM), or 'auto' (flat up to
+    # auto_ivf_threshold rows, ivf above; hnsw runs only where a caller
+    # names it). nlist=0 -> ~sqrt(n).
+    index_kind: str = "auto"
     nlist: int = 0
     nprobe: int = 8
-    auto_ivf_threshold: int = 65_536
+    # The largest measured size up to which the flat scan beats ivf, the
+    # kind 'auto' takes above it, on build time, search time and recall at
+    # once (tools/flat_crossover.py, receipt in FLAT_CROSSOVER.txt: 128-d,
+    # 250 queries, one BLAS thread). At 4,096 rows ivf searches 250
+    # queries in 140 ms against the scan's 243, after a 74 ms build.
+    auto_ivf_threshold: int = 1_024
     pq_m: int = 8  # PQ subvectors (dim % pq_m == 0)
     pq_nbits: int = 8  # bits per code (<= 8)
     # ADC over-fetch factor: the worker rescores refine*k ADC candidates
@@ -53,22 +58,16 @@ class VectorIndexConf:
     pq_refine: int = 4
     # Segment-search job granularity (r11 VERDICT #1): the searcher visits
     # this many temperature-ordered segments PER Spark job (one task per
-    # query partition searches each of them in turn; the driver-side M1
-    # merge + C8 termination check run once per chunk over at most
-    # |Q|·k·(segments_per_job + 1) hit rows). 1 = the reference's
+    # query partition searches each of them in turn and merges them to
+    # top-k per query; the driver-side M1 merge + C8 termination check run
+    # once per chunk over at most 2·|Q|·k hit rows). 1 = the reference's
     # SST-at-a-time shape (version_set.cc:2585-2697, where the per-file
     # step is a C++ call, not a scheduler round trip); >1 amortizes driver
     # job-launch latency at multi-segment stores without changing results
     # (a chunk searches a superset of what one-at-a-time would before each
-    # termination check).
+    # termination check). Flat segments take no slot of this budget: a
+    # search over all-flat segments is one job.
     segments_per_job: int = 4
-    # FilterSeqTs parity toggle (hnswlib.h:135-146): move the freshness
-    # bound INTO graph traversal — stale nodes route but never occupy ef
-    # result slots, so a hard TTL can't under-fill k the way the post-hoc
-    # filter can. Off by default: the unfiltered walk is the hash-matched
-    # hot path, and the flat IVF/PQ scans already filter pre-selection
-    # (the flag is a no-op there).
-    ts_in_traversal: bool = False
     # Adaptive early termination across segments (db/version_set.cc:2643-2697).
     termination_weight: float = 0.01
     termination_factor: float = 0.8

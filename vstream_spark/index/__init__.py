@@ -1,16 +1,21 @@
 from __future__ import annotations
 
+import pickle
 from typing import Callable, NamedTuple
 
 import numpy as np
 
 from vstream_spark.config import VectorIndexConf
 from vstream_spark.index.base import SlotIndex
+from vstream_spark.index.flat import FlatIndex, build_flat
 from vstream_spark.index.hnsw import HnswIndex, build_index
 from vstream_spark.index.ivf import IvfIndex, build_ivf
 from vstream_spark.index.pq import PqIndex, build_pq
 
-__all__ = ["HnswIndex", "KINDS", "SlotIndex", "build_from_conf", "resolve_index_kind"]
+__all__ = [
+    "FlatIndex", "HnswIndex", "KINDS", "SlotIndex", "build_from_conf", "loads",
+    "resolve_index_kind",
+]
 
 
 class Kind(NamedTuple):
@@ -26,6 +31,9 @@ class Kind(NamedTuple):
 # kind, the searcher loads them through ``cls`` and every build (segment
 # artifacts, the partitioned worker) goes through ``build``.
 KINDS = {
+    "flat": Kind(FlatIndex, lambda vecs, ids, conf, metric, ts: build_flat(
+        vecs, ids, ts=ts, metric=metric
+    )),
     "hnsw": Kind(HnswIndex, lambda vecs, ids, conf, metric, ts: build_index(
         vecs, ids, ts=ts, metric=metric, M=conf.m, ef_construction=conf.ef_construction
     )),
@@ -39,12 +47,27 @@ KINDS = {
 
 
 def resolve_index_kind(conf: VectorIndexConf, n: int) -> str:
-    """``conf.index_kind`` for an ``n``-row build: 'auto' -> hnsw up to
-    ``conf.auto_ivf_threshold`` rows, ivf above (bulk graph construction is
-    O(n^2) BLAS and crosses over around 64k rows)."""
+    """``conf.index_kind`` for an ``n``-row build: 'auto' -> flat up to
+    ``conf.auto_ivf_threshold`` rows, ivf above. Up to the default bound
+    the exact flat scan beats IVF on build time, search time and recall
+    (``tools/flat_crossover.py``, receipt in ``FLAT_CROSSOVER.txt``); IVF
+    builds far faster than the numpy HNSW at better recall, so hnsw runs
+    only where a caller names it."""
     if conf.index_kind == "auto":
-        return "ivf" if n > conf.auto_ivf_threshold else "hnsw"
+        return "ivf" if n > conf.auto_ivf_threshold else "flat"
     return conf.index_kind
+
+
+def loads(data: bytes) -> SlotIndex:
+    """An index of any kind from its ``dumps`` bytes; kinds are told apart
+    by their pickled keys, which no two kinds share (state blobs carry no
+    kind name)."""
+    d = pickle.loads(data)
+    keys = tuple(d)
+    for kind in KINDS.values():
+        if keys == kind.cls._CTOR + kind.cls._STATE:
+            return kind.cls.from_fields(d)
+    raise ValueError(f"not an index blob: keys {keys}")
 
 
 def build_from_conf(

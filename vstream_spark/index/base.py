@@ -3,7 +3,7 @@
 The reference builds one index artifact per SST at flush (C3,
 ``hnsw_table_builder.cc``) and loads it at search (C4,
 ``hnsw_table_reader.cc``) behind one worker surface (SURVEY §2.6). Here each
-kind (``hnsw``, ``ivf``, ``pq``) subclasses :class:`SlotIndex` and adds only
+kind (``flat``, ``hnsw``, ``ivf``, ``pq``) subclasses :class:`SlotIndex` and adds only
 its build and its single-query ``search``. The base owns the rest:
 
 * slot bookkeeping: per slot a ``label`` (row id), an event time ``ts``
@@ -130,10 +130,9 @@ class SlotIndex:
 
     # -- search ---------------------------------------------------------------
 
-    def _batch_kwargs(self, min_ts, allow, ts_in_traversal: bool) -> dict:
-        """Extra ``search`` arguments computed once per batch. The flat
-        scans (ivf, pq) filter ``min_ts`` before candidate selection, so
-        they never under-fill k and ignore ``ts_in_traversal``."""
+    def _batch_kwargs(self, min_ts, allow) -> dict:
+        """Extra ``search`` arguments computed once per batch (hnsw hoists
+        its eligibility mask); the scans (flat, ivf, pq) need none."""
         return {}
 
     def search_batch(
@@ -143,16 +142,13 @@ class SlotIndex:
         ef_search: int | None = None,
         min_ts=None,
         allow_labels=None,
-        ts_in_traversal: bool = False,
     ):
         """Batched search: (qids-aligned) list of (labels, distances).
         ``min_ts`` is a scalar or a per-query array (per-query TTL);
         ``allow_labels`` (optional label collection) applies in-index to
-        every query in the batch, its slot mask built once;
-        ``ts_in_traversal`` moves the freshness bound into the hnsw walk
-        (FilterSeqTs)."""
+        every query in the batch, its slot mask built once."""
         allow = self.allow_mask(allow_labels) if allow_labels is not None else None
-        extra = self._batch_kwargs(min_ts, allow, ts_in_traversal)
+        extra = self._batch_kwargs(min_ts, allow)
         out = []
         for j in range(qmat.shape[0]):
             mt = None
@@ -176,7 +172,11 @@ class SlotIndex:
 
     @classmethod
     def loads(cls, data: bytes):
-        d = pickle.loads(data)
+        return cls.from_fields(pickle.loads(data))
+
+    @classmethod
+    def from_fields(cls, d: dict):
+        """The index a ``dumps`` dict describes."""
         idx = cls(*(d[f] for f in cls._CTOR))
         for f in cls._STATE:
             v = d[f]

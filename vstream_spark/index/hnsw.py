@@ -299,21 +299,15 @@ class HnswIndex(SlotIndex):
                             heapq.heappop(best)
         return sorted((-nd, nb) for nd, nb in best)
 
-    def _eligibility(
-        self,
-        min_ts: int | None,
-        allow: np.ndarray | None,
-        ts_in_traversal: bool = False,
-    ):
+    def _eligibility(self, min_ts: int | None, allow: np.ndarray | None):
         """Slot-level eligibility mask combining the tombstone, freshness and
-        allowlist filters, or None when the legacy post-filter path applies
-        (no allowlist, no ts_in_traversal — keeps the unfiltered hot path
-        byte-identical). ``ts_in_traversal`` opts the freshness bound into
-        the in-walk filter WITHOUT an allowlist — the exact ``FilterSeqTs``
-        shape (``hnswlib.h:135-146``): under a hard TTL the post-hoc path
-        can return fewer than k because stale nodes occupied ef result
-        slots during the walk; in-traversal they route but never occupy."""
-        if allow is None and not (ts_in_traversal and min_ts is not None):
+        allowlist filters, or None when neither a freshness bound nor an
+        allowlist applies (the unfiltered walk). The freshness bound is the
+        reference's ``FilterSeqTs`` (``hnswlib.h:135-146``): stale nodes
+        route the walk but never occupy its result slots, so a hard TTL
+        cannot leave the result short of k the way a filter after the walk
+        can."""
+        if allow is None and min_ts is None:
             return None
         eligible = (
             allow.copy() if allow is not None else np.ones(self.n, dtype=bool)
@@ -330,7 +324,6 @@ class HnswIndex(SlotIndex):
         ef_search: int | None = None,
         min_ts: int | None = None,
         allow: np.ndarray | None = None,
-        ts_in_traversal: bool = False,
         eligible: np.ndarray | None = None,
     ) -> tuple[np.ndarray, np.ndarray]:
         """Top-k (labels, distances), ascending by (distance, label).
@@ -339,19 +332,17 @@ class HnswIndex(SlotIndex):
         ts >= min_ts qualify (query.event_time - TTL). Tombstoned nodes never
         qualify. Matches the exact-path tiebreak (dist asc, id asc).
 
-        ``allow`` (optional) is a slot-level bool mask: when given, the
-        level-0 walk filters IN-TRAVERSAL (deleted/stale/disallowed nodes
-        route but never enter the result heap), so a filtered search does
-        ~ef eligible-candidate work instead of oversampling — the
-        ``FilterSeqTs``-functor analog. ``ts_in_traversal=True`` applies
-        the SAME in-walk discipline to the freshness bound alone (no
-        allowlist needed): under a hard TTL the legacy post-hoc filter can
-        under-fill k because stale nodes occupied ef result slots. Without
-        either, the legacy path (post-filter the ef results) is unchanged.
+        ``allow`` (optional) is a slot-level bool mask. With an allowlist or
+        a freshness bound the level-0 walk filters IN-TRAVERSAL
+        (deleted/stale/disallowed nodes route but never enter the result
+        heap), so a filtered search does ~ef eligible-candidate work instead
+        of oversampling and a hard TTL still fills k — the
+        ``FilterSeqTs``-functor analog. Without either, the walk drops
+        tombstoned nodes from its ef results.
         ``eligible`` (optional) is a PRE-COMPOSED eligibility mask — the
         batch surface hoists the three O(n) boolean passes out of the
-        per-query loop; when given, ``allow``/``ts_in_traversal``/
-        tombstone/``min_ts`` composition is the caller's responsibility.
+        per-query loop; when given, ``allow``/tombstone/``min_ts``
+        composition is the caller's responsibility.
         """
         if self.n == 0 or self.entry < 0:
             return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
@@ -361,7 +352,7 @@ class HnswIndex(SlotIndex):
         for lv in range(self.max_level, 0, -1):
             ep = self._greedy(q, ep, lv)
         if eligible is None:
-            eligible = self._eligibility(min_ts, allow, ts_in_traversal)
+            eligible = self._eligibility(min_ts, allow)
         if eligible is not None:
             n_elig = int(eligible.sum())
             if n_elig == 0:
@@ -382,30 +373,22 @@ class HnswIndex(SlotIndex):
             ok = sorted((float(d), int(self.labels[i])) for d, i in found)[:k]
         else:
             found = self._search_layer(q, [ep], ef, 0, packed=self._ensure_packed())
-            ok = []
-            for d, i in found:
-                if self.deleted[i]:
-                    continue
-                if min_ts is not None and self.ts[i] < min_ts:
-                    continue
-                ok.append((float(d), int(self.labels[i])))
-            ok.sort()
-            ok = ok[:k]
+            ok = sorted(
+                (float(d), int(self.labels[i])) for d, i in found if not self.deleted[i]
+            )[:k]
         return (
             np.asarray([lb for _, lb in ok], dtype=np.int64),
             np.asarray([d for d, _ in ok], dtype=np.float64),
         )
 
-    def _batch_kwargs(self, min_ts, allow, ts_in_traversal: bool) -> dict:
+    def _batch_kwargs(self, min_ts, allow) -> dict:
         """The composed eligibility mask is hoisted out of the per-query
         loop whenever min_ts is query-invariant (scalar or None) — three
         O(n) boolean passes per BATCH, not per query."""
-        eligible = None
-        if not np.ndim(min_ts):
-            eligible = self._eligibility(
-                None if min_ts is None else int(min_ts), allow, ts_in_traversal
-            )
-        return {"ts_in_traversal": ts_in_traversal, "eligible": eligible}
+        if np.ndim(min_ts):
+            return {}
+        mt = None if min_ts is None else int(min_ts)
+        return {"eligible": self._eligibility(mt, allow)}
 
 
 _BULK_THRESHOLD = 2048

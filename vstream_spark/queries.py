@@ -1086,7 +1086,9 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- HNSW per-partition graph index (W1/W5 worker, rows-only ANN) ------------
 
 # HNSW search parameters of the recall-gated stream-state and store searches
-_GATE_HNSW = VectorIndexConf(dim=64, m=16, ef_construction=128, ef_search=128)
+_GATE_HNSW = VectorIndexConf(
+    dim=64, index_kind="hnsw", m=16, ef_construction=128, ef_search=128
+)
 
 
 # Segment stores for the declared HNSW query: the graph is built ONCE at
@@ -1112,7 +1114,7 @@ def _two_segment_store(
         )
         segs = [store.append_segment(vectors.filter(F.col("id") % 2 == r))
                 for r in (0, 1)]
-        store.build_segment_indexes(segs, VectorIndexConf())
+        store.build_segment_indexes(segs, VectorIndexConf(index_kind="hnsw"))
 
     return _store(spark, sf_dir, prefix, fill)[0]
 
@@ -1131,7 +1133,9 @@ def q_knn_hnsw_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     store = _hnsw_store(spark, sf_dir)
     _, queries = _emb_pair(spark, sf_dir)
-    iconf = VectorIndexConf(dim=64, m=16, ef_construction=128, ef_search=64)
+    iconf = VectorIndexConf(
+        dim=64, index_kind="hnsw", m=16, ef_construction=128, ef_search=64
+    )
     pdf = SegmentSearcher(store, iconf).search(queries, k=10, metric="l2")
     return spark.createDataFrame(
         pdf[["qid", "neighbor_id", "distance", "rank"]]

@@ -8,7 +8,8 @@ in Spark terms:
   C7  hot-cold ordering  — segments visited hottest-first by a decayed
                            temperature score updated from contributed hits
                            (``util/metrics.h:77-109``)
-  C4  per-segment search — a numpy HNSW built from the segment's rows,
+  C4  per-segment search — the segment's index (exact flat under the
+                           default 'auto', or its persisted artifact),
                            cached per executor process keyed by segment id
                            (O7 block-cache analog; ``hnsw_table_reader.cc``)
   C8  early termination  — stop visiting more segments once enough have been
@@ -26,19 +27,22 @@ latency floor (r11 VERDICT #1). A chunk is ONE Spark job: one mapInPandas
 task per query partition searches every segment of the chunk in turn, so
 driver job-launch cost is O(segments / segments_per_job); the M1 running
 merge and the C8 termination check run once per chunk.
-``segments_per_job=1`` is the SST-at-a-time shape; chunking never changes
-results — a chunk searches a superset of what one-at-a-time would have
-before the same termination check, and the merge is order-insensitive
-(dist, id tiebreak).
+Flat segments (the default 'auto' kind up to ``auto_ivf_threshold``
+rows) take no slot of that budget, so a store of flat segments is searched
+in one job. ``segments_per_job=1`` is the SST-at-a-time shape for indexed
+segments; chunking never changes results — a chunk searches a superset of
+what one-at-a-time would have before the same termination check, and the
+merge is order-insensitive (dist, id tiebreak).
 
 Executors read the segment parquet directly (pyarrow) and keep the built
 index in a process-global LRU cache, so the vector data never flows through
-the driver. Only each chunk's per-segment top-k partials (at most
-|Q|·k·segments_per_job rows) come back through Arrow, and the M1 merge —
-delete-marker filter, last-writer-wins dedup, top-k cut, C8 check — runs
+the driver. Each task folds its chunk's per-segment top-k partials —
+delete-marker filter, last-writer-wins dedup, top-k cut — so only a
+chunk's top-k per query (at most |Q|·k rows, whatever the chunk holds)
+comes back through Arrow; the M1 merge across chunks and the C8 check run
 in pandas on the driver, the way the reference folds each file's results
 into one buffer at reduce parallelism 1 (``params.yaml:33-34``). The driver
-holds at most |Q|·k·(segments_per_job + 1) hit rows.
+holds at most 2·|Q|·k hit rows.
 
 ``SegmentSearcher`` has two entry points over that one loop: ``search``
 (plain top-k; feeds the C8 EMA) and ``search_filtered`` (attribute-filtered
@@ -594,26 +598,26 @@ class SegmentSearcher:
             return None
 
         ef = max(ef_search or conf.ef_search, k)
-        # widen + checkpoint the query frame ONCE per search (r12 VERDICT
-        # #1): every chunk job reads the same executor-pinned query blocks
-        # instead of re-scanning and re-exchanging the query source.
+        chunks = self._chunks(segs)
+        # widen the query frame, and when more than one chunk job reads it
+        # checkpoint it ONCE per search (r12 VERDICT #1): every chunk job
+        # reads the same executor-pinned query blocks instead of
+        # re-scanning and re-exchanging the query source.
         from vstream_spark.operators.util import widen
 
-        qdf = widen(queries.select("qid", "emb")).localCheckpoint(eager=True)
-        # delete markers cover EVERY pruned segment, not only the visited
-        # ones: a marker in a segment termination never reaches still
-        # removes the hit it shadows
-        tombs = self._tombstones(min_event_time, max_event_time)
+        qdf = widen(queries.select("qid", "emb"))
+        if len(chunks) > 1:
+            qdf = qdf.localCheckpoint(eager=True)
+        # delete markers cover EVERY segment up to the snapshot bound, not
+        # only the visited ones: a marker in a segment termination never
+        # reaches still removes the hit it shadows
+        tombs = self._tombstones(max_event_time)
         merged: pd.DataFrame | None = None
         searched_ids: list[str] = []
-        spj = conf.segments_per_job
-        for at in range(0, len(segs), spj):
-            chunk = segs[at : at + spj]
+        for chunk in chunks:
             part = self._search_chunk(
-                chunk, qdf, k, metric, min_event_time, ef, filter_expr
+                chunk, qdf, k, metric, min_event_time, ef, tombs, filter_expr
             )
-            if tombs is not None:
-                part = _drop_deleted(part, tombs)
             searched_ids.extend(s["id"] for s in chunk)
             merged = _merge_topk(
                 part if merged is None
@@ -630,6 +634,25 @@ class SegmentSearcher:
         for sid in searched_ids:
             self._update_temperature(sid, hits=int(seg_hits.get(sid, 0)))
         return merged
+
+    def _chunks(self, segs: list[dict]) -> list[list[dict]]:
+        """Temperature-ordered segments cut into one Spark job each: a
+        chunk holds ``segments_per_job`` indexed segments, and flat ones
+        ride along without taking a slot — a flat segment is searched
+        straight from its parquet, so a job launch (~0.4 s) costs far more
+        than searching it. A store of flat segments is one job, which C8
+        cannot cut short; each task merges its chunk to top-k per query
+        (:meth:`_search_chunk`), so a chunk returns at most |Q|·k rows
+        however many segments it holds."""
+        chunks: list[list[dict]] = [[]]
+        slots = 0
+        for seg in segs:
+            if slots == self.conf.segments_per_job:
+                chunks.append([])
+                slots = 0
+            chunks[-1].append(seg)
+            slots += resolve_index_kind(self.conf, seg["count"]) != "flat"
+        return chunks
 
     def search(
         self,
@@ -898,24 +921,22 @@ class SegmentSearcher:
         return _ranked(out.toPandas()), strategy, selectivity
 
     def _tombstones(
-        self, min_event_time: int | None, max_event_time: int | None
+        self, max_event_time: int | None
     ) -> tuple[np.ndarray, np.ndarray] | None:
-        """Delete markers visible to this search, collected to the driver
-        once per search as (sorted ids, max delete time per id) — a SMALL
-        set (reference deleteRatio 0.1); only markers at or before the
-        snapshot bound apply — the tombstone-set analog of the version CF
-        (C9). None when the store has no op column (pure-insert segments)
-        or no marker applies."""
-        df = self.store.read(min_event_time=None, max_event_time=max_event_time)
-        if df is None or "op" not in df.columns:
+        """Delete markers visible to this search as (sorted ids, max delete
+        time per id) — a SMALL set (reference deleteRatio 0.1); only
+        markers at or before the snapshot bound apply — the tombstone-set
+        analog of the version CF (C9). The markers come from the store's
+        per-segment driver cache (``SegmentStore.delete_markers``): each
+        immutable segment is read once with pyarrow, not scanned by a
+        Spark job per search. None when no marker applies."""
+        ids, times = self.store.delete_markers(max_event_time)
+        if not len(ids):
             return None
-        from pyspark.sql import functions as F
-
-        marks = df.filter(F.col("op") == "D").select("id", "event_time").toPandas()
-        if marks.empty:
-            return None
-        last = marks.groupby("id")["event_time"].max()
-        return last.index.to_numpy(np.int64), last.to_numpy(np.int64)
+        order = np.lexsort((times, ids))
+        ids, times = ids[order], times[order]
+        last = np.append(ids[1:] != ids[:-1], True)
+        return ids[last], times[last]
 
     def _should_terminate(
         self, merged: pd.DataFrame, k: int, searched: int, total: int
@@ -944,16 +965,20 @@ class SegmentSearcher:
         metric: str,
         min_ts: int | None,
         ef: int,
+        tombs: tuple[np.ndarray, np.ndarray] | None,
         filter_expr: str | None = None,
     ) -> pd.DataFrame:
         """One chunk of segments as ONE Spark job: each task takes its
-        partition of the loop's pre-widened, checkpointed (qid, emb) frame,
-        stacks the queries once and searches every segment of the chunk in
-        turn. The per-segment top-k partials — tagged with their segment of
-        origin (``_seg``) so C7 temperature derives from the merged result
-        — come back to the driver through Arrow. ``filter_expr`` builds
-        each segment's attribute allowlist executor-side and threads it
-        INTO graph/cell traversal (the FilterSeqTs-functor analog)."""
+        partition of the loop's pre-widened (qid, emb) frame, stacks the
+        queries once and searches every segment of the chunk in turn. The
+        task drops the hits the delete markers ``tombs`` shadow and merges
+        the per-segment partials to top-k per query (the M1 merge the
+        driver runs across chunks), so a chunk sends at most |Q|·k rows
+        through Arrow however many segments it holds; each row keeps its
+        segment of origin (``_seg``) so C7 temperature derives from the
+        merged result. ``filter_expr`` builds each segment's attribute
+        allowlist executor-side and threads it INTO graph/cell traversal
+        (the FilterSeqTs-functor analog)."""
         conf = self.conf
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -963,6 +988,7 @@ class SegmentSearcher:
             pdf = pd.concat(pdfs, ignore_index=True)
             qids = pdf["qid"].to_numpy(np.int64)
             qmat = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
+            parts = []
             for seg in chunk:
                 allow = None
                 if filter_expr is not None:
@@ -977,23 +1003,28 @@ class SegmentSearcher:
                         # index load either) and go on with the chunk
                         continue
                 idx = _segment_index(seg, conf, metric)
-                res = idx.search_batch(
-                    qmat, k, ef, min_ts, allow_labels=allow,
-                    ts_in_traversal=conf.ts_in_traversal,
-                )
+                res = idx.search_batch(qmat, k, ef, min_ts, allow_labels=allow)
                 nids = np.concatenate(
                     [np.asarray(lbs, dtype=np.int64) for lbs, _ in res]
                 )
-                yield pd.DataFrame(
-                    {
-                        "qid": np.repeat(qids, [len(lbs) for lbs, _ in res]),
-                        "neighbor_id": nids,
-                        "distance": np.concatenate(
-                            [np.asarray(ds, dtype=np.float64) for _, ds in res]
-                        ),
-                        "neighbor_ts": idx.ts_of(nids),
-                        "_seg": seg["id"],
-                    }
+                parts.append(
+                    pd.DataFrame(
+                        {
+                            "qid": np.repeat(qids, [len(lbs) for lbs, _ in res]),
+                            "neighbor_id": nids,
+                            "distance": np.concatenate(
+                                [np.asarray(ds, dtype=np.float64) for _, ds in res]
+                            ),
+                            "neighbor_ts": idx.ts_of(nids),
+                            "_seg": seg["id"],
+                        }
+                    )
                 )
+            if not parts:
+                return
+            hits = pd.concat(parts, ignore_index=True)
+            if tombs is not None:
+                hits = _drop_deleted(hits, tombs)
+            yield _merge_topk(hits, k)
 
         return qdf.mapInPandas(run, _HIT_SCHEMA).toPandas()

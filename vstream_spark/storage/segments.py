@@ -31,6 +31,7 @@ import uuid
 
 from dataclasses import replace
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import MapType
@@ -143,7 +144,6 @@ def build_index_object(seg: dict, conf: VectorIndexConf, metric: str):
     """
     import glob
 
-    import numpy as np
     import pyarrow.parquet as pq
 
     conf = replace(conf, index_kind=resolve_index_kind(conf, seg.get("count", 0)))
@@ -157,7 +157,9 @@ def build_index_object(seg: dict, conf: VectorIndexConf, metric: str):
     tbl = pq.read_table(seg["path"], columns=cols + (["op"] if has_op else []))
     pdf = tbl.to_pandas()
     ins = pdf[pdf["op"] == "I"] if has_op else pdf
-    if int8:
+    if ins.empty:  # a segment of delete markers only (delete_where)
+        vecs = np.empty((0, conf.dim), dtype=np.float32)
+    elif int8:
         codes = np.stack(ins["emb_q"].to_numpy()).astype(np.float64)
         scales = ins["emb_scale"].to_numpy().astype(np.float64)
         vecs = (codes * scales[:, None]).astype(np.float32)
@@ -170,6 +172,21 @@ def build_index_object(seg: dict, conf: VectorIndexConf, metric: str):
         dels = pdf[pdf["op"] == "D"]
         idx.delete_older(dels["id"].to_numpy(), dels["event_time"].to_numpy())
     return kind, idx
+
+
+def _segment_markers(path: str) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, event_times) of one segment's op='D' rows, read with pyarrow."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    if "op" not in pq.read_schema(glob.glob(path + "/*.parquet")[0]).names:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    tbl = pq.read_table(path, columns=["id", "event_time"], filters=[("op", "=", "D")])
+    return (
+        tbl["id"].to_numpy().astype(np.int64),
+        tbl["event_time"].to_numpy().astype(np.int64),
+    )
 
 
 def _segment_meta(
@@ -229,6 +246,9 @@ class SegmentStore:
         # JSON rewrite was O(segments) per append — pathological at the
         # segment-per-micro-batch rate of a 100 TB ingest)
         self.manifest = ManifestLog(base_dir)
+        # driver cache of each segment's delete markers: segment id ->
+        # (ids, event_times) of its op='D' rows (see delete_markers)
+        self._markers: dict[str, tuple[np.ndarray, np.ndarray]] = {}
         legacy = os.path.join(base_dir, _META)
         if os.path.exists(legacy) and self.manifest.version() < 0:
             with open(legacy) as f:
@@ -510,17 +530,20 @@ class SegmentStore:
         """C3 analog (hnsw_table_builder.cc): persist each segment's index
         artifact next to its parquet so readers load instead of rebuild
         (C4). The kind, its build parameters and the metric come from
-        ``conf``: ``index_kind='hnsw'`` builds the graph; ``'ivf'`` builds
-        the coarse k-means artifact (~20x cheaper — the scale path when
-        flush rate outruns graph construction); ``'pq'`` builds
-        product-quantized ADC codes (~32x less memory — for RAM-bound
-        segments); ``'auto'`` picks hnsw up to ``auto_ivf_threshold`` rows
-        and ivf above. The artifact lands beside the data
-        (``<segment>/_<kind>-<metric>.idx``, underscore prefix keeps it
+        ``conf``, resolved per segment on its row count
+        (``resolve_index_kind``, the same count the searcher resolves on).
+        A segment that resolves to 'flat' — under the default 'auto', every
+        segment up to ``auto_ivf_threshold`` rows — gets no artifact and no
+        job: its parquet is the index, and the searcher reads it directly.
+        Otherwise ``'hnsw'`` builds the graph; ``'ivf'`` the coarse k-means
+        artifact (~20x cheaper — the scale path when flush rate outruns
+        graph construction); ``'pq'`` product-quantized ADC codes (~32x
+        less memory — for RAM-bound segments). The artifact lands beside the
+        data (``<segment>/_<kind>-<metric>.idx``, underscore prefix keeps it
         invisible to parquet dataset discovery). Rebuild-on-retry is safe:
         all builds are deterministic (label-sorted input).
 
-        All segments build in ONE Spark job, one task per segment: the
+        All artifacts build in ONE Spark job, one task per segment: the
         reference builds each SST's graph single-node, but many SSTs build
         concurrently across the cluster as memtables rotate. Each task reads
         its segment parquet directly via pyarrow, the same reader the
@@ -529,10 +552,12 @@ class SegmentStore:
         Each task writes the artifact beside its segment (tmp + atomic
         rename, unique tmp suffix so speculative/retried tasks can't
         torn-write); the manifest updates once, driver-side, after the job.
+        Returns ``segs`` with ``index_file`` set on the built ones.
         """
-        if not segs:
-            return []
         metric = conf.metric
+        todo = [s for s in segs if resolve_index_kind(conf, s["count"]) != "flat"]
+        if not todo:
+            return list(segs)
 
         def one(seg: dict) -> tuple[str, str]:
             import os
@@ -547,12 +572,14 @@ class SegmentStore:
             return seg["id"], out
 
         sc = self.spark.sparkContext
-        results = dict(sc.parallelize(segs, len(segs)).map(one).collect())
+        results = dict(sc.parallelize(todo, len(todo)).map(one).collect())
         out_segs = []
         for seg in segs:
-            out = results[seg["id"]]
-            self.manifest.update(seg["id"], index_file=out)
-            out_segs.append(dict(seg, index_file=out))
+            out = results.get(seg["id"])
+            if out is not None:
+                self.manifest.update(seg["id"], index_file=out)
+                seg = dict(seg, index_file=out)
+            out_segs.append(seg)
         return out_segs
 
     def dump(self) -> DataFrame | None:
@@ -657,6 +684,33 @@ class SegmentStore:
 
     # -- read path -----------------------------------------------------------
 
+    def delete_markers(
+        self, max_event_time: int | None = None
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """(ids, event_times) of every delete marker at or before
+        ``max_event_time``, over the live segments. A segment is immutable,
+        so its op='D' rows are read once, with pyarrow on the driver, and
+        cached by segment id; entries of segments that left the manifest
+        (evicted, compacted) are dropped on each call."""
+        segs = self.segments()
+        for sid in self._markers.keys() - {s["id"] for s in segs}:
+            del self._markers[sid]
+        ids, times = [], []
+        for seg in segs:
+            if max_event_time is not None and seg["min_event_time"] > max_event_time:
+                continue
+            marks = self._markers.get(seg["id"])
+            if marks is None:
+                marks = self._markers[seg["id"]] = _segment_markers(seg["path"])
+            ids.append(marks[0])
+            times.append(marks[1])
+        ids = np.concatenate(ids) if ids else np.empty(0, np.int64)
+        times = np.concatenate(times) if times else np.empty(0, np.int64)
+        if max_event_time is not None:
+            keep = times <= max_event_time
+            ids, times = ids[keep], times[keep]
+        return ids, times
+
     def prune(
         self,
         min_event_time: int | None = None,
@@ -722,8 +776,12 @@ class SegmentStore:
         hash merge would give every segment the full time range and make
         every future query scan everything. Last-writer-wins dedup happens
         at read time, not here, to preserve delete markers across TTL
-        windows. Index artifacts are rebuilt for the new segments when any
-        input segment carried one (same kind, inferred from the file name).
+        windows. When any input segment carried an artifact, the new
+        segments get every kind the inputs carried (inferred from the
+        sidecar names): that caller chose its kinds. When none did (a store
+        of flat segments), each new segment gets the kind 'auto' resolves
+        on its new row count — none while it is flat, ivf past the bound —
+        so a merge past the bound leaves no segment without its artifact.
         """
         segs = self.segments()
         if len(segs) <= 1:
@@ -766,11 +824,13 @@ class SegmentStore:
 
         for p in old_paths:
             shutil.rmtree(p, ignore_errors=True)
-        # carry index artifacts forward: rebuild per new segment, same kind
-        # — all new segments build in one parallel job per (kind, metric)
-        for kind in old_kinds:
+        # carry index artifacts forward, one parallel job per (kind,
+        # metric); flat inputs leave no sidecar to infer a kind from, so
+        # they get the 'auto' kind (a segment without its artifact is
+        # rebuilt by every executor that misses it in cache)
+        for kind in sorted(old_kinds) or ["auto"]:
             for metric in metrics or {"l2"}:
-                new_segs = self.build_segment_indexes(
+                self.build_segment_indexes(
                     new_segs, VectorIndexConf(index_kind=kind, metric=metric)
                 )
         return self.segments()

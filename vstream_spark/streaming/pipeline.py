@@ -299,7 +299,9 @@ class StreamingVectorIngest:
     built immediately (C3: the reference builds the SST's HNSW at flush
     time, ``hnsw_table_builder.cc``) — searchers then load instead of
     rebuild. The artifact kind follows ``index_conf.index_kind``
-    (hnsw/ivf/pq/auto)."""
+    (flat/hnsw/ivf/pq/auto); a segment that resolves to flat — every
+    micro-batch-sized segment under the default 'auto' — needs none, so
+    its flush launches no build job."""
 
     def __init__(self, store: SegmentStore, index_conf=None):
         self.store = store

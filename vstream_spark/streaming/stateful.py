@@ -6,9 +6,10 @@ Structured Streaming operator.
 (``RocksDBKeyedProcessFunction.processElement:149-180`` dispatching on
 element type). The Spark-native equivalent is
 ``groupBy(partition_id).applyInPandasWithState``: state = the serialized
-numpy HNSW graph; each micro-batch applies inserts (W1), tombstones deletes
-(W2), then answers the batch's queries against the updated graph (W3) with
-the freshness filter.
+per-partition index (an exact flat scan under the default 'auto', a numpy
+HNSW graph where the caller names 'hnsw'); each micro-batch applies inserts (W1),
+tombstones deletes (W2), then answers the batch's queries against the
+updated index (W3) with the freshness filter.
 
 This is the in-state-graph alternative to the segment-append path
 (``streaming/pipeline.py`` + ``storage/search.py``). SURVEY §7 flags state
@@ -44,17 +45,28 @@ STATE_SCHEMA = "graph BINARY"
 
 def stateful_search_fn(conf: VectorIndexConf, k: int, metric: str = "l2"):
     """Build the (key, batches, state) -> batches function for
-    applyInPandasWithState."""
+    applyInPandasWithState.
+
+    The state is one pickled index. Under 'auto' or 'flat' it is an exact
+    ``FlatIndex`` at every size: ``auto_ivf_threshold`` was measured on
+    one-off builds, not on a partition that takes a few inserts and
+    queries per trigger, so it does not apply here. Any other kind keeps an
+    HNSW, the one kind that takes inserts one by one, and a state blob that
+    already holds an HNSW stays one, so checkpoints written before the flat
+    kind existed keep working."""
 
     def fn(
         key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        from vstream_spark.index import FlatIndex, loads
         from vstream_spark.index.hnsw import HnswIndex
 
         (pid,) = key
         if state.exists:
             (blob,) = state.get
-            idx = HnswIndex.loads(bytes(blob))
+            idx = loads(bytes(blob))
+        elif conf.index_kind in ("auto", "flat"):
+            idx = FlatIndex(conf.dim, metric)
         else:
             idx = HnswIndex(
                 conf.dim, metric, conf.m, conf.ef_construction, seed=42
@@ -67,30 +79,44 @@ def stateful_search_fn(conf: VectorIndexConf, k: int, metric: str = "l2"):
             # of the same micro-batch rebuild identical state)
             pdf = pdf.sort_values(["event_time", "id"], kind="stable")
             ins = pdf[pdf["op"] == "I"]
-            for _id, emb, et in zip(ins["id"], ins["emb"], ins["event_time"]):
-                idx.add_point(np.asarray(emb, dtype=np.float32), int(_id), int(et))
+            if isinstance(idx, FlatIndex):
+                if len(ins):
+                    idx.add_batch(
+                        np.stack(ins["emb"].to_numpy()).astype(np.float32),
+                        ins["id"].to_numpy(np.int64),
+                        ins["event_time"].to_numpy(np.int64),
+                    )
+            else:
+                for _id, emb, et in zip(ins["id"], ins["emb"], ins["event_time"]):
+                    idx.add_point(np.asarray(emb, dtype=np.float32), int(_id), int(et))
             for _id in pdf[pdf["op"] == "D"]["id"]:
                 idx.mark_delete(int(_id))
             qs = pdf[pdf["op"] == "Q"]
-            for qid, emb, et, ttl in zip(
-                qs["id"], qs["emb"], qs["event_time"], qs["ttl"]
-            ):
-                min_ts = int(et) - int(ttl) if ttl is not None else None
-                lbs, ds = idx.search(
-                    np.asarray(emb, dtype=np.float64), k,
-                    max(conf.ef_search, k), min_ts,
-                )
-                if len(lbs):
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "qid": int(qid),
-                                "neighbor_id": lbs,
-                                "distance": ds,
-                                "partition_id": int(pid),
-                            }
-                        )
+            if len(qs) == 0:
+                continue
+            # per-query freshness bound event_time - ttl; no ttl, no bound
+            ttl = pd.to_numeric(qs["ttl"])
+            min_ts = np.where(
+                ttl.isna(),
+                np.iinfo(np.int64).min,
+                qs["event_time"].to_numpy(np.int64) - ttl.fillna(0).to_numpy(np.int64),
+            )
+            res = idx.search_batch(
+                np.stack(qs["emb"].to_numpy()).astype(np.float64),
+                k, max(conf.ef_search, k), min_ts,
+            )
+            lens = [len(lbs) for lbs, _ in res]
+            if sum(lens):
+                out.append(
+                    pd.DataFrame(
+                        {
+                            "qid": np.repeat(qs["id"].to_numpy(np.int64), lens),
+                            "neighbor_id": np.concatenate([lbs for lbs, _ in res]),
+                            "distance": np.concatenate([ds for _, ds in res]),
+                            "partition_id": int(pid),
+                        }
                     )
+                )
         state.update((idx.dumps(),))
         if out:
             yield pd.concat(out)
