@@ -2,6 +2,7 @@
 C8 early termination, O7 executor index cache."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from vstream_spark.config import VectorIndexConf
@@ -499,8 +500,9 @@ def test_tombstones_across_chunks(spark, tmp_path):
     """Delete markers apply across chunk boundaries (segments_per_job=1):
     a marker in a later chunk's segment removes a hit found in the first
     chunk; a marker in a segment early termination never visits still
-    removes it (markers cover every pruned segment); a marker at the SAME
-    event_time as its insert keeps the insert."""
+    removes it (markers cover every pruned segment), and the segment that
+    held the shadowed id still fills k; a marker at the SAME event_time as
+    its insert keeps the insert."""
     st = SegmentStore(spark, str(tmp_path / "segtomb"))
     for lo in (0, 50):
         st.append_segment(spark.createDataFrame(_vec_rows(lo, lo + 50), SCHEMA))
@@ -528,21 +530,22 @@ def test_tombstones_across_chunks(spark, tmp_path):
         # visit the two insert segments first, the marker segment last
         searcher.temperature = {inserts[0]: 2.0, inserts[1]: 1.0}
         got = searcher.search(q, k=10, metric="l2")
-        return set(got["neighbor_id"]), searcher.last_searched_ids
+        return got, set(got["neighbor_id"]), searcher.last_searched_ids
 
     # every chunk visited: the last chunk's marker drops the first's hit
-    ids, visited = run(termination_lower_bound=1.0)
+    _, ids, visited = run(termination_lower_bound=1.0)
     assert len(visited) == 3
     assert 3 not in ids and 5 in ids
-    # always-terminate: the dropped hit leaves query 3 short of k after the
-    # first chunk, the second fills it, and the marker segment is never
-    # searched
-    ids, visited = run(
+    # always-terminate: the first chunk over-fetches past the shadowed id
+    # 3, so every query holds k after it, the search stops there, and the
+    # marker segment is never searched yet still removes id 3
+    got, ids, visited = run(
         termination_lower_bound=0.0, termination_factor=1e9,
         termination_threshold=1.0,
     )
-    assert visited == inserts
+    assert visited == inserts[:1]
     assert 3 not in ids and 5 in ids
+    assert got.groupby("qid").size().tolist() == [10, 10]
 
 
 def test_flat_segments_need_no_artifact_and_one_job(spark, tmp_path):
@@ -583,8 +586,9 @@ def test_flat_search_matches_knn_exact_row_for_row(spark, tmp_path):
     """A search over flat segments is the exact answer: with delete markers
     in a later segment (one strictly newer than its insert, one at the same
     time, which keeps it) and a freshness bound, every row equals
-    ``knn_exact`` over the visible snapshot, and so it does with an
-    executor-side allowlist threaded into the scan (in_index)."""
+    ``knn_exact`` over the visible snapshot, in the job placement and in
+    the driver placement alike, and so it does with an executor-side
+    allowlist threaded into the scan (in_index)."""
     from pyspark.sql import functions as F
 
     from vstream_spark.operators.knn import knn_exact
@@ -601,6 +605,11 @@ def test_flat_search_matches_knn_exact_row_for_row(spark, tmp_path):
     )
     searcher = SegmentSearcher(st, VectorIndexConf(dim=8))
     got = searcher.search(q, k=7, min_event_time=3000)
+    assert searcher.last_placement == "job"
+    # the same frame from the driver placement: one kernel, two placements
+    on_driver = searcher.search(q.toPandas(), k=7, min_event_time=3000)
+    assert searcher.last_placement == "driver"
+    pd.testing.assert_frame_equal(on_driver, got)
     vis = searcher.visible(min_event_time=3000).select("id", "emb")
     want = knn_exact(vis, q, k=7).toPandas().sort_values(["qid", "rank"])
     assert got[["qid", "neighbor_id", "rank"]].values.tolist() == (
@@ -648,7 +657,7 @@ def test_delete_marker_cache_follows_manifest_and_bound(spark, tmp_path):
     assert set(st._markers) == {s["id"] for s in st.segments()}
 
 
-def test_compaction_builds_each_new_segments_resolved_kind(spark, tmp_path):
+def test_compaction_builds_each_new_segments_resolved_kind(spark, tmp_path, monkeypatch):
     """Flat segments carry no sidecar. Compacting two of them into one past
     the flat bound (``auto_ivf_threshold``) builds that segment's 'auto'
     kind, ivf, so no executor has to rebuild it on a cache miss; a
@@ -693,3 +702,147 @@ def test_compaction_builds_each_new_segments_resolved_kind(spark, tmp_path):
     assert merged["count"] == 2 * bound
     sidecars = glob.glob(os.path.join(merged["path"], "_*.idx"))
     assert [os.path.basename(p) for p in sidecars] == ["_hnsw-l2.idx"]
+
+    from vstream_spark.index import IvfIndex
+    from vstream_spark.storage import search
+
+    cosine = VectorIndexConf(dim=4, metric="cosine")
+    flat = SegmentStore(spark, str(tmp_path / "segcosine"))
+    flat.append_segment(rows(0, bound))
+    flat.append_segment(rows(bound, bound))
+    (merged,) = flat.compact(index_conf=cosine)
+    assert os.path.basename(merged["index_file"]) == "_ivf-cosine.idx"
+
+    def no_rebuild(*a, **kw):
+        raise AssertionError("the cosine sidecar was not loaded")
+
+    monkeypatch.setattr(search, "build_index_object", no_rebuild)
+    _INDEX_CACHE.clear()
+    assert isinstance(search._segment_index(merged, cosine, "cosine"), IvfIndex)
+
+
+@pytest.mark.parametrize("placement", ["driver", "job"])
+def test_cross_segment_deletes_fill_k(spark, tmp_path, placement):
+    """A delete marker in a later segment must not leave a query short of
+    k: segment A inserts ids 0-19 at [i,0,0,0] (t=100+i), segment B
+    deletes ids 0-4 at t=1000, and a k=10 search from the origin returns
+    ids 5-14 — ``knn_exact`` over ``visible()`` — in both placements."""
+    from vstream_spark.operators.knn import knn_exact
+
+    st = SegmentStore(spark, str(tmp_path / "underfill"))
+    st.append_segment(spark.createDataFrame(
+        [(i, [float(i), 0.0, 0.0, 0.0], 100 + i, 10**12, "I") for i in range(20)],
+        SCHEMA,
+    ))
+    st.append_segment(spark.createDataFrame(
+        [(i, None, 1000, 10**12, "D") for i in range(5)], SCHEMA
+    ))
+    q = pd.DataFrame({"qid": [0], "emb": [np.zeros(4, dtype=np.float32)]})
+    qdf = spark.createDataFrame(q, "qid long, emb array<float>")
+    searcher = SegmentSearcher(st, VectorIndexConf(dim=4))
+    got = searcher.search(q if placement == "driver" else qdf, k=10)
+    assert searcher.last_placement == placement
+    want = knn_exact(searcher.visible().select("id", "emb"), qdf, k=10).toPandas()
+    assert got["neighbor_id"].tolist() == list(range(5, 15))
+    assert got["neighbor_id"].tolist() == want.sort_values("rank")["neighbor_id"].tolist()
+
+
+def test_placement_bound_matches_receipt():
+    """The driver placement bound is the ``bound:`` line of the committed
+    receipt (tools/placement_crossover.py), so a re-run receipt and the
+    code cannot drift apart."""
+    import os
+    import re
+
+    from vstream_spark.storage import search
+
+    path = os.path.join(os.path.dirname(__file__), "..", "PLACEMENT_CROSSOVER.txt")
+    with open(path) as f:
+        (bound,) = re.findall(r"^bound: (\d+)$", f.read(), re.M)
+    assert search.DRIVER_PLACEMENT_MAX_WORK == int(bound)
+
+
+def test_streaming_query_places_small_batches_on_driver(spark, tmp_path, monkeypatch):
+    """A small micro-batch over flat segments is searched on the driver:
+    a streamed batch records placement "driver", and the sink launches
+    one Spark job, the collect of its queries (no isEmpty, search or write
+    job). Above the bound the same batch records "job", runs its search
+    job and writes the same rows."""
+    import pyarrow.parquet as pq
+
+    from vstream_spark.storage import search
+    from vstream_spark.streaming.pipeline import StreamingVectorQuery
+
+    st = SegmentStore(spark, str(tmp_path / "segplace"))
+    for lo in (0, 100):
+        st.append_segment(spark.createDataFrame(_vec_rows(lo, lo + 100), SCHEMA))
+    conf = VectorIndexConf(dim=8)
+    q = _vec_rows(0, 6, seed=9)
+    qpdf = pd.DataFrame({"qid": [r[0] for r in q], "emb": [r[1] for r in q]})
+    src = str(tmp_path / "qsrc")
+    spark.createDataFrame(qpdf, "qid long, emb array<float>").coalesce(1).write.parquet(src)
+    streamed = StreamingVectorQuery(st, str(tmp_path / "sout"), index_conf=conf, k=3)
+    streamed.start(
+        spark.readStream.schema("qid long, emb array<float>").parquet(src),
+        str(tmp_path / "sckpt"),
+    ).awaitTermination()
+    assert [b["placement"] for b in streamed.batch_stats] == ["driver"]
+
+    batch = spark.createDataFrame(qpdf, "qid long, emb array<float>")
+    out_dir = str(tmp_path / "out")
+    svq = StreamingVectorQuery(st, out_dir, index_conf=conf, k=3)
+    _, jobs = _count_jobs(spark, "sink-driver", lambda: svq._sink(batch, 0))
+    assert svq.batch_stats[-1]["placement"] == "driver" and jobs == 1
+    monkeypatch.setattr(search, "DRIVER_PLACEMENT_MAX_WORK", 0)
+    _, jobs = _count_jobs(spark, "sink-job", lambda: svq._sink(batch, 1))
+    assert svq.batch_stats[-1]["placement"] == "job" and jobs == 2
+    out = pq.read_table(out_dir).to_pandas()
+    rows = [g.drop(columns="batch_id").reset_index(drop=True) for _, g in out.groupby("batch_id")]
+    assert len(rows) == 2 and len(rows[0]) == 18
+    pd.testing.assert_frame_equal(rows[0], rows[1])
+
+
+def test_index_cache_survives_concurrent_driver_searches(spark, tmp_path, monkeypatch):
+    """Driver-placed searches of concurrent streams share the process's
+    index cache: eight threads fetching six flat segments through a
+    two-entry cache, with a short switch interval, all get the segment
+    they asked for, and the cache never exceeds its bound."""
+    import sys
+    import threading
+
+    from vstream_spark.storage import search
+
+    st = SegmentStore(spark, str(tmp_path / "segthreads"))
+    for lo in range(0, 60, 10):
+        st.append_segment(spark.createDataFrame(_vec_rows(lo, lo + 10), SCHEMA))
+    segs = st.segments()
+    conf = VectorIndexConf(dim=8)
+    monkeypatch.setattr(search, "_INDEX_CACHE_MAX", 2)
+    _INDEX_CACHE.clear()
+    errors: list[BaseException] = []
+
+    def fetch(seed: int) -> None:
+        rng = np.random.RandomState(seed)
+        try:
+            for _ in range(60):
+                seg = segs[rng.randint(len(segs))]
+                idx = search._segment_index(seg, conf, "l2")
+                lo = int(seg["min_event_time"]) // 100
+                assert sorted(idx.labels.tolist()) == list(range(lo, lo + 10))
+                assert len(_INDEX_CACHE) <= 2
+        except BaseException as e:  # noqa: BLE001 - reported by the main thread
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=fetch, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[0]
+    _INDEX_CACHE.clear()

@@ -746,3 +746,35 @@ def test_streaming_ingest_then_segment_search_e2e(spark, tmp_path):
     assert set(by_q) == {1, 2}
     assert by_q[1].iloc[0]["neighbor_id"] == 7  # self is nearest
     assert by_q[2].iloc[0]["neighbor_id"] == 80
+
+
+def test_streaming_query_sink_replay_overwrites_its_batch_file(spark, tmp_path):
+    """A micro-batch delivered twice (a replay after a crash between the
+    sink and the offset commit) leaves one ``batch-<id>.parquet`` with the
+    same rows, not a duplicate; a temp file a crashed write leaves behind
+    is hidden from Spark and pyarrow readers by its dot prefix."""
+    import os
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from vstream_spark.streaming.pipeline import StreamingVectorQuery
+
+    st = SegmentStore(spark, str(tmp_path / "segreplay"))
+    st.append_segment(spark.createDataFrame(_vec_rows(0, 50), SCHEMA))
+    batch = spark.createDataFrame(
+        [(i, r[1]) for i, r in enumerate(_vec_rows(0, 4, seed=5))],
+        "qid long, emb array<float>",
+    )
+    out = str(tmp_path / "qout")
+    svq = StreamingVectorQuery(st, out, index_conf=VectorIndexConf(dim=4), k=3)
+    svq._sink(batch, 7)
+    first = pq.read_table(out).to_pandas()
+    svq._sink(batch, 7)
+    assert os.listdir(out) == ["batch-7.parquet"]
+    pd.testing.assert_frame_equal(pq.read_table(out).to_pandas(), first)
+    assert len(first) == 12 and set(first["batch_id"]) == {7}
+    with open(os.path.join(out, ".batch-8.parquet.tmp"), "wb") as f:
+        f.write(b"PAR1 torn write")
+    assert pq.read_table(out).num_rows == 12
+    assert spark.read.parquet(out).count() == 12

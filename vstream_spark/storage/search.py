@@ -23,26 +23,43 @@ generalized to ``segments_per_job`` temperature-ordered segments per Spark
 job. The reference's per-file step is a C++ function call; a literal
 job-per-segment translation pays a driver scheduler round trip per file,
 which at a 100×-scale store (thousands of post-prune segments) becomes the
-latency floor (r11 VERDICT #1). A chunk is ONE Spark job: one mapInPandas
-task per query partition searches every segment of the chunk in turn, so
-driver job-launch cost is O(segments / segments_per_job); the M1 running
-merge and the C8 termination check run once per chunk.
-Flat segments (the default 'auto' kind up to ``auto_ivf_threshold``
-rows) take no slot of that budget, so a store of flat segments is searched
-in one job. ``segments_per_job=1`` is the SST-at-a-time shape for indexed
+latency floor (r11 VERDICT #1). In the job placement (below) a chunk is
+ONE Spark job: one mapInPandas task per query partition searches every
+segment of the chunk in turn, so driver job-launch cost is
+O(segments / segments_per_job); the M1 running merge and the C8
+termination check run once per chunk. Flat segments (the default 'auto'
+kind up to ``auto_ivf_threshold`` rows) take no slot of that budget, so a
+store of flat segments is searched in one job, or in none in the driver
+placement. ``segments_per_job=1`` is the SST-at-a-time shape for indexed
 segments; chunking never changes results — a chunk searches a superset of
 what one-at-a-time would have before the same termination check, and the
 merge is order-insensitive (dist, id tiebreak).
 
-Executors read the segment parquet directly (pyarrow) and keep the built
-index in a process-global LRU cache, so the vector data never flows through
-the driver. Each task folds its chunk's per-segment top-k partials —
-delete-marker filter, last-writer-wins dedup, top-k cut — so only a
-chunk's top-k per query (at most |Q|·k rows, whatever the chunk holds)
-comes back through Arrow; the M1 merge across chunks and the C8 check run
-in pandas on the driver, the way the reference folds each file's results
-into one buffer at reduce parallelism 1 (``params.yaml:33-34``). The driver
-holds at most 2·|Q|·k hit rows.
+One kernel, two placements. :func:`search_segments` searches a chunk's
+segments for a pandas (qid, emb) frame: it stacks the queries once,
+searches every segment in turn — over-fetching each by the labels of it
+that a newer delete marker shadows, so dropping them cannot leave a query
+short of k — drops the shadowed hits and merges the partials to top-k per
+query. Where it runs follows the data:
+
+- **job** — a Spark (qid, emb) DataFrame, or a driver frame too large for
+  the rule below: one ``mapInPandas`` job per chunk runs the kernel in
+  each task over its partition of the queries. Executors read the segment
+  parquet directly (pyarrow) and keep the built index in a process-global
+  LRU cache, so the vector data never flows through the driver; a chunk
+  sends at most |Q|·k rows back through Arrow however many segments it
+  holds.
+- **driver** — a pandas frame already on the driver (a collected
+  streaming micro-batch), when every pruned segment is flat (so they form
+  one chunk) and ``|Q|·Σrows·d`` is at most :data:`DRIVER_PLACEMENT_MAX_WORK`:
+  the driver calls the kernel in-process, with no job. Below that bound a
+  job's launch costs more than the scan it would parallelize (the
+  reference's per-file step is a C++ call, not a scheduler round trip).
+
+The M1 merge across chunks and the C8 check run in pandas on the driver,
+the way the reference folds each file's results into one buffer at reduce
+parallelism 1 (``params.yaml:33-34``). The driver holds at most 2·|Q|·k
+hit rows, plus the |Q|·d query floats of a driver-placed search.
 
 ``SegmentSearcher`` has two entry points over that one loop: ``search``
 (plain top-k; feeds the C8 EMA) and ``search_filtered`` (attribute-filtered
@@ -54,6 +71,7 @@ the predicate against the LWW-visible snapshot; never writes the EMA).
 from __future__ import annotations
 
 import re
+import threading
 from collections import OrderedDict
 from collections.abc import Iterator
 
@@ -71,6 +89,9 @@ from vstream_spark.storage.segments import SegmentStore, build_index_object
 # refresh recency and eviction takes the LEAST-recently-used entry.
 _INDEX_CACHE: OrderedDict[str, object] = OrderedDict()
 _INDEX_CACHE_MAX = 64
+# the driver placement runs the kernel in the driver process, where
+# foreachBatch sinks of concurrent streams may share this cache
+_INDEX_CACHE_LOCK = threading.Lock()
 
 # executor-process-global allowlist cache: (segment id, expr) -> sorted
 # label array. Sits beside the index cache with the same LRU discipline —
@@ -104,6 +125,16 @@ _SNAPSHOT_CACHE: "OrderedDict[tuple, DataFrame | None]" = OrderedDict()
 _SNAPSHOT_CACHE_MAX = 4
 _PROBE_CACHE: "OrderedDict[tuple, tuple[int, float]]" = OrderedDict()
 _PROBE_CACHE_MAX = 256
+
+# Driver placement bound on |Q|·Σrows·d (query rows x flat segment rows x
+# dim): up to it a search of flat segments on a driver-held query frame
+# runs the kernel in-process instead of launching a job. The largest grid
+# work at which the driver path is no slower than the job path, at that
+# and every smaller work (tools/placement_crossover.py; receipt in
+# PLACEMENT_CROSSOVER.txt, 4 cores, d=128, median of 5): 50 queries over
+# 32k rows take 407 ms on the driver against 588 ms as a job, and at the
+# next grid work, 256M, the job path wins one cell by 5 ms.
+DRIVER_PLACEMENT_MAX_WORK = 204_800_000
 
 
 def _snapshot_cache_put(key: tuple, df: "DataFrame | None") -> None:
@@ -394,29 +425,32 @@ def _segment_allowlist(seg: dict, expr: str) -> np.ndarray:
 
 
 def _segment_index(seg: dict, conf: VectorIndexConf, metric: str):
-    """Build-or-fetch the segment's index on this executor."""
+    """Build-or-fetch the segment's index in this process (an executor's,
+    or the driver's for a driver-placed search)."""
     kind = resolve_index_kind(conf, seg.get("count", 0))
     key = f"{seg['id']}:{kind}:{metric}"
-    idx = _INDEX_CACHE.get(key)
-    if idx is not None:
-        _INDEX_CACHE.move_to_end(key)  # LRU: a hit refreshes recency
-    if idx is None:
-        import os
+    with _INDEX_CACHE_LOCK:
+        idx = _INDEX_CACHE.get(key)
+        if idx is not None:
+            _INDEX_CACHE.move_to_end(key)  # LRU: a hit refreshes recency
+            return idx
+    import os
 
-        sidecar = os.path.join(seg["path"], f"_{kind}-{metric}.idx")
-        if not os.path.exists(sidecar) and kind == "hnsw":
-            # legacy manifests recorded the hnsw artifact as index_file
-            sidecar = seg.get("index_file") or sidecar
-        if os.path.exists(sidecar):
-            # C4: load the persisted artifact instead of rebuilding
-            with open(sidecar, "rb") as f:
-                idx = KINDS[kind].cls.loads(f.read())
-        else:
-            # cache-miss rebuild through the SAME pyarrow builder the
-            # flush-time sidecar path uses (storage/segments.py) — one
-            # audited implementation of codec dequantize + tombstone
-            # shadowing instead of two drifting copies
-            _, idx = build_index_object(seg, conf, metric)
+    sidecar = os.path.join(seg["path"], f"_{kind}-{metric}.idx")
+    if not os.path.exists(sidecar) and kind == "hnsw":
+        # legacy manifests recorded the hnsw artifact as index_file
+        sidecar = seg.get("index_file") or sidecar
+    if os.path.exists(sidecar):
+        # C4: load the persisted artifact instead of rebuilding
+        with open(sidecar, "rb") as f:
+            idx = KINDS[kind].cls.loads(f.read())
+    else:
+        # cache-miss rebuild through the SAME pyarrow builder the
+        # flush-time sidecar path uses (storage/segments.py) — one
+        # audited implementation of codec dequantize + tombstone
+        # shadowing instead of two drifting copies
+        _, idx = build_index_object(seg, conf, metric)
+    with _INDEX_CACHE_LOCK:
         if len(_INDEX_CACHE) >= _INDEX_CACHE_MAX:
             _INDEX_CACHE.popitem(last=False)  # evict least-recently-used
         _INDEX_CACHE[key] = idx
@@ -429,19 +463,95 @@ _RESULT_DTYPES = {
 _HIT_SCHEMA = (
     "qid long, neighbor_id long, distance double, neighbor_ts long, _seg string"
 )
+_HIT_DTYPES = {
+    "qid": "int64", "neighbor_id": "int64", "distance": "float64",
+    "neighbor_ts": "int64", "_seg": "object",
+}
 
 
-def _drop_deleted(
-    hits: pd.DataFrame, tombs: tuple[np.ndarray, np.ndarray]
-) -> pd.DataFrame:
-    """Cross-segment deletes: drop hits whose id carries a delete marker
-    strictly newer than the hit's insert time (an equal time keeps the
-    insert). ``tombs`` is (sorted ids, max delete time per id)."""
+def query_frame(spark, queries: pd.DataFrame) -> DataFrame:
+    """A driver-held pandas (qid, emb) frame as a Spark query DataFrame."""
+    return spark.createDataFrame(queries[["qid", "emb"]], "qid long, emb array<float>")
+
+
+def _shadowed(
+    labels: np.ndarray, ts: np.ndarray, tombs: tuple[np.ndarray, np.ndarray]
+) -> np.ndarray:
+    """Mask of the (label, ts) rows that carry a delete marker strictly
+    newer than ``ts`` (an equal time keeps the insert). ``tombs`` is
+    (sorted ids, max delete time per id)."""
     ids, del_time = tombs
-    nid = hits["neighbor_id"].to_numpy()
-    at = np.minimum(np.searchsorted(ids, nid), len(ids) - 1)
-    gone = (ids[at] == nid) & (del_time[at] > hits["neighbor_ts"].to_numpy())
-    return hits[~gone]
+    at = np.minimum(np.searchsorted(ids, labels), len(ids) - 1)
+    return (ids[at] == labels) & (del_time[at] > ts)
+
+
+def search_segments(
+    segs: list[dict],
+    queries: pd.DataFrame,
+    conf: VectorIndexConf,
+    k: int,
+    metric: str,
+    min_ts: int | None,
+    ef: int,
+    tombs: tuple[np.ndarray, np.ndarray] | None,
+    filter_expr: str | None = None,
+) -> pd.DataFrame:
+    """The one per-segment search kernel, run by a ``mapInPandas`` task
+    over its partition of the queries or by the driver in-process (module
+    docstring). Stacks the (qid, emb) queries once and searches every
+    segment of ``segs`` in turn. Cross-segment deletes: a segment is
+    searched for k plus the number of its labels that a strictly newer
+    marker in ``tombs`` shadows, so dropping the shadowed hits leaves at
+    least min(k, live) per query. The partials merge to top-k per query
+    (:func:`_merge_topk`, the M1 merge the driver runs across chunks);
+    each row keeps its segment of origin (``_seg``) so C7 temperature
+    derives from the merged result. ``filter_expr`` builds each segment's
+    attribute allowlist (:func:`_segment_allowlist`) and threads it INTO
+    graph/cell traversal (the FilterSeqTs-functor analog)."""
+    qids = queries["qid"].to_numpy(np.int64)
+    qmat = np.stack(queries["emb"].to_numpy()).astype(np.float64)
+    parts = []
+    for seg in segs:
+        allow = None
+        if filter_expr is not None:
+            allow = _segment_allowlist(seg, filter_expr)
+            if len(allow) == 0:
+                # time-ranged segments can be predicate-empty even when
+                # GLOBAL selectivity routed to in_index (attribute
+                # correlated with ingest time): an empty allowlist would
+                # otherwise degrade the filtered walk to an exhaustive
+                # component scan per query just to return nothing — skip
+                # the segment (no index load either)
+                continue
+        idx = _segment_index(seg, conf, metric)
+        k_seg = k
+        if tombs is not None:
+            k_seg += int(_shadowed(idx.labels[: idx.n], idx.ts[: idx.n], tombs).sum())
+        res = idx.search_batch(qmat, k_seg, ef, min_ts, allow_labels=allow)
+        nids = np.concatenate([np.asarray(lbs, dtype=np.int64) for lbs, _ in res])
+        parts.append(
+            pd.DataFrame(
+                {
+                    "qid": np.repeat(qids, [len(lbs) for lbs, _ in res]),
+                    "neighbor_id": nids,
+                    "distance": np.concatenate(
+                        [np.asarray(ds, dtype=np.float64) for _, ds in res]
+                    ),
+                    "neighbor_ts": idx.ts_of(nids),
+                    "_seg": seg["id"],
+                }
+            )
+        )
+    if not parts:
+        return pd.DataFrame({c: [] for c in _HIT_DTYPES}).astype(_HIT_DTYPES)
+    hits = pd.concat(parts, ignore_index=True)
+    if tombs is not None:
+        hits = hits[
+            ~_shadowed(
+                hits["neighbor_id"].to_numpy(), hits["neighbor_ts"].to_numpy(), tombs
+            )
+        ]
+    return _merge_topk(hits, k)
 
 
 def _merge_topk(hits: pd.DataFrame, k: int) -> pd.DataFrame:
@@ -487,6 +597,9 @@ class SegmentSearcher:
         # post-termination) — the observable that lets callers/tests see C8
         # early termination without instrumenting the loop
         self.last_searched_ids: list[str] = []
+        # where the most recent segment loop ran: "driver" or "job" (module
+        # docstring); None before any loop or when no segment survived
+        self.last_placement: str | None = None
 
     # -- C7/C8 state persistence ----------------------------------------------
     # The reference persists per-table temperature in version metadata so
@@ -564,7 +677,7 @@ class SegmentSearcher:
 
     def _run_loop(
         self,
-        queries: DataFrame,
+        queries: DataFrame | pd.DataFrame,
         k: int,
         metric: str,
         min_event_time: int | None,
@@ -580,7 +693,9 @@ class SegmentSearcher:
         distance, neighbor_ts, _seg) — or ``None`` when no segment
         survives pruning. ``filter_expr`` (a validated hint) zone-map
         prunes segments and threads each segment's allowlist into
-        traversal (:meth:`_search_chunk`)."""
+        traversal (:func:`search_segments`). ``queries`` is a Spark or a
+        pandas (qid, emb) frame; :meth:`_on_driver` places a pandas one
+        and ``last_placement`` records where the loop ran."""
         conf = self.conf
         segs = self.store.prune(min_event_time, max_event_time)
         if filter_expr is not None and segs:
@@ -595,29 +710,45 @@ class SegmentSearcher:
         segs = self._order_segments(segs)
         if not segs:
             self.last_searched_ids = []
+            self.last_placement = None
             return None
 
         ef = max(ef_search or conf.ef_search, k)
         chunks = self._chunks(segs)
-        # widen the query frame, and when more than one chunk job reads it
-        # checkpoint it ONCE per search (r12 VERDICT #1): every chunk job
-        # reads the same executor-pinned query blocks instead of
-        # re-scanning and re-exchanging the query source.
-        from vstream_spark.operators.util import widen
-
-        qdf = widen(queries.select("qid", "emb"))
-        if len(chunks) > 1:
-            qdf = qdf.localCheckpoint(eager=True)
         # delete markers cover EVERY segment up to the snapshot bound, not
         # only the visited ones: a marker in a segment termination never
         # reaches still removes the hit it shadows
         tombs = self._tombstones(max_event_time)
+        if isinstance(queries, pd.DataFrame) and self._on_driver(segs, queries):
+            self.last_placement = "driver"
+
+            def search_chunk(chunk):
+                return search_segments(
+                    chunk, queries, conf, k, metric, min_event_time, ef, tombs,
+                    filter_expr,
+                )
+        else:
+            self.last_placement = "job"
+            if isinstance(queries, pd.DataFrame):
+                queries = query_frame(self.store.spark, queries)
+            # widen the query frame, and when more than one chunk job reads
+            # it checkpoint it ONCE per search (r12 VERDICT #1): every chunk
+            # job reads the same executor-pinned query blocks instead of
+            # re-scanning and re-exchanging the query source.
+            from vstream_spark.operators.util import widen
+
+            qdf = widen(queries.select("qid", "emb"))
+            if len(chunks) > 1:
+                qdf = qdf.localCheckpoint(eager=True)
+
+            def search_chunk(chunk):
+                return self._search_chunk(
+                    chunk, qdf, k, metric, min_event_time, ef, tombs, filter_expr
+                )
         merged: pd.DataFrame | None = None
         searched_ids: list[str] = []
         for chunk in chunks:
-            part = self._search_chunk(
-                chunk, qdf, k, metric, min_event_time, ef, tombs, filter_expr
-            )
+            part = search_chunk(chunk)
             searched_ids.extend(s["id"] for s in chunk)
             merged = _merge_topk(
                 part if merged is None
@@ -635,14 +766,26 @@ class SegmentSearcher:
             self._update_temperature(sid, hits=int(seg_hits.get(sid, 0)))
         return merged
 
+    def _on_driver(self, segs: list[dict], queries: pd.DataFrame) -> bool:
+        """True when a driver-held query frame is searched in-process:
+        every segment is flat, so they form one chunk that C8 cannot cut
+        short, and |Q|·Σrows·d is at most :data:`DRIVER_PLACEMENT_MAX_WORK`.
+        Otherwise the frame goes to a job like a Spark DataFrame."""
+        if queries.empty or any(
+            resolve_index_kind(self.conf, s["count"]) != "flat" for s in segs
+        ):
+            return False
+        work = len(queries) * sum(s["count"] for s in segs) * len(queries["emb"].iat[0])
+        return work <= DRIVER_PLACEMENT_MAX_WORK
+
     def _chunks(self, segs: list[dict]) -> list[list[dict]]:
         """Temperature-ordered segments cut into one Spark job each: a
         chunk holds ``segments_per_job`` indexed segments, and flat ones
         ride along without taking a slot — a flat segment is searched
         straight from its parquet, so a job launch (~0.4 s) costs far more
         than searching it. A store of flat segments is one job, which C8
-        cannot cut short; each task merges its chunk to top-k per query
-        (:meth:`_search_chunk`), so a chunk returns at most |Q|·k rows
+        cannot cut short; the kernel merges a chunk to top-k per query
+        (:func:`search_segments`), so a chunk returns at most |Q|·k rows
         however many segments it holds."""
         chunks: list[list[dict]] = [[]]
         slots = 0
@@ -656,7 +799,7 @@ class SegmentSearcher:
 
     def search(
         self,
-        queries: DataFrame,
+        queries: DataFrame | pd.DataFrame,
         k: int = 10,
         metric: str = "l2",
         min_event_time: int | None = None,
@@ -665,6 +808,9 @@ class SegmentSearcher:
     ) -> pd.DataFrame:
         """Returns a pandas frame (qid, neighbor_id, distance, rank).
 
+        ``queries`` is a Spark (qid, emb) DataFrame, searched by jobs, or a
+        pandas one already on the driver, searched in-process when the
+        placement rule (:meth:`_on_driver`) holds.
         ``min_event_time`` is the freshness bound (query event_time - TTL);
         it prunes whole segments (C6) AND filters inside surviving indexes
         (the FilterSeqTs analog). ``k`` and ``ef_search`` are the per-query
@@ -968,63 +1114,20 @@ class SegmentSearcher:
         tombs: tuple[np.ndarray, np.ndarray] | None,
         filter_expr: str | None = None,
     ) -> pd.DataFrame:
-        """One chunk of segments as ONE Spark job: each task takes its
-        partition of the loop's pre-widened (qid, emb) frame, stacks the
-        queries once and searches every segment of the chunk in turn. The
-        task drops the hits the delete markers ``tombs`` shadow and merges
-        the per-segment partials to top-k per query (the M1 merge the
-        driver runs across chunks), so a chunk sends at most |Q|·k rows
-        through Arrow however many segments it holds; each row keeps its
-        segment of origin (``_seg``) so C7 temperature derives from the
-        merged result. ``filter_expr`` builds each segment's attribute
-        allowlist executor-side and threads it INTO graph/cell traversal
-        (the FilterSeqTs-functor analog)."""
+        """One chunk of segments as ONE Spark job: each task runs
+        :func:`search_segments` over its partition of the loop's
+        pre-widened (qid, emb) frame, so a chunk sends at most |Q|·k rows
+        through Arrow however many segments it holds."""
         conf = self.conf
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             pdfs = [b for b in batches if len(b)]
-            if not pdfs:
-                return
-            pdf = pd.concat(pdfs, ignore_index=True)
-            qids = pdf["qid"].to_numpy(np.int64)
-            qmat = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
-            parts = []
-            for seg in chunk:
-                allow = None
-                if filter_expr is not None:
-                    allow = _segment_allowlist(seg, filter_expr)
-                    if len(allow) == 0:
-                        # time-ranged segments can be predicate-empty even
-                        # when GLOBAL selectivity routed to in_index
-                        # (attribute correlated with ingest time): an empty
-                        # allowlist would otherwise degrade the filtered
-                        # walk to an exhaustive component scan per query
-                        # just to return nothing — skip the segment (no
-                        # index load either) and go on with the chunk
-                        continue
-                idx = _segment_index(seg, conf, metric)
-                res = idx.search_batch(qmat, k, ef, min_ts, allow_labels=allow)
-                nids = np.concatenate(
-                    [np.asarray(lbs, dtype=np.int64) for lbs, _ in res]
+            if pdfs:
+                hits = search_segments(
+                    chunk, pd.concat(pdfs, ignore_index=True), conf, k, metric,
+                    min_ts, ef, tombs, filter_expr,
                 )
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "qid": np.repeat(qids, [len(lbs) for lbs, _ in res]),
-                            "neighbor_id": nids,
-                            "distance": np.concatenate(
-                                [np.asarray(ds, dtype=np.float64) for _, ds in res]
-                            ),
-                            "neighbor_ts": idx.ts_of(nids),
-                            "_seg": seg["id"],
-                        }
-                    )
-                )
-            if not parts:
-                return
-            hits = pd.concat(parts, ignore_index=True)
-            if tombs is not None:
-                hits = _drop_deleted(hits, tombs)
-            yield _merge_topk(hits, k)
+                if len(hits):
+                    yield hits
 
         return qdf.mapInPandas(run, _HIT_SCHEMA).toPandas()

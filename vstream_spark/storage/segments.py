@@ -768,7 +768,11 @@ class SegmentStore:
 
     # -- maintenance ---------------------------------------------------------
 
-    def compact(self, max_rows_per_segment: int = 250_000) -> list[dict]:
+    def compact(
+        self,
+        max_rows_per_segment: int = 250_000,
+        index_conf: VectorIndexConf | None = None,
+    ) -> list[dict]:
         """Size-tiered compaction into EVENT-TIME-RANGED segments (the
         reference disables RocksDB auto-compaction and relies on explicit
         maintenance). Output segments are bucketed by event-time quantiles,
@@ -782,6 +786,9 @@ class SegmentStore:
         of flat segments), each new segment gets the kind 'auto' resolves
         on its new row count — none while it is flat, ivf past the bound —
         so a merge past the bound leaves no segment without its artifact.
+        Builds take their parameters from ``index_conf`` (the defaults
+        when None), and a store without sidecars takes its metric: flat
+        segments record none.
         """
         segs = self.segments()
         if len(segs) <= 1:
@@ -828,10 +835,11 @@ class SegmentStore:
         # metric); flat inputs leave no sidecar to infer a kind from, so
         # they get the 'auto' kind (a segment without its artifact is
         # rebuilt by every executor that misses it in cache)
+        conf = index_conf or VectorIndexConf()
         for kind in sorted(old_kinds) or ["auto"]:
-            for metric in metrics or {"l2"}:
+            for metric in metrics or {conf.metric}:
                 self.build_segment_indexes(
-                    new_segs, VectorIndexConf(index_kind=kind, metric=metric)
+                    new_segs, replace(conf, index_kind=kind, metric=metric)
                 )
         return self.segments()
 

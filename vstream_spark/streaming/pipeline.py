@@ -21,6 +21,7 @@ queries) flowing through partition -> per-partition index -> merge
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -374,13 +375,32 @@ class StreamingVectorQuery:
       guard inside ``search_filtered``), so restore still helps via C7
       ordering + the persisted threshold from any unfiltered lanes.
 
-    Results append to ``out_dir`` as parquet (qid, neighbor_id, distance,
-    rank, batch_id); per-batch observability lands in ``batch_stats``
-    (batch_id, rows, segments searched, strategy, restored) on the driver
-    — O(batches) dicts, never data."""
+    Each micro-batch's (qid, emb) rows are collected to the driver once,
+    through Arrow; an empty batch returns there. The search then takes
+    one of ``SegmentSearcher``'s two placements (``storage/search.py``):
+    in-process on the driver when every pruned segment is flat and the
+    batch's work is under the measured bound, else one job per chunk. A
+    filtered stream searches a DataFrame made from the collected frame, so
+    the source is scanned once per batch either way.
 
-    _SCHEMA = (
-        "qid long, neighbor_id long, distance double, rank int, batch_id long"
+    Results are batch-scoped: batch ``b`` writes
+    ``out_dir/batch-<b>.parquet`` (qid, neighbor_id, distance, rank,
+    batch_id) with pyarrow, to a dot-prefixed temp name and then a rename.
+    A micro-batch Spark replays after a crash overwrites its own file
+    instead of appending a duplicate, and a temp file a crash leaves is
+    hidden from Spark and pyarrow readers by its prefix. ``out_dir`` is a
+    local path. Per-batch observability lands in ``batch_stats``
+    (batch_id, rows, segments searched, placement, strategy, restored) on
+    the driver — O(batches) dicts, never data."""
+
+    _SCHEMA = pa.schema(
+        [
+            ("qid", pa.int64()),
+            ("neighbor_id", pa.int64()),
+            ("distance", pa.float64()),
+            ("rank", pa.int32()),
+            ("batch_id", pa.int64()),
+        ]
     )
 
     def __init__(
@@ -415,25 +435,24 @@ class StreamingVectorQuery:
         )
 
     def _sink(self, batch_df: DataFrame, batch_id: int) -> None:
-        from vstream_spark.storage.search import SegmentSearcher
+        from vstream_spark.storage.search import SegmentSearcher, query_frame
 
-        if batch_df.isEmpty():
+        queries = batch_df.select("qid", "emb").toPandas()
+        if queries.empty:
             return
         searcher = SegmentSearcher(self.store, self.index_conf)
         restored = searcher.load_state() if self.restore_state else False
         strategy = None
         if self.predicate is not None:
             pdf, strategy, _sel = searcher.search_filtered(
-                batch_df.select("qid", "emb"),
+                query_frame(batch_df.sparkSession, queries),
                 self.predicate,
                 k=self.k,
                 metric=self.metric,
                 predicate_expr=self.predicate_expr,
             )
         else:
-            pdf = searcher.search(
-                batch_df.select("qid", "emb"), k=self.k, metric=self.metric
-            )
+            pdf = searcher.search(queries, k=self.k, metric=self.metric)
         if self.restore_state:
             searcher.save_state()
         self.batch_stats.append(
@@ -441,15 +460,28 @@ class StreamingVectorQuery:
                 "batch_id": int(batch_id),
                 "rows": int(len(pdf)),
                 "searched_segments": len(searcher.last_searched_ids),
+                "placement": searcher.last_placement,
                 "strategy": strategy,
                 "restored": bool(restored),
             }
         )
-        spark = batch_df.sparkSession
-        out = spark.createDataFrame(
-            pdf.assign(batch_id=int(batch_id)), self._SCHEMA
+        self._write(pdf, int(batch_id))
+
+    def _write(self, pdf, batch_id: int) -> None:
+        """``out_dir/batch-<batch_id>.parquet`` through a hidden temp file
+        and an atomic rename: a replayed batch id replaces its file."""
+        import os
+
+        import pyarrow.parquet as pq
+
+        table = pa.Table.from_pandas(
+            pdf.assign(batch_id=batch_id), schema=self._SCHEMA, preserve_index=False
         )
-        out.write.mode("append").parquet(self.out_dir)
+        os.makedirs(self.out_dir, exist_ok=True)
+        name = f"batch-{batch_id}.parquet"
+        tmp = os.path.join(self.out_dir, f".{name}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(self.out_dir, name))
 
 
 def search_store(
