@@ -58,35 +58,3 @@ def test_train_bpe_deterministic(spark):
     m1 = train_bpe(docs, num_merges=3)
     m2 = train_bpe(docs.repartition(7), num_merges=3)
     assert m1 == m2 and len(m1) == 3
-
-
-def test_apply_bpe_matches_reference_encoding(spark):
-    from vstream_spark.operators.bpe import apply_bpe
-
-    corpus = [(0, "lowest newest low"), (1, "newest widest")]
-    docs = spark.createDataFrame(corpus, "doc_id long, text string")
-    words = collections.Counter(w for _, t in corpus for w in t.split())
-    merges = _ref_bpe(dict(words), 5)
-
-    # reference encode: replay the same greedy merges per word
-    def enc(w):
-        s = list(w) + ["</w>"]
-        for a, b, _ in merges:
-            out, i = [], 0
-            while i < len(s):
-                if i + 1 < len(s) and s[i] == a and s[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(s[i])
-                    i += 1
-            s = out
-        return s
-
-    got = {
-        (r.doc_id, r.word_idx): list(r.tokens)
-        for r in apply_bpe(docs, merges).collect()
-    }
-    for did, text in corpus:
-        for wi, w in enumerate(text.split()):
-            assert got[(did, wi)] == enc(w), (did, wi, w)

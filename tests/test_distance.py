@@ -42,3 +42,81 @@ def test_distance_matches_numpy(spark, metric):
 def test_unknown_metric_raises(spark):
     with pytest.raises(ValueError):
         distance_expr(F.col("a"), F.col("b"), "manhattan")
+
+
+@pytest.mark.parametrize("metric", ["l2", "ip", "cosine"])
+def test_numpy_paths_agree_with_knn_exact(spark, tmp_path, metric):
+    """Every path that scores in numpy gives ``knn_exact``'s distances, a
+    zero vector among the data and the queries included (cosine scores it
+    as similarity 0): the exact flat paths (the partitioned worker without
+    and with a flat ``index_conf``, ``SegmentSearcher`` over a flat segment,
+    the stateful worker) and the PQ refine bit for bit, the IVF cell scan
+    to 1e-12. k covers every row and IVF probes every cell, so each path
+    returns every (query, row) pair."""
+    import pandas as pd
+
+    from vstream_spark.config import PartitionerConf, VectorIndexConf
+    from vstream_spark.operators.knn import knn_exact
+    from vstream_spark.operators.partitioned import knn_partitioned_worker
+    from vstream_spark.storage.search import SegmentSearcher
+    from vstream_spark.storage.segments import SegmentStore
+    from vstream_spark.streaming.stateful import stateful_search_fn
+
+    n, dim = 24, 8
+    rng = np.random.RandomState(3)
+    vecs = rng.rand(n, dim).astype(np.float32) - 0.5
+    vecs[5] = 0.0
+    qmat = np.vstack([np.zeros((1, dim), np.float32), vecs[[2, 9]], rng.rand(2, dim)]).astype(
+        np.float32
+    )
+    vdf = spark.createDataFrame(
+        [(i, v.tolist(), 0, 10**9, "I") for i, v in enumerate(vecs)],
+        "id bigint, emb array<float>, event_time bigint, ttl bigint, op string",
+    )
+    qpd = pd.DataFrame({"qid": np.arange(len(qmat)) + 100, "emb": [q.tolist() for q in qmat]})
+    qdf = spark.createDataFrame(qpd, "qid long, emb array<float>")
+
+    def pairs(frame):
+        return {(int(q), int(i)): d for q, i, d in zip(frame["qid"], frame["neighbor_id"], frame["distance"])}
+
+    want = pairs(knn_exact(vdf.select("id", "emb"), qdf, k=n, metric=metric).toPandas())
+    assert len(want) == n * len(qmat)
+    one = PartitionerConf(kind="simple", num_partitions=1)
+    got = {}
+    for name, conf in [
+        ("worker", None),
+        ("worker-flat", VectorIndexConf(dim=dim, index_kind="flat")),
+        ("worker-ivf", VectorIndexConf(dim=dim, index_kind="ivf", nlist=2, nprobe=2)),
+        ("worker-pq", VectorIndexConf(dim=dim, index_kind="pq", pq_m=4, pq_nbits=4)),
+    ]:
+        got[name] = pairs(
+            knn_partitioned_worker(
+                vdf.select("id", "emb"), qdf, one, k=n, metric=metric, index_conf=conf
+            ).toPandas()
+        )
+    store = SegmentStore(spark, str(tmp_path / "store"))
+    store.append_segment(vdf)
+    got["segments"] = pairs(SegmentSearcher(store, VectorIndexConf(dim=dim)).search(qpd, k=n, metric=metric))
+
+    class _State:
+        exists, blob = False, None
+
+        def update(self, value):
+            self.blob = value
+
+    rows = [(i, v.tolist(), 0, None, "I") for i, v in enumerate(vecs)]
+    rows += [(q, e, 1, None, "Q") for q, e in zip(qpd["qid"], qpd["emb"])]
+    fn = stateful_search_fn(VectorIndexConf(dim=dim), k=n, metric=metric)
+    pdf = pd.DataFrame(rows, columns=["id", "emb", "event_time", "ttl", "op"])
+    got["stateful"] = pairs(pd.concat(fn((0,), iter([pdf]), _State())))
+
+    for name, have in got.items():
+        assert set(have) == set(want), name
+        if name == "worker-ivf":
+            for key, d in want.items():
+                assert have[key] == pytest.approx(d, rel=0, abs=1e-12), (name, key)
+        else:
+            assert have == want, name
+    if metric == "cosine":
+        assert all(want[(100, i)] == 1.0 for i in range(n))
+        assert all(want[(q, 5)] == 1.0 for q in qpd["qid"])

@@ -186,8 +186,8 @@ def test_flat_is_exact_under_every_filter(metric):
     ``min_ts`` and an allowlist at once, every query of a batch gets the
     brute-force top-k over the rows that pass all three, in (distance,
     label) order, and the same labels and distances as a search of that
-    query alone."""
-    from vstream_spark.index.hnsw import _DISTS
+    query alone. Distances are the fold's, bit for bit."""
+    from vstream_spark.index.distance import fold
 
     vecs, labels, ts = _data()
     _, idx = build_from_conf(vecs, labels, VectorIndexConf(dim=DIM, metric=metric), metric, ts=ts)
@@ -200,9 +200,9 @@ def test_flat_is_exact_under_every_filter(metric):
     mask = idx.allow_mask(allow)
     for q, mt, (lbs, ds) in zip(qmat, mts, res):
         keep = (labels % 2 == 0) & (labels % 7 != 0) & (ts >= mt)
-        d = _DISTS[metric](vecs[keep].astype(np.float64), q)
+        d = fold(q, vecs[keep].astype(np.float64), metric)
         order = np.lexsort((labels[keep], d))[:10]
         assert lbs.tolist() == labels[keep][order].tolist()
-        np.testing.assert_allclose(ds, d[order], rtol=1e-12, atol=1e-12)
+        assert ds.tolist() == d[order].tolist()
         one_l, one_d = idx.search(q, 10, None, int(mt), allow=mask)
         assert one_l.tolist() == lbs.tolist() and one_d.tolist() == ds.tolist()

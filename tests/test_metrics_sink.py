@@ -42,34 +42,3 @@ def test_recall_of_hnsw_vs_exact_on_random(spark):
         index_conf=VectorIndexConf(dim=12, ef_search=64),
     )
     assert mean_recall(ann, gt, 5) >= 0.9
-
-
-def test_mrr_and_ndcg(spark):
-    from vstream_spark.functions.metrics import mrr, ndcg_at_k
-
-    gt = spark.createDataFrame(
-        [(1, 10), (1, 11), (2, 20), (2, 21), (3, 30)], "qid long, neighbor_id long"
-    )
-    res = spark.createDataFrame(
-        [
-            (1, 10, 1), (1, 99, 2), (1, 11, 3),   # hits at ranks 1 and 3
-            (2, 98, 1), (2, 20, 2), (2, 97, 3),   # first hit at rank 2
-            (3, 96, 1), (3, 95, 2), (3, 94, 3),   # no hits
-        ],
-        "qid long, neighbor_id long, rank int",
-    )
-    rr = {r.qid: r.rr for r in mrr(res, gt).collect()}
-    assert rr[1] == 1.0 and rr[2] == 0.5 and rr[3] == 0.0
-    import math
-
-    nd = {r.qid: r.ndcg for r in ndcg_at_k(res, gt, k=3).collect()}
-    idcg2 = 1.0 / math.log2(2) + 1.0 / math.log2(3)
-    assert abs(nd[1] - (1.0 + 1.0 / math.log2(4)) / idcg2) < 1e-12
-    assert abs(nd[2] - (1.0 / math.log2(3)) / idcg2) < 1e-12
-    assert nd[3] == 0.0
-    # perfect ranking scores exactly 1
-    perfect = spark.createDataFrame(
-        [(1, 10, 1), (1, 11, 2)], "qid long, neighbor_id long, rank int"
-    )
-    nd1 = {r.qid: r.ndcg for r in ndcg_at_k(perfect, gt, k=3).collect()}
-    assert abs(nd1[1] - 1.0) < 1e-12

@@ -84,24 +84,6 @@ def test_ivf_probe_recall(spark, dfs):
     assert np.mean(recalls) >= 0.8, f"mean recall {np.mean(recalls):.3f}"
 
 
-def test_partial_results_complete_accounting(spark):
-    from vstream_spark.operators.partitioned import partial_results_complete
-
-    pq = spark.createDataFrame(
-        [(1, 0, 3), (1, 1, 3), (1, 2, 3), (2, 0, 2), (2, 1, 2)],
-        "qid long, partition_id int, num_partitions_sent int",
-    )
-    # qid 1 heard from all 3 partitions; qid 2 only from one of 2
-    partials = spark.createDataFrame(
-        [(1, 0), (1, 1), (1, 2), (1, 2), (2, 0)],
-        "qid long, partition_id int",
-    )
-    out = {r.qid: (r.num_partitions_combined, r.is_complete)
-           for r in partial_results_complete(partials, pq).collect()}
-    assert out[1] == (3, True)
-    assert out[2] == (1, False)
-
-
 def test_worker_index_kinds_agree(spark):
     """The per-partition worker honors index_kind: hnsw/ivf/pq all find the
     same obvious nearest neighbor (a query identical to a stored vector)."""

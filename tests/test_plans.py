@@ -416,16 +416,6 @@ def test_bm25_broadcasts_idf_no_python(spark):
     assert_plan_lacks(df, "ArrowEvalPython", "BatchEvalPython", "CartesianProduct")
 
 
-def test_apply_bpe_map_only(spark):
-    from vstream_spark.operators.bpe import apply_bpe
-    from vstream_spark.sources.tables import load_table
-
-    df = apply_bpe(load_table(spark, SF, "documents"), [("e", "s"), ("es", "t")])
-    # encode is a pure projection chain: no exchange, no Python
-    assert count_exchanges(df) == 0
-    assert_plan_lacks(df, "ArrowEvalPython", "BatchEvalPython")
-
-
 def test_sparse_dot_is_partitioned_matmul(spark):
     """knn_sparse_dot's scale shape (r9): the posting-list PAIR join
     materializes sum_t qdf*df rows (~df^2 growth, 23x on 10x data at sf1),

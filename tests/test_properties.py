@@ -109,16 +109,20 @@ class _StateStub:
 @settings(max_examples=20, deadline=None)
 @given(st.data())
 def test_stateful_exact_worker_matches_brute_force(data):
-    """Random interleaved insert/delete/query micro-batch sequences: the
-    exact-mode stateful worker (marker-set state, LWW insert-wins-ties, TTL
-    window) must equal a numpy brute-force replay of the same semantics."""
+    """Random interleaved insert/upsert/delete/query micro-batch sequences,
+    stale upserts and deletes of ids not inserted yet included: the
+    stateful worker over the exact flat kind (LWW by event time, insert
+    wins ties, two-sided TTL window) must equal a numpy brute-force replay
+    of the same semantics."""
     import pandas as pd
+    from test_stateful_streaming import replay_topk
 
-    from vstream_spark.streaming.stateful import stateful_exact_search_fn
+    from vstream_spark.config import VectorIndexConf
+    from vstream_spark.streaming.stateful import stateful_search_fn
 
     rng = np.random.RandomState(data.draw(st.integers(0, 10_000)))
     dim, k = 4, 3
-    fn = stateful_exact_search_fn(k, "l2")
+    fn = stateful_search_fn(VectorIndexConf(dim=dim, index_kind="flat"), k, "l2")
     state = _StateStub()
 
     markers = []  # (id, vec|None, et, is_insert, batch_idx)
@@ -128,15 +132,19 @@ def test_stateful_exact_worker_matches_brute_force(data):
     for bi in range(data.draw(st.integers(1, 4))):
         rows = []
         for _ in range(data.draw(st.integers(1, 12))):
-            kind = data.draw(st.sampled_from(["I", "I", "I", "D", "Q"]))
+            kind = data.draw(st.sampled_from(["I", "I", "I", "U", "D", "Q"]))
             et = int(data.draw(st.integers(0, 1000)))
-            if kind == "I":
+            if kind == "I" or (kind == "U" and next_id):
+                # U re-inserts a held id at any time: fresh or stale
+                rid = next_id if kind == "I" else int(data.draw(st.integers(0, next_id - 1)))
                 v = rng.rand(dim).astype(np.float32)
-                rows.append((0, "I", next_id, v.tolist(), et, 0))
-                markers.append((next_id, v, et, True, bi))
-                next_id += 1
-            elif kind == "D" and next_id:
-                did = int(data.draw(st.integers(0, next_id - 1)))
+                rows.append((0, "I", rid, v.tolist(), et, 0))
+                markers.append((rid, v, et, True, bi))
+                next_id += kind == "I"
+            elif kind == "D":
+                # up to one id past the inserted ones: a delete that
+                # arrives before its insert
+                did = int(data.draw(st.integers(0, next_id)))
                 rows.append((0, "D", did, None, et, 0))
                 markers.append((did, None, et, False, bi))
             else:
@@ -155,27 +163,9 @@ def test_stateful_exact_worker_matches_brute_force(data):
         for qid, grp in f.groupby("qid"):
             got[int(qid)] = list(zip(grp["neighbor_id"], grp["distance"]))
 
-    for qid, q, qet, ttl, bi in queries:
-        vis = [m for m in markers if m[4] <= bi]
-        # LWW per id: latest event_time wins; insert wins the tie
-        last = {}
-        for mid, vec, et, ins, _ in sorted(
-            vis, key=lambda m: (m[2], 1 if m[3] else 0)
-        ):
-            last[mid] = (vec, et, ins)
-        cands = [
-            (mid, vec, et)
-            for mid, (vec, et, ins) in last.items()
-            if ins and qet - ttl <= et <= qet
-        ]
-        exp = sorted(
-            (
-                (float(((q.astype(np.float64) - vec.astype(np.float64)) ** 2).sum()), mid)
-                for mid, vec, et in cands
-            ),
-        )[:k]
-        want = [(mid, d) for d, mid in exp]
+    want = replay_topk(markers, queries, k)
+    for qid, *_ in queries:
         have = got.get(qid, [])
-        assert [m for m, _ in have] == [m for m, _ in want], (qid, have, want)
-        for (_, dg), (_, dw) in zip(have, want):
+        assert [m for m, _ in have] == [m for m, _ in want[qid]], (qid, have, want[qid])
+        for (_, dg), (_, dw) in zip(have, want[qid]):
             assert abs(dg - dw) < 1e-9

@@ -4,7 +4,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from vstream_spark.operators.sample import (
-    hash_sample,
     hash_split,
     stratified_hash_sample,
 )
@@ -16,23 +15,6 @@ def rows(spark):
         [(i, "en" if i % 3 == 0 else "de") for i in range(2000)],
         "doc_id bigint, lang string",
     )
-
-
-def test_hash_sample_rate_and_determinism(rows):
-    a = hash_sample(rows, 0.3)
-    b = hash_sample(rows, 0.3)
-    ids_a = {r.doc_id for r in a.collect()}
-    ids_b = {r.doc_id for r in b.collect()}
-    assert ids_a == ids_b  # same key -> same fate, every run
-    assert 0.25 <= len(ids_a) / 2000 <= 0.35
-    # nested property: a lower-rate sample is a subset of a higher-rate one
-    small = {r.doc_id for r in hash_sample(rows, 0.1).collect()}
-    assert small <= ids_a
-    # different seed -> different (but still deterministic) selection
-    other = {r.doc_id for r in hash_sample(rows, 0.3, seed=7).collect()}
-    assert other != ids_a
-    with pytest.raises(ValueError):
-        hash_sample(rows, 1.5)
 
 
 def test_stratified_rates_apply_per_stratum(rows):

@@ -1,24 +1,14 @@
-"""S2 txt source, S3 replay, S1 delete synthesis, W6 buffered upsert,
+"""S3 replay, W6 buffered upsert,
 feature-hashing embedding."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from vstream_spark.sources.txt import read_txt_vectors, replay, with_delete_markers
+from vstream_spark.sources.txt import replay
 from vstream_spark.storage.segments import SegmentStore
 
 SCHEMA = "id bigint, emb array<float>, event_time bigint, ttl bigint, op string"
-
-
-def test_read_txt_vectors(spark, tmp_path):
-    p = tmp_path / "vecs.txt"
-    p.write_text("0,1.0,2.0,3.0\n1,4.5,5.5,6.5\n\n2,0.0,0.0,1.0\n")
-    df = read_txt_vectors(spark, str(p))
-    rows = {r.id: r.emb for r in df.collect()}
-    assert len(rows) == 3
-    assert rows[1] == [4.5, 5.5, 6.5]
-    assert dict(df.dtypes) == {"id": "bigint", "emb": "array<float>"}
 
 
 def test_replay_advances_event_time(spark):
@@ -29,23 +19,6 @@ def test_replay_advances_event_time(spark):
     assert times == [100, 1100, 2100]
     with pytest.raises(ValueError):
         replay(df, 0)
-
-
-def test_with_delete_markers_deterministic(spark):
-    rows = [(i, [float(i)], i * 10, 10**9) for i in range(300)]
-    vec = spark.createDataFrame(rows, "id bigint, emb array<float>, event_time bigint, ttl bigint")
-    mixed = with_delete_markers(vec, delete_ratio=0.1, lookback=100)
-    dels = mixed.filter("op = 'D'")
-    # ids 100,110,...,290 trigger deletes of ids 0,10,...,190
-    got = sorted(r.id for r in dels.collect())
-    assert got == list(range(0, 200, 10))
-    # delete is stamped 1ms after the trigger row -> wins last-writer-wins
-    d0 = dels.filter("id = 0").collect()[0]
-    assert d0.event_time == 100 * 10 + 1
-    from vstream_spark.operators.knn import apply_deletes
-
-    live = apply_deletes(mixed)
-    assert live.count() == 300 - 20
 
 
 def test_upsert_batch_annihilation(spark, tmp_path):

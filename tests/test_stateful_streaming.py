@@ -82,14 +82,12 @@ def test_ttl_freshness_filter_in_stream(spark, tmp_path):
 
 
 def test_exact_stateful_matches_batch_knn(spark, tmp_path):
-    """Exact-mode stateful search == batch knn_exact with deletes+TTL: state
-    accumulates markers across micro-batches; delete in a later batch wins
-    LWW; result merged with topk is bitwise-comparable."""
+    """Stateful search over the flat kind == batch knn_exact with
+    deletes+TTL: state carries across micro-batches; a delete in a later
+    batch wins LWW; the result merged with topk is bitwise equal."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from vstream_spark.operators.knn import knn_exact, topk
-    from vstream_spark.streaming.stateful import stateful_exact_vector_search
 
     rng = np.random.RandomState(11)
     vecs = [rng.rand(8).astype(np.float32).tolist() for _ in range(40)]
@@ -116,7 +114,9 @@ def test_exact_stateful_matches_batch_knn(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*"))
     )
-    out = stateful_exact_vector_search(stream, k=5, metric="l2")
+    out = stateful_vector_search(
+        stream, VectorIndexConf(dim=8, index_kind="flat"), k=5, metric="l2"
+    )
     q = (
         out.writeStream.format("memory")
         .queryName("exact_stateful_out")
@@ -224,7 +224,7 @@ def test_continuous_trigger_matches_availablenow(spark, tmp_path):
 
 
 class _State:
-    """The slice of pyspark's GroupState the stateful workers use."""
+    """The slice of pyspark's GroupState the stateful worker uses."""
 
     def __init__(self, blob=None):
         self.blob = blob
@@ -250,16 +250,46 @@ def _one_batch(fn, rows, blob=None):
     return (pd.concat(out) if out else pd.DataFrame(columns=["qid"])), state.blob
 
 
+def replay_topk(markers, queries, k):
+    """The stateful worker's semantics by brute force, l2. ``markers`` are
+    (id, vec or None, event_time, is_insert, batch) in arrival order and
+    ``queries`` (qid, vec, event_time, ttl or None, batch). A query sees
+    the markers of its batch and of the batches before; per id the newest
+    marker wins (an insert wins a tie, and the later of two inserts at one
+    time); the live versions inside [event_time - ttl, event_time] are
+    ranked by (distance, id). Returns {qid: [(id, distance)]}."""
+    out = {}
+    for qid, q, qet, ttl, bi in queries:
+        last = {}
+        seen = [m for m in markers if m[4] <= bi]
+        for mid, vec, et, ins, _ in sorted(seen, key=lambda m: (m[2], m[3])):
+            last[mid] = (vec, et, ins)
+        lo = -np.inf if ttl is None else qet - ttl
+        q64 = np.asarray(q, dtype=np.float32).astype(np.float64)
+        exp = sorted(
+            (float(((q64 - np.asarray(vec, np.float32).astype(np.float64)) ** 2).sum()), mid)
+            for mid, (vec, et, ins) in last.items()
+            if ins and lo <= et <= qet
+        )[:k]
+        out[qid] = [(mid, d) for d, mid in exp]
+    return out
+
+
+def _hits(frame):
+    return {
+        int(qid): list(zip(g["neighbor_id"], g["distance"]))
+        for qid, g in frame.groupby("qid")
+    }
+
+
 def test_auto_worker_matches_exact_in_one_batch():
     """Under 'auto' a small partition is an exact flat index: in ONE batch
     with an upsert (id 7 re-inserted with a new vector), a delete (id 20,
     after its insert) and a TTL bound (event_time >= 150), every query
-    gets the exact worker's neighbors in its order. The state is flat."""
+    gets the brute-force replay's neighbors in its order. The state is
+    flat."""
     from vstream_spark.index import FlatIndex, loads
-    from vstream_spark.streaming.stateful import (
-        stateful_exact_search_fn,
-        stateful_search_fn,
-    )
+    from vstream_spark.streaming.stateful import stateful_search_fn
 
     rng = np.random.RandomState(9)
     vecs = rng.rand(41, 8).astype(np.float32)
@@ -268,16 +298,79 @@ def test_auto_worker_matches_exact_in_one_batch():
     qs = [vecs[7], vecs[40], vecs[20], vecs[2]] + list(rng.rand(4, 8).astype(np.float32))
     rows += [(1000 + j, q.tolist(), 1000, 850, "Q") for j, q in enumerate(qs)]
     got, blob = _one_batch(stateful_search_fn(VectorIndexConf(dim=8), k=5), rows)
-    want, _ = _one_batch(stateful_exact_search_fn(k=5), rows)
+    want = replay_topk(
+        [(i, v, t, op == "I", 0) for i, v, t, _, op in rows if op != "Q"],
+        [(i, v, t, ttl, 0) for i, v, t, ttl, op in rows if op == "Q"],
+        k=5,
+    )
     assert isinstance(loads(blob), FlatIndex)
-    assert len(got) == len(want) == 5 * len(qs)
-    for qid, g in got.groupby("qid"):
-        w = want[want["qid"] == qid]
-        assert g["neighbor_id"].tolist() == w["neighbor_id"].tolist()
-        np.testing.assert_allclose(g["distance"], w["distance"], rtol=1e-9, atol=1e-12)
+    assert len(got) == 5 * len(qs)
+    for qid, hits in _hits(got).items():
+        assert [m for m, _ in hits] == [m for m, _ in want[qid]]
+        np.testing.assert_allclose(
+            [d for _, d in hits], [d for _, d in want[qid]], rtol=1e-9, atol=1e-12
+        )
     hits = set(got["neighbor_id"])
     assert 20 not in hits and all(i == 7 or i >= 15 for i in hits)
     assert got[got["qid"] == 1001]["neighbor_id"].iloc[0] == 7  # the upsert
+
+
+_V, _W = [1.0, 0.0, 0.0, 0.0], [9.0, 0.0, 0.0, 0.0]
+# (batches of (id, emb, event_time, ttl, op) rows, expected (id, distance)
+# hits of query 100 at [1, 0, 0, 0], k=3)
+_LWW_CASES = {
+    "reinsert_after_delete_in_one_batch": (
+        [[(1, _V, 1, None, "I"), (1, None, 5, None, "D"), (1, _V, 10, None, "I"),
+          (100, _V, 20, 100, "Q")]],
+        [(1, 0.0)],
+    ),
+    "stale_delete_in_a_later_batch": (
+        [[(1, _V, 10, None, "I")], [(1, None, 5, None, "D"), (100, _V, 20, 100, "Q")]],
+        [(1, 0.0)],
+    ),
+    "insert_after_the_query_time": (
+        [[(1, _V, 10, None, "I"), (100, _V, 5, 100, "Q")]],
+        [],
+    ),
+    "stale_upsert_in_a_later_batch": (
+        [[(1, _V, 10, None, "I")], [(1, _W, 5, None, "I"), (100, _V, 20, 100, "Q")]],
+        [(1, 0.0)],
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", ["flat", "hnsw"])
+@pytest.mark.parametrize("case", sorted(_LWW_CASES))
+def test_worker_resolves_markers_by_event_time(kind, case):
+    """Inserts and deletes are last-writer-wins by event time, the insert
+    wins ties, a stale delete or upsert from a later batch loses, and a
+    query sees nothing newer than its own event time — for both kinds the
+    worker holds."""
+    from vstream_spark.streaming.stateful import stateful_search_fn
+
+    batches, want = _LWW_CASES[case]
+    fn = stateful_search_fn(VectorIndexConf(dim=4, index_kind=kind), k=3)
+    blob, got = None, []
+    for rows in batches:
+        out, blob = _one_batch(fn, rows, blob)
+        got += _hits(out).get(100, [])
+    assert got == want
+
+
+def test_worker_remembers_a_delete_before_its_insert():
+    """A delete of an id the partition does not hold yet is kept: an
+    insert that arrives later with an older event time stays deleted,
+    one with a newer time lives."""
+    from vstream_spark.streaming.stateful import stateful_search_fn
+
+    fn = stateful_search_fn(VectorIndexConf(dim=4), k=3)
+    _, blob = _one_batch(fn, [(1, None, 50, None, "D"), (2, None, 50, None, "D")])
+    out, _ = _one_batch(
+        fn,
+        [(1, _V, 40, None, "I"), (2, _W, 60, None, "I"), (100, _V, 70, None, "Q")],
+        blob,
+    )
+    assert _hits(out)[100] == [(2, 64.0)]
 
 
 def test_auto_worker_stays_flat_and_keeps_an_hnsw_blob():
@@ -305,3 +398,23 @@ def test_auto_worker_stays_flat_and_keeps_an_hnsw_blob():
     third = [(i, vecs[i].tolist(), i, None, "I") for i in range(40, 60)]
     _, blob = _one_batch(fn, third, blob)
     assert isinstance(loads(blob), HnswIndex) and loads(blob).n == 60
+
+
+def test_worker_rejects_an_exact_worker_checkpoint():
+    """The marker-tuple state an older exact stateful worker checkpointed
+    is not an index blob: the worker raises a ValueError that names the
+    keys it expects, not numpy's ambiguous-truth-value error."""
+    import pickle
+
+    from vstream_spark.index import loads
+    from vstream_spark.streaming.stateful import stateful_search_fn
+
+    old = pickle.dumps((
+        np.arange(3, dtype=np.int64), np.zeros((3, 4), np.float32),
+        np.arange(3, dtype=np.int64), np.ones(3, dtype=bool),
+    ))
+    with pytest.raises(ValueError, match=r"not an index blob: a tuple; .*'labels'"):
+        loads(old)
+    fn = stateful_search_fn(VectorIndexConf(dim=4), k=3)
+    with pytest.raises(ValueError, match="not an index blob"):
+        _one_batch(fn, [(100, _V, 1, None, "Q")], old)

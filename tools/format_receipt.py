@@ -3,13 +3,16 @@ load and search identically in another?
 
 ``write DIR`` (run with the OLDER checkout first on ``PYTHONPATH``) builds
 one segment as parquet (600 inserts plus 36 delete markers, half of them
-ties the insert wins), its hnsw, ivf and pq sidecars through
-``build_index_object``, and a ``stateful_search_fn`` state blob from two
-batches; it records every search result. ``check DIR`` (run with the NEWER
-checkout) loads those sidecars and the blob, repeats the same searches and
-batch, and prints per kind whether results are identical (with and
-without a freshness bound apart), whether a re-dump is byte-identical and
-whether its own fresh build is byte-identical with the same pickled keys.
+ties the insert wins), its hnsw, ivf and pq sidecars for the l2 and ip
+metrics through ``build_index_object``, and a ``stateful_search_fn`` state
+blob from two batches; it records every search result. ``check DIR`` (run
+with the NEWER checkout) loads those sidecars and the blob, repeats the
+same searches and batch, and prints per kind and metric whether results
+are identical (with and without a freshness bound apart), whether a
+re-dump is byte-identical and whether its own fresh build is
+byte-identical with the same pickled keys. For ip it also prints whether
+every distance that differs is the recorded one plus exactly 1 (the
+``-<a,b>`` to ``1 - <a,b>`` convention change) with the same labels.
 
 Usage: PYTHONPATH=<old checkout> python tools/format_receipt.py write DIR
        PYTHONPATH=<new checkout> python tools/format_receipt.py check DIR
@@ -58,6 +61,7 @@ def write_segment(seg_dir: str) -> None:
 
 
 MIN_TS = (None, 2000, np.arange(len(QUERIES)) * 300)
+METRICS = ("l2", "ip")
 
 
 def searches(idx) -> list:
@@ -69,6 +73,15 @@ def searches(idx) -> list:
             for lbs, ds in idx.search_batch(QUERIES, K, 16, min_ts, allow_labels=allow):
                 out.append((lbs.tolist(), ds.tolist()))
     return out
+
+
+def shifted_by_one(got: list, want: list) -> bool:
+    """Same labels, and every distance either equal to the recorded one or
+    to the recorded one plus 1.0, in float64."""
+    return all(
+        g[0] == w[0] and all(a in (b, 1.0 + b) for a, b in zip(g[1], w[1]))
+        for g, w in zip(got, want)
+    )
 
 
 def compare(got: list, want: list) -> str:
@@ -125,12 +138,13 @@ def main() -> None:
     if mode == "write":
         write_segment(seg["path"])
         rec = {}
-        for kind, conf in CONFS.items():
-            _, idx = build_index_object(seg, conf, "l2")
-            blob = idx.dumps()
-            with open(os.path.join(out_dir, f"_{kind}-l2.idx"), "wb") as f:
-                f.write(blob)
-            rec[kind] = searches(type(idx).loads(blob))
+        for metric in METRICS:
+            for kind, conf in CONFS.items():
+                _, idx = build_index_object(seg, conf, metric)
+                blob = idx.dumps()
+                with open(os.path.join(out_dir, f"_{kind}-{metric}.idx"), "wb") as f:
+                    f.write(blob)
+                rec[kind, metric] = searches(type(idx).loads(blob))
         _, first = run_stateful(None, 0, N // 2, 3000)
         with open(os.path.join(out_dir, "state.blob"), "wb") as f:
             f.write(first)
@@ -143,25 +157,35 @@ def main() -> None:
 
     with open(rec_path, "rb") as f:
         rec = pickle.load(f)
-    for kind, conf in CONFS.items():
-        with open(os.path.join(out_dir, f"_{kind}-l2.idx"), "rb") as f:
-            blob = f.read()
-        idx = KINDS[kind].cls.loads(blob)
-        _, fresh = build_index_object(seg, conf, "l2")
-        print(
-            f"{kind}: searches {compare(searches(idx), rec[kind])}, "
-            f"re-dump byte-identical={idx.dumps() == blob}, "
-            f"fresh build byte-identical={fresh.dumps() == blob}, "
-            f"keys same={list(pickle.loads(blob)) == list(pickle.loads(fresh.dumps()))}"
-        )
+    for metric in METRICS:
+        for kind, conf in CONFS.items():
+            with open(os.path.join(out_dir, f"_{kind}-{metric}.idx"), "rb") as f:
+                blob = f.read()
+            idx = KINDS[kind].cls.loads(blob)
+            _, fresh = build_index_object(seg, conf, metric)
+            got = searches(idx)
+            shift = (
+                f", every moved distance +1 with the same labels="
+                f"{shifted_by_one(got, rec[kind, metric])}"
+                if metric == "ip" else ""
+            )
+            print(
+                f"{kind} {metric}: searches {compare(got, rec[kind, metric])}{shift}, "
+                f"re-dump byte-identical={idx.dumps() == blob}, "
+                f"fresh build byte-identical={fresh.dumps() == blob}, "
+                f"keys same={list(pickle.loads(blob)) == list(pickle.loads(fresh.dumps()))}"
+            )
     with open(os.path.join(out_dir, "state.blob"), "rb") as f:
         first = f.read()
     rows, nxt = run_stateful(first, N // 2, N, 6000)
     want_rows, want_next = rec["stateful"]
     per_q = [pd.Series(r.get("qid", [])).value_counts() for r in (rows, want_rows)]
+    same = rows.get("neighbor_id") == want_rows.get("neighbor_id")
+    gap = np.abs(np.subtract(rows["distance"], want_rows["distance"])).max() if same and rows else 0.0
     print(
         f"stateful: rows identical={rows == want_rows} "
-        f"({len(rows.get('qid', []))} rows, {len(want_rows.get('qid', []))} recorded; "
+        f"(neighbors identical={same}, largest distance difference {gap:.3g}; "
+        f"{len(rows.get('qid', []))} rows, {len(want_rows.get('qid', []))} recorded; "
         f"queries with fewer hits than recorded: "
         f"{int((per_q[0].reindex(per_q[1].index, fill_value=0) < per_q[1]).sum())}), "
         f"next blob byte-identical={nxt == want_next}"

@@ -10,7 +10,7 @@ Layout:
   index/        per-partition vector indexes (numpy HNSW, IVF, PQ)
   operators/    DataFrame-composable operators (kNN, merge, dedup, similarity join)
   partitioners/ exchange operators (LSH, space-filling curves, k-means, simple)
-  sources/      readers (fvecs/bvecs/txt decode, testdata fixtures)
+  sources/      readers (fvecs/bvecs decode, stream replay, testdata fixtures)
   storage/      segment store (LSM analog), manifest and segment search
   streaming/    Structured Streaming pipelines and in-state vector search
   plans/        plan inspection helpers

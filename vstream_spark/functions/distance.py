@@ -11,7 +11,9 @@ L2 (no sqrt), 'ip' follows hnswlib's convention ``1 - <a,b>`` so that smaller
 is closer for all metrics, 'cosine' is ``1 - cos(a,b)``.
 
 All arithmetic is in float64: inputs are widened element-wise before any op so
-Spark and DuckDB (and numpy test oracles) agree bit-for-bit.
+Spark and DuckDB agree bit-for-bit. ``index/distance.py`` is the numpy form of
+the same contract (same conventions, zero norm included); its ``fold`` sums in
+the same left-to-right order and matches these values bit for bit.
 """
 
 from __future__ import annotations

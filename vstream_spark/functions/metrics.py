@@ -41,59 +41,3 @@ def mean_recall(results: DataFrame, ground_truth: DataFrame, k: int) -> float:
     """Scalar mean recall@k over all queries (test harness convenience)."""
     row = recall_at_k(results, ground_truth, k).agg(F.avg("recall")).collect()[0]
     return float(row[0]) if row[0] is not None else 0.0
-
-
-def mrr(results: DataFrame, ground_truth: DataFrame) -> DataFrame:
-    """Per-query Mean Reciprocal Rank: 1/rank of the FIRST result that is a
-    ground-truth neighbor (0.0 when none hit). ``results`` must carry a
-    ``rank`` column (1-based). Same join-then-aggregate shape as recall —
-    no collects."""
-    first_hit = (
-        results.select("qid", "neighbor_id", "rank")
-        .join(ground_truth.select("qid", "neighbor_id"), ["qid", "neighbor_id"])
-        .groupBy("qid")
-        .agg(F.min("rank").alias("_r"))
-    )
-    return (
-        ground_truth.select("qid")
-        .distinct()
-        .join(first_hit, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce(F.lit(1.0) / F.col("_r"), F.lit(0.0)).alias("rr"),
-        )
-    )
-
-
-def ndcg_at_k(results: DataFrame, ground_truth: DataFrame, k: int) -> DataFrame:
-    """Per-query NDCG@k with binary relevance (in-ground-truth = 1):
-
-        DCG  = sum over hit positions p of 1/log2(p + 1)
-        IDCG = sum over p = 1..min(k, |gt|) of 1/log2(p + 1)
-
-    Position-sensitive where recall is not: late hits score less. Both
-    inputs are exploded frames; ``results`` needs ``rank``."""
-    gains = (
-        results.filter(F.col("rank") <= k)
-        .select("qid", "neighbor_id", "rank")
-        .join(ground_truth.select("qid", "neighbor_id"), ["qid", "neighbor_id"])
-        .groupBy("qid")
-        .agg(F.sum(F.lit(1.0) / F.log2(F.col("rank") + 1.0)).alias("_dcg"))
-    )
-    gt_sizes = ground_truth.groupBy("qid").agg(F.count("*").alias("_n"))
-    ideal = gt_sizes.select(
-        "qid",
-        F.aggregate(
-            F.sequence(F.lit(1), F.least(F.lit(k), F.col("_n")).cast("int")),
-            F.lit(0.0),
-            lambda acc, p: acc + F.lit(1.0) / F.log2(p.cast("double") + 1.0),
-        ).alias("_idcg"),
-    )
-    return ideal.join(gains, "qid", "left").select(
-        "qid",
-        F.when(
-            F.col("_idcg") > 0.0, F.coalesce(F.col("_dcg"), F.lit(0.0)) / F.col("_idcg")
-        )
-        .otherwise(F.lit(0.0))
-        .alias("ndcg"),
-    )

@@ -61,13 +61,18 @@ def resolve_index_kind(conf: VectorIndexConf, n: int) -> str:
 def loads(data: bytes) -> SlotIndex:
     """An index of any kind from its ``dumps`` bytes; kinds are told apart
     by their pickled keys, which no two kinds share (state blobs carry no
-    kind name)."""
+    kind name). Anything else, such as the marker tuple an older exact
+    stateful worker checkpointed, raises ``ValueError``."""
     d = pickle.loads(data)
-    keys = tuple(d)
-    for kind in KINDS.values():
-        if keys == kind.cls._CTOR + kind.cls._STATE:
-            return kind.cls.from_fields(d)
-    raise ValueError(f"not an index blob: keys {keys}")
+    kinds = {name: kind.cls._CTOR + kind.cls._STATE for name, kind in KINDS.items()}
+    if isinstance(d, dict):
+        for name, keys in kinds.items():
+            if tuple(d) == keys:
+                return KINDS[name].cls.from_fields(d)
+    got = f"keys {tuple(d)}" if isinstance(d, dict) else f"a {type(d).__name__}"
+    raise ValueError(
+        f"not an index blob: {got}; expected a dict with the keys of one kind: {kinds}"
+    )
 
 
 def build_from_conf(

@@ -7,9 +7,10 @@ kind (``flat``, ``hnsw``, ``ivf``, ``pq``) subclasses :class:`SlotIndex` and add
 its build and its single-query ``search``. The base owns the rest:
 
 * slot bookkeeping: per slot a ``label`` (row id), an event time ``ts``
-  (the ``min_ts`` freshness filter, ``FilterSeqTs``) and a ``deleted``
+  (the ``min_ts``/``max_ts`` window, ``FilterSeqTs``) and a ``deleted``
   tombstone (W2), plus the label -> slot map;
-* the batch search loop, with one hook for state a kind hoists per batch;
+* the eligibility mask and the batch search loop, with one hook for state
+  a kind hoists per batch;
 * pickle persistence of the fields each kind declares.
 """
 
@@ -35,13 +36,22 @@ def _as_label_array(allow_labels) -> np.ndarray:
     return np.asarray(list(allow_labels), dtype=np.int64)
 
 
+def _at(bound, j: int):
+    """Query ``j``'s value of a scalar or per-query bound."""
+    if bound is None:
+        return None
+    return int(bound[j]) if np.ndim(bound) else int(bound)
+
+
 class SlotIndex:
     """Slot bookkeeping, batch search and persistence for one index kind.
 
     A kind implements ``search(q, k, ef_search, min_ts, allow)``: top-k
     (labels, distances) for one query, ascending by (distance, label),
     over the slots that are not deleted, not older than ``min_ts`` and set
-    in the ``allow`` slot mask.
+    in the ``allow`` slot mask. The two kinds the stateful worker holds,
+    flat and hnsw, also take ``max_ts``, the window's upper end. Distances
+    follow ``index.distance``.
 
     A kind declares its pickled dict: ``_CTOR`` are its constructor
     arguments in order, ``_STATE`` the rest, and the dict's keys are
@@ -130,9 +140,27 @@ class SlotIndex:
 
     # -- search ---------------------------------------------------------------
 
-    def _batch_kwargs(self, min_ts, allow) -> dict:
+    def _eligibility(self, min_ts=None, allow=None, max_ts=None):
+        """Mask of the slots a search may return: not tombstoned, set in the
+        ``allow`` slot mask and inside ``[min_ts, max_ts]`` (the
+        ``FilterSeqTs`` window; a bound is a scalar, or an array with one
+        per query, which makes the mask one row per query). None when no
+        bound and no allowlist applies."""
+        if allow is None and min_ts is None and max_ts is None:
+            return None
+        ts = self.ts[: self.n]
+        ok = ~self.deleted[: self.n]
+        if allow is not None:
+            ok = ok & allow
+        if min_ts is not None:
+            ok = ok & (ts >= np.asarray(min_ts, dtype=np.int64)[..., None])
+        if max_ts is not None:
+            ok = ok & (ts <= np.asarray(max_ts, dtype=np.int64)[..., None])
+        return ok
+
+    def _batch_kwargs(self, min_ts, allow, max_ts) -> dict:
         """Extra ``search`` arguments computed once per batch (hnsw hoists
-        its eligibility mask); the scans (flat, ivf, pq) need none."""
+        its eligibility mask); the scans (ivf, pq) need none."""
         return {}
 
     def search_batch(
@@ -142,19 +170,22 @@ class SlotIndex:
         ef_search: int | None = None,
         min_ts=None,
         allow_labels=None,
+        max_ts=None,
     ):
         """Batched search: (qids-aligned) list of (labels, distances).
-        ``min_ts`` is a scalar or a per-query array (per-query TTL);
-        ``allow_labels`` (optional label collection) applies in-index to
-        every query in the batch, its slot mask built once."""
+        ``min_ts`` and ``max_ts`` are each a scalar or a per-query array
+        (a per-query TTL window; only the kinds that take ``max_ts`` in
+        ``search``, flat and hnsw, accept it); ``allow_labels`` (optional
+        label collection) applies in-index to every query in the batch,
+        its slot mask built once."""
         allow = self.allow_mask(allow_labels) if allow_labels is not None else None
-        extra = self._batch_kwargs(min_ts, allow)
+        extra = self._batch_kwargs(min_ts, allow, max_ts)
         out = []
         for j in range(qmat.shape[0]):
-            mt = None
-            if min_ts is not None:
-                mt = int(min_ts[j]) if np.ndim(min_ts) else int(min_ts)
-            out.append(self.search(qmat[j], k, ef_search, mt, allow=allow, **extra))
+            bounds = {"min_ts": _at(min_ts, j)}
+            if max_ts is not None:
+                bounds["max_ts"] = _at(max_ts, j)
+            out.append(self.search(qmat[j], k, ef_search, allow=allow, **bounds, **extra))
         return out
 
     # -- persistence (C3/C4 analog: segment index artifact) -------------------

@@ -6,8 +6,10 @@ numpy HNSW loses to a plain scan on build time, search time and recall
 (``tools/flat_crossover.py`` is the receipt; faiss gives the same rule: a
 small index, or few searches per index, means a flat scan). The flat kind
 keeps the rows as they are: its build is a sort by label, so a segment
-needs no artifact at flush, and its search is an exact scan per query,
-ties broken by (distance, label).
+needs no artifact at flush, and its search is one exact scan per batch
+(``index.distance.exact_topk``), ties broken by (distance, label). Its
+distances are the fold's, so they equal ``knn_exact`` and the DuckDB
+oracles bit for bit.
 """
 
 from __future__ import annotations
@@ -15,7 +17,7 @@ from __future__ import annotations
 import numpy as np
 
 from vstream_spark.index.base import SlotIndex
-from vstream_spark.index.hnsw import _DISTS
+from vstream_spark.index.distance import exact_topk
 
 
 class FlatIndex(SlotIndex):
@@ -61,27 +63,29 @@ class FlatIndex(SlotIndex):
         ef_search: int | None = None,
         min_ts: int | None = None,
         allow: np.ndarray | None = None,
+        max_ts: int | None = None,
     ) -> tuple[np.ndarray, np.ndarray]:
         """Exact top-k (labels, distances) ascending by (distance, label)
-        over the live rows not older than ``min_ts`` and set in ``allow``:
-        one scan of the shared distance kernel (``hnsw._DISTS``)."""
-        ok = ~self.deleted[: self.n]
-        if min_ts is not None:
-            ok &= self.ts[: self.n] >= min_ts
-        if allow is not None:
-            ok &= allow
-        rows = np.flatnonzero(ok)
-        take = min(k, len(rows))
-        if take == 0:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-        ds = _DISTS[self.metric](self.vecs[: self.n], np.asarray(q, dtype=np.float64))
-        ds = ds[rows]
-        if take < len(rows):
-            # every row tied with the k-th stays in for the label tiebreak
-            keep = ds <= np.partition(ds, take - 1)[take - 1]
-            rows, ds = rows[keep], ds[keep]
-        top = np.lexsort((self.labels[rows], ds))[:take]
-        return self.labels[rows[top]], ds[top]
+        over the live rows inside ``[min_ts, max_ts]`` and set in
+        ``allow``."""
+        (hit,) = self._scan(np.asarray(q)[None, :], k, min_ts, allow, max_ts)
+        return hit
+
+    def search_batch(
+        self, qmat, k, ef_search=None, min_ts=None, allow_labels=None, max_ts=None
+    ):
+        """``search`` for every query at once: one scan and one fold
+        re-score per batch. Bounds are scalars or per-query arrays."""
+        allow = self.allow_mask(allow_labels) if allow_labels is not None else None
+        return self._scan(qmat, k, min_ts, allow, max_ts)
+
+    def _scan(self, qmat, k, min_ts, allow, max_ts):
+        ok = self._eligibility(min_ts, allow, max_ts)
+        if ok is None:
+            ok = ~self.deleted[: self.n]
+        return exact_topk(
+            qmat, self.vecs[: self.n], self.labels[: self.n], k, self.metric, ok
+        )
 
 
 def build_flat(

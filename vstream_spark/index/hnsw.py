@@ -27,24 +27,7 @@ import heapq
 import numpy as np
 
 from vstream_spark.index.base import SlotIndex
-
-
-def _l2(vecs: np.ndarray, q: np.ndarray) -> np.ndarray:
-    d = vecs - q
-    return np.einsum("ij,ij->i", d, d)
-
-
-def _ip(vecs: np.ndarray, q: np.ndarray) -> np.ndarray:
-    return -vecs @ q
-
-
-def _cos(vecs: np.ndarray, q: np.ndarray) -> np.ndarray:
-    qn = np.linalg.norm(q)
-    vn = np.linalg.norm(vecs, axis=1)
-    denom = np.where(vn * qn > 0, vn * qn, 1.0)
-    return 1.0 - (vecs @ q) / denom
-
-_DISTS = {"l2": _l2, "ip": _ip, "cosine": _cos}
+from vstream_spark.index.distance import pairwise, rowwise
 
 
 def _level_of(label: int, seed: int, m_l: float) -> int:
@@ -81,7 +64,6 @@ class HnswIndex(SlotIndex):
         self.ef_construction = ef_construction
         self.seed = seed
         self.m_l = 1.0 / np.log(M)
-        self._dist = _DISTS[metric]
         # float64 storage: distance kernels run without per-call astype
         self.vecs = np.empty((capacity, dim), dtype=np.float64)
         self.links: list[list[list[int]]] = []  # node -> level -> neighbor ids
@@ -90,6 +72,9 @@ class HnswIndex(SlotIndex):
         # packed level-0 adjacency (lazy; rebuilt after mutations) — lets the
         # beam search gather/filter neighbors in numpy instead of Python sets
         self._packed: tuple[np.ndarray, np.ndarray] | None = None
+
+    def _dist(self, vecs: np.ndarray, q: np.ndarray) -> np.ndarray:
+        return rowwise(vecs, q, self.metric)
 
     # -- build ----------------------------------------------------------------
 
@@ -299,24 +284,6 @@ class HnswIndex(SlotIndex):
                             heapq.heappop(best)
         return sorted((-nd, nb) for nd, nb in best)
 
-    def _eligibility(self, min_ts: int | None, allow: np.ndarray | None):
-        """Slot-level eligibility mask combining the tombstone, freshness and
-        allowlist filters, or None when neither a freshness bound nor an
-        allowlist applies (the unfiltered walk). The freshness bound is the
-        reference's ``FilterSeqTs`` (``hnswlib.h:135-146``): stale nodes
-        route the walk but never occupy its result slots, so a hard TTL
-        cannot leave the result short of k the way a filter after the walk
-        can."""
-        if allow is None and min_ts is None:
-            return None
-        eligible = (
-            allow.copy() if allow is not None else np.ones(self.n, dtype=bool)
-        )
-        eligible &= ~self.deleted[: self.n]
-        if min_ts is not None:
-            eligible &= self.ts[: self.n] >= min_ts
-        return eligible
-
     def search(
         self,
         q: np.ndarray,
@@ -325,15 +292,17 @@ class HnswIndex(SlotIndex):
         min_ts: int | None = None,
         allow: np.ndarray | None = None,
         eligible: np.ndarray | None = None,
+        max_ts: int | None = None,
     ) -> tuple[np.ndarray, np.ndarray]:
         """Top-k (labels, distances), ascending by (distance, label).
 
-        min_ts replicates the reference's freshness filter: only nodes with
-        ts >= min_ts qualify (query.event_time - TTL). Tombstoned nodes never
+        min_ts and max_ts replicate the reference's freshness filter: only
+        nodes with min_ts <= ts <= max_ts qualify (the window
+        [query.event_time - TTL, query.event_time]). Tombstoned nodes never
         qualify. Matches the exact-path tiebreak (dist asc, id asc).
 
         ``allow`` (optional) is a slot-level bool mask. With an allowlist or
-        a freshness bound the level-0 walk filters IN-TRAVERSAL
+        a time bound the level-0 walk filters IN-TRAVERSAL
         (deleted/stale/disallowed nodes route but never enter the result
         heap), so a filtered search does ~ef eligible-candidate work instead
         of oversampling and a hard TTL still fills k — the
@@ -352,7 +321,7 @@ class HnswIndex(SlotIndex):
         for lv in range(self.max_level, 0, -1):
             ep = self._greedy(q, ep, lv)
         if eligible is None:
-            eligible = self._eligibility(min_ts, allow)
+            eligible = self._eligibility(min_ts, allow, max_ts)
         if eligible is not None:
             n_elig = int(eligible.sum())
             if n_elig == 0:
@@ -381,14 +350,15 @@ class HnswIndex(SlotIndex):
             np.asarray([d for d, _ in ok], dtype=np.float64),
         )
 
-    def _batch_kwargs(self, min_ts, allow) -> dict:
+    def _batch_kwargs(self, min_ts, allow, max_ts) -> dict:
         """The composed eligibility mask is hoisted out of the per-query
-        loop whenever min_ts is query-invariant (scalar or None) — three
-        O(n) boolean passes per BATCH, not per query."""
-        if np.ndim(min_ts):
+        loop whenever both bounds are query-invariant (scalar or None) —
+        a few O(n) boolean passes per BATCH, not per query. The stateful
+        worker's per-query windows are per-query arrays, so each of its
+        queries composes its own mask."""
+        if np.ndim(min_ts) or np.ndim(max_ts):
             return {}
-        mt = None if min_ts is None else int(min_ts)
-        return {"eligible": self._eligibility(mt, allow)}
+        return {"eligible": self._eligibility(min_ts, allow, max_ts)}
 
 
 _BULK_THRESHOLD = 2048
@@ -436,19 +406,10 @@ def _exact_knn_links(vecs: np.ndarray, metric: str, m: int, block: int = 1024):
     """
     n = len(vecs)
     v32 = np.ascontiguousarray(vecs, dtype=np.float32)
-    sq = (v32 * v32).sum(axis=1)
-    norms = np.sqrt(sq) if metric == "cosine" else None
     out = np.empty((n, min(m, n - 1)), dtype=np.int64)
     for lo in range(0, n, block):
         hi = min(lo + block, n)
-        q = v32[lo:hi]
-        if metric == "l2":
-            d = sq[lo:hi, None] - 2.0 * (q @ v32.T) + sq[None, :]
-        elif metric == "ip":
-            d = -(q @ v32.T)
-        else:  # cosine
-            denom = norms[lo:hi, None] * norms[None, :]
-            d = 1.0 - np.where(denom > 0, (q @ v32.T) / np.where(denom > 0, denom, 1.0), 0.0)
+        d = pairwise(v32[lo:hi], v32, metric)
         d[np.arange(hi - lo), np.arange(lo, hi)] = np.inf  # exclude self
         k = out.shape[1]
         idx = np.argpartition(d, k - 1, axis=1)[:, :k]
@@ -484,7 +445,7 @@ def _approx_knn_links(
     the spill). Deterministic: seeded k-means over label-sorted input,
     (dist, id) tie-breaks. Returns an (n, m) int64 neighbor matrix (padded
     with the point's own index when a cell is tiny)."""
-    from vstream_spark.index.ivf import _kmeans, _pairwise
+    from vstream_spark.index.ivf import _kmeans
 
     n = len(vecs)
     v32 = np.ascontiguousarray(vecs, dtype=np.float32)
@@ -495,7 +456,7 @@ def _approx_knn_links(
     topc = np.empty((n, spill), dtype=np.int64)
     for lo in range(0, n, 16384):
         hi = min(lo + 16384, n)
-        d = _pairwise(v32[lo:hi], cents, "l2")
+        d = pairwise(v32[lo:hi], cents, "l2")
         part = np.argpartition(d, spill - 1, axis=1)[:, :spill]
         rows = np.arange(hi - lo)[:, None]
         order = np.argsort(d[rows, part], axis=1, kind="stable")
@@ -515,7 +476,7 @@ def _approx_knn_links(
         k = min(m, len(g) - 1)
         for lo in range(0, len(g), 2048):
             hi = min(lo + 2048, len(g))
-            dmat = np.asarray(_pairwise(gv[lo:hi], gv, metric), dtype=np.float32)
+            dmat = np.asarray(pairwise(gv[lo:hi], gv, metric), dtype=np.float32)
             dmat[np.arange(hi - lo), np.arange(lo, hi)] = np.inf
             idx = np.argpartition(dmat, k - 1, axis=1)[:, :k]
             rows = np.arange(hi - lo)[:, None]
@@ -593,17 +554,6 @@ def build_index_bulk(
     idx.links = [[[] for _ in range(levels[i] + 1)] for i in range(n)]
     v32 = vecs.astype(np.float32)  # graph selection tolerates f32 distances
 
-    def _rowwise_dist(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-        # may clobber ``a`` (callers pass reusable gather buffers)
-        if metric == "l2":
-            np.subtract(a, b, out=a)
-            return np.einsum("ij,ij->i", a, a)
-        if metric == "ip":
-            return -np.einsum("ij,ij->i", a, b)
-        num = np.einsum("ij,ij->i", a, b)
-        den = np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)
-        return 1.0 - num / np.where(den > 0, den, 1.0)
-
     def _symmetrize(nbr_mat: np.ndarray, ids: np.ndarray, cap: int):
         """Add reverse edges (directed kNN graphs route poorly: a hub may be
         nearest to many nodes that it doesn't link back to), dedup, then trim
@@ -633,7 +583,7 @@ def build_index_bulk(
             m_ = hi - lo
             np.take(v32, ids[ua[lo:hi]], axis=0, out=buf_a[:m_])
             np.take(v32, ids[ub[lo:hi]], axis=0, out=buf_b[:m_])
-            uds[lo:hi] = _rowwise_dist(buf_a[:m_], buf_b[:m_])
+            uds[lo:hi] = rowwise(buf_a[:m_], buf_b[:m_], metric, inplace=True)
         s2 = np.concatenate([ua, ub])
         d2 = np.concatenate([ub, ua])
         ds = np.concatenate([uds, uds])

@@ -24,23 +24,7 @@ from __future__ import annotations
 import numpy as np
 
 from vstream_spark.index.base import SlotIndex
-from vstream_spark.index.hnsw import _DISTS
-
-
-def _pairwise(q: np.ndarray, vecs: np.ndarray, metric: str) -> np.ndarray:
-    """(len(q), len(vecs)) distance matrix, pure matmul formulation."""
-    if metric == "l2":
-        return (
-            (q * q).sum(axis=1)[:, None]
-            - 2.0 * (q @ vecs.T)
-            + (vecs * vecs).sum(axis=1)[None, :]
-        )
-    if metric == "ip":
-        return -(q @ vecs.T)
-    qn = np.linalg.norm(q, axis=1, keepdims=True)
-    vn = np.linalg.norm(vecs, axis=1, keepdims=True)
-    denom = qn * vn.T
-    return 1.0 - np.where(denom > 0, (q @ vecs.T) / np.where(denom > 0, denom, 1.0), 0.0)
+from vstream_spark.index.distance import pairwise, rowwise
 
 
 def _assign_chunked(
@@ -53,7 +37,7 @@ def _assign_chunked(
     best = np.empty(n, dtype=vecs.dtype)
     for lo in range(0, n, chunk):
         hi = min(lo + chunk, n)
-        d = _pairwise(vecs[lo:hi], centroids, "l2")
+        d = pairwise(vecs[lo:hi], centroids, "l2")
         a = d.argmin(axis=1)
         assign[lo:hi] = a
         best[lo:hi] = d[np.arange(hi - lo), a]
@@ -138,12 +122,10 @@ class IvfIndex(SlotIndex):
             nq = np.linalg.norm(q)
             if nq > 0:
                 q = q / nq
-        if self.metric == "ip":
-            # MIP: rank cells by q·centroid — a high-IP cell's mean is high-IP
-            # with the query; L2-nearest-direction misses high-norm cells
-            d = -(self.centroids @ q)
-        else:
-            d = _pairwise(q[None, :], self.centroids, "l2")[0]
+        # MIP: rank cells by q·centroid — a high-IP cell's mean is high-IP
+        # with the query; L2-nearest-direction misses high-norm cells
+        metric = "ip" if self.metric == "ip" else "l2"
+        d = pairwise(q[None, :], self.centroids, metric)[0]
         nprobe = min(nprobe, len(self.centroids))
         cells = np.argpartition(d, nprobe - 1)[:nprobe] if nprobe < len(d) else np.arange(len(d))
         return cells[np.lexsort((cells, d[cells]))]
@@ -176,7 +158,7 @@ class IvfIndex(SlotIndex):
         idx = idx[ok]
         if len(idx) == 0:
             return np.empty(0, dtype=np.int64), np.empty(0)
-        ds = _DISTS[self.metric](self.vecs[idx], q)
+        ds = rowwise(self.vecs[idx], q, self.metric)
         take = min(k, len(idx))
         if take < len(idx):
             # argpartition alone picks an ARBITRARY subset of rows tied at

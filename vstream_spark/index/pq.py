@@ -13,9 +13,10 @@ The ``ef_search`` knob is ignored (ADC always scans every live code — still
 k-means uses the seeded Lloyd from ``index.ivf``; codes and codebooks are
 byte-stable for a given input set.
 
-Metrics: 'l2' native ADC; 'ip' via inner-product tables; 'cosine' trains on
-unit-normalized vectors and uses the unit-sphere identity
-cos_dist = ||u - v||^2 / 2.
+Metrics (tables from ``index.distance.adc_tables``): 'l2' native ADC;
+'ip' via inner-product tables, ``1 - <a,b>`` as every kind scores it;
+'cosine' trains on unit-normalized vectors and uses the unit-sphere
+identity cos_dist = ||u - v||^2 / 2.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ from __future__ import annotations
 import numpy as np
 
 from vstream_spark.index.base import SlotIndex
+from vstream_spark.index.distance import adc_distances, adc_tables, pairwise
 from vstream_spark.index.ivf import _kmeans
 
 
@@ -55,12 +57,7 @@ class PqIndex(SlotIndex):
             if nq > 0:
                 q = q / nq
         qs = q.reshape(self.m, self.dsub).astype(np.float32)
-        if self.metric == "ip":
-            return -np.einsum("mkd,md->mk", self.codebooks, qs)
-        # l2 (and cosine on the unit sphere): squared euclidean per subspace
-        diff = self.codebooks - qs[:, None, :]
-        tab = np.einsum("mkd,mkd->mk", diff, diff)
-        return tab / 2.0 if self.metric == "cosine" else tab
+        return adc_tables(self.codebooks, qs, self.metric)
 
     def search(
         self,
@@ -85,12 +82,12 @@ class PqIndex(SlotIndex):
         if len(idx) == 0:
             return np.empty(0, dtype=np.int64), np.empty(0)
         # ADC: gather each row's m table entries and sum
-        ds = tab[np.arange(self.m)[None, :], self.codes[idx]].sum(axis=1)
+        ds = adc_distances(tab, self.codes[idx], self.metric)
         take = min(k, len(idx))
         top = np.argpartition(ds, take - 1)[:take] if take < len(idx) else np.arange(len(idx))
         order = np.lexsort((self.labels[idx[top]], ds[top]))
         top = top[order]
-        return self.labels[idx[top]], ds[top].astype(np.float64)
+        return self.labels[idx[top]], ds[top]
 
     def memory_bytes(self) -> int:
         """Code storage only (the float vectors are NOT retained)."""
@@ -134,12 +131,7 @@ def build_pq(
         if ksub < idx.ksub:
             # pad unused codes with the first centroid (never assigned)
             idx.codebooks[s, ksub:] = cents[0]
-        d = (
-            (sub * sub).sum(axis=1)[:, None]
-            - 2.0 * (sub @ cents.T)
-            + (cents * cents).sum(axis=1)[None, :]
-        )
-        codes[:, s] = d.argmin(axis=1).astype(np.uint8)
+        codes[:, s] = pairwise(sub, cents, "l2").argmin(axis=1).astype(np.uint8)
     idx.codes = codes
     idx.labels = labels
     idx.ts = ts

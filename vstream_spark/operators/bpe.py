@@ -138,24 +138,3 @@ def train_bpe(
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return merges
-
-
-def apply_bpe(
-    docs: DataFrame,
-    merges: list[tuple[str, str, int]] | list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Encode text with a learned merge table: each word's symbol array is
-    folded through the merges IN ORDER (a chain of ``num_merges`` Catalyst
-    folds — still one map-only projection, no Python, no shuffle). Returns
-    (doc_id, word_idx, tokens ARRAY<STRING>) per word, preserving word
-    order via posexplode."""
-    words = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.trim(F.col(text_col)), " ")).alias("word_idx", "word"),
-    ).filter(F.col("word") != "")
-    syms = _chars(F.col("word"))
-    for m in merges:
-        syms = _apply_merge(syms, m[0], m[1])
-    return words.select("doc_id", "word_idx", syms.alias("tokens"))

@@ -4,7 +4,9 @@ This is the Spark re-expression of the reference's core dataflow
 (``VStreamSearchJob.java:21-49``; SURVEY §3.1): vectors and queries are routed
 by a partitioner (§2.3), each partition searches its local shard (§2.4 W1-W5),
 and per-partition top-k results are merged into global top-k per query (§2.5
-M1, completeness via ``num_partitions_sent``, ``PartitionedQuery.java:7-28``).
+M1; a batch merge is complete by construction, so the reference's
+``num_partitions_sent`` emit gate, ``PartitionedQuery.java:7-28``, has no
+counterpart here).
 
 Two search paths:
 
@@ -18,8 +20,9 @@ Two search paths:
 
 * **numpy worker path** (``knn_partitioned_worker``): cogrouped
   ``applyInPandas`` — one Arrow batch per partition holding its vector shard
-  and routed queries; vectorized brute-force top-k inside, or with
-  ``index_conf`` a per-partition index of any kind (``index.KINDS``); at
+  and routed queries; an exact flat scan inside (``knn_exact``'s distances,
+  bit for bit), or with ``index_conf`` a per-partition index of any kind
+  (``index.KINDS``), all scored by ``index.distance``; at
   100 TB the shard is index-backed and only (qid, id, dist) rows leave the
   executor.
 
@@ -40,6 +43,8 @@ from pyspark.sql import functions as F
 from vstream_spark.config import PartitionerConf, VectorIndexConf
 from vstream_spark.functions.distance import distance_expr
 from vstream_spark.index import build_from_conf
+from vstream_spark.index.distance import rescore
+from vstream_spark.index.flat import build_flat
 from vstream_spark.operators.knn import apply_deletes, derive_k_cap, topk
 from vstream_spark.partitioners.dispatch import fit_partitioner
 
@@ -195,50 +200,39 @@ def knn_partitioned_worker(
             return pd.DataFrame({c: [] for c in empty_cols}).astype(empty_cols)
         vmat = np.stack(vdf["emb"].to_numpy()).astype(np.float64)
         qmat = np.stack(qdf["emb"].to_numpy()).astype(np.float64)
-        vids = vdf["id"].to_numpy()
-        qids = qdf["qid"].to_numpy()
-        if index_conf is not None:
-            kind, idx = build_from_conf(vmat, vids, index_conf, metric)
-            kk = int(qdf["k"].max()) if per_query_k else k
-            # PQ: over-fetch ADC candidates and rescore them EXACTLY against
-            # the partition's float block (present in this worker anyway) —
-            # the faiss refine pattern; ADC alone loses recall as shard
-            # density grows and quantization error spans true neighbor gaps
-            fetch_k = kk
-            if kind == "pq":
-                fetch_k = min(max(1, index_conf.pq_refine) * kk, len(vids))
-                row_of = {int(lb): i for i, lb in enumerate(vids)}
-            efs = (
-                qdf["ef_search"].to_numpy().astype(np.int64)
-                if per_query_ef
-                else None
-            )
-            out_qid, out_id, out_dist = [], [], []
-            for qi in range(len(qmat)):
-                ef_q = int(efs[qi]) if efs is not None else index_conf.ef_search
-                lbs, ds = idx.search(qmat[qi], fetch_k, max(ef_q, fetch_k))
-                if kind == "pq" and len(lbs):
-                    rows = np.fromiter((row_of[int(l)] for l in lbs), dtype=np.int64)
-                    sub = vmat[rows]
-                    qv = qmat[qi]
-                    if metric == "ip":
-                        ex = 1.0 - sub @ qv
-                    elif metric == "cosine":
-                        denom = np.linalg.norm(sub, axis=1) * np.linalg.norm(qv)
-                        with np.errstate(divide="ignore", invalid="ignore"):
-                            ex = 1.0 - np.where(denom > 0, (sub @ qv) / denom, 0.0)
-                    else:
-                        diff = sub - qv
-                        ex = (diff * diff).sum(axis=1)
-                    order = np.lexsort((lbs, ex))[:kk]
-                    lbs, ds = lbs[order], ex[order]
-                out_qid.extend([qids[qi]] * len(lbs))
-                out_id.extend(lbs)
-                out_dist.extend(ds)
+        vids = vdf["id"].to_numpy(np.int64)
+        qids = qdf["qid"].to_numpy(np.int64)
+        kk = int(qdf["k"].max()) if per_query_k else k
+        if index_conf is None:
+            kind, idx = "flat", build_flat(vmat, vids, metric=metric)
         else:
-            kk = int(qdf["k"].max()) if per_query_k else k
-            out_qid, out_id, out_dist = _local_topk(vmat, qmat, vids, qids, kk, metric)
-        out = pd.DataFrame({"qid": out_qid, "neighbor_id": out_id, "distance": out_dist})
+            kind, idx = build_from_conf(vmat, vids, index_conf, metric)
+        # PQ: over-fetch ADC candidates and rescore them EXACTLY against
+        # the partition's float block (present in this worker anyway) —
+        # the faiss refine pattern; ADC alone loses recall as shard
+        # density grows and quantization error spans true neighbor gaps
+        fetch_k = min(max(1, index_conf.pq_refine) * kk, len(vids)) if kind == "pq" else kk
+        if per_query_ef:
+            efs = qdf["ef_search"].to_numpy().astype(np.int64)
+            res = [
+                idx.search(qmat[j], fetch_k, max(int(efs[j]), fetch_k))
+                for j in range(len(qmat))
+            ]
+        else:
+            ef = index_conf.ef_search if index_conf is not None else 0
+            res = idx.search_batch(qmat, fetch_k, max(ef, fetch_k))
+        if kind == "pq":
+            qi = np.repeat(np.arange(len(qmat)), [len(lbs) for lbs, _ in res])
+            lbs = np.concatenate([lbs for lbs, _ in res])
+            by_id = np.argsort(vids, kind="stable")
+            rows = by_id[np.searchsorted(vids, lbs, sorter=by_id)]
+            res = rescore(qmat, vmat, vids, qi, rows, kk, metric)
+        lens = [len(lbs) for lbs, _ in res]
+        out = pd.DataFrame({
+            "qid": np.repeat(qids, lens),
+            "neighbor_id": np.concatenate([lbs for lbs, _ in res]).astype(np.int64),
+            "distance": np.concatenate([ds for _, ds in res]).astype(np.float64),
+        })
         if per_query_k:
             kmap = dict(zip(qdf["qid"].astype("int64"), qdf["k"].astype("int64")))
             out["q_k"] = out["qid"].map(kmap).astype("int64")
@@ -263,75 +257,3 @@ def knn_partitioned_worker(
             results, F.col("q_k"), k_cap=derive_k_cap(queries), dedup=dedup
         ).select("qid", "neighbor_id", "distance", "rank")
     return topk(results, k, dedup=dedup).select("qid", "neighbor_id", "distance", "rank")
-
-
-def _pairwise_dist(vmat: np.ndarray, qmat: np.ndarray, metric: str) -> np.ndarray:
-    """(Q, N) distance matrix, vectorized."""
-    if metric == "l2":
-        # ||q||^2 - 2 q.v + ||v||^2
-        d = (
-            (qmat * qmat).sum(axis=1)[:, None]
-            - 2.0 * (qmat @ vmat.T)
-            + (vmat * vmat).sum(axis=1)[None, :]
-        )
-        return np.maximum(d, 0.0)
-    if metric == "ip":
-        return 1.0 - qmat @ vmat.T
-    if metric == "cosine":
-        qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-        vn = np.linalg.norm(vmat, axis=1, keepdims=True)
-        return 1.0 - (qmat @ vmat.T) / (qn * vn.T)
-    raise ValueError(f"unknown metric {metric!r}")
-
-
-def _topk_rows(dist_row: np.ndarray, vids: np.ndarray, k: int):
-    """Indices of the k smallest distances, ties by smaller id (M1 tiebreak)."""
-    kk = min(k, len(dist_row))
-    idx = np.lexsort((vids, dist_row))[:kk]
-    return idx
-
-
-def _local_topk(vmat, qmat, vids, qids, k, metric):
-    out_qid: list[int] = []
-    out_id: list[int] = []
-    out_dist: list[float] = []
-    dmat = _pairwise_dist(vmat, qmat, metric)
-    for qi in range(len(qmat)):
-        sel = _topk_rows(dmat[qi], vids, k)
-        out_qid.extend([qids[qi]] * len(sel))
-        out_id.extend(vids[sel])
-        out_dist.extend(dmat[qi][sel])
-    return out_qid, out_id, out_dist
-
-
-def partial_results_complete(
-    partials: DataFrame, partitioned_queries: DataFrame
-) -> DataFrame:
-    """M1 completeness accounting (``PartialResultProcessFunction.isComplete``,
-    ``SearchResult.java:10-53``): a query's merged result is COMPLETE when
-    results have arrived from every partition it was fanned out to
-    (``num_partitions_sent``). Batch execution is trivially complete; in
-    incremental/streaming merges this is the emit gate.
-
-    ``partials``: (qid, partition_id, ...) per-partition result rows.
-    ``partitioned_queries``: the fan-out frame carrying num_partitions_sent.
-    Returns (qid, num_partitions_combined, num_partitions_sent, is_complete).
-    """
-    seen = partials.select("qid", "partition_id").distinct().groupBy("qid").agg(
-        F.count("*").alias("num_partitions_combined")
-    )
-    sent = partitioned_queries.select("qid", "num_partitions_sent").distinct()
-    return (
-        sent.join(seen, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce("num_partitions_combined", F.lit(0)).alias(
-                "num_partitions_combined"
-            ),
-            "num_partitions_sent",
-            (
-                F.coalesce("num_partitions_combined", F.lit(0))
-                == F.col("num_partitions_sent")
-            ).alias("is_complete"),
-        )
-    )

@@ -41,15 +41,6 @@ def hash_bucket_sql(key_sql: str, seed: int) -> str:
     )
 
 
-def hash_sample(
-    df: DataFrame, rate: float, key_col: str = "doc_id", seed: int = 42
-) -> DataFrame:
-    """Keep a deterministic ``rate`` fraction of rows by key hash."""
-    if not 0.0 <= rate <= 1.0:
-        raise ValueError("rate must be in [0, 1]")
-    return df.filter(_hash_bucket(F.col(key_col), seed) < int(rate * _DENOM))
-
-
 def stratified_hash_sample(
     df: DataFrame,
     rates: dict[str, float],

@@ -16,36 +16,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vstream_spark.config import PartitionerConf
+from vstream_spark.index.distance import fold_cos_sim
 from vstream_spark.operators.partitioned import knn_partitioned_worker
 from vstream_spark.operators.util import explicit_width
 from vstream_spark.partitioners.dispatch import fit_partitioner
-
-
-def _fold_dot(amat: np.ndarray, bmat: np.ndarray) -> np.ndarray:
-    """(N, M) dot products with STRICT left-fold summation order per pair.
-
-    A plain matmul uses pairwise/blocked summation, which differs in the last
-    ulp from a sequential fold — and the DuckDB oracle (list_sum over
-    list_zip) and the JVM ``aggregate`` expression both fold left-to-right.
-    Looping over the dim axis with a float64 accumulator reproduces that order
-    exactly while staying vectorized across pairs."""
-    acc = np.zeros((amat.shape[0], bmat.shape[0]), dtype=np.float64)
-    # ONE reused temporary: a fresh (N, M) allocation per dimension costs
-    # more than the arithmetic on this container's allocator (fresh pages
-    # fault in at ~100 MB/s; 64 dims x a 4.5 MB temp per bucket dominated
-    # the sf0.1 verify stage)
-    tmp = np.empty_like(acc)
-    for d in range(amat.shape[1]):
-        np.multiply(amat[:, d : d + 1], bmat[None, :, d], out=tmp)
-        np.add(acc, tmp, out=acc)
-    return acc
-
-
-def _fold_sqnorm(mat: np.ndarray) -> np.ndarray:
-    acc = np.zeros(mat.shape[0], dtype=np.float64)
-    for d in range(mat.shape[1]):
-        acc += mat[:, d] * mat[:, d]
-    return acc
 
 
 def similarity_join_exact(
@@ -141,14 +115,9 @@ def lsh_similarity_join(
     )
 
     def _verify(a_ids, amat, b_ids, bmat, triangular: bool) -> pd.DataFrame:
-        an = np.sqrt(_fold_sqnorm(amat))
-        bn = np.sqrt(_fold_sqnorm(bmat))
-        denom = an[:, None] * bn[None, :]
-        sim = _fold_dot(amat, bmat)
-        # in-place divide; a zero denom means a zero vector, whose fold dot
-        # is exactly 0.0 — leaving it untouched IS the `otherwise 0.0`
-        with np.errstate(divide="ignore", invalid="ignore"):
-            np.divide(sim, denom, out=sim, where=denom != 0.0)
+        # folded left to right, as the JVM ``aggregate`` and DuckDB
+        # ``list_sum`` sum: the same similarities bit for bit
+        sim = fold_cos_sim(amat[:, None, :], bmat[None, :, :])
         if triangular:
             # each unordered pair appears once: strictly-upper by id
             ai, bi = np.where((sim >= threshold) & (a_ids[:, None] < b_ids[None, :]))

@@ -1330,8 +1330,9 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # VStreamSearchJob.java:21-49: one mixed insert/delete/query stream keyed by
 # partition -> stateful per-partition index -> global top-k merge. Run here as
 # a REAL Structured Streaming query (applyInPandasWithState, availableNow over
-# 3 micro-batches: inserts / inserts+deletes / queries) in exact mode, so the
-# result hash-matches the batch oracle (deletes LWW + TTL freshness window).
+# 3 micro-batches: inserts / inserts+deletes / queries) over the exact flat
+# kind, so the result hash-matches the batch oracle (deletes LWW + TTL
+# freshness window).
 
 _KNN_STREAMING_SCHEMA = (
     "partition_id int, op string, id bigint, emb array<float>, "
@@ -1404,14 +1405,16 @@ def q_knn_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch 1 inserts odd ids + deletes ids ≡3 (mod 10), batch 2 queries every
     25th id fanned to all partitions with a TTL window cutting event_time <
     1000. State persists across batches (applyInPandasWithState); the global
-    merge is the M1 top-k. Exact mode => hash-matches batch kNN with
-    deletes+TTL."""
+    merge is the M1 top-k. The flat kind is exact => hash-matches batch
+    kNN with deletes+TTL."""
     from vstream_spark.operators.knn import topk
-    from vstream_spark.streaming.stateful import stateful_exact_vector_search
+    from vstream_spark.streaming.stateful import stateful_vector_search
 
     src = _knn_streaming_fixture(spark, sf_dir)
     stream = _file_stream(spark, _KNN_STREAMING_SCHEMA, f"{src}/*")
-    partials = stateful_exact_vector_search(stream, k=10, metric="l2")
+    partials = stateful_vector_search(
+        stream, VectorIndexConf(dim=64, index_kind="flat"), k=10, metric="l2"
+    )
     # data ids are unreplicated (one partition each) -> (qid, id) unique
     return topk(_drain(partials, "_knn_streaming", src), 10, dedup=False).select(
         "qid", "neighbor_id", "distance", "rank"

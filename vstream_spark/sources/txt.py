@@ -1,35 +1,13 @@
-"""Text vector source, stream replay, and synthetic delete markers.
-
-S2 (``FloatVectorInputFormat.java`` / ``HDFSVectorParser.java``): lines of
-``"id,v1,v2,..."`` parsed to (id, emb) — pure Spark SQL split/cast.
-
-S3 (``LoopingNonSplittingRecursiveEnumerator.java``): the reference re-reads
-the same file N times to synthesize longer streams; the Spark analog replays
-the DataFrame N times, advancing event_time per loop so freshness semantics
-stay meaningful.
-
-S1 delete synthesis (``FloatVectorBinaryInputFormat.java:232-234,365-407``):
-the reference turns a configured fraction of the stream into deletion markers
-that reuse recently-seen ids. Deterministic here: every ``1/delete_ratio``-th
-row becomes a delete of the id ``lookback`` rows earlier.
+"""Stream replay (S3, ``LoopingNonSplittingRecursiveEnumerator.java``): the
+reference re-reads the same file N times to synthesize longer streams; the
+Spark analog replays the DataFrame N times, advancing event_time per loop so
+freshness semantics stay meaningful.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def read_txt_vectors(spark: SparkSession, path: str) -> DataFrame:
-    """Parse ``"id,v1,v2,..."`` text lines -> (id BIGINT, emb ARRAY<FLOAT>)."""
-    lines = spark.read.text(path)
-    parts = F.split(F.trim(F.col("value")), ",")
-    return lines.select(
-        F.try_element_at(parts, F.lit(1)).try_cast("bigint").alias("id"),
-        F.transform(
-            F.slice(parts, 2, 1 << 30), lambda x: x.try_cast("float")
-        ).alias("emb"),
-    ).filter(F.col("id").isNotNull())
 
 
 def replay(
@@ -49,31 +27,3 @@ def replay(
             )
         out = d if out is None else out.unionByName(d)
     return out
-
-
-def with_delete_markers(
-    vectors: DataFrame, delete_ratio: float, lookback: int = 100
-) -> DataFrame:
-    """Deterministically mix deletion markers into an insert stream (S1's
-    ``deleteRatio``). Every ``round(1/delete_ratio)``-th row additionally
-    emits a delete of the id ``lookback`` positions earlier (a recently
-    inserted id, like the reference's recent-id reuse), stamped one ms later
-    so last-writer-wins removes it. Input: (id, emb, event_time, ttl[, op]);
-    output has op with 'I'/'D' rows interleaved."""
-    if not 0.0 < delete_ratio < 1.0:
-        raise ValueError("delete_ratio must be in (0, 1)")
-    every = max(2, round(1.0 / delete_ratio))
-    base = vectors
-    if "op" not in base.columns:
-        base = base.withColumn("op", F.lit("I"))
-    dels = (
-        base.filter((F.col("id") % every == 0) & (F.col("id") >= lookback))
-        .select(
-            (F.col("id") - lookback).alias("id"),
-            F.col("emb"),
-            (F.col("event_time") + 1).alias("event_time"),
-            F.col("ttl"),
-            F.lit("D").alias("op"),
-        )
-    )
-    return base.unionByName(dels.select(*base.columns))

@@ -1,19 +1,32 @@
 """Stateful streaming vector search — the reference's core dataflow as one
-Structured Streaming operator.
+Structured Streaming operator with one worker.
 
 ``VStreamSearchJob`` (SURVEY §3.1) keys a mixed insert/delete/query stream by
-``partition_id`` and holds a mutable per-partition HNSW index in keyed state
+``partition_id`` and holds a mutable per-partition index in keyed state
 (``RocksDBKeyedProcessFunction.processElement:149-180`` dispatching on
 element type). The Spark-native equivalent is
-``groupBy(partition_id).applyInPandasWithState``: state = the serialized
-per-partition index (an exact flat scan under the default 'auto', a numpy
-HNSW graph where the caller names 'hnsw'); each micro-batch applies inserts (W1),
-tombstones deletes (W2), then answers the batch's queries against the
-updated index (W3) with the freshness filter.
+``groupBy(partition_id).applyInPandasWithState`` over
+:func:`stateful_search_fn`. Its state is the serialized per-partition index:
+an exact flat scan under 'auto' or 'flat' (bitwise equal to ``knn_exact``),
+a numpy HNSW graph where the caller names 'hnsw'. Each micro-batch:
+
+* applies its inserts (W1) and deletes (W2) last-writer-wins by event
+  time: a delete strictly newer than the version held kills it, the
+  insert wins a tie, and a stale delete or stale upsert, in this batch or
+  a later one, loses. A delete of an id the partition does not hold yet
+  is remembered as a tombstoned slot; a tombstoned slot's ``ts`` holds
+  its delete time, so a later stale insert still loses to it;
+* then answers the batch's queries (W3) over the window
+  ``[event_time - ttl, event_time]`` (``FilterSeqTs``; no ttl, no lower
+  bound): an insert with a later event time than the query, even in the
+  same batch, is not seen.
+
+The result is independent of how the markers were batched: a query sees
+every I/D that arrived in or before its micro-batch.
 
 This is the in-state-graph alternative to the segment-append path
 (``streaming/pipeline.py`` + ``storage/search.py``). SURVEY §7 flags state
-size as the trade-off: per-partition graphs must fit the state store, so the
+size as the trade-off: per-partition indexes must fit the state store, so the
 segment path remains the default at 100 TB scale; this operator is the
 low-latency small-state variant (the reference's in-memory hnswlib mode,
 ``HnswLibKeyedProcessFunction.java:19-101``).
@@ -41,6 +54,58 @@ OUTPUT_SCHEMA = (
     "qid BIGINT, neighbor_id BIGINT, distance DOUBLE, partition_id INT"
 )
 STATE_SCHEMA = "graph BINARY"
+
+
+def _newest(ids: np.ndarray, ts: np.ndarray, rows: np.ndarray) -> np.ndarray:
+    """Of ``rows``, each id's newest by event time (of equal times the
+    later arrival), in arrival order."""
+    by_id = rows[np.lexsort((ts[rows], ids[rows]))]
+    last = np.ones(len(by_id), dtype=bool)
+    last[:-1] = ids[by_id][1:] != ids[by_id][:-1]
+    return np.sort(by_id[last])
+
+
+def _newer(idx, ids: np.ndarray, ts: np.ndarray, strict: bool) -> np.ndarray:
+    """Mask of the markers newer than the version ``idx`` holds of their
+    id (any marker is newer than none)."""
+    s = idx.slots(ids)
+    held = s >= 0
+    out = ~held
+    out[held] = ts[held] > idx.ts[s[held]] if strict else ts[held] >= idx.ts[s[held]]
+    return out
+
+
+def _apply_markers(idx, data: pd.DataFrame) -> None:
+    """Apply a batch's I/D rows, sorted by (event_time, id), to ``idx``
+    last-writer-wins (module docstring): first each id's newest insert,
+    over a version at most as new; then each id's newest delete, over a
+    strictly older version, so the insert wins a tie."""
+    ids = data["id"].to_numpy(np.int64)
+    ts = data["event_time"].to_numpy(np.int64)
+    ins = (data["op"] == "I").to_numpy()
+    embs = data["emb"].to_numpy()
+    put = _newest(ids, ts, np.flatnonzero(ins))
+    put = put[_newer(idx, ids[put], ts[put], strict=False)]
+    if len(put):
+        idx.add_batch(np.stack(embs[put]).astype(np.float32), ids[put], ts[put])
+    gone = _newest(ids, ts, np.flatnonzero(~ins))
+    gone = gone[_newer(idx, ids[gone], ts[gone], strict=True)]
+    new = gone[idx.slots(ids[gone]) < 0]
+    if len(new):
+        # a delete of an id not held yet takes a slot (its own vector when
+        # the marker carries one) so the delete time is remembered
+        idx.add_batch(
+            np.stack([
+                np.asarray(e, dtype=np.float32) if hasattr(e, "__len__")
+                else np.zeros(idx.dim, dtype=np.float32)
+                for e in embs[new]
+            ]),
+            ids[new],
+            ts[new],
+        )
+    s = idx.slots(ids[gone])
+    idx.deleted[s] = True
+    idx.ts[s] = ts[gone]
 
 
 def stateful_search_fn(conf: VectorIndexConf, k: int, metric: str = "l2"):
@@ -78,32 +143,22 @@ def stateful_search_fn(conf: VectorIndexConf, k: int, metric: str = "l2"):
             # deterministic replay order: event_time, then id (task retries
             # of the same micro-batch rebuild identical state)
             pdf = pdf.sort_values(["event_time", "id"], kind="stable")
-            ins = pdf[pdf["op"] == "I"]
-            if isinstance(idx, FlatIndex):
-                if len(ins):
-                    idx.add_batch(
-                        np.stack(ins["emb"].to_numpy()).astype(np.float32),
-                        ins["id"].to_numpy(np.int64),
-                        ins["event_time"].to_numpy(np.int64),
-                    )
-            else:
-                for _id, emb, et in zip(ins["id"], ins["emb"], ins["event_time"]):
-                    idx.add_point(np.asarray(emb, dtype=np.float32), int(_id), int(et))
-            for _id in pdf[pdf["op"] == "D"]["id"]:
-                idx.mark_delete(int(_id))
+            data = pdf[pdf["op"] != "Q"]
+            if len(data):
+                _apply_markers(idx, data)
             qs = pdf[pdf["op"] == "Q"]
             if len(qs) == 0:
                 continue
-            # per-query freshness bound event_time - ttl; no ttl, no bound
+            # per-query window [event_time - ttl, event_time]; no ttl, no
+            # lower bound
+            qet = qs["event_time"].to_numpy(np.int64)
             ttl = pd.to_numeric(qs["ttl"])
             min_ts = np.where(
-                ttl.isna(),
-                np.iinfo(np.int64).min,
-                qs["event_time"].to_numpy(np.int64) - ttl.fillna(0).to_numpy(np.int64),
+                ttl.isna(), np.iinfo(np.int64).min, qet - ttl.fillna(0).to_numpy(np.int64)
             )
             res = idx.search_batch(
                 np.stack(qs["emb"].to_numpy()).astype(np.float64),
-                k, max(conf.ef_search, k), min_ts,
+                k, max(conf.ef_search, k), min_ts, max_ts=qet,
             )
             lens = [len(lbs) for lbs, _ in res]
             if sum(lens):
@@ -133,138 +188,6 @@ def stateful_vector_search(
     """Wire the stateful worker over a partitioned element stream."""
     return stream.groupBy("partition_id").applyInPandasWithState(
         stateful_search_fn(conf, k, metric),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stateful_exact_search_fn(k: int, metric: str = "l2"):
-    """Exact-mode stateful worker (the reference's brute/exact search path,
-    deterministic — used by the ``knn_streaming`` oracle query).
-
-    State = the partition's accumulated insert/delete MARKERS (not a graph):
-    ids, float32 embeddings, event_times, op flags. Each query resolves
-    last-writer-wins liveness (insert survives an equal-event_time delete,
-    ``performLocalDeletes:86-96``) + the TTL freshness window over the marker
-    set, then scans exactly. Distances fold per-dimension in float64 — the
-    same left-to-right order as the JVM ``aggregate`` / DuckDB ``list_sum``
-    oracle, so results are bitwise-comparable.
-
-    Marker-set semantics make the result independent of how markers were
-    batched (any I/D arriving in or before the query's micro-batch is seen);
-    only queries are answered in their arrival batch.
-    """
-    import pickle
-
-    if metric not in ("l2", "ip", "cosine"):
-        raise ValueError(f"unknown metric {metric!r}")
-
-    def fn(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (pid,) = key
-        if state.exists:
-            (blob,) = state.get
-            ids, embs, ets, is_ins = pickle.loads(bytes(blob))
-        else:
-            ids = np.empty(0, dtype=np.int64)
-            embs = np.empty((0, 0), dtype=np.float32)
-            ets = np.empty(0, dtype=np.int64)
-            is_ins = np.empty(0, dtype=bool)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            data = pdf[pdf["op"] != "Q"]
-            if len(data):
-                new_ids = data["id"].to_numpy(np.int64)
-                new_ins = (data["op"] == "I").to_numpy()
-                new_ets = data["event_time"].to_numpy(np.int64)
-                # delete markers carry a null emb (None/NaN through Arrow);
-                # stand in a zero vector — LWW resolution never reads it
-                dims = [len(e) for e in data["emb"] if hasattr(e, "__len__")]
-                dim = dims[0] if dims else (embs.shape[1] if embs.ndim == 2 else 0)
-                new_embs = np.stack(
-                    [
-                        np.asarray(e, dtype=np.float32)
-                        if hasattr(e, "__len__")
-                        else np.zeros(dim, np.float32)
-                        for e in data["emb"]
-                    ]
-                )
-                if embs.size == 0 and new_embs.size:
-                    embs = np.empty((0, new_embs.shape[1]), dtype=np.float32)
-                ids = np.concatenate([ids, new_ids])
-                embs = np.concatenate([embs, new_embs])
-                ets = np.concatenate([ets, new_ets])
-                is_ins = np.concatenate([is_ins, new_ins])
-            qs = pdf[pdf["op"] == "Q"]
-            if len(qs) == 0:
-                continue
-            # LWW resolve: last marker per id by (event_time, insert-wins-tie)
-            order = np.lexsort((is_ins.astype(np.int8), ets, ids))
-            sid, set_, sins, semb = ids[order], ets[order], is_ins[order], embs[order]
-            last = np.append(sid[1:] != sid[:-1], True)
-            live = last & sins
-            lid, let_, lemb = sid[live], set_[live], semb[live].astype(np.float64)
-            out = []
-            for qid, emb, qet, qttl in zip(
-                qs["id"], qs["emb"], qs["event_time"], qs["ttl"]
-            ):
-                lo = int(qet) - int(qttl)
-                m = (let_ >= lo) & (let_ <= int(qet))
-                cid, cemb = lid[m], lemb[m]
-                if len(cid) == 0:
-                    continue
-                q64 = np.asarray(emb, dtype=np.float32).astype(np.float64)
-                acc = np.zeros(len(cid), dtype=np.float64)
-                if metric == "l2":
-                    for d in range(cemb.shape[1]):
-                        diff = q64[d] - cemb[:, d]
-                        acc += diff * diff
-                else:  # ip / cosine share the dot fold
-                    for d in range(cemb.shape[1]):
-                        acc += q64[d] * cemb[:, d]
-                    if metric == "ip":
-                        acc = 1.0 - acc
-                    else:
-                        qn = 0.0
-                        for d in range(len(q64)):
-                            qn += q64[d] * q64[d]
-                        vn = np.zeros(len(cid), dtype=np.float64)
-                        for d in range(cemb.shape[1]):
-                            vn += cemb[:, d] * cemb[:, d]
-                        denom = np.sqrt(qn) * np.sqrt(vn)
-                        with np.errstate(divide="ignore", invalid="ignore"):
-                            acc = 1.0 - np.where(denom != 0.0, acc / denom, 0.0)
-                top = np.lexsort((cid, acc))[:k]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "qid": int(qid),
-                            "neighbor_id": cid[top],
-                            "distance": acc[top],
-                            "partition_id": int(pid),
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out)
-        state.update((pickle.dumps((ids, embs, ets, is_ins)),))
-
-    return fn
-
-
-def stateful_exact_vector_search(
-    stream: DataFrame, k: int = 10, metric: str = "l2"
-) -> DataFrame:
-    """Exact stateful search over a partitioned element stream. Compose with
-    ``operators.knn.topk`` (dedup=False when data ids are unreplicated) for
-    the global M1 merge — with every query fanned to all partitions the
-    result equals batch ``knn_exact`` with deletes+TTL."""
-    return stream.groupBy("partition_id").applyInPandasWithState(
-        stateful_exact_search_fn(k, metric),
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
