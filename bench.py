@@ -489,7 +489,7 @@ def main() -> None:
         out_pdf = None
         for _ in range(d_reps):
             t0 = time.perf_counter()
-            out_pdf = searcher.search(queries, k=10, metric="l2")
+            out_pdf = searcher.search(queries, k=10)
             dt = time.perf_counter() - t0
             best_q = dt if best_q is None else min(best_q, dt)
         derived["query_per_s"] = round(n_q / best_q, 1)
@@ -544,7 +544,7 @@ def main() -> None:
             for _ in range(d_reps):
                 searcher8 = SegmentSearcher(store8, idx_conf)
                 t0 = time.perf_counter()
-                out8 = searcher8.search(queries, k=10, metric="l2")
+                out8 = searcher8.search(queries, k=10)
                 dt = time.perf_counter() - t0
                 best_q8 = dt if best_q8 is None else min(best_q8, dt)
             derived["multiseg_segments"] = float(len(store8.segments()))
@@ -606,12 +606,12 @@ def main() -> None:
             for _ in range(d_reps):
                 searcher_hc = SegmentSearcher(storeh, iconf_h)
                 t0 = time.perf_counter()
-                searcher_hc.search(queries, k=10, metric="l2")
+                searcher_hc.search(queries, k=10)
                 dt = time.perf_counter() - t0
                 best_hc = dt if best_hc is None else min(best_hc, dt)
             derived["hotcold_query_per_s"] = round(n_q / best_hc, 1)
             seed_searcher = SegmentSearcher(storeh, iconf_h)
-            seed_searcher.search(queries, k=10, metric="l2")
+            seed_searcher.search(queries, k=10)
             seed_searcher.save_state()
             best_hw = None
             outw = None
@@ -620,7 +620,7 @@ def main() -> None:
                 searcher_hw = SegmentSearcher(storeh, iconf_h)
                 searcher_hw.load_state()
                 t0 = time.perf_counter()
-                outw = searcher_hw.search(queries, k=10, metric="l2")
+                outw = searcher_hw.search(queries, k=10)
                 dt = time.perf_counter() - t0
                 searcher_hw.save_state()
                 searched_w = len(searcher_hw.last_searched_ids)
@@ -680,7 +680,7 @@ def main() -> None:
                 for _ in range(d_reps):
                     searcherp = SegmentSearcher(storep, idx_conf)
                     t0 = time.perf_counter()
-                    outp = searcherp.search(queries, k=10, metric="l2")
+                    outp = searcherp.search(queries, k=10)
                     dt = time.perf_counter() - t0
                     best_qp = dt if best_qp is None else min(best_qp, dt)
                 segs_p = storep.segments()
@@ -767,7 +767,7 @@ def main() -> None:
                 searcherf = SegmentSearcher(storef, iconf_f)
                 t0 = time.perf_counter()
                 outf, strat_f, _sel_f = searcherf.search_filtered(
-                    queries, pred, k=10, metric="l2", predicate_expr="label < 30"
+                    queries, pred, k=10, predicate_expr="label < 30"
                 )
                 dt = time.perf_counter() - t0
                 best_qf = dt if best_qf is None else min(best_qf, dt)
@@ -785,7 +785,7 @@ def main() -> None:
                 searcherf = SegmentSearcher(storef, iconf_f)
                 t0 = time.perf_counter()
                 searcherf.search_filtered(
-                    qf, pred, k=10, metric="l2", predicate_expr="label < 30"
+                    qf, pred, k=10, predicate_expr="label < 30"
                 )
                 dt = time.perf_counter() - t0
                 best_call = dt if best_call is None else min(best_call, dt)
@@ -793,7 +793,7 @@ def main() -> None:
             # recall vs the exact anchor (untimed; forced pre_filter is the
             # brute scan over the predicate's survivors), on the full batch
             anchorf, _, _ = SegmentSearcher(storef, iconf_f).search_filtered(
-                queries, pred, k=10, metric="l2", force_strategy="pre_filter"
+                queries, pred, k=10, force_strategy="pre_filter"
             )
             a_pairs = set(zip(anchorf["qid"], anchorf["neighbor_id"]))
             g_pairs = set(zip(outf["qid"], outf["neighbor_id"]))

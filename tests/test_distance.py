@@ -45,21 +45,32 @@ def test_unknown_metric_raises(spark):
 
 
 @pytest.mark.parametrize("metric", ["l2", "ip", "cosine"])
-def test_numpy_paths_agree_with_knn_exact(spark, tmp_path, metric):
+def test_numpy_paths_agree_with_knn_exact(spark, tmp_path, monkeypatch, metric):
     """Every path that scores in numpy gives ``knn_exact``'s distances, a
     zero vector among the data and the queries included (cosine scores it
     as similarity 0): the exact flat paths (the partitioned worker without
-    and with a flat ``index_conf``, ``SegmentSearcher`` over a flat segment,
-    the stateful worker) and the PQ refine bit for bit, the IVF cell scan
-    to 1e-12. k covers every row and IVF probes every cell, so each path
-    returns every (query, row) pair."""
+    and with a flat ``index_conf``, ``SegmentSearcher`` over flat segments
+    in both placements, a ``StreamingVectorQuery`` batch, the stateful
+    worker) and the PQ refine bit for bit, the IVF cell scan (the
+    partitioned worker's, and a flushed ivf segment's sidecar) to 1e-12.
+    k covers every row and IVF probes every cell, so each path returns
+    every (query, row) pair.
+
+    The partitioned worker is an operator like ``knn_exact`` and takes the
+    metric as an argument; every segment and stateful path gets it only
+    from ``VectorIndexConf.metric``, the collection's one metric."""
+    import os
+
     import pandas as pd
+    import pyarrow.parquet as pq
 
     from vstream_spark.config import PartitionerConf, VectorIndexConf
+    from vstream_spark.index import IvfIndex
     from vstream_spark.operators.knn import knn_exact
     from vstream_spark.operators.partitioned import knn_partitioned_worker
-    from vstream_spark.storage.search import SegmentSearcher
+    from vstream_spark.storage import search
     from vstream_spark.storage.segments import SegmentStore
+    from vstream_spark.streaming.pipeline import StreamingVectorQuery
     from vstream_spark.streaming.stateful import stateful_search_fn
 
     n, dim = 24, 8
@@ -94,9 +105,35 @@ def test_numpy_paths_agree_with_knn_exact(spark, tmp_path, metric):
                 vdf.select("id", "emb"), qdf, one, k=n, metric=metric, index_conf=conf
             ).toPandas()
         )
+
+    iconf = VectorIndexConf(dim=dim, metric=metric)
     store = SegmentStore(spark, str(tmp_path / "store"))
-    store.append_segment(vdf)
-    got["segments"] = pairs(SegmentSearcher(store, VectorIndexConf(dim=dim)).search(qpd, k=n, metric=metric))
+    store.append_segment(vdf.filter("id < 12"))
+    store.append_segment(vdf.filter("id >= 12"))
+    for placement, queries in [("driver", qpd), ("job", qdf)]:
+        searcher = search.SegmentSearcher(store, iconf)
+        got[f"segments-{placement}"] = pairs(searcher.search(queries, k=n))
+        assert searcher.last_placement == placement
+    svq = StreamingVectorQuery(store, str(tmp_path / "sout"), index_conf=iconf, k=n)
+    svq._sink(qdf, 0)
+    got["streaming-query"] = pairs(pq.read_table(str(tmp_path / "sout")).to_pandas())
+
+    ivf_conf = VectorIndexConf(dim=dim, metric=metric, auto_ivf_threshold=n - 1, nlist=2, nprobe=2)
+    ivf_store = SegmentStore(spark, str(tmp_path / "ivf"))
+    ivf_store.append_segment(vdf)
+    ivf_store.build_segment_indexes(ivf_store.segments(), ivf_conf)
+    (seg,) = ivf_store.segments()
+    assert os.path.basename(seg["index_file"]) == f"_ivf-{metric}.idx"
+
+    def no_rebuild(*a, **kw):
+        raise AssertionError("the flushed sidecar was not loaded")
+
+    monkeypatch.setattr(search, "build_index_object", no_rebuild)
+    search._INDEX_CACHE.clear()
+    assert isinstance(search._segment_index(seg, ivf_conf), IvfIndex)
+    got["segment-ivf"] = pairs(
+        search.search_segments([seg], qpd, ivf_conf, k=n, min_ts=None, ef=n, tombs=None)
+    )
 
     class _State:
         exists, blob = False, None
@@ -106,13 +143,13 @@ def test_numpy_paths_agree_with_knn_exact(spark, tmp_path, metric):
 
     rows = [(i, v.tolist(), 0, None, "I") for i, v in enumerate(vecs)]
     rows += [(q, e, 1, None, "Q") for q, e in zip(qpd["qid"], qpd["emb"])]
-    fn = stateful_search_fn(VectorIndexConf(dim=dim), k=n, metric=metric)
+    fn = stateful_search_fn(iconf, k=n)
     pdf = pd.DataFrame(rows, columns=["id", "emb", "event_time", "ttl", "op"])
     got["stateful"] = pairs(pd.concat(fn((0,), iter([pdf]), _State())))
 
     for name, have in got.items():
         assert set(have) == set(want), name
-        if name == "worker-ivf":
+        if "ivf" in name:
             for key, d in want.items():
                 assert have[key] == pytest.approx(d, rel=0, abs=1e-12), (name, key)
         else:

@@ -56,7 +56,7 @@ def _assert_same(got_pdf, want_df):
 def test_routing_and_pre_filter_exact(store, queries):
     searcher = SegmentSearcher(store, CONF)
     pred = F.col("label") == 3  # 10% selective -> pre_filter
-    got, strategy, sel = searcher.search_filtered(queries, pred, k=K, metric="l2")
+    got, strategy, sel = searcher.search_filtered(queries, pred, k=K)
     assert strategy == "pre_filter" and abs(sel - 0.1) < 1e-9
     exact = knn_exact(
         searcher.visible().filter(pred).select("id", "emb"), queries, k=K, metric="l2"
@@ -67,7 +67,7 @@ def test_routing_and_pre_filter_exact(store, queries):
 def test_weak_predicate_routes_post_filter_and_matches(store, queries):
     searcher = SegmentSearcher(store, CONF)
     pred = F.col("label") % 2 == 0  # 50% -> post_filter
-    got, strategy, sel = searcher.search_filtered(queries, pred, k=K, metric="l2")
+    got, strategy, sel = searcher.search_filtered(queries, pred, k=K)
     assert strategy == "post_filter" and abs(sel - 0.5) < 1e-9
     # only matching ids, k per query, ranked 1..k
     vis = searcher.visible()
@@ -189,7 +189,7 @@ def test_in_index_routes_and_matches_exact(store, queries):
     searcher = SegmentSearcher(store, CONF)
     pred = F.col("label") % 2 == 0
     got, strategy, sel = searcher.search_filtered(
-        queries, pred, k=K, metric="l2", predicate_expr="label % 2 = 0"
+        queries, pred, k=K, predicate_expr="label % 2 = 0"
     )
     assert strategy == "in_index" and abs(sel - 0.5) < 1e-9
     exact = knn_exact(

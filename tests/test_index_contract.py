@@ -47,7 +47,7 @@ def kind(request):
 def _blob(kind: str) -> bytes:
     """The kind's index over ``_data()``, built through the registry."""
     vecs, labels, ts = _data()
-    rkind, built = build_from_conf(vecs, labels, _KIND[kind][0], "l2", ts=ts)
+    rkind, built = build_from_conf(vecs, labels, _KIND[kind][0], ts=ts)
     assert rkind == kind and type(built) is KINDS[kind].cls
     return built.dumps()
 
@@ -190,7 +190,7 @@ def test_flat_is_exact_under_every_filter(metric):
     from vstream_spark.index.distance import fold
 
     vecs, labels, ts = _data()
-    _, idx = build_from_conf(vecs, labels, VectorIndexConf(dim=DIM, metric=metric), metric, ts=ts)
+    _, idx = build_from_conf(vecs, labels, VectorIndexConf(dim=DIM, metric=metric), ts=ts)
     dead = np.arange(0, N, 7)
     idx.delete_older(dead, ts[dead] + 1)
     allow = labels[labels % 2 == 0]

@@ -92,8 +92,8 @@ def test_segment_store_pq_artifact(spark, tmp_path):
     assert os.path.basename(seg["index_file"]) == "_pq-l2.idx"
     _INDEX_CACHE.clear()
     conf = VectorIndexConf(dim=8, index_kind="pq", pq_m=4, termination_lower_bound=1.0)
-    idx = _segment_index(seg, conf, "l2")
+    idx = _segment_index(seg, conf)
     assert isinstance(idx, PQ) and idx.n == 200
     q = spark.createDataFrame([(0, rows[7][1])], "qid long, emb array<float>")
-    got = SegmentSearcher(st, conf).search(q, k=5, metric="l2")
+    got = SegmentSearcher(st, conf).search(q, k=5)
     assert got["neighbor_id"].iloc[0] == 7  # 256 codes/subspace: self found

@@ -122,7 +122,7 @@ def test_stateful_exact_worker_matches_brute_force(data):
 
     rng = np.random.RandomState(data.draw(st.integers(0, 10_000)))
     dim, k = 4, 3
-    fn = stateful_search_fn(VectorIndexConf(dim=dim, index_kind="flat"), k, "l2")
+    fn = stateful_search_fn(VectorIndexConf(dim=dim, index_kind="flat"), k)
     state = _StateStub()
 
     markers = []  # (id, vec|None, et, is_insert, batch_idx)

@@ -70,7 +70,7 @@ def test_search_over_int8_store(spark, q_store):
 
     q = q_store.read().filter("id % 40 = 0").selectExpr("id as qid", "emb")
     conf = VectorIndexConf(dim=8, ef_search=256, termination_lower_bound=1.0)
-    got = SegmentSearcher(q_store, conf).search(q, k=5, metric="l2", ef_search=256)
+    got = SegmentSearcher(q_store, conf).search(q, k=5, ef_search=256)
     want = knn_exact(
         q_store.read().select("id", "emb"), q, k=5, metric="l2"
     ).toPandas()

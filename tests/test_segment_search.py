@@ -39,7 +39,7 @@ def test_search_matches_exact_across_segments(spark, store):
     conf = VectorIndexConf(dim=8, ef_search=256, termination_lower_bound=1.0)
     searcher = SegmentSearcher(store, conf)
     q = _queries(spark, store, n=6)
-    got = searcher.search(q, k=5, metric="l2", ef_search=256)
+    got = searcher.search(q, k=5, ef_search=256)
     vectors = store.read().select("id", "emb")
     want = knn_exact(vectors, q, k=5, metric="l2").toPandas()
     g = set(zip(got["qid"], got["neighbor_id"]))
@@ -55,7 +55,7 @@ def test_ttl_pruning_filters_results(spark, store):
     conf = VectorIndexConf(dim=8)
     searcher = SegmentSearcher(store, conf)
     q = _queries(spark, store)
-    got = searcher.search(q, k=10, metric="l2", min_event_time=15_000)
+    got = searcher.search(q, k=10, min_event_time=15_000)
     # freshness bound 15000 = ids >= 150 only
     assert (got["neighbor_id"] >= 150).all()
 
@@ -112,7 +112,7 @@ def test_chunked_search_matches_segment_at_a_time(spark, tmp_path):
             segments_per_job=spj,
         )
         searcher = SegmentSearcher(st, conf)
-        out = searcher.search(q, k=7, metric="l2")
+        out = searcher.search(q, k=7)
         outs[spj] = list(
             zip(out["qid"], out["neighbor_id"], out["rank"],
                 out["distance"].round(6))
@@ -156,14 +156,14 @@ def test_index_cache_is_lru(spark, store):
     old_max = search_mod._INDEX_CACHE_MAX
     search_mod._INDEX_CACHE_MAX = 2
     try:
-        a = _segment_index(segs[0], conf, "l2")  # cache: [0]
-        _segment_index(segs[1], conf, "l2")  # cache: [0, 1]
-        assert _segment_index(segs[0], conf, "l2") is a  # hit refreshes 0
-        _segment_index(segs[2], conf, "l2")  # evicts LRU -> 1, keeps hot 0
+        a = _segment_index(segs[0], conf)  # cache: [0]
+        _segment_index(segs[1], conf)  # cache: [0, 1]
+        assert _segment_index(segs[0], conf) is a  # hit refreshes 0
+        _segment_index(segs[2], conf)  # evicts LRU -> 1, keeps hot 0
         keys = set(_INDEX_CACHE)
         assert f"{segs[0]['id']}:flat:l2" in keys  # hot entry retained
         assert f"{segs[1]['id']}:flat:l2" not in keys  # LRU evicted
-        assert _segment_index(segs[0], conf, "l2") is a  # still the object
+        assert _segment_index(segs[0], conf) is a  # still the object
     finally:
         search_mod._INDEX_CACHE_MAX = old_max
         _INDEX_CACHE.clear()
@@ -176,13 +176,13 @@ def test_index_cache_reused(spark, store):
 
     seg = store.segments()[0]
     conf = VectorIndexConf(dim=8)
-    a = _segment_index(seg, conf, "l2")
-    b = _segment_index(seg, conf, "l2")
+    a = _segment_index(seg, conf)
+    b = _segment_index(seg, conf)
     assert a is b  # second call is a cache hit
     assert f"{seg['id']}:flat:l2" in _INDEX_CACHE
-    c = _segment_index(seg, conf, "cosine")
+    c = _segment_index(seg, VectorIndexConf(dim=8, metric="cosine"))
     assert c is not a  # metric participates in the key
-    d = _segment_index(seg, VectorIndexConf(dim=8, index_kind="ivf"), "l2")
+    d = _segment_index(seg, VectorIndexConf(dim=8, index_kind="ivf"))
     assert d is not a  # index kind participates in the key too
 
 
@@ -202,7 +202,7 @@ def test_segment_index_sidecar_and_dump(spark, store):
     assert store.read().count() == 300
     # loader prefers the sidecar (fresh cache key -> load path)
     _INDEX_CACHE.clear()
-    idx = _segment_index(seg2, conf, "l2")
+    idx = _segment_index(seg2, conf)
     assert idx.n == seg2["count"]
     # M4 dump lists every id with its segment
     d = store.dump()
@@ -224,7 +224,7 @@ def test_ivf_segment_artifact_and_search(spark, store):
     (seg2,) = store.build_segment_indexes([seg], conf)
     assert os.path.basename(seg2["index_file"]) == "_ivf-l2.idx"
     _INDEX_CACHE.clear()
-    idx = _segment_index(seg, conf, "l2")
+    idx = _segment_index(seg, conf)
     assert isinstance(idx, IvfIndex) and idx.n == seg["count"]
 
     # end-to-end SegmentSearcher with IVF artifacts; ef_search acts as
@@ -233,7 +233,7 @@ def test_ivf_segment_artifact_and_search(spark, store):
         store, VectorIndexConf(dim=8, index_kind="ivf", nlist=4, termination_lower_bound=1.0)
     )
     q = _queries(spark, store, n=6)
-    got = searcher.search(q, k=5, metric="l2", ef_search=4)
+    got = searcher.search(q, k=5, ef_search=4)
     vectors = store.read().select("id", "emb")
     want = knn_exact(vectors, q, k=5, metric="l2").toPandas()
     assert set(zip(got["qid"], got["neighbor_id"])) == set(
@@ -260,8 +260,8 @@ def test_auto_kind_selects_by_segment_size(spark, store):
     assert s_flat == seg
     assert [os.path.basename(p) for p in glob.glob(seg["path"] + "/_*.idx")] == ["_ivf-l2.idx"]
     _INDEX_CACHE.clear()
-    assert isinstance(_segment_index(seg, low, "l2"), IvfIndex)
-    assert isinstance(_segment_index(seg, high, "l2"), FlatIndex)
+    assert isinstance(_segment_index(seg, low), IvfIndex)
+    assert isinstance(_segment_index(seg, high), FlatIndex)
 
 
 def test_ivf_deletes_and_freshness_through_store(spark, tmp_path):
@@ -276,9 +276,9 @@ def test_ivf_deletes_and_freshness_through_store(spark, tmp_path):
     q = spark.createDataFrame(
         [(0, _vec_rows(7, 8)[0][1])], "qid long, emb array<float>"
     )
-    got = searcher.search(q, k=60, metric="l2", ef_search=2)
+    got = searcher.search(q, k=60, ef_search=2)
     assert 7 not in set(got["neighbor_id"])
-    fresh = searcher.search(q, k=60, metric="l2", min_event_time=3000, ef_search=2)
+    fresh = searcher.search(q, k=60, min_event_time=3000, ef_search=2)
     assert (fresh["neighbor_id"] >= 30).all()
 
 
@@ -305,12 +305,12 @@ def test_deletes_honored_across_segments(spark, tmp_path):
         [(int(i), r[1]) for i, r in enumerate(_vec_rows(0, 50)) if r[0] in (3, 5, 7)],
         "qid long, emb array<float>",
     )
-    got = searcher.search(q, k=50, metric="l2")
+    got = searcher.search(q, k=50)
     ids = set(got["neighbor_id"])
     assert 3 not in ids and 7 not in ids
     # the re-inserted id 5 appears with its NEW vector: nearest to zeros
     qz = spark.createDataFrame([(99, newvec)], "qid long, emb array<float>")
-    gz = searcher.search(qz, k=1, metric="l2")
+    gz = searcher.search(qz, k=1)
     assert list(gz["neighbor_id"]) == [5]
     assert gz["distance"].iloc[0] == 0.0
 
@@ -361,7 +361,7 @@ def test_parallel_multi_segment_index_build(spark, store):
     q = _queries(spark, store)
     got = SegmentSearcher(
         store, VectorIndexConf(dim=8, index_kind="hnsw", ef_search=64)
-    ).search(q, k=5, metric="l2")
+    ).search(q, k=5)
     want = (
         knn_exact(store.read().filter("op = 'I'"), q, k=5, metric="l2")
         .toPandas()
@@ -431,7 +431,7 @@ def test_chunking_leaves_identical_rows_and_state(spark, tmp_path):
             segments_per_job=spj,
         )
         searcher = SegmentSearcher(st, conf)
-        out = searcher.search(q, k=7, metric="l2")
+        out = searcher.search(q, k=7)
         outs[spj] = list(
             zip(out["qid"], out["neighbor_id"], out["rank"],
                 out["distance"].round(6))
@@ -488,7 +488,7 @@ def test_one_job_per_chunk(spark, tmp_path):
         )
         out, jobs[spj] = _count_jobs(
             spark, f"segjobs-spj{spj}",
-            lambda: SegmentSearcher(st, conf).search(q, k=5, metric="l2"),
+            lambda: SegmentSearcher(st, conf).search(q, k=5),
         )
         rows[spj] = out.values.tolist()
     assert rows[1] == rows[2] == rows[8]
@@ -529,7 +529,7 @@ def test_tombstones_across_chunks(spark, tmp_path):
         )
         # visit the two insert segments first, the marker segment last
         searcher.temperature = {inserts[0]: 2.0, inserts[1]: 1.0}
-        got = searcher.search(q, k=10, metric="l2")
+        got = searcher.search(q, k=10)
         return got, set(got["neighbor_id"]), searcher.last_searched_ids
 
     # every chunk visited: the last chunk's marker drops the first's hit
@@ -720,7 +720,7 @@ def test_compaction_builds_each_new_segments_resolved_kind(spark, tmp_path, monk
 
     monkeypatch.setattr(search, "build_index_object", no_rebuild)
     _INDEX_CACHE.clear()
-    assert isinstance(search._segment_index(merged, cosine, "cosine"), IvfIndex)
+    assert isinstance(search._segment_index(merged, cosine), IvfIndex)
 
 
 @pytest.mark.parametrize("placement", ["driver", "job"])
@@ -828,7 +828,7 @@ def test_index_cache_survives_concurrent_driver_searches(spark, tmp_path, monkey
         try:
             for _ in range(60):
                 seg = segs[rng.randint(len(segs))]
-                idx = search._segment_index(seg, conf, "l2")
+                idx = search._segment_index(seg, conf)
                 lo = int(seg["min_event_time"]) // 100
                 assert sorted(idx.labels.tolist()) == list(range(lo, lo + 10))
                 assert len(_INDEX_CACHE) <= 2

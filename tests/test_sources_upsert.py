@@ -183,7 +183,7 @@ def test_segment_rotation_at_cap(spark, tmp_path):
     q = st.read().filter("id in (7, 200)").selectExpr("id as qid", "emb")
     got = (
         SegmentSearcher(st, VectorIndexConf(dim=8, ef_search=64))
-        .search(q, k=3, metric="l2")
+        .search(q, k=3)
         .sort_values(["qid", "rank"])
     )
     want = (

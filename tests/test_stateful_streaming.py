@@ -27,7 +27,7 @@ def _run_batches(spark, tmp_path, batches, conf, k=3):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "*"))
     )
-    out = stateful_vector_search(stream, conf, k=k, metric="l2")
+    out = stateful_vector_search(stream, conf, k=k)
     q = (
         out.writeStream.format("memory")
         .queryName("stateful_out")
@@ -115,7 +115,7 @@ def test_exact_stateful_matches_batch_knn(spark, tmp_path):
         .parquet(str(src / "*"))
     )
     out = stateful_vector_search(
-        stream, VectorIndexConf(dim=8, index_kind="flat"), k=5, metric="l2"
+        stream, VectorIndexConf(dim=8, index_kind="flat"), k=5
     )
     q = (
         out.writeStream.format("memory")
@@ -197,7 +197,7 @@ def test_continuous_trigger_matches_availablenow(spark, tmp_path):
         .parquet(str(src / "*"))
     )
     conf = VectorIndexConf(dim=8, ef_search=64)
-    out = stateful_vector_search(stream, conf, k=3, metric="l2")
+    out = stateful_vector_search(stream, conf, k=3)
     q = (
         out.writeStream.format("memory")
         .queryName("stateful_pt")
@@ -418,3 +418,45 @@ def test_worker_rejects_an_exact_worker_checkpoint():
     fn = stateful_search_fn(VectorIndexConf(dim=4), k=3)
     with pytest.raises(ValueError, match="not an index blob"):
         _one_batch(fn, [(100, _V, 1, None, "Q")], old)
+
+
+def test_worker_names_the_dimension_a_stream_breaks():
+    """A stream whose vectors are not ``conf.dim`` wide raises a
+    ValueError that names both widths, for inserts and for queries, not
+    numpy's broadcast error."""
+    from vstream_spark.streaming.stateful import stateful_search_fn
+
+    fn = stateful_search_fn(VectorIndexConf(), k=3)
+    v8 = [0.5] * 8
+    with pytest.raises(ValueError, match=r"vectors are 8-d, but VectorIndexConf.dim is 128"):
+        _one_batch(fn, [(1, v8, 1, None, "I"), (100, v8, 2, None, "Q")])
+    with pytest.raises(ValueError, match=r"vectors are 8-d, but VectorIndexConf.dim is 128"):
+        _one_batch(fn, [(100, v8, 2, None, "Q")])
+
+
+@pytest.mark.parametrize("kind", ["ivf", "pq"])
+def test_worker_rejects_a_kind_it_cannot_hold(kind):
+    """The worker holds a flat index or an HNSW; naming ivf or pq raises
+    when the function is built, on the driver, before any batch runs."""
+    from vstream_spark.streaming.stateful import stateful_search_fn
+
+    with pytest.raises(ValueError, match=r"'auto', 'flat' or 'hnsw', got '" + kind):
+        stateful_search_fn(VectorIndexConf(dim=4, index_kind=kind), k=3)
+
+
+def test_worker_rejects_a_blob_of_another_metric():
+    """State checkpointed under l2 does not answer a cosine conf in l2: it
+    raises a ValueError that names both metrics. Under its own metric the
+    same blob loads and answers."""
+    from vstream_spark.streaming.stateful import stateful_search_fn
+
+    rows = [(1, _V, 1, None, "I"), (2, [10.0, 1.0, 0.0, 0.0], 1, None, "I")]
+    _, blob = _one_batch(stateful_search_fn(VectorIndexConf(dim=4), k=2), rows)
+    query = [(100, [0.0, 1.0, 0.0, 0.0], 2, None, "Q")]
+    cosine = stateful_search_fn(VectorIndexConf(dim=4, metric="cosine"), k=2)
+    with pytest.raises(ValueError, match=r"4-d 'l2' index, but the conf is 4-d 'cosine'"):
+        _one_batch(cosine, query, blob)
+    out, _ = _one_batch(stateful_search_fn(VectorIndexConf(dim=4), k=2), query, blob)
+    assert _hits(out)[100] == [(1, 2.0), (2, 100.0)]
+    fresh, _ = _one_batch(cosine, rows + query)
+    assert [m for m, _ in _hits(fresh)[100]] == [2, 1]

@@ -11,7 +11,6 @@ from vstream_spark.streaming.pipeline import (
     StreamingVectorIngest,
     read_event_stream,
     run_stream_to_memory,
-    search_store,
     streaming_event_rollup,
 )
 
@@ -59,24 +58,6 @@ def test_segment_compact_and_evict(spark, store):
     )  # times 30000..30900
     assert store.evict(100_000) == 2
     assert store.segments() == []
-
-
-def test_search_store_matches_batch_knn(spark, store):
-    rows = _vec_rows(0, 200, dim=8, seed=3)
-    store.append_segment(spark.createDataFrame(rows[:100], SCHEMA))
-    store.append_segment(spark.createDataFrame(rows[100:], SCHEMA))
-    rng = np.random.RandomState(9)
-    qdf = spark.createDataFrame(
-        [(i, rng.rand(8).astype(np.float32).tolist(), 30_000, 10**9, 5) for i in range(5)],
-        "qid bigint, emb array<float>, event_time bigint, ttl bigint, k int",
-    )
-    got = search_store(store, qdf, k=None)
-    vdf = spark.createDataFrame(rows, SCHEMA)
-    exp = knn_exact(vdf, qdf, k=None, honor_ttl=True, honor_deletes=True)
-    key = lambda df: sorted(
-        (r.qid, r.rank, r.neighbor_id, round(r.distance, 9)) for r in df.collect()
-    )
-    assert key(got) == key(exp)
 
 
 def test_streaming_ingest_creates_segments(spark, store, tmp_path):
@@ -623,7 +604,7 @@ def test_streaming_query_warm_restore_early_terminates(spark, tmp_path):
         segments_per_job=1,
     )
     svq = StreamingVectorQuery(
-        st, str(tmp_path / "qout"), index_conf=conf, k=3, metric="l2",
+        st, str(tmp_path / "qout"), index_conf=conf, k=3,
         restore_state=True,
     )
     q = svq.start(stream, str(tmp_path / "qckpt"))
@@ -645,7 +626,7 @@ def test_streaming_query_warm_restore_early_terminates(spark, tmp_path):
         spark, tmp_path.joinpath("again"), qpdf, n_batches=2
     )
     svq2 = StreamingVectorQuery(
-        st, str(tmp_path / "qout2"), index_conf=conf, k=3, metric="l2",
+        st, str(tmp_path / "qout2"), index_conf=conf, k=3,
         restore_state=False,
     )
     svq2.start(stream2, str(tmp_path / "qckpt2")).awaitTermination()
@@ -689,7 +670,7 @@ def test_streaming_query_filtered_three_plans(spark, tmp_path):
         dim=8, ef_search=256, termination_lower_bound=1.0
     )
     svq = StreamingVectorQuery(
-        st, str(tmp_path / "fout"), index_conf=conf, k=5, metric="l2",
+        st, str(tmp_path / "fout"), index_conf=conf, k=5,
         predicate=F.col("label") % 2 == 0,
         predicate_expr="label % 2 = 0",
     )
@@ -741,7 +722,7 @@ def test_streaming_ingest_then_segment_search_e2e(spark, tmp_path):
     searcher = SegmentSearcher(
         store, VectorIndexConf(dim=8, ef_search=256, termination_lower_bound=1.0)
     )
-    res = searcher.search(queries, k=3, metric="l2")
+    res = searcher.search(queries, k=3)
     by_q = {qid: grp for qid, grp in res.groupby("qid")}
     assert set(by_q) == {1, 2}
     assert by_q[1].iloc[0]["neighbor_id"] == 7  # self is nearest

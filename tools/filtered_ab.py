@@ -98,7 +98,7 @@ def main() -> None:
                 searcher = SegmentSearcher(store, conf)
                 t0 = time.perf_counter()
                 pdf, strategy, sel = searcher.search_filtered(
-                    queries, pred, k=K, metric="l2",
+                    queries, pred, k=K,
                     force_strategy=plan,
                     predicate_expr=expr if plan == "in_index" else None,
                 )

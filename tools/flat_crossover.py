@@ -72,7 +72,7 @@ def main() -> None:
         for kind in KINDS:
             conf = VectorIndexConf(dim=DIM, index_kind=kind)
             t0 = time.perf_counter()
-            _, idx = build_from_conf(vecs, ids, conf, "l2", ts=ids)
+            _, idx = build_from_conf(vecs, ids, conf, ts=ids)
             build_ms = (time.perf_counter() - t0) * 1e3
             search_ms = []
             for _ in range(REPEATS):

@@ -23,6 +23,7 @@ from __future__ import annotations
 import os
 import pickle
 import sys
+from dataclasses import replace
 
 import numpy as np
 import pandas as pd
@@ -140,7 +141,7 @@ def main() -> None:
         rec = {}
         for metric in METRICS:
             for kind, conf in CONFS.items():
-                _, idx = build_index_object(seg, conf, metric)
+                _, idx = build_index_object(seg, replace(conf, metric=metric))
                 blob = idx.dumps()
                 with open(os.path.join(out_dir, f"_{kind}-{metric}.idx"), "wb") as f:
                     f.write(blob)
@@ -162,7 +163,7 @@ def main() -> None:
             with open(os.path.join(out_dir, f"_{kind}-{metric}.idx"), "rb") as f:
                 blob = f.read()
             idx = KINDS[kind].cls.loads(blob)
-            _, fresh = build_index_object(seg, conf, metric)
+            _, fresh = build_index_object(seg, replace(conf, metric=metric))
             got = searches(idx)
             shift = (
                 f", every moved distance +1 with the same labels="

@@ -85,7 +85,7 @@ def main() -> None:
             try:
                 for _ in range(reps):
                     t0 = time.perf_counter()
-                    pdf = searcher.search(queries, k=10, metric="l2")
+                    pdf = searcher.search(queries, k=10)
                     dt = time.perf_counter() - t0
                     best = dt if best is None else min(best, dt)
             finally:

@@ -21,16 +21,20 @@ class VectorIndexConf:
     config object for every index build and segment search.
 
     Reference mapping (SURVEY §2.6 C10): dim/metric from
-    ``VectorColumnFamilyOptions`` (``vector_options.h:24-53``); termination
-    knobs from the per-query search options (``vector_options.h:79-95``),
-    whose k/ef_search are ``SegmentSearcher.search`` arguments; HNSW
+    ``VectorColumnFamilyOptions`` (``vector_options.h:24-53``), so
+    ``metric`` is the collection's one distance space; termination knobs
+    from the per-query search options (``vector_options.h:79-95``), whose
+    k/ef_search (no metric) are ``SegmentSearcher.search`` arguments; HNSW
     shape (M/efConstruction/efSearch) from ``params.yaml:54-56``. The
     reference's 250k vectors-per-HNSW-table cap (``params.yaml:58``) is
     ``SegmentStore(max_rows_per_segment=)``.
     """
 
     dim: int = 128
-    metric: str = "l2"  # 'l2' (squared L2), 'ip', 'cosine' — hnswlib.h:252
+    # the collection's one metric (the reference's CF space), the only one a
+    # segment build or search or the stateful worker reads: 'l2' (squared
+    # L2), 'ip', 'cosine' — hnswlib.h:252
+    metric: str = "l2"
     m: int = 16
     ef_construction: int = 128
     ef_search: int = 16

@@ -20,8 +20,8 @@ __all__ = [
 
 class Kind(NamedTuple):
     """One index kind: its class, whose ``loads`` reads the kind's
-    artifacts, and its build ``(vecs, ids, conf, metric, ts) -> index``
-    with the conf's parameters."""
+    artifacts, and its build ``(vecs, ids, conf, ts) -> index`` with the
+    conf's metric and parameters."""
 
     cls: type[SlotIndex]
     build: Callable
@@ -31,17 +31,17 @@ class Kind(NamedTuple):
 # kind, the searcher loads them through ``cls`` and every build (segment
 # artifacts, the partitioned worker) goes through ``build``.
 KINDS = {
-    "flat": Kind(FlatIndex, lambda vecs, ids, conf, metric, ts: build_flat(
-        vecs, ids, ts=ts, metric=metric
+    "flat": Kind(FlatIndex, lambda vecs, ids, conf, ts: build_flat(
+        vecs, ids, ts=ts, metric=conf.metric
     )),
-    "hnsw": Kind(HnswIndex, lambda vecs, ids, conf, metric, ts: build_index(
-        vecs, ids, ts=ts, metric=metric, M=conf.m, ef_construction=conf.ef_construction
+    "hnsw": Kind(HnswIndex, lambda vecs, ids, conf, ts: build_index(
+        vecs, ids, ts=ts, metric=conf.metric, M=conf.m, ef_construction=conf.ef_construction
     )),
-    "ivf": Kind(IvfIndex, lambda vecs, ids, conf, metric, ts: build_ivf(
-        vecs, ids, ts=ts, metric=metric, nlist=conf.nlist, nprobe=conf.nprobe
+    "ivf": Kind(IvfIndex, lambda vecs, ids, conf, ts: build_ivf(
+        vecs, ids, ts=ts, metric=conf.metric, nlist=conf.nlist, nprobe=conf.nprobe
     )),
-    "pq": Kind(PqIndex, lambda vecs, ids, conf, metric, ts: build_pq(
-        vecs, ids, ts=ts, metric=metric, m=conf.pq_m, nbits=conf.pq_nbits
+    "pq": Kind(PqIndex, lambda vecs, ids, conf, ts: build_pq(
+        vecs, ids, ts=ts, metric=conf.metric, m=conf.pq_m, nbits=conf.pq_nbits
     )),
 }
 
@@ -79,12 +79,12 @@ def build_from_conf(
     vecs: np.ndarray,
     ids: np.ndarray,
     conf: VectorIndexConf,
-    metric: str,
     ts: np.ndarray | None = None,
 ):
-    """Build the index ``conf`` names over one shard — behind segment
-    artifacts and the partitioned worker. Returns ``(resolved_kind, index)``."""
+    """Build the index ``conf`` names over one shard, at ``conf.metric`` —
+    behind segment artifacts and the partitioned worker. Returns
+    ``(resolved_kind, index)``."""
     vecs = np.asarray(vecs, dtype=np.float32)
     ids = np.asarray(ids, dtype=np.int64)
     kind = resolve_index_kind(conf, len(ids))
-    return kind, KINDS[kind].build(vecs, ids, conf, metric, ts)
+    return kind, KINDS[kind].build(vecs, ids, conf, ts)

@@ -175,7 +175,9 @@ def knn_filtered_adaptive(
 
     ``force_strategy`` bypasses the probe (used by the gate to check that
     BOTH branches agree on the same predicate — routing must change the
-    plan, not the answer).
+    plan, not the answer). Like ``knn_exact``, this operator persists no
+    artifact, so ``metric`` is its own and both branches score at it: the
+    post-filter index builds at ``replace(index_conf, metric=metric)``.
     """
     from vstream_spark.operators.partitioned import knn_partitioned_worker
 

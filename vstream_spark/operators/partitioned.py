@@ -34,6 +34,7 @@ candidates; M1 dedups them, ``SearchResult.combine:143-183``).
 from __future__ import annotations
 
 from collections.abc import Iterator
+from dataclasses import replace
 
 import numpy as np
 import pandas as pd
@@ -169,7 +170,9 @@ def knn_partitioned_worker(
     ``index_conf``: if set, a per-partition index (kind per
     ``index_conf.index_kind``) is built and searched with ef_search — the
     reference's W1/W5 worker structure
-    (HnswLibKeyedProcessFunction.java:19-101).
+    (HnswLibKeyedProcessFunction.java:19-101), at ``metric``: an operator
+    like ``knn_exact`` persists no artifact, so ``metric`` overrides
+    ``index_conf.metric``.
 
     Per-query search options travel as QUERY COLUMNS (the reference attaches
     its search options to each query record, ``vector_options.h:79-95``):
@@ -181,6 +184,8 @@ def knn_partitioned_worker(
     if per_query_k and "k" not in queries.columns:
         raise ValueError("k=None requires a 'k' column on the query side")
     per_query_ef = index_conf is not None and "ef_search" in queries.columns
+    if index_conf is not None:
+        index_conf = replace(index_conf, metric=metric)
     live = apply_deletes(vectors) if honor_deletes else vectors
     part = fit_partitioner(conf, live)
     pv = part.partition_data(live).select("partition_id", "id", "emb")
@@ -206,7 +211,7 @@ def knn_partitioned_worker(
         if index_conf is None:
             kind, idx = "flat", build_flat(vmat, vids, metric=metric)
         else:
-            kind, idx = build_from_conf(vmat, vids, index_conf, metric)
+            kind, idx = build_from_conf(vmat, vids, index_conf)
         # PQ: over-fetch ADC candidates and rescore them EXACTLY against
         # the partition's float block (present in this worker anyway) —
         # the faiss refine pattern; ADC alone loses recall as shard

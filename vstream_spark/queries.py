@@ -1136,7 +1136,7 @@ def q_knn_hnsw_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     iconf = VectorIndexConf(
         dim=64, index_kind="hnsw", m=16, ef_construction=128, ef_search=64
     )
-    pdf = SegmentSearcher(store, iconf).search(queries, k=10, metric="l2")
+    pdf = SegmentSearcher(store, iconf).search(queries, k=10)
     return spark.createDataFrame(
         pdf[["qid", "neighbor_id", "distance", "rank"]]
     )
@@ -1413,7 +1413,7 @@ def q_knn_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _knn_streaming_fixture(spark, sf_dir)
     stream = _file_stream(spark, _KNN_STREAMING_SCHEMA, f"{src}/*")
     partials = stateful_vector_search(
-        stream, VectorIndexConf(dim=64, index_kind="flat"), k=10, metric="l2"
+        stream, VectorIndexConf(dim=64, index_kind="flat"), k=10
     )
     # data ids are unreplicated (one partition each) -> (qid, id) unique
     return topk(_drain(partials, "_knn_streaming", src), 10, dedup=False).select(
@@ -2240,7 +2240,7 @@ def q_knn_streaming_ann_recall(spark: SparkSession, sf_dir: str) -> dict:
 
     src = _knn_streaming_fixture(spark, sf_dir)
     stream = _file_stream(spark, _KNN_STREAMING_SCHEMA, f"{src}/*")
-    partials = stateful_vector_search(stream, _GATE_HNSW, k=10, metric="l2")
+    partials = stateful_vector_search(stream, _GATE_HNSW, k=10)
     ann = topk(_drain(partials, "_knn_streaming_ann", src), 10, dedup=False)
     # batch exact ground truth under the same visibility rules: deletes
     # (ids ≡3 mod 10) applied, TTL window [1000, 20_000_000] on event_time
@@ -5092,7 +5092,7 @@ def q_knn_filtered_store_gate(spark: SparkSession, sf_dir: str) -> dict:
 
     def run(pred, force):
         pdf, strategy, sel = SegmentSearcher(store, _GATE_HNSW).search_filtered(
-            queries, pred, k=10, metric="l2", force_strategy=force
+            queries, pred, k=10, force_strategy=force
         )
         res = spark.createDataFrame(pdf[["qid", "neighbor_id", "distance", "rank"]])
         return res, strategy, sel
@@ -5146,7 +5146,7 @@ def q_knn_inindex_filter_gate(spark: SparkSession, sf_dir: str) -> dict:
         if case == "guard_rejects":
             try:
                 searcher.search_filtered(
-                    queries, pred, k=10, metric="l2",
+                    queries, pred, k=10,
                     force_strategy="in_index", predicate_expr="label = 3",
                 )
                 oks[(case, "not_rejected")] = False
@@ -5164,7 +5164,7 @@ def q_knn_inindex_filter_gate(spark: SparkSession, sf_dir: str) -> dict:
             expr = "label % 2 = 0" if case == "weak_hint" else "label >= 0"
             force = None if case == "weak_hint" else "in_index"
         got_pdf, strategy, sel = searcher.search_filtered(
-            queries, pred, k=10, metric="l2",
+            queries, pred, k=10,
             predicate_expr=expr, force_strategy=force,
         )
         got = spark.createDataFrame(
@@ -5235,7 +5235,7 @@ def q_knn_streaming_filtered_gate(spark: SparkSession, sf_dir: str) -> dict:
         def lane(name: str, conf: VectorIndexConf, **kw):
             """Drain the query stream through one StreamingVectorQuery."""
             svq = StreamingVectorQuery(
-                store, f"{work}/{name}res", index_conf=conf, k=10, metric="l2", **kw
+                store, f"{work}/{name}res", index_conf=conf, k=10, **kw
             )
             stream = _file_stream(spark, "qid long, emb array<float>", f"{src}/*")
             svq.start(stream, f"{work}/{name}ckpt").awaitTermination()

@@ -61,6 +61,10 @@ the way the reference folds each file's results into one buffer at reduce
 parallelism 1 (``params.yaml:33-34``). The driver holds at most 2·|Q|·k
 hit rows, plus the |Q|·d query floats of a driver-placed search.
 
+Every distance is at ``VectorIndexConf.metric``, the collection's one
+metric, which names the flush's artifacts (``_<kind>-<metric>.idx``) — the
+reference's column family space; per-query options carry no metric.
+
 ``SegmentSearcher`` has two entry points over that one loop: ``search``
 (plain top-k; feeds the C8 EMA) and ``search_filtered`` (attribute-filtered
 top-k; routes on a selectivity probe to an exact pre-filter scan or to the
@@ -424,11 +428,11 @@ def _segment_allowlist(seg: dict, expr: str) -> np.ndarray:
     return ids
 
 
-def _segment_index(seg: dict, conf: VectorIndexConf, metric: str):
-    """Build-or-fetch the segment's index in this process (an executor's,
-    or the driver's for a driver-placed search)."""
+def _segment_index(seg: dict, conf: VectorIndexConf):
+    """Build-or-fetch the segment's index at ``conf.metric`` in this
+    process (an executor's, or the driver's for a driver-placed search)."""
     kind = resolve_index_kind(conf, seg.get("count", 0))
-    key = f"{seg['id']}:{kind}:{metric}"
+    key = f"{seg['id']}:{kind}:{conf.metric}"
     with _INDEX_CACHE_LOCK:
         idx = _INDEX_CACHE.get(key)
         if idx is not None:
@@ -436,7 +440,7 @@ def _segment_index(seg: dict, conf: VectorIndexConf, metric: str):
             return idx
     import os
 
-    sidecar = os.path.join(seg["path"], f"_{kind}-{metric}.idx")
+    sidecar = os.path.join(seg["path"], f"_{kind}-{conf.metric}.idx")
     if not os.path.exists(sidecar) and kind == "hnsw":
         # legacy manifests recorded the hnsw artifact as index_file
         sidecar = seg.get("index_file") or sidecar
@@ -449,7 +453,7 @@ def _segment_index(seg: dict, conf: VectorIndexConf, metric: str):
         # flush-time sidecar path uses (storage/segments.py) — one
         # audited implementation of codec dequantize + tombstone
         # shadowing instead of two drifting copies
-        _, idx = build_index_object(seg, conf, metric)
+        _, idx = build_index_object(seg, conf)
     with _INDEX_CACHE_LOCK:
         if len(_INDEX_CACHE) >= _INDEX_CACHE_MAX:
             _INDEX_CACHE.popitem(last=False)  # evict least-recently-used
@@ -490,7 +494,6 @@ def search_segments(
     queries: pd.DataFrame,
     conf: VectorIndexConf,
     k: int,
-    metric: str,
     min_ts: int | None,
     ef: int,
     tombs: tuple[np.ndarray, np.ndarray] | None,
@@ -523,7 +526,7 @@ def search_segments(
                 # component scan per query just to return nothing — skip
                 # the segment (no index load either)
                 continue
-        idx = _segment_index(seg, conf, metric)
+        idx = _segment_index(seg, conf)
         k_seg = k
         if tombs is not None:
             k_seg += int(_shadowed(idx.labels[: idx.n], idx.ts[: idx.n], tombs).sum())
@@ -679,7 +682,6 @@ class SegmentSearcher:
         self,
         queries: DataFrame | pd.DataFrame,
         k: int,
-        metric: str,
         min_event_time: int | None,
         max_event_time: int | None,
         ef_search: int | None,
@@ -724,8 +726,7 @@ class SegmentSearcher:
 
             def search_chunk(chunk):
                 return search_segments(
-                    chunk, queries, conf, k, metric, min_event_time, ef, tombs,
-                    filter_expr,
+                    chunk, queries, conf, k, min_event_time, ef, tombs, filter_expr
                 )
         else:
             self.last_placement = "job"
@@ -743,7 +744,7 @@ class SegmentSearcher:
 
             def search_chunk(chunk):
                 return self._search_chunk(
-                    chunk, qdf, k, metric, min_event_time, ef, tombs, filter_expr
+                    chunk, qdf, k, min_event_time, ef, tombs, filter_expr
                 )
         merged: pd.DataFrame | None = None
         searched_ids: list[str] = []
@@ -801,7 +802,6 @@ class SegmentSearcher:
         self,
         queries: DataFrame | pd.DataFrame,
         k: int = 10,
-        metric: str = "l2",
         min_event_time: int | None = None,
         max_event_time: int | None = None,
         ef_search: int | None = None,
@@ -814,12 +814,13 @@ class SegmentSearcher:
         ``min_event_time`` is the freshness bound (query event_time - TTL);
         it prunes whole segments (C6) AND filters inside surviving indexes
         (the FilterSeqTs analog). ``k`` and ``ef_search`` are the per-query
-        search options of the reference (``vector_options.h:79-95``). The
-        mean per-query kth distance feeds the C8 termination EMA; the
+        search options of the reference (``vector_options.h:79-95``); the
+        metric is the collection's, ``conf.metric``. The mean per-query kth
+        distance feeds the C8 termination EMA; the
         attribute-filtered surface is :meth:`search_filtered`.
         """
         merged = self._run_loop(
-            queries, k, metric, min_event_time, max_event_time, ef_search
+            queries, k, min_event_time, max_event_time, ef_search
         )
         if merged is not None and len(merged):
             kth = float(merged.groupby("qid")["distance"].max().mean())
@@ -925,7 +926,6 @@ class SegmentSearcher:
         queries: DataFrame,
         predicate,
         k: int = 10,
-        metric: str = "l2",
         selectivity_threshold: float = 0.25,
         oversample: float = 2.0,
         min_event_time: int | None = None,
@@ -1038,7 +1038,7 @@ class SegmentSearcher:
         pred_vis = vis.filter(predicate)
         if strategy == "pre_filter":
             out = knn_exact(
-                pred_vis.select("id", "emb"), queries, k=k, metric=metric
+                pred_vis.select("id", "emb"), queries, k=k, metric=self.conf.metric
             )
             return _ranked(out.toPandas()), strategy, selectivity
 
@@ -1052,8 +1052,7 @@ class SegmentSearcher:
                 None,
             )
         merged = self._run_loop(
-            queries, k_search, metric, min_event_time, max_event_time,
-            ef_search, expr,
+            queries, k_search, min_event_time, max_event_time, ef_search, expr
         )
         hits = queries.sparkSession.createDataFrame(
             (_ranked(None) if merged is None else merged)[
@@ -1061,7 +1060,7 @@ class SegmentSearcher:
             ],
             "qid long, neighbor_id long, distance double",
         )
-        out = recheck_and_escalate(hits, queries, pred_vis, k, metric)
+        out = recheck_and_escalate(hits, queries, pred_vis, k, self.conf.metric)
         # the cached snapshot stays persisted for the NEXT call at this
         # store version; eviction, not call exit, unpersists it
         return _ranked(out.toPandas()), strategy, selectivity
@@ -1108,7 +1107,6 @@ class SegmentSearcher:
         chunk: list[dict],
         qdf: DataFrame,
         k: int,
-        metric: str,
         min_ts: int | None,
         ef: int,
         tombs: tuple[np.ndarray, np.ndarray] | None,
@@ -1124,8 +1122,8 @@ class SegmentSearcher:
             pdfs = [b for b in batches if len(b)]
             if pdfs:
                 hits = search_segments(
-                    chunk, pd.concat(pdfs, ignore_index=True), conf, k, metric,
-                    min_ts, ef, tombs, filter_expr,
+                    chunk, pd.concat(pdfs, ignore_index=True), conf, k, min_ts,
+                    ef, tombs, filter_expr,
                 )
                 if len(hits):
                     yield hits

@@ -125,14 +125,15 @@ def attr_zone_stats(path: str) -> dict[str, list]:
     return out
 
 
-def build_index_object(seg: dict, conf: VectorIndexConf, metric: str):
+def build_index_object(seg: dict, conf: VectorIndexConf):
     """Build ONE segment's index object from its parquet via pyarrow —
     the shared reader behind every artifact path: the flush-time
     sidecar build (``SegmentStore.build_segment_indexes``, one executor
     task per segment), and the search-side cache-miss rebuild
     (``storage/search.py::_segment_index``). The index itself comes from
-    :func:`vstream_spark.index.build_from_conf`; 'auto' resolves on the
-    segment's row count, the same count the searcher names sidecars by.
+    :func:`vstream_spark.index.build_from_conf` at ``conf.metric``; 'auto'
+    resolves on the segment's row count, the same count the searcher names
+    sidecars by.
     Returns ``(resolved_kind, index)``.
 
     Codec-aware: int8 segments dequantize with the same IEEE ops as the
@@ -167,7 +168,7 @@ def build_index_object(seg: dict, conf: VectorIndexConf, metric: str):
         vecs = np.stack(ins["emb"].to_numpy()).astype(np.float32)
     ids = ins["id"].to_numpy().astype(np.int64)
     ts = ins["event_time"].to_numpy().astype(np.int64)
-    kind, idx = build_from_conf(vecs, ids, conf, metric, ts=ts)
+    kind, idx = build_from_conf(vecs, ids, conf, ts=ts)
     if has_op:
         dels = pdf[pdf["op"] == "D"]
         idx.delete_older(dels["id"].to_numpy(), dels["event_time"].to_numpy())
@@ -554,7 +555,6 @@ class SegmentStore:
         torn-write); the manifest updates once, driver-side, after the job.
         Returns ``segs`` with ``index_file`` set on the built ones.
         """
-        metric = conf.metric
         todo = [s for s in segs if resolve_index_kind(conf, s["count"]) != "flat"]
         if not todo:
             return list(segs)
@@ -563,8 +563,8 @@ class SegmentStore:
             import os
             import uuid
 
-            rkind, idx = build_index_object(seg, conf, metric)
-            out = os.path.join(seg["path"], f"_{rkind}-{metric}.idx")
+            rkind, idx = build_index_object(seg, conf)
+            out = os.path.join(seg["path"], f"_{rkind}-{conf.metric}.idx")
             tmp = f"{out}.tmp-{uuid.uuid4().hex[:8]}"
             with open(tmp, "wb") as f:
                 f.write(idx.dumps())

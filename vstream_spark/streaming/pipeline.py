@@ -25,7 +25,6 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vstream_spark.operators.knn import knn_exact
 from vstream_spark.storage.segments import SegmentStore
 
 
@@ -291,6 +290,17 @@ def run_stream_to_memory(
     return q
 
 
+def _start_sink(stream: DataFrame, sink, checkpoint_dir: str):
+    """The ``start`` of the sink classes below: ``stream`` into ``sink``
+    under an availableNow trigger, then stop."""
+    return (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 class StreamingVectorIngest:
     """foreachBatch ingest: every micro-batch of vector inserts/deletes is
     flushed as one immutable segment (W1 insert + C2 delayed flush; the
@@ -309,12 +319,7 @@ class StreamingVectorIngest:
         self.index_conf = index_conf
 
     def start(self, vectors_stream: DataFrame, checkpoint_dir: str):
-        return (
-            vectors_stream.writeStream.foreachBatch(self._sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return _start_sink(vectors_stream, self._sink, checkpoint_dir)
 
     def _sink(self, batch_df: DataFrame, batch_id: int) -> None:
         # rotation-aware: a burst micro-batch above the store's
@@ -340,12 +345,7 @@ class StreamingCurveIngest:
         self.out_dir = out_dir
 
     def start(self, vectors_stream: DataFrame, checkpoint_dir: str):
-        return (
-            vectors_stream.writeStream.foreachBatch(self._sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return _start_sink(vectors_stream, self._sink, checkpoint_dir)
 
     def _sink(self, batch_df: DataFrame, batch_id: int) -> None:
         self.partitioner.update(batch_df)
@@ -409,7 +409,6 @@ class StreamingVectorQuery:
         out_dir: str,
         index_conf=None,
         k: int = 10,
-        metric: str = "l2",
         predicate=None,
         predicate_expr: str | None = None,
         restore_state: bool = True,
@@ -420,19 +419,13 @@ class StreamingVectorQuery:
         self.out_dir = out_dir
         self.index_conf = index_conf or VectorIndexConf()
         self.k = k
-        self.metric = metric
         self.predicate = predicate
         self.predicate_expr = predicate_expr
         self.restore_state = restore_state
         self.batch_stats: list[dict] = []
 
     def start(self, queries_stream: DataFrame, checkpoint_dir: str):
-        return (
-            queries_stream.writeStream.foreachBatch(self._sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return _start_sink(queries_stream, self._sink, checkpoint_dir)
 
     def _sink(self, batch_df: DataFrame, batch_id: int) -> None:
         from vstream_spark.storage.search import SegmentSearcher, query_frame
@@ -448,11 +441,10 @@ class StreamingVectorQuery:
                 query_frame(batch_df.sparkSession, queries),
                 self.predicate,
                 k=self.k,
-                metric=self.metric,
                 predicate_expr=self.predicate_expr,
             )
         else:
-            pdf = searcher.search(queries, k=self.k, metric=self.metric)
+            pdf = searcher.search(queries, k=self.k)
         if self.restore_state:
             searcher.save_state()
         self.batch_stats.append(
@@ -482,31 +474,6 @@ class StreamingVectorQuery:
         tmp = os.path.join(self.out_dir, f".{name}.tmp")
         pq.write_table(table, tmp)
         os.replace(tmp, os.path.join(self.out_dir, name))
-
-
-def search_store(
-    store: SegmentStore,
-    queries: DataFrame,
-    k: int = 10,
-    metric: str = "l2",
-) -> DataFrame:
-    """Batch kNN over the TTL-pruned segment set (W3 + C6 + M1).
-
-    The coarse prune uses the widest query window (driver-side min/max of the
-    query batch — tiny); exact per-query TTL predicates are applied inside
-    knn_exact. Returns the usual (qid, neighbor_id, distance, rank).
-    """
-    bounds = queries.agg(
-        F.min(F.col("event_time") - F.col("ttl")).alias("lo"),
-        F.max("event_time").alias("hi"),
-    ).collect()[0]
-    vectors = store.read(min_event_time=bounds["lo"], max_event_time=bounds["hi"])
-    if vectors is None:
-        empty = "qid bigint, neighbor_id bigint, distance double, rank int"
-        return store.spark.createDataFrame([], empty)
-    return knn_exact(
-        vectors, queries, k=k, metric=metric, honor_ttl=True, honor_deletes=True
-    )
 
 
 def derived_state_shards(

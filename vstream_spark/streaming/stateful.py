@@ -8,7 +8,9 @@ element type). The Spark-native equivalent is
 ``groupBy(partition_id).applyInPandasWithState`` over
 :func:`stateful_search_fn`. Its state is the serialized per-partition index:
 an exact flat scan under 'auto' or 'flat' (bitwise equal to ``knn_exact``),
-a numpy HNSW graph where the caller names 'hnsw'. Each micro-batch:
+a numpy HNSW graph where the caller names 'hnsw', at ``conf.metric`` and
+``conf.dim``, the collection's (``vector_options.h:24-53``): a checkpoint or
+a stream vector that disagrees raises. Each micro-batch:
 
 * applies its inserts (W1) and deletes (W2) last-writer-wins by event
   time: a delete strictly newer than the version held kills it, the
@@ -75,6 +77,14 @@ def _newer(idx, ids: np.ndarray, ts: np.ndarray, strict: bool) -> np.ndarray:
     return out
 
 
+def _stack(embs, dim: int) -> np.ndarray:
+    """A batch's vectors as one matrix, ``dim`` (the conf's) wide."""
+    mat = np.stack(embs)
+    if mat.shape[1] != dim:
+        raise ValueError(f"stream vectors are {mat.shape[1]}-d, but VectorIndexConf.dim is {dim}")
+    return mat
+
+
 def _apply_markers(idx, data: pd.DataFrame) -> None:
     """Apply a batch's I/D rows, sorted by (event_time, id), to ``idx``
     last-writer-wins (module docstring): first each id's newest insert,
@@ -87,7 +97,7 @@ def _apply_markers(idx, data: pd.DataFrame) -> None:
     put = _newest(ids, ts, np.flatnonzero(ins))
     put = put[_newer(idx, ids[put], ts[put], strict=False)]
     if len(put):
-        idx.add_batch(np.stack(embs[put]).astype(np.float32), ids[put], ts[put])
+        idx.add_batch(_stack(embs[put], idx.dim).astype(np.float32), ids[put], ts[put])
     gone = _newest(ids, ts, np.flatnonzero(~ins))
     gone = gone[_newer(idx, ids[gone], ts[gone], strict=True)]
     new = gone[idx.slots(ids[gone]) < 0]
@@ -95,11 +105,11 @@ def _apply_markers(idx, data: pd.DataFrame) -> None:
         # a delete of an id not held yet takes a slot (its own vector when
         # the marker carries one) so the delete time is remembered
         idx.add_batch(
-            np.stack([
+            _stack([
                 np.asarray(e, dtype=np.float32) if hasattr(e, "__len__")
                 else np.zeros(idx.dim, dtype=np.float32)
                 for e in embs[new]
-            ]),
+            ], idx.dim),
             ids[new],
             ts[new],
         )
@@ -108,17 +118,20 @@ def _apply_markers(idx, data: pd.DataFrame) -> None:
     idx.ts[s] = ts[gone]
 
 
-def stateful_search_fn(conf: VectorIndexConf, k: int, metric: str = "l2"):
+def stateful_search_fn(conf: VectorIndexConf, k: int):
     """Build the (key, batches, state) -> batches function for
     applyInPandasWithState.
 
-    The state is one pickled index. Under 'auto' or 'flat' it is an exact
-    ``FlatIndex`` at every size: ``auto_ivf_threshold`` was measured on
-    one-off builds, not on a partition that takes a few inserts and
-    queries per trigger, so it does not apply here. Any other kind keeps an
-    HNSW, the one kind that takes inserts one by one, and a state blob that
-    already holds an HNSW stays one, so checkpoints written before the flat
-    kind existed keep working."""
+    The state is one pickled index at ``conf.metric``. Under 'auto' or
+    'flat' it is an exact ``FlatIndex`` at every size:
+    ``auto_ivf_threshold`` was measured on one-off builds, not on a
+    partition that takes a few inserts and queries per trigger, so it does
+    not apply here. 'hnsw' keeps an HNSW, the one indexed kind that takes
+    inserts one by one; 'ivf' and 'pq' raise here, on the driver. A state
+    blob that already holds an HNSW stays one, so checkpoints written
+    before the flat kind existed keep working."""
+    if conf.index_kind not in ("auto", "flat", "hnsw"):
+        raise ValueError(f"the worker holds 'auto', 'flat' or 'hnsw', got {conf.index_kind!r}")
 
     def fn(
         key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
@@ -130,12 +143,17 @@ def stateful_search_fn(conf: VectorIndexConf, k: int, metric: str = "l2"):
         if state.exists:
             (blob,) = state.get
             idx = loads(bytes(blob))
-        elif conf.index_kind in ("auto", "flat"):
-            idx = FlatIndex(conf.dim, metric)
-        else:
+            if (idx.metric, idx.dim) != (conf.metric, conf.dim):
+                raise ValueError(
+                    f"partition {pid} state holds a {idx.dim}-d {idx.metric!r} index, "
+                    f"but the conf is {conf.dim}-d {conf.metric!r}"
+                )
+        elif conf.index_kind == "hnsw":
             idx = HnswIndex(
-                conf.dim, metric, conf.m, conf.ef_construction, seed=42
+                conf.dim, conf.metric, conf.m, conf.ef_construction, seed=42
             )
+        else:
+            idx = FlatIndex(conf.dim, conf.metric)
         out = []
         for pdf in batches:
             if len(pdf) == 0:
@@ -157,7 +175,7 @@ def stateful_search_fn(conf: VectorIndexConf, k: int, metric: str = "l2"):
                 ttl.isna(), np.iinfo(np.int64).min, qet - ttl.fillna(0).to_numpy(np.int64)
             )
             res = idx.search_batch(
-                np.stack(qs["emb"].to_numpy()).astype(np.float64),
+                _stack(qs["emb"].to_numpy(), idx.dim).astype(np.float64),
                 k, max(conf.ef_search, k), min_ts, max_ts=qet,
             )
             lens = [len(lbs) for lbs, _ in res]
@@ -183,11 +201,10 @@ def stateful_vector_search(
     stream: DataFrame,
     conf: VectorIndexConf,
     k: int = 10,
-    metric: str = "l2",
 ) -> DataFrame:
     """Wire the stateful worker over a partitioned element stream."""
     return stream.groupBy("partition_id").applyInPandasWithState(
-        stateful_search_fn(conf, k, metric),
+        stateful_search_fn(conf, k),
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
