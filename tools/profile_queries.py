@@ -20,12 +20,58 @@ import argparse
 import json
 import os
 import sys
+import threading
 import time
+
+from pyspark.sql.streaming import StreamingQueryListener
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from vstream_spark.queries import REGISTRY  # noqa: E402
 from vstream_spark.session import get_spark  # noqa: E402
+
+
+class ProgressLog(StreamingQueryListener):
+    """Per-micro-batch progress of the streaming queries run while it is
+    registered. Spark delivers a query's started event before ``start``
+    returns, and its events in order, so once every started run has
+    terminated no progress event of those runs is still to come."""
+
+    def __init__(self):
+        self._cond = threading.Condition()
+        self._started: list[str] = []  # run ids in start order
+        self._terminated: set[str] = set()
+        self._progress: dict[str, list[dict]] = {}  # run id -> progress dicts
+
+    def onQueryStarted(self, event):
+        with self._cond:
+            self._started.append(str(event.runId))
+
+    def onQueryProgress(self, event):
+        with self._cond:
+            self._progress.setdefault(str(event.progress.runId), []).append(
+                json.loads(event.progress.json))
+
+    def onQueryTerminated(self, event):
+        with self._cond:
+            self._terminated.add(str(event.runId))
+            self._cond.notify_all()
+
+    def last_memory_drain(self, timeout: float = 60.0) -> list[dict]:
+        """Progress of the last run into a memory sink (a
+        ``run_stream_to_memory`` drain), once every started run has
+        terminated; ``[]`` when no such run was started."""
+        with self._cond:
+            if not self._cond.wait_for(
+                lambda: self._terminated.issuperset(self._started), timeout
+            ):
+                raise TimeoutError("streaming query events still pending")
+            for run in reversed(self._started):
+                progress = self._progress.get(run, [])
+                if progress and progress[0]["sink"]["description"].startswith(
+                        "MemorySink"):
+                    return progress
+        return []
 
 
 def main() -> None:
@@ -58,6 +104,8 @@ def main() -> None:
     for name in names:
         fn, _ = REGISTRY[name]
         rec: dict = {}
+        log = ProgressLog()
+        spark.streams.addListener(log)
         # count() timing — the bench's methodology, comparable numbers
         best = None
         for _ in range(args.reps):
@@ -86,11 +134,11 @@ def main() -> None:
             f.write(df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
                 df._jdf.queryExecution(), "formatted"))
         rec["plan"] = plan_path
-        # streaming breakdown: run_stream_to_memory records the drain's
-        # per-micro-batch progress (durationMs, stateOperators)
-        from vstream_spark.streaming.pipeline import LAST_QUERY_PROGRESS
-
-        if LAST_QUERY_PROGRESS:
+        # streaming breakdown: the last memory-sink drain's per-micro-batch
+        # progress (durationMs, stateOperators)
+        progress = log.last_memory_drain()
+        spark.streams.removeListener(log)
+        if progress:
             rec["progress"] = [
                 {
                     "batchId": p.get("batchId"),
@@ -110,9 +158,8 @@ def main() -> None:
                         for so in p.get("stateOperators", [])
                     ],
                 }
-                for p in LAST_QUERY_PROGRESS
+                for p in progress
             ]
-            LAST_QUERY_PROGRESS[:] = []
         out[name] = rec
         print(f"# {name}: {json.dumps(rec)}", file=sys.stderr)
     print(json.dumps(out, indent=1))

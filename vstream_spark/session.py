@@ -6,6 +6,12 @@ splitting), Arrow on (all custom operators move data in Arrow batches), zstd
 parquet. On a real cluster the same factory is used with a different master and
 a larger ``spark.sql.shuffle.partitions`` (rule of thumb: 2-3x total cores, or
 target ~128MB per shuffle partition at the expected data volume).
+
+Python tasks run in workers forked from the engine's daemon
+(:mod:`vstream_spark.worker_daemon`), which keeps pyspark's per-task import
+cache invalidation from re-reading every zip archive the worker imports
+from; the workers' Python must be able to import ``vstream_spark``, as
+every engine UDF already requires.
 """
 
 from __future__ import annotations
@@ -60,6 +66,13 @@ _DEFAULT_CONF: dict[str, str] = {
     # filter names only that category from that module.
     "spark.executorEnv.PYTHONWARNINGS":
         "ignore::FutureWarning:pyspark.sql.pandas.serializers",
+    # pyspark invalidates import caches in every Python task, and each of a
+    # worker's 16 zipimporters (pyspark.zip, py4j, the spark-core jar) then
+    # re-reads its archive's whole directory: 150-210 ms per task. The
+    # engine's daemon re-reads an archive only when its (st_mtime_ns,
+    # st_size) stamp changed since the last read; its forked workers
+    # inherit the rule.
+    "spark.python.daemon.module": "vstream_spark.worker_daemon",
 }
 
 

@@ -189,13 +189,6 @@ def streaming_enrich(
     )
 
 
-# Debug observable: the per-micro-batch progress (durationMs /
-# stateOperators) of the most recent run_stream_to_memory drain. The
-# walCommit/stateCommit fixed costs only surface here — tools/
-# profile_queries.py reads it to attribute streaming query time.
-LAST_QUERY_PROGRESS: list[dict] = []
-
-
 def stream_state_partitions(
     spark,
     *paths: str,
@@ -284,9 +277,6 @@ def run_stream_to_memory(
     finally:
         if prev is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-    import json as _json
-
-    LAST_QUERY_PROGRESS[:] = [_json.loads(p.json) for p in q.recentProgress]
     return q
 
 
