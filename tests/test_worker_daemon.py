@@ -3,7 +3,9 @@ only when the archive changed, and the workers of a ``get_spark`` session
 run that rule without losing pyspark's ``addPyFile`` import path."""
 
 import importlib
+import os
 import sys
+import time
 import zipfile
 import zipimport
 
@@ -44,9 +46,35 @@ def test_archive_reread_only_when_its_stamp_changes(tmp_path, monkeypatch):
         importlib.invalidate_caches()
         assert reads == [archive]
         assert importlib.import_module("m2").VALUE == 2
+
+        # a rewrite in place at the same size that restores the mtime (as
+        # ``cp -p`` does) moves the ctime, so it is re-read; the sleep lets
+        # a coarse ctime clock tick past the last read's stamp
+        before = os.stat(archive)
+        time.sleep(0.05)
+        _write_zip(archive, {"m1": "VALUE = 1\n", "m3": "VALUE = 3\n"})
+        os.utime(archive, ns=(before.st_atime_ns, before.st_mtime_ns))
+        assert os.stat(archive).st_size == before.st_size
+        reads.clear()
+        importlib.invalidate_caches()
+        assert reads == [archive]
+        assert importlib.import_module("m3").VALUE == 3
+
+        # a same-size copy with the mtime kept, renamed over the archive
+        # (as ``rsync -t`` does), is a new inode, so it is re-read
+        before = os.stat(archive)
+        copy = str(tmp_path / "mods.zip.tmp")
+        _write_zip(copy, {"m1": "VALUE = 1\n", "m4": "VALUE = 4\n"})
+        os.utime(copy, ns=(before.st_atime_ns, before.st_mtime_ns))
+        os.replace(copy, archive)
+        assert os.stat(archive).st_size == before.st_size
+        reads.clear()
+        importlib.invalidate_caches()
+        assert reads == [archive]
+        assert importlib.import_module("m4").VALUE == 4
     finally:
-        sys.modules.pop("m1", None)
-        sys.modules.pop("m2", None)
+        for name in ("m1", "m2", "m3", "m4"):
+            sys.modules.pop(name, None)
 
 
 def test_workers_run_the_rule_and_import_an_added_zip(spark, tmp_path):

@@ -57,13 +57,13 @@ class ProgressLog(StreamingQueryListener):
             self._terminated.add(str(event.runId))
             self._cond.notify_all()
 
-    def last_memory_drain(self, timeout: float = 60.0) -> list[dict]:
+    def last_memory_drain(self) -> list[dict]:
         """Progress of the last run into a memory sink (a
         ``run_stream_to_memory`` drain), once every started run has
         terminated; ``[]`` when no such run was started."""
         with self._cond:
             if not self._cond.wait_for(
-                lambda: self._terminated.issuperset(self._started), timeout
+                lambda: self._terminated.issuperset(self._started), 60.0
             ):
                 raise TimeoutError("streaming query events still pending")
             for run in reversed(self._started):
@@ -136,8 +136,10 @@ def main() -> None:
         rec["plan"] = plan_path
         # streaming breakdown: the last memory-sink drain's per-micro-batch
         # progress (durationMs, stateOperators)
-        progress = log.last_memory_drain()
-        spark.streams.removeListener(log)
+        try:
+            progress = log.last_memory_drain()
+        finally:
+            spark.streams.removeListener(log)
         if progress:
             rec["progress"] = [
                 {

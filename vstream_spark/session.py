@@ -69,9 +69,9 @@ _DEFAULT_CONF: dict[str, str] = {
     # pyspark invalidates import caches in every Python task, and each of a
     # worker's 16 zipimporters (pyspark.zip, py4j, the spark-core jar) then
     # re-reads its archive's whole directory: 150-210 ms per task. The
-    # engine's daemon re-reads an archive only when its (st_mtime_ns,
-    # st_size) stamp changed since the last read; its forked workers
-    # inherit the rule.
+    # engine's daemon re-reads an archive only when its (st_ino,
+    # st_ctime_ns, st_mtime_ns, st_size) stamp changed since the last read;
+    # its forked workers inherit the rule.
     "spark.python.daemon.module": "vstream_spark.worker_daemon",
 }
 

@@ -7,10 +7,13 @@ archive's central directory. A worker imports pyspark from ``pyspark.zip``
 core jar, so that is 16 directory reads of up to 5,359 entries, 150-210 ms
 of fixed cost in every task on 4 cores. This daemon installs a
 ``zipimporter`` invalidation that re-reads an archive only when its
-``(st_mtime_ns, st_size)`` differs from the stamp taken at its last read,
-then runs pyspark's own daemon; the workers it forks inherit the rule. Nothing else in
-the worker protocol changes: a zip added with ``addPyFile`` is a new path
-entry, read on first use, and an archive rewritten in place is re-read.
+``(st_ino, st_ctime_ns, st_mtime_ns, st_size)`` differs from the stamp
+taken at its last read, then runs pyspark's own daemon; the workers it
+forks inherit the rule. Nothing else in the worker protocol changes: a zip
+added with ``addPyFile`` is a new path entry, read on first use, and an
+archive rewritten in place or replaced by a rename is re-read, even at the
+same size with its mtime kept (a write moves the ctime, which a user cannot
+set, and a rename brings a new inode).
 
 Run by Spark as ``python -m vstream_spark.worker_daemon pyspark.worker``.
 """
@@ -22,9 +25,9 @@ import os
 import zipimport
 
 _reread = zipimport.zipimporter.invalidate_caches
-# archive path -> (st_mtime_ns, st_size) taken just before its last read;
-# per process, like zipimport's own directory cache
-_read_stamps: dict[str, tuple[int, int]] = {}
+# archive path -> (st_ino, st_ctime_ns, st_mtime_ns, st_size) taken just
+# before its last read; per process, like zipimport's own directory cache
+_read_stamps: dict[str, tuple[int, int, int, int]] = {}
 
 
 def invalidate_caches(self: zipimport.zipimporter) -> None:
@@ -32,7 +35,7 @@ def invalidate_caches(self: zipimport.zipimporter) -> None:
     directory only when the archive changed since it was last read."""
     try:
         st = os.stat(self.archive)
-        stamp = (st.st_mtime_ns, st.st_size)
+        stamp = (st.st_ino, st.st_ctime_ns, st.st_mtime_ns, st.st_size)
     except OSError:
         stamp = None
     files = zipimport._zip_directory_cache.get(self.archive)
