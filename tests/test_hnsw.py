@@ -50,7 +50,7 @@ def test_deterministic_build_and_search():
 
 
 def test_mark_delete_tombstone():
-    """Re-adding a tombstoned label undeletes it (upsert, W2 then W1 on
+    """Re-adding a tombstoned label brings it back (upsert, W2 then W1 on
     the same label); the tombstone itself is in test_index_contract."""
     vecs, labels = _data(100)
     idx = build_index(vecs, labels)
@@ -59,6 +59,32 @@ def test_mark_delete_tombstone():
     assert 5 not in idx.search(q, 10)[0]
     idx.add_point(vecs[5], 5, ts=7)
     assert idx.search(q, 1)[0][0] == 5
+
+
+def test_upsert_relinks_the_new_vector():
+    """An upsert retires the label's old node and links the new vector as
+    a fresh node, so the graph keeps its recall: upserting half of a
+    600-row graph with fresh vectors keeps recall@10 at ef 16 at least
+    0.9 (overwriting the old node's vector in place, and keeping links
+    chosen for the old one, read 0.756 here), through a dumps/loads round
+    trip too. The label answers with its new time and is held once."""
+    rng = np.random.RandomState(11)
+    vecs, labels = _data(600, seed=11)
+    idx = build_index(vecs, labels)
+    up = labels[::2]
+    cur = vecs.copy()
+    cur[up] = rng.rand(len(up), vecs.shape[1]).astype(np.float32)
+    for lb in up:
+        idx.add_point(cur[lb], int(lb), ts=1)
+    qs = rng.rand(100, vecs.shape[1])
+    for ix in (idx, HnswIndex.loads(idx.dumps())):
+        hits = 0
+        for q in qs:
+            got = ix.search(q, 10, ef_search=16)[0]
+            assert len(set(got.tolist())) == len(got)
+            hits += len(set(got) & set(_exact_topk(cur, labels, q, 10)))
+        assert hits / (10 * len(qs)) >= 0.9
+    assert idx.get_ts(0) == 1 and idx.deleted[: idx.n].sum() == len(up)
 
 
 def test_bulk_build_recall_and_determinism():

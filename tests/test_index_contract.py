@@ -161,25 +161,6 @@ def test_ts_lookup_matches_get_ts(idx):
     assert idx.ts_of(np.empty(0, dtype=np.int64)).tolist() == []
 
 
-def test_delete_older_matches_mark_delete_loop(kind):
-    """``delete_older`` (a segment's delete markers) tombstones exactly
-    what the per-marker get_ts / mark_delete loop it replaces did: a
-    marker strictly newer than the insert kills it, a tie keeps it, an
-    unknown label is ignored, a repeated label is harmless."""
-    a, b = _fresh(kind), _fresh(kind)
-    rng = np.random.RandomState(4)
-    marks = np.concatenate([rng.choice(N, 120), [10_000, 20_000]]).astype(np.int64)
-    times = marks + rng.randint(-1, 2, len(marks))  # older, tie or newer
-    a.delete_older(marks, times)
-    for rid, rtime in zip(marks, times):
-        t = b.get_ts(int(rid), None)
-        if t is not None and int(rtime) > t:
-            b.mark_delete(int(rid))
-    assert 0 < b.deleted[: b.n].sum() < len(marks)
-    assert np.array_equal(a.deleted[: a.n], b.deleted[: b.n])
-    assert a.dumps() == b.dumps()
-
-
 @pytest.mark.parametrize("metric", ["l2", "ip", "cosine"])
 def test_flat_is_exact_under_every_filter(metric):
     """The flat kind is the exact scan: with tombstones, a per-query
@@ -192,7 +173,7 @@ def test_flat_is_exact_under_every_filter(metric):
     vecs, labels, ts = _data()
     _, idx = build_from_conf(vecs, labels, VectorIndexConf(dim=DIM, metric=metric), ts=ts)
     dead = np.arange(0, N, 7)
-    idx.delete_older(dead, ts[dead] + 1)
+    idx.deleted[idx.slots(labels[dead])] = True
     allow = labels[labels % 2 == 0]
     qmat = np.random.RandomState(5).rand(70, DIM)
     mts = np.random.RandomState(6).randint(0, N, len(qmat))

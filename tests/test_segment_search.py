@@ -633,10 +633,12 @@ def test_flat_search_matches_knn_exact_row_for_row(spark, tmp_path):
 
 
 def test_delete_marker_cache_follows_manifest_and_bound(spark, tmp_path):
-    """The searcher's delete markers come from a driver cache with one
-    entry per live segment: markers after the snapshot bound do not apply,
-    an evicted segment's entry goes, and after compaction only the new
-    segments are cached, with the same markers."""
+    """The searcher's versions come from a driver cache of every row's
+    (id, event_time), one entry per live segment: an id with more than one
+    version at or before the snapshot bound is shadowed up to its newest,
+    versions after the bound do not apply, an evicted segment's entry
+    goes, a marker whose insert was evicted shadows nothing, and after
+    compaction only the new segments are cached, with the same versions."""
     st = SegmentStore(spark, str(tmp_path / "segmarks"))
     st.append_segment(spark.createDataFrame(_vec_rows(0, 10), SCHEMA))
     st.append_segment(spark.createDataFrame(
@@ -648,15 +650,92 @@ def test_delete_marker_cache_follows_manifest_and_bound(spark, tmp_path):
     assert ids.tolist() == [1, 2] and times.tolist() == [5000, 9000]
     ids, times = searcher._tombstones(6000)
     assert ids.tolist() == [1] and times.tolist() == [5000]
-    assert set(st._markers) == {s["id"] for s in st.segments()}
+    assert searcher._tombstones(1000) is None  # one version per id
+    assert len(st.versions()[0]) == 22
+    assert set(st._versions) == {s["id"] for s in st.segments()}
     st.append_segment(spark.createDataFrame(_vec_rows(200, 210), SCHEMA))
     assert st.evict(older_than_event_time=1000) == 1  # the first segment
-    st.delete_markers()
-    assert set(st._markers) == {s["id"] for s in st.segments()}
+    assert searcher._tombstones(None) is None  # markers 1, 2 stand alone
+    assert set(st._versions) == {s["id"] for s in st.segments()}
+    before = sorted(zip(*st.versions()))
     st.compact()
-    ids, times = searcher._tombstones(None)
-    assert ids.tolist() == [1, 2] and times.tolist() == [5000, 9000]
-    assert set(st._markers) == {s["id"] for s in st.segments()}
+    assert sorted(zip(*st.versions())) == before
+    assert set(st._versions) == {s["id"] for s in st.segments()}
+
+
+def _lww_probe(spark, tmp_path, placement, segments, k, max_event_time=None):
+    """Search from the origin over a store of ``segments`` (lists of (id,
+    emb, event_time, op) rows) with flat segments on the driver or hnsw
+    sidecars in a job. Returns the (neighbor_id, distance) rows of the
+    search and of ``knn_exact`` over ``visible()`` at the same bound."""
+    from vstream_spark.operators.knn import knn_exact
+
+    st = SegmentStore(spark, str(tmp_path / "lww"))
+    for rows in segments:
+        st.append_segment(spark.createDataFrame(
+            [(i, e, t, 10**12, op) for i, e, t, op in rows], SCHEMA
+        ))
+    conf = VectorIndexConf(dim=4, index_kind="flat" if placement == "flat" else "hnsw")
+    if placement == "hnsw":
+        st.build_segment_indexes(st.segments(), conf)
+    q = pd.DataFrame({"qid": [0], "emb": [np.zeros(4, dtype=np.float32)]})
+    searcher = SegmentSearcher(st, conf)
+    got = searcher.search(q, k=k, max_event_time=max_event_time)
+    assert searcher.last_placement == ("driver" if placement == "flat" else "job")
+    want = knn_exact(
+        searcher.visible(max_event_time=max_event_time).select("id", "emb"),
+        spark.createDataFrame(q, "qid long, emb array<float>"),
+        k=k,
+    ).toPandas().sort_values("rank")
+    cols = ["neighbor_id", "distance"]
+    return got[cols].values.tolist(), want[cols].values.tolist()
+
+
+def _upsert_base():
+    """Id 5 at the origin (t=105) and ids 10-19 at [i+1,0,0,0]."""
+    return [(5, [0.0] * 4, 105, "I")] + [
+        (i, [float(i + 1), 0.0, 0.0, 0.0], 100 + i, "I") for i in range(10, 20)
+    ]
+
+
+@pytest.mark.parametrize("placement", ["flat", "hnsw"])
+def test_upsert_across_segments_hides_the_stale_version(spark, tmp_path, placement):
+    """Id 5 moves from the origin to [9,9,9,9] in a later segment that
+    also holds four nearer rows: a k=3 search from the origin returns ids
+    20-22, as ``knn_exact`` over ``visible()`` does, not the stale 5@0."""
+    got, want = _lww_probe(spark, tmp_path, placement, [
+        _upsert_base(),
+        [(5, [9.0] * 4, 2000, "I")]
+        + [(i, [float(i - 19), 0.0, 0.0, 0.0], 2000 + i, "I") for i in range(20, 24)],
+    ], k=3)
+    assert [i for i, _ in got] == [20, 21, 22]
+    assert got == want
+
+
+@pytest.mark.parametrize("placement", ["flat", "hnsw"])
+def test_upserts_old_version_takes_no_topk_slot(spark, tmp_path, placement):
+    """Id 5 moves from the origin to [9,9,9,9] in a later segment that
+    holds only it: the first segment's top-k must not spend a slot on the
+    old version, so a k=3 search returns 10, 11 and 12@169, as
+    ``knn_exact`` over ``visible()`` does, not 5@324."""
+    got, want = _lww_probe(spark, tmp_path, placement, [
+        _upsert_base(), [(5, [9.0] * 4, 2000, "I")],
+    ], k=3)
+    assert got == [[10, 121.0], [11, 144.0], [12, 169.0]]
+    assert got == want
+
+
+@pytest.mark.parametrize("placement", ["flat", "hnsw"])
+def test_delete_after_the_bound_keeps_its_insert(spark, tmp_path, placement):
+    """An insert at t=101 and its delete at t=2000 in one segment: a
+    search bounded at t=1000 still returns the id, as ``visible()`` at the
+    same bound holds it, in both placements."""
+    rows = [(i, [float(i), 0.0, 0.0, 0.0], 100 + i, "I") for i in range(1, 8)]
+    got, want = _lww_probe(spark, tmp_path, placement, [
+        rows + [(1, None, 2000, "D")],
+    ], k=3, max_event_time=1000)
+    assert [i for i, _ in got] == [1, 2, 3]
+    assert got == want
 
 
 def test_compaction_builds_each_new_segments_resolved_kind(spark, tmp_path, monkeypatch):

@@ -10,7 +10,10 @@ with the NEWER checkout) loads those sidecars and the blob, repeats the
 same searches and batch, and prints per kind and metric whether results
 are identical (with and without a freshness bound apart), whether a
 re-dump is byte-identical and whether its own fresh build is
-byte-identical with the same pickled keys. For ip it also prints whether
+byte-identical with the same pickled keys, and whether it equals the
+recorded one in every field but the ``deleted`` flags (a build tombstones
+nothing, so a build of a segment with delete markers can differ from an
+older checkout's in those flags alone). For ip it also prints whether
 every distance that differs is the recorded one plus exactly 1 (the
 ``-<a,b>`` to ``1 - <a,b>`` convention change) with the same labels.
 
@@ -100,6 +103,15 @@ def compare(got: list, want: list) -> str:
     )
 
 
+def same_but_deleted(a: bytes, b: bytes) -> bool:
+    """Whether two index dumps hold the same fields, byte for byte, apart
+    from the ``deleted`` tombstone flags."""
+    da, db = pickle.loads(a), pickle.loads(b)
+    return list(da) == list(db) and all(
+        pickle.dumps(da[f]) == pickle.dumps(db[f]) for f in da if f != "deleted"
+    )
+
+
 class _State:
     """The slice of pyspark's GroupState that stateful_search_fn uses."""
 
@@ -174,7 +186,10 @@ def main() -> None:
                 f"{kind} {metric}: searches {compare(got, rec[kind, metric])}{shift}, "
                 f"re-dump byte-identical={idx.dumps() == blob}, "
                 f"fresh build byte-identical={fresh.dumps() == blob}, "
-                f"keys same={list(pickle.loads(blob)) == list(pickle.loads(fresh.dumps()))}"
+                f"keys same={list(pickle.loads(blob)) == list(pickle.loads(fresh.dumps()))}, "
+                f"fresh build same but deleted flags={same_but_deleted(fresh.dumps(), blob)} "
+                f"(deleted {int(fresh.deleted[: fresh.n].sum())} fresh, "
+                f"{int(idx.deleted[: idx.n].sum())} recorded)"
             )
     with open(os.path.join(out_dir, "state.blob"), "rb") as f:
         first = f.read()

@@ -3,11 +3,16 @@ on Spark AND its DuckDB oracle, compare row count, schema shape, and an
 order-insensitive value hash (columns sorted by name, floats rounded the way
 a sane hash-match would: exact string repr after float64 normalization).
 
+The SUMMARY line ends with the sha256 of the ``{name: oracle}`` dump
+(:func:`oracle_dump_hash`).
+
 Usage: python tools/oracle_check.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import sys
 import time
 
@@ -72,6 +77,14 @@ def compare(name: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[st
     return problems
 
 
+def oracle_dump_hash() -> str:
+    """sha256 of ``json.dumps({name: oracle}, sort_keys=True)`` over every
+    REGISTRY entry (a rows-only entry's oracle is null): equal across two
+    checkouts iff no oracle was added, removed or edited."""
+    dump = {name: sql for name, (_, sql) in REGISTRY.items()}
+    return hashlib.sha256(json.dumps(dump, sort_keys=True).encode()).hexdigest()
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -112,7 +125,10 @@ def main() -> int:
         else:
             print(f"PASS {name}: rows={len(sdf)} [{t_spark:.1f}s]")
     checked = len(only) if only else len(REGISTRY)
-    print(f"SUMMARY: {checked - failures}/{checked} ok, {failures} failures [{sf_dir}]")
+    print(
+        f"SUMMARY: {checked - failures}/{checked} ok, {failures} failures [{sf_dir}] "
+        f"oracle-dump-sha256={oracle_dump_hash()}"
+    )
     spark.stop()
     return 1 if failures else 0
 

@@ -123,16 +123,6 @@ class SlotIndex:
             raise KeyError(int(np.asarray(labels)[s < 0][0]))
         return self.ts[s]
 
-    def delete_older(self, labels, times) -> None:
-        """Tombstone each held label whose stored event-time is strictly
-        older than its marker's time in ``times`` (W2: a delete marker
-        strictly newer than the insert kills it; insert wins ties,
-        ``performLocalDeletes:86-96``). Unknown labels are ignored."""
-        s = self.slots(labels)
-        held = s >= 0
-        s = s[held]
-        self.deleted[s[np.asarray(times, dtype=np.int64)[held] > self.ts[s]]] = True
-
     def allow_mask(self, allow_labels) -> np.ndarray:
         """Label collection -> bool mask over the filled slots, the in-index
         attribute filter every kind's ``search`` takes as ``allow``."""

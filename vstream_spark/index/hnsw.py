@@ -97,13 +97,13 @@ class HnswIndex(SlotIndex):
             self.add_point(v, int(lb), int(t))
 
     def add_point(self, vec: np.ndarray, label: int, ts: int = 0) -> None:
-        """Insert (or upsert: re-adding a label undeletes + overwrites it)."""
-        if label in self._by_label:
-            i = self._by_label[label]
-            self.vecs[i] = vec
-            self.ts[i] = ts
-            self.deleted[i] = False
-            return
+        """Insert a label. Re-adding a held label (an upsert) retires its
+        old node — tombstoned, it still routes walks but leaves the label
+        map — and links the new vector as a fresh node, so the new version
+        gets links chosen for where it is."""
+        old = self._by_label.pop(label, None)
+        if old is not None:
+            self.deleted[old] = True
         self._grow(1)
         self._packed = None  # structural change: packed adjacency is stale
         i = self.n

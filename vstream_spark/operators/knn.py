@@ -26,32 +26,39 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType
 
 from vstream_spark.functions.distance import distance_expr
 
 
-def apply_deletes(vectors: DataFrame, as_of: int | None = None) -> DataFrame:
-    """Resolve insert/delete markers to the live set (last-writer-wins).
-
-    ``vectors`` schema: id, emb, event_time, ttl, op ('I'/'D'). A row is live
-    iff the latest marker for its id (by event_time, as of ``as_of`` if given)
-    is an insert. Ties at equal event_time resolve to the insert surviving
-    (delete wins only with strictly greater event_time — reference
-    ``performLocalDeletes:86-96``).
-    """
-    df = vectors
-    if as_of is not None:
-        df = df.filter(F.col("event_time") <= F.lit(as_of))
+def newest_per_id(rows: DataFrame) -> DataFrame:
+    """Each id's newest row (last-writer-wins, the engine's one LWW window):
+    the latest ``event_time`` wins, and at an equal time an insert wins
+    over a delete marker (reference ``performLocalDeletes:86-96``). Two
+    rows still tied — the same id, time and op, which no store this engine
+    writes holds — resolve by an xxhash64 of their columns, so the pick is
+    deterministic and attempt-stable. Map-typed columns are left out of
+    the hash (Spark cannot hash them)."""
+    tie_cols = [f.name for f in rows.schema.fields if not isinstance(f.dataType, MapType)]
     w = Window.partitionBy("id").orderBy(
         F.col("event_time").desc(),
-        # insert outranks delete at equal event_time
-        F.when(F.col("op") == "I", F.lit(0)).otherwise(F.lit(1)).asc(),
+        (F.col("op") == "I").desc(),
+        F.xxhash64(*[F.col(c) for c in tie_cols]).asc(),
     )
     return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & (F.col("op") == "I"))
+        rows.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
+
+
+def apply_deletes(vectors: DataFrame, as_of: int | None = None) -> DataFrame:
+    """Resolve insert/delete markers to the live set: ``vectors`` (id, emb,
+    event_time, ttl, op 'I'/'D') as of ``as_of`` if given, each id's newest
+    row (:func:`newest_per_id`) where that row is an insert."""
+    if as_of is not None:
+        vectors = vectors.filter(F.col("event_time") <= F.lit(as_of))
+    return newest_per_id(vectors).filter(F.col("op") == "I")
 
 
 def ttl_filter(vectors: DataFrame, query_event_time, query_ttl) -> DataFrame:

@@ -35,11 +35,18 @@ segments; chunking never changes results — a chunk searches a superset of
 what one-at-a-time would have before the same termination check, and the
 merge is order-insensitive (dist, id tiebreak).
 
+Last-writer-wins is one rule here: a row is shadowed when some version of
+its id at or before the snapshot bound — an upsert or a delete marker, in
+any live segment — is strictly newer (an insert wins a tie,
+``performLocalDeletes:86-96``). The versions come from the store's driver
+cache of every row's (id, event_time) (``SegmentStore.versions``); indexes
+hold every insert and tombstone nothing at build, so the bound decides.
+
 One kernel, two placements. :func:`search_segments` searches a chunk's
 segments for a pandas (qid, emb) frame: it stacks the queries once,
 searches every segment in turn — over-fetching each by the labels of it
-that a newer delete marker shadows, so dropping them cannot leave a query
-short of k — drops the shadowed hits and merges the partials to top-k per
+that a newer version shadows, so dropping them cannot leave a query short
+of k — drops the shadowed hits and merges the partials to top-k per
 query. Where it runs follows the data:
 
 - **job** — a Spark (qid, emb) DataFrame, or a driver frame too large for
@@ -451,8 +458,8 @@ def _segment_index(seg: dict, conf: VectorIndexConf):
     else:
         # cache-miss rebuild through the SAME pyarrow builder the
         # flush-time sidecar path uses (storage/segments.py) — one
-        # audited implementation of codec dequantize + tombstone
-        # shadowing instead of two drifting copies
+        # audited implementation of the codec dequantize instead of two
+        # drifting copies
         _, idx = build_index_object(seg, conf)
     with _INDEX_CACHE_LOCK:
         if len(_INDEX_CACHE) >= _INDEX_CACHE_MAX:
@@ -481,12 +488,12 @@ def query_frame(spark, queries: pd.DataFrame) -> DataFrame:
 def _shadowed(
     labels: np.ndarray, ts: np.ndarray, tombs: tuple[np.ndarray, np.ndarray]
 ) -> np.ndarray:
-    """Mask of the (label, ts) rows that carry a delete marker strictly
-    newer than ``ts`` (an equal time keeps the insert). ``tombs`` is
-    (sorted ids, max delete time per id)."""
-    ids, del_time = tombs
+    """Mask of the (label, ts) rows whose id has a version strictly newer
+    than ``ts`` (an equal time keeps the insert). ``tombs`` is (sorted ids,
+    newest version time per id), from :meth:`SegmentSearcher._tombstones`."""
+    ids, newest = tombs
     at = np.minimum(np.searchsorted(ids, labels), len(ids) - 1)
-    return (ids[at] == labels) & (del_time[at] > ts)
+    return (ids[at] == labels) & (newest[at] > ts)
 
 
 def search_segments(
@@ -502,15 +509,16 @@ def search_segments(
     """The one per-segment search kernel, run by a ``mapInPandas`` task
     over its partition of the queries or by the driver in-process (module
     docstring). Stacks the (qid, emb) queries once and searches every
-    segment of ``segs`` in turn. Cross-segment deletes: a segment is
-    searched for k plus the number of its labels that a strictly newer
-    marker in ``tombs`` shadows, so dropping the shadowed hits leaves at
-    least min(k, live) per query. The partials merge to top-k per query
-    (:func:`_merge_topk`, the M1 merge the driver runs across chunks);
-    each row keeps its segment of origin (``_seg``) so C7 temperature
-    derives from the merged result. ``filter_expr`` builds each segment's
-    attribute allowlist (:func:`_segment_allowlist`) and threads it INTO
-    graph/cell traversal (the FilterSeqTs-functor analog)."""
+    segment of ``segs`` in turn. Last-writer-wins across segments: a
+    segment is searched for k plus the number of its rows that a strictly
+    newer version in ``tombs`` shadows, so dropping the shadowed hits
+    leaves at least min(k, live) per query. The partials merge to top-k
+    per query (:func:`_merge_topk`, the M1 merge the driver runs across
+    chunks); each row keeps its segment of origin (``_seg``) so C7
+    temperature derives from the merged result. ``filter_expr`` builds
+    each segment's attribute allowlist (:func:`_segment_allowlist`) and
+    threads it INTO graph/cell traversal (the FilterSeqTs-functor
+    analog)."""
     qids = queries["qid"].to_numpy(np.int64)
     qmat = np.stack(queries["emb"].to_numpy()).astype(np.float64)
     parts = []
@@ -717,8 +725,8 @@ class SegmentSearcher:
 
         ef = max(ef_search or conf.ef_search, k)
         chunks = self._chunks(segs)
-        # delete markers cover EVERY segment up to the snapshot bound, not
-        # only the visited ones: a marker in a segment termination never
+        # versions cover EVERY segment up to the snapshot bound, not only
+        # the visited ones: a newer version in a segment termination never
         # reaches still removes the hit it shadows
         tombs = self._tombstones(max_event_time)
         if isinstance(queries, pd.DataFrame) and self._on_driver(segs, queries):
@@ -843,43 +851,22 @@ class SegmentSearcher:
         are excluded. This is the relational view of exactly what
         :meth:`search` can return — the exact-scan oracle surface.
 
-        Scale posture: one shuffle by id (the LWW window) over the pruned
+        Scale posture: one shuffle by id (the LWW window of
+        :func:`~vstream_spark.operators.knn.apply_deletes`) over the pruned
         segment scan. The LWW resolve must see every version of an id, so a
         caller predicate belongs AFTER this frame (an old matching version
         must not resurrect an id whose newest version fails the predicate);
         Catalyst still prunes columns through the window.
         """
-        from pyspark.sql import Window
         from pyspark.sql import functions as F
 
-        df = self.store.read(min_event_time=None, max_event_time=max_event_time)
+        from vstream_spark.operators.knn import apply_deletes
+
+        df = self.store.read(max_event_time=max_event_time)
         if df is None:
             return None
         if "op" in df.columns:
-            # final xxhash64 tiebreak: two inserts of the same id at the SAME
-            # event_time have no semantic winner — pick one deterministically
-            # (data-dependent, attempt-stable) so repeated visible() calls
-            # and the gates built on them never flake. Stores with unique
-            # (id, event_time) pairs — every store this engine writes —
-            # never reach the tiebreak. Map-typed attribute columns are
-            # excluded (not hashable in Spark).
-            from pyspark.sql.types import MapType
-
-            tie_cols = [
-                f.name
-                for f in df.schema.fields
-                if not isinstance(f.dataType, MapType)
-            ]
-            w = Window.partitionBy("id").orderBy(
-                F.col("event_time").desc(),
-                F.col("op").desc(),
-                F.xxhash64(*[F.col(c) for c in tie_cols]).asc(),
-            )
-            df = (
-                df.withColumn("_v", F.row_number().over(w))
-                .filter((F.col("_v") == 1) & (F.col("op") == "I"))
-                .drop("_v")
-            )
+            df = apply_deletes(df)
         if min_event_time is not None:
             df = df.filter(F.col("event_time") >= min_event_time)
         return df
@@ -1068,20 +1055,22 @@ class SegmentSearcher:
     def _tombstones(
         self, max_event_time: int | None
     ) -> tuple[np.ndarray, np.ndarray] | None:
-        """Delete markers visible to this search as (sorted ids, max delete
-        time per id) — a SMALL set (reference deleteRatio 0.1); only
-        markers at or before the snapshot bound apply — the tombstone-set
-        analog of the version CF (C9). The markers come from the store's
-        per-segment driver cache (``SegmentStore.delete_markers``): each
-        immutable segment is read once with pyarrow, not scanned by a
-        Spark job per search. None when no marker applies."""
-        ids, times = self.store.delete_markers(max_event_time)
-        if not len(ids):
-            return None
+        """For each id with more than one version at or before the snapshot
+        bound, its newest version time, as (sorted ids, times): every older
+        version of such an id is shadowed (:func:`_shadowed`), whether the
+        newest is an upsert or a delete marker — the version CF analog
+        (C9). The versions come from the store's per-segment driver cache
+        (``SegmentStore.versions``): each immutable segment is read once
+        with pyarrow, not scanned by a Spark job per search. None when no
+        id has two versions."""
+        ids, times = self.store.versions(max_event_time)
         order = np.lexsort((times, ids))
         ids, times = ids[order], times[order]
-        last = np.append(ids[1:] != ids[:-1], True)
-        return ids[last], times[last]
+        repeat = ids[1:] == ids[:-1]  # row i + 1 is a later version of row i
+        multi = np.append(~repeat, True) & np.insert(repeat, 0, False)
+        if len(ids) < 2 or not multi.any():
+            return None
+        return ids[multi], times[multi]
 
     def _should_terminate(
         self, merged: pd.DataFrame, k: int, searched: int, total: int

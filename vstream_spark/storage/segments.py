@@ -139,9 +139,10 @@ def build_index_object(seg: dict, conf: VectorIndexConf):
     Codec-aware: int8 segments dequantize with the same IEEE ops as the
     Catalyst projection (float32(double(q) * double(scale))) — bitwise
     identical, so artifacts built here match artifacts built from the
-    float surface. Op-aware: W2 tombstones (a delete marker STRICTLY newer
-    than the insert it shadows kills it; insert wins ties —
-    performLocalDeletes:86-96).
+    float surface. Only the op='I' rows are read, and nothing is
+    tombstoned at build: which version of an id a search may return is
+    decided at search time from the store's version list
+    (``SegmentStore.versions``), which respects the snapshot bound.
     """
     import glob
 
@@ -150,14 +151,12 @@ def build_index_object(seg: dict, conf: VectorIndexConf):
     conf = replace(conf, index_kind=resolve_index_kind(conf, seg.get("count", 0)))
     int8 = seg.get("codec") == "int8"
     emb_cols = ["emb_q", "emb_scale"] if int8 else ["emb"]
-    cols = ["id", *emb_cols, "event_time"]
-    schema_names = pq.read_schema(
-        glob.glob(seg["path"] + "/*.parquet")[0]
-    ).names
-    has_op = "op" in schema_names
-    tbl = pq.read_table(seg["path"], columns=cols + (["op"] if has_op else []))
-    pdf = tbl.to_pandas()
-    ins = pdf[pdf["op"] == "I"] if has_op else pdf
+    has_op = "op" in pq.read_schema(glob.glob(seg["path"] + "/*.parquet")[0]).names
+    ins = pq.read_table(
+        seg["path"],
+        columns=["id", *emb_cols, "event_time"],
+        filters=[("op", "=", "I")] if has_op else None,
+    ).to_pandas()
     if ins.empty:  # a segment of delete markers only (delete_where)
         vecs = np.empty((0, conf.dim), dtype=np.float32)
     elif int8:
@@ -168,22 +167,15 @@ def build_index_object(seg: dict, conf: VectorIndexConf):
         vecs = np.stack(ins["emb"].to_numpy()).astype(np.float32)
     ids = ins["id"].to_numpy().astype(np.int64)
     ts = ins["event_time"].to_numpy().astype(np.int64)
-    kind, idx = build_from_conf(vecs, ids, conf, ts=ts)
-    if has_op:
-        dels = pdf[pdf["op"] == "D"]
-        idx.delete_older(dels["id"].to_numpy(), dels["event_time"].to_numpy())
-    return kind, idx
+    return build_from_conf(vecs, ids, conf, ts=ts)
 
 
-def _segment_markers(path: str) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, event_times) of one segment's op='D' rows, read with pyarrow."""
-    import glob
-
+def _segment_versions(path: str) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, event_times) of every row of one segment, inserts and delete
+    markers alike, read with pyarrow."""
     import pyarrow.parquet as pq
 
-    if "op" not in pq.read_schema(glob.glob(path + "/*.parquet")[0]).names:
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    tbl = pq.read_table(path, columns=["id", "event_time"], filters=[("op", "=", "D")])
+    tbl = pq.read_table(path, columns=["id", "event_time"])
     return (
         tbl["id"].to_numpy().astype(np.int64),
         tbl["event_time"].to_numpy().astype(np.int64),
@@ -247,9 +239,9 @@ class SegmentStore:
         # JSON rewrite was O(segments) per append — pathological at the
         # segment-per-micro-batch rate of a 100 TB ingest)
         self.manifest = ManifestLog(base_dir)
-        # driver cache of each segment's delete markers: segment id ->
-        # (ids, event_times) of its op='D' rows (see delete_markers)
-        self._markers: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+        # driver cache of each segment's versions: segment id -> (ids,
+        # event_times) of all its rows (see versions)
+        self._versions: dict[str, tuple[np.ndarray, np.ndarray]] = {}
         legacy = os.path.join(base_dir, _META)
         if os.path.exists(legacy) and self.manifest.version() < 0:
             with open(legacy) as f:
@@ -602,28 +594,22 @@ class SegmentStore:
 
     def upsert_batch(self, batch: DataFrame) -> dict | None:
         """W6 buffered upsert (``VectorKeyedDataProcessFunction.java:16-100``):
-        annihilate insert+later-delete pairs *within the batch* before
-        flushing (``performLocalDeletes:86-96`` — a delete cancels a buffered
-        insert only when its event_time is strictly later; ties keep the
-        insert). Surviving delete markers are flushed too — they tombstone
-        matching ids in OLDER segments at read time (last-writer-wins).
+        flush only each id's newest row of the batch
+        (:func:`~vstream_spark.operators.knn.newest_per_id`), so an insert
+        followed by a later delete annihilates within the batch
+        (``performLocalDeletes:86-96`` — ties keep the insert). Surviving
+        delete markers are flushed too — they shadow matching ids in OLDER
+        segments at read time (last-writer-wins).
         """
-        w = Window.partitionBy("id").orderBy(
-            F.col("event_time").desc(),
-            F.when(F.col("op") == "I", F.lit(0)).otherwise(F.lit(1)).asc(),
-        )
-        last = (
-            batch.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        from vstream_spark.operators.knn import newest_per_id
+
         # rotation-aware (no-op without max_rows_per_segment). Single
         # segment: its metadata verbatim. Rotated flush: an AGGREGATE dict
         # — count is the full flushed total (never one shard's), the time
         # range spans all shards, and every segment rides under
         # ``"segments"`` (returning segs[-1] under-reported the flush and
         # hid the other shards from the caller).
-        segs = self.append_batch(last)
+        segs = self.append_batch(newest_per_id(batch))
         if not segs:
             return None
         if len(segs) == 1:
@@ -684,26 +670,27 @@ class SegmentStore:
 
     # -- read path -----------------------------------------------------------
 
-    def delete_markers(
+    def versions(
         self, max_event_time: int | None = None
     ) -> tuple[np.ndarray, np.ndarray]:
-        """(ids, event_times) of every delete marker at or before
-        ``max_event_time``, over the live segments. A segment is immutable,
-        so its op='D' rows are read once, with pyarrow on the driver, and
-        cached by segment id; entries of segments that left the manifest
-        (evicted, compacted) are dropped on each call."""
+        """(ids, event_times) of every row at or before ``max_event_time``,
+        inserts and delete markers alike, over the live segments: the
+        version list a search resolves last-writer-wins from. A segment is
+        immutable, so its rows are read once, with pyarrow on the driver
+        (16 B per row), and cached by segment id; entries of segments that
+        left the manifest (evicted, compacted) are dropped on each call."""
         segs = self.segments()
-        for sid in self._markers.keys() - {s["id"] for s in segs}:
-            del self._markers[sid]
+        for sid in self._versions.keys() - {s["id"] for s in segs}:
+            del self._versions[sid]
         ids, times = [], []
         for seg in segs:
             if max_event_time is not None and seg["min_event_time"] > max_event_time:
                 continue
-            marks = self._markers.get(seg["id"])
-            if marks is None:
-                marks = self._markers[seg["id"]] = _segment_markers(seg["path"])
-            ids.append(marks[0])
-            times.append(marks[1])
+            vers = self._versions.get(seg["id"])
+            if vers is None:
+                vers = self._versions[seg["id"]] = _segment_versions(seg["path"])
+            ids.append(vers[0])
+            times.append(vers[1])
         ids = np.concatenate(ids) if ids else np.empty(0, np.int64)
         times = np.concatenate(times) if times else np.empty(0, np.int64)
         if max_event_time is not None:
